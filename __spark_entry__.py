@@ -1080,7 +1080,7 @@ def q_embedding_ann_ivf(spark, sf_dir):
 
 
 def q_extract_dni(spark, sf_dir):
-    parse = udfs.dni_parse_udf(RUN_DATE, engine=udfs.TIER1_ENGINE, route=True)
+    parse = udfs.parse_udf("dni", RUN_DATE)
     return (_docs(spark, sf_dir)
             .withColumn("_r", parse(F.col("text"), F.lit(95.0)))
             .select("doc_id",
@@ -1091,7 +1091,7 @@ def q_extract_dni(spark, sf_dir):
 
 
 def q_extract_permis(spark, sf_dir):
-    parse = udfs.permis_parse_udf(RUN_DATE, engine=udfs.TIER1_ENGINE, route=True)
+    parse = udfs.parse_udf("permiso_circulacion", RUN_DATE)
     return (_docs(spark, sf_dir)
             .withColumn("_r", parse(F.col("text"), F.lit(95.0)))
             .select("doc_id",
@@ -1101,7 +1101,7 @@ def q_extract_permis(spark, sf_dir):
 
 
 def q_extract_nif(spark, sf_dir):
-    parse = udfs.nif_parse_udf(RUN_DATE, engine=udfs.TIER1_ENGINE, route=True)
+    parse = udfs.parse_udf("nif", RUN_DATE)
     return (_docs(spark, sf_dir)
             .withColumn("_r", parse(F.col("text"), F.lit(95.0)))
             .select("doc_id",
@@ -1155,18 +1155,12 @@ def q_extract_parity(spark, sf_dir):
                 "tier2_reason": "confidence_baixa" if needs
                                 else "tier1_acceptat"}
 
-    cases = [
-        ("dni", udfs.dni_parse_udf(RUN_DATE, engine=engine, route=True),
-         indep_dni, udfs.DNI_ROUTED_STRUCT),
-        ("permiso_circulacion",
-         udfs.permis_parse_udf(RUN_DATE, engine=engine, route=True),
-         indep_permis, udfs.PERMIS_ROUTED_STRUCT),
-        ("nif", udfs.nif_parse_udf(RUN_DATE, engine=engine, route=True),
-         indep_nif, udfs.NIF_ROUTED_STRUCT),
-    ]
+    cases = [("dni", indep_dni), ("permiso_circulacion", indep_permis),
+             ("nif", indep_nif)]
     out = None
-    for dtype, fused, indep, stype in cases:
-        row_udf = F.udf(indep, stype)
+    for dtype, indep in cases:
+        fused = udfs.parse_udf(dtype, RUN_DATE)
+        row_udf = F.udf(indep, udfs.ROUTED_STRUCTS[dtype])
         cmp = (docs
                .withColumn("_a", fused(F.col("text"), F.lit(conf)))
                .withColumn("_b", row_udf(F.col("text")))

@@ -25,12 +25,11 @@ MODES = ("standard", "aggressive")
 def _extract_config(sample: DataFrame, run_date: date, tier: int,
                     mode: str) -> DataFrame:
     if tier == 1:
-        fused = udfs.fused_tier1_udf(run_date, mode, route=True)
-        src = sample
+        src, policy = sample, "tier1"
     else:
-        fused = udfs.fused_tier2_udf(run_date, mode)
-        src = sample.withColumn("tier2_reason", F.lit("compare"))
-    return src.mapInPandas(fused, udfs.FUSED_SCHEMA)
+        src, policy = sample.withColumn("tier2_reason", F.lit("compare")), "tier2"
+    return src.mapInPandas(udfs.extract_udf(run_date, mode, policy),
+                           udfs.FUSED_SCHEMA)
 
 
 def extraction_cells(pages: DataFrame, run_date: date,

@@ -353,11 +353,15 @@ def run_curation(spark: SparkSession, input_path: str, output_path: str,
          .write.mode("overwrite").parquet(f"{output_path}/report"))
 
     # data and report are independent reads of the checkpointed frame —
-    # overlap them (the run_pipeline sink idiom); the summary stays
-    # strictly last (write-audit-publish order)
+    # overlap them (the run_pipeline sink idiom, caller's job group kept);
+    # the summary stays strictly last (write-audit-publish order)
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        for fut in [pool.submit(_write_data), pool.submit(_write_report)]:
+        for fut in [pool.submit(inherit(_write_data)),
+                    pool.submit(inherit(_write_report))]:
             fut.result()  # surface the first failure
 
     # every sum is coalesced: over ZERO rows sum() is NULL, the summary

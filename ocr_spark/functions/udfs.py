@@ -1,16 +1,18 @@
-"""Arrow-vectorized pandas UDF factories (SURVEY.md §4.2-2).
+"""Arrow-vectorized Python stages (SURVEY.md §4.2-2).
 
-Design: **one fused UDF per stage**, not per field — each document's text is
-parsed exactly once per stage, mirroring the reference's single ``parse()``
-call per request.  Batches cross the JVM↔Python boundary once per Arrow
-batch (cap with ``spark.sql.execution.arrow.maxRecordsPerBatch``; pages can
-be ~100 KB of text, so the job sets a conservative batch size).
+Design: **one Python pass per row**, not one per field — each document's
+text is parsed exactly once, mirroring the reference's single ``parse()``
+call per request.  The extraction row kernel (:func:`extract_batch`) and
+the per-type :func:`parse_udf` share one :func:`parse_dispatch`.  Batches
+cross the JVM↔Python boundary once per Arrow batch (cap with
+``spark.sql.execution.arrow.maxRecordsPerBatch``; pages can be ~100 KB of
+text, so the job sets a conservative batch size).
 
 Everything contract-bearing (Python-regex semantics, banker's rounding,
-elif order) runs inside these UDFs; the cheap scalar shapes live in
+elif order) runs inside these stages; the cheap scalar shapes live in
 :mod:`ocr_spark.functions.native` as Catalyst expressions instead.
 
-All factories take ``run_date`` explicitly — no clock access inside
+Every factory takes ``run_date`` explicitly — no clock access inside
 executors, so re-runs and resumes are byte-identical.
 """
 
@@ -18,6 +20,7 @@ from __future__ import annotations
 
 import json
 import re
+import time
 from datetime import date
 
 import pandas as pd
@@ -34,155 +37,6 @@ from ocr_spark.schema import (DNI_RESPONSE_STRUCT, NIF_RESPONSE_STRUCT,
 TIER1_ENGINE = "tesseract"
 TIER2_ENGINE = "google_vision"
 
-EXTRACT_STRUCT = T.StructType([
-    T.StructField("text", T.StringType(), True),
-    T.StructField("confidence", T.DoubleType(), True),
-])
-
-SPAN_STRUCT = T.StructType([
-    T.StructField("field", T.StringType(), True),
-    T.StructField("start", T.IntegerType(), True),
-    T.StructField("end", T.IntegerType(), True),
-])
-
-EXTRACT2_STRUCT = T.StructType([
-    T.StructField("text", T.StringType(), True),
-    T.StructField("confidence", T.DoubleType(), True),
-    T.StructField("spans", T.ArrayType(SPAN_STRUCT), True),
-])
-
-
-def _routed(response_struct: T.StructType) -> T.StructType:
-    """Parse-stage output: full response + the tier-2 routing decision."""
-    return T.StructType([
-        T.StructField("response", response_struct, True),
-        T.StructField("needs_tier2", T.BooleanType(), True),
-        T.StructField("tier2_reason", T.StringType(), True),
-    ])
-
-
-DNI_ROUTED_STRUCT = _routed(DNI_RESPONSE_STRUCT)
-PERMIS_ROUTED_STRUCT = _routed(PERMIS_RESPONSE_STRUCT)
-NIF_ROUTED_STRUCT = _routed(NIF_RESPONSE_STRUCT)
-
-
-def tier1_extract_udf(mode: str = "standard"):
-    """html binary → struct(text, confidence) — cheap boilerplate strip (T1)."""
-
-    @pandas_udf(EXTRACT_STRUCT)
-    def _extract(html: pd.Series) -> pd.DataFrame:
-        out = [html_extract.extract_tier1(h, mode) for h in html]
-        return pd.DataFrame(out, columns=["text", "confidence"])
-
-    return _extract
-
-
-def tier2_extract_udf(mode: str = "standard", with_spans: bool = True):
-    """html binary → struct(text, confidence, spans) — permissive walk (T2/T3)."""
-
-    @pandas_udf(EXTRACT2_STRUCT)
-    def _extract(html: pd.Series) -> pd.DataFrame:
-        out = [html_extract.extract_tier2(h, mode, with_spans) for h in html]
-        return pd.DataFrame(out, columns=["text", "confidence", "spans"])
-
-    return _extract
-
-
-def dni_parse_udf(run_date: date, engine: str = TIER1_ENGINE,
-                  route: bool = True):
-    """(text, confidence) → struct(response, needs_tier2, tier2_reason).
-
-    One DNI parse+validate per row, vectorized per Arrow batch (D1–D21 +
-    Phase 2 + the T5 router in a single text pass).
-    """
-
-    @pandas_udf(DNI_ROUTED_STRUCT)
-    def _parse(text: pd.Series, confidence: pd.Series) -> pd.DataFrame:
-        rows = []
-        for t, conf in zip(text, confidence):
-            t = bound_parse_text(t or "")
-            # pd.notna, not `is not None`: Arrow delivers NULL doubles
-            # to pandas as NaN, and NaN would sail past the None check
-            # into needs_tier2 where `NaN < 50.0` is False — a
-            # null-confidence row reported tier1_acceptat instead of
-            # routed to the fallback tier
-            conf = float(conf) if pd.notna(conf) else 0.0
-            datos, raw_mrz = dni.parse(t, run_date)
-            if route:
-                needs, reason = dni.needs_tier2(datos, conf, t)
-            else:
-                needs, reason = False, "tier2_final"
-            response = dni.validate(datos, raw_mrz, engine, conf, run_date)
-            rows.append({"response": response, "needs_tier2": needs,
-                         "tier2_reason": reason})
-        return pd.DataFrame(rows)
-
-    return _parse
-
-
-def permis_parse_udf(run_date: date, engine: str = TIER1_ENGINE,
-                     route: bool = True):
-    """(text, confidence) → struct(response, needs_tier2, tier2_reason)."""
-
-    @pandas_udf(PERMIS_ROUTED_STRUCT)
-    def _parse(text: pd.Series, confidence: pd.Series) -> pd.DataFrame:
-        rows = []
-        for t, conf in zip(text, confidence):
-            t = bound_parse_text(t or "")
-            # pd.notna, not `is not None`: Arrow delivers NULL doubles
-            # to pandas as NaN, and NaN would sail past the None check
-            # into needs_tier2 where `NaN < 50.0` is False — a
-            # null-confidence row reported tier1_acceptat instead of
-            # routed to the fallback tier
-            conf = float(conf) if pd.notna(conf) else 0.0
-            datos = permis.parse(t, run_date)
-            if route:
-                needs, reason = permis.needs_tier2(datos, conf)
-            else:
-                needs, reason = False, "tier2_final"
-            response = permis.validate(datos, engine, conf, run_date)
-            rows.append({"response": response, "needs_tier2": needs,
-                         "tier2_reason": reason})
-        return pd.DataFrame(rows)
-
-    return _parse
-
-
-def nif_parse_udf(run_date: date, engine: str = TIER1_ENGINE,
-                  route: bool = True):
-    """(text, confidence) → struct(response, needs_tier2, tier2_reason).
-
-    The reference has no NIF fallback router; we reuse the generic quality
-    signal (low tier-1 confidence) so boilerplate-heavy pages still get the
-    permissive tier.
-    """
-
-    @pandas_udf(NIF_ROUTED_STRUCT)
-    def _parse(text: pd.Series, confidence: pd.Series) -> pd.DataFrame:
-        rows = []
-        for t, conf in zip(text, confidence):
-            t = bound_parse_text(t or "")
-            # pd.notna, not `is not None`: Arrow delivers NULL doubles
-            # to pandas as NaN, and NaN would sail past the None check
-            # into needs_tier2 where `NaN < 50.0` is False — a
-            # null-confidence row reported tier1_acceptat instead of
-            # routed to the fallback tier
-            conf = float(conf) if pd.notna(conf) else 0.0
-            datos = nif.parse(t, run_date)
-            response = nif.validate(datos, engine, conf, run_date)
-            needs = route and conf < 50.0
-            rows.append({"response": response, "needs_tier2": bool(needs),
-                         "tier2_reason": ("confidence_baixa" if needs else "tier1_acceptat")})
-        return pd.DataFrame(rows)
-
-    return _parse
-
-
-PARSE_UDFS = {
-    "dni": (dni_parse_udf, DNI_RESPONSE_STRUCT),
-    "permiso_circulacion": (permis_parse_udf, PERMIS_RESPONSE_STRUCT),
-    "nif": (nif_parse_udf, NIF_RESPONSE_STRUCT),
-}
 
 RESPONSE_STRUCTS = {
     "dni": DNI_RESPONSE_STRUCT,
@@ -190,20 +44,52 @@ RESPONSE_STRUCTS = {
     "nif": NIF_RESPONSE_STRUCT,
 }
 
+# parse-UDF output: full response + the tier-2 routing decision
+ROUTED_STRUCTS = {dt: T.StructType([
+    T.StructField("response", s, True),
+    T.StructField("needs_tier2", T.BooleanType(), True),
+    T.StructField("tier2_reason", T.StringType(), True),
+]) for dt, s in RESPONSE_STRUCTS.items()}
+
+
+def parse_udf(doc_type: str, run_date: date):
+    """(text, confidence) → struct(response, needs_tier2, tier2_reason).
+
+    One tier-1 parse+validate+route per row of *doc_type*, vectorized per
+    Arrow batch, over the same :func:`parse_dispatch` the row kernel calls.
+    """
+
+    @pandas_udf(ROUTED_STRUCTS[doc_type])
+    def _parse(text: pd.Series, confidence: pd.Series) -> pd.DataFrame:
+        rows = []
+        for t, conf in zip(text, confidence):
+            # pd.notna, not `is not None`: Arrow delivers NULL doubles
+            # to pandas as NaN, and NaN would sail past the None check
+            # into needs_tier2 where `NaN < 50.0` is False — a
+            # null-confidence row reported tier1_acceptat instead of
+            # routed to the fallback tier
+            conf = float(conf) if pd.notna(conf) else 0.0
+            resp, needs, reason = parse_dispatch(
+                doc_type, t or "", conf, run_date, TIER1_ENGINE, True)
+            rows.append({"response": resp, "needs_tier2": needs,
+                         "tier2_reason": reason})
+        return pd.DataFrame(rows)
+
+    return _parse
+
 
 # ---------------------------------------------------------------------------
-# Fused pipeline stages (one Python pass per row per tier)
+# The extraction row kernel (one Python pass per row)
 # ---------------------------------------------------------------------------
 #
-# The per-field pandas_udf factories above are the contract surface for
-# ``__spark_entry__.queries()``; the batch job uses these *fused* mapInPandas
-# stages instead, because a pandas_udf referenced by a filter AND a projection
-# gets planned as two ArrowEvalPython nodes (the extraction runs twice), and
-# the three per-type branches multiply that further.  Fusing
+# The pipelines run :func:`extract_batch` through one mapInPandas instead of
+# per-field pandas_udfs, because a pandas_udf referenced by a filter AND a
+# projection gets planned as two ArrowEvalPython nodes (the extraction runs
+# twice), and per-type branches multiply that further.  Fusing
 # extract → route → parse → validate into one mapInPandas means each row
-# crosses the JVM↔Python boundary exactly once per tier, and the nested
-# response travels back as a JSON string decoded JVM-side with ``from_json``
-# (an order of magnitude cheaper than Arrow-converting per-row nested dicts).
+# crosses the JVM↔Python boundary exactly once, and the nested response
+# travels back as a JSON string decoded JVM-side with ``from_json`` (an
+# order of magnitude cheaper than Arrow-converting per-row nested dicts).
 
 _RE_ROUTE_PERMIS = re.compile(r"\bD\.1\b|\b\d{4}[A-Z]{3}\b")
 _RE_ROUTE_CIF = re.compile(r"\b[ABCDEFGHJKLMNPQRSUVW]\d{7}[A-J0-9]\b")
@@ -274,6 +160,7 @@ def parse_dispatch(doc_type: str, text: str, conf: float, run_date: date,
     elif doc_type == "nif":
         datos = nif.parse(text, run_date)
         resp = nif.validate(datos, engine, conf, run_date)
+        # the reference has no NIF router: low tier-1 confidence routes
         needs = bool(route and conf < 50.0)
         reason = "confidence_baixa" if needs else (
             "tier1_acceptat" if route else "tier2_final")
@@ -289,152 +176,86 @@ def _dumps(obj) -> str:
     return json.dumps(obj, ensure_ascii=False, separators=(",", ":"))
 
 
-def fused_tier1_udf(run_date: date, mode: str = "standard", route: bool = True):
-    """mapInPandas stage: html → tier-1 strip → route → parse → validate.
+def extract_batch(pdf: pd.DataFrame, run_date: date, mode: str = "standard",
+                  policy: str = "fused", route: bool = True) -> pd.DataFrame:
+    """The extraction row kernel: one pages batch → :data:`FUSED_SCHEMA` rows.
 
-    Input: the pages schema.  Output: :data:`FUSED_SCHEMA`.  Rows with no
-    html fall back to the ``text`` column verbatim at confidence 100.
+    Each page is segmented once and *policy* picks the tiers run over it:
+
+    * ``tier1`` — tier-1 keep → route → parse, routing decision kept
+      (streaming; the engine comparison's tier-1 cells);
+    * ``fused`` — as ``tier1``, but a routed row emits ONLY its tier-2 row,
+      computed over the SAME blocks (the batch and streaming pipelines);
+      equal to the two-stage composition, ``tier1`` then ``tier2`` over the
+      routed slice;
+    * ``tier2`` — permissive keep (+spans) → route → final parse, with
+      ``tier2_reason`` read from the input (the comparison's tier-2 cells).
+
+    *route* ``False`` turns the tier-1 router off.  Rows with no html use
+    the ``text`` column: confidence 100 at tier 1, 95 (0 if empty) at tier 2.
+    """
+    t0 = time.monotonic()
+    tier2_only = policy == "tier2"
+    reasons = pdf["tier2_reason"] if tier2_only else [None] * len(pdf)
+    rows = []
+    for url, ts, html, text, lang, reason in zip(
+            pdf["url"], pdf["warc_ts"], pdf["html"], pdf["text"],
+            pdf["lang"], reasons):
+        blocks = None
+        if html is not None:
+            hb = bytes(html)
+            blocks = html_extract._segment(hb) if hb else []
+        if not tier2_only:
+            if blocks is None:
+                xt, conf = (text or ""), 100.0
+            else:
+                xt, conf = html_extract.tier1_from_blocks(blocks, mode)
+            dt = route_doc_type(bound_parse_text(xt))
+            resp, needs, reason = parse_dispatch(
+                dt, xt, conf, run_date, TIER1_ENGINE, route)
+            if policy == "tier1" or not needs:
+                # html/src_text pass through ONLY for the tier-1 fallback
+                # slice — carrying the raw page for every row would make a
+                # tier-1 output ~input-sized when most rows never reach tier 2
+                keep = html if needs else None, text if needs else None
+                rows.append(_row(url, ts, lang, *keep, dt, 1, needs, reason,
+                                 xt, TIER1_ENGINE, conf, resp, None))
+                continue
+        if blocks is None:
+            xt = text or ""
+            conf, spans = (95.0 if xt else 0.0), html_extract.detect_spans(xt)
+        else:
+            xt, conf, spans = html_extract.tier2_from_blocks(blocks, mode, True)
+        dt = route_doc_type(bound_parse_text(xt))
+        resp, _, _ = parse_dispatch(
+            dt, xt, conf, run_date, TIER2_ENGINE, route=False)
+        rows.append(_row(url, ts, lang, None, text, dt, 2, False, reason, xt,
+                         TIER2_ENGINE, conf, resp, spans))
+    out = pd.DataFrame(rows, columns=_FUSED_COLS)
+    if len(out):
+        # per-row share of the batch's Python wall (µs)
+        out["proc_us"] = int((time.monotonic() - t0) * 1e6 / len(out))
+    return out
+
+
+def _row(url, ts, lang, html, src_text, doc_type, tier, needs, reason, xt,
+         engine, conf, resp, spans) -> tuple:
+    """One :data:`FUSED_SCHEMA` row (``proc_us`` is stamped per batch)."""
+    return (url, ts, lang, html, src_text, doc_type, tier, needs, reason, xt,
+            engine, conf, resp["valido"], resp["confianza_global"],
+            _dumps(resp), _dumps(spans) if spans else None, 0)
+
+
+def extract_udf(run_date: date, mode: str = "standard",
+                policy: str = "fused", route: bool = True):
+    """mapInPandas function running :func:`extract_batch` over every batch.
+
+    Input: the pages schema (plus ``tier2_reason`` for the ``tier2``
+    policy).  Output: :data:`FUSED_SCHEMA`.
     """
 
     def fn(iterator):
-        import time
         for pdf in iterator:
-            t0 = time.monotonic()
-            rows = []
-            for url, ts, html, text, lang in zip(
-                    pdf["url"], pdf["warc_ts"], pdf["html"], pdf["text"],
-                    pdf["lang"]):
-                if html is None:
-                    xt, conf = (text or ""), 100.0
-                else:
-                    xt, conf = html_extract.extract_tier1(bytes(html), mode)
-                dt = route_doc_type(bound_parse_text(xt))
-                resp, needs, reason = parse_dispatch(
-                    dt, xt, conf, run_date, TIER1_ENGINE, route)
-                # html/src_text pass through ONLY for the fallback slice —
-                # carrying the raw page for every row would make the
-                # persisted tier-1 output ~input-sized at 100 TB when the
-                # majority of rows never reach tier 2
-                rows.append((url, ts, lang, html if needs else None,
-                             text if needs else None, dt, 1, needs, reason,
-                             xt, TIER1_ENGINE, conf, resp["valido"],
-                             resp["confianza_global"], _dumps(resp), None, 0))
-            out = pd.DataFrame(rows, columns=_FUSED_COLS)
-            if len(out):
-                out["proc_us"] = int((time.monotonic() - t0) * 1e6 / len(out))
-            yield out
-
-    return fn
-
-
-def fused_single_pass_udf(run_date: date, mode: str = "standard",
-                          tier2_enabled: bool = True,
-                          with_spans: bool = True):
-    """ONE mapInPandas stage for the whole dual-tier pipeline.
-
-    Produces exactly the rows the two-stage composition (tier-1 pass →
-    fallback-slice tier-2 pass → union) produces — same values, same
-    global digest (asserted by ``test_single_pass_matches_two_stage``) —
-    but in a single Python pass:
-
-    * a row that clears tier 1 emits its tier-1 row;
-    * a row routed to tier 2 emits ONLY its tier-2 row, computed
-      immediately: the DOM is segmented ONCE and both tiers' keep rules
-      run over the same block list, where the two-stage path re-decoded
-      and re-parsed the html in the second stage.
-
-    Scale rationale: the reference's two-engine split exists because its
-    tier 2 is a remote API; here tier 2 is local CPU, so the split buys
-    nothing and costs (a) a second full html parse for the ~43% fallback
-    slice, (b) an input-sized persisted tier-1 cache, (c) an extra stage
-    + union in every run.  The two-stage factories remain for the
-    engine-comparison harness and as the differential twin.
-    """
-
-    def fn(iterator):
-        import time
-        for pdf in iterator:
-            t0 = time.monotonic()
-            rows = []
-            for url, ts, html, text, lang in zip(
-                    pdf["url"], pdf["warc_ts"], pdf["html"], pdf["text"],
-                    pdf["lang"]):
-                blocks = None
-                if html is None:
-                    xt, conf = (text or ""), 100.0
-                else:
-                    hb = bytes(html)
-                    if not hb:
-                        xt, conf = "", 0.0
-                        blocks = []
-                    else:
-                        blocks = html_extract._segment(hb)
-                        xt, conf = html_extract.tier1_from_blocks(blocks, mode)
-                dt = route_doc_type(bound_parse_text(xt))
-                resp, needs, reason = parse_dispatch(
-                    dt, xt, conf, run_date, TIER1_ENGINE, tier2_enabled)
-                if not (needs and tier2_enabled):
-                    rows.append((url, ts, lang, None, None, dt, 1, False,
-                                 reason, xt, TIER1_ENGINE, conf,
-                                 resp["valido"], resp["confianza_global"],
-                                 _dumps(resp), None, 0))
-                    continue
-                # tier 2, inline, over the SAME segmentation
-                if html is None:
-                    xt2, spans = (text or ""), (
-                        html_extract.detect_spans(text or "")
-                        if with_spans else [])
-                    conf2 = 95.0 if xt2 else 0.0
-                else:
-                    xt2, conf2, spans = html_extract.tier2_from_blocks(
-                        blocks, mode, with_spans)
-                dt2 = route_doc_type(bound_parse_text(xt2))
-                resp2, _, _ = parse_dispatch(
-                    dt2, xt2, conf2, run_date, TIER2_ENGINE, route=False)
-                rows.append((url, ts, lang, None, text, dt2, 2, False,
-                             reason, xt2, TIER2_ENGINE, conf2,
-                             resp2["valido"], resp2["confianza_global"],
-                             _dumps(resp2), _dumps(spans) if spans else None,
-                             0))
-            out = pd.DataFrame(rows, columns=_FUSED_COLS)
-            if len(out):
-                out["proc_us"] = int((time.monotonic() - t0) * 1e6 / len(out))
-            yield out
-
-    return fn
-
-
-def fused_tier2_udf(run_date: date, mode: str = "standard",
-                    with_spans: bool = True):
-    """mapInPandas stage for the fallback branch: permissive extraction (+spans),
-    re-route, final parse.  ``tier2_reason`` passes through from tier 1.
-    """
-
-    def fn(iterator):
-        import time
-        for pdf in iterator:
-            t0 = time.monotonic()
-            rows = []
-            for url, ts, html, text, lang, reason in zip(
-                    pdf["url"], pdf["warc_ts"], pdf["html"], pdf["text"],
-                    pdf["lang"], pdf["tier2_reason"]):
-                if html is None:
-                    xt, spans = (text or ""), (
-                        html_extract.detect_spans(text or "") if with_spans else [])
-                    conf = 95.0 if xt else 0.0
-                else:
-                    xt, conf, spans = html_extract.extract_tier2(
-                        bytes(html), mode, with_spans)
-                dt = route_doc_type(bound_parse_text(xt))
-                resp, _, _ = parse_dispatch(
-                    dt, xt, conf, run_date, TIER2_ENGINE, route=False)
-                rows.append((url, ts, lang, None, text, dt, 2, False, reason,
-                             xt, TIER2_ENGINE, conf, resp["valido"],
-                             resp["confianza_global"], _dumps(resp),
-                             _dumps(spans) if spans else None, 0))
-            out = pd.DataFrame(rows, columns=_FUSED_COLS)
-            if len(out):
-                out["proc_us"] = int((time.monotonic() - t0) * 1e6 / len(out))
-            yield out
+            yield extract_batch(pdf, run_date, mode, policy, route)
 
     return fn

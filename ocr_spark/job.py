@@ -11,10 +11,6 @@
       → ONE data sink partitioned by doc_type (unified columns +
         response_json; typed view via read_datos) + quarantine + lineage
 
-(``fuse_tiers=False`` selects the two-stage twin — tier-1 pass, persisted;
-tier-2 pass over the fallback slice; union — which produces byte-identical
-rows/digests and remains the differential check for the fused shape.)
-
 Scale notes (designed for 10^12 docs / 1000 executors, tested on local[*]):
 * the only shuffle is the single explicit ``repartition`` — everything after
   is narrow (one fused pUDF, filters), so scaling is governed by the parse
@@ -197,25 +193,20 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
                  input_df: Optional[DataFrame] = None,
                  storage_level: str = "MEMORY_AND_DISK",
                  canonicalize_urls: bool = False,
-                 respect_noindex: bool = False,
-                 fuse_tiers: bool = True) -> dict:
+                 respect_noindex: bool = False) -> dict:
     """Execute the full pipeline; returns run metrics (counts, digest, wall).
 
-    Plan shape (default, ``fuse_tiers=True``): each row crosses the
-    JVM↔Python boundary exactly ONCE — one fused mapInPandas doing
-    extract → route → parse → validate and, for routed-to-fallback rows,
-    the permissive tier-2 extraction inline over the same DOM
-    segmentation.  The unified result (html already dropped) is persisted
-    once so the sinks and lineage reuse it, and the nested per-type
-    response travels as a JSON string decoded JVM-side with ``from_json``
-    (whole-stage codegen).
-
-    ``fuse_tiers=False`` runs the two-stage composition (tier-1 pass over
-    all rows, persisted; tier-2 pass over the fallback slice; union) —
-    kept as the differential twin: both shapes produce byte-identical
-    rows and digests (``tests/test_pipeline.py``).  The fused shape saves
-    a second html parse for the fallback slice, an input-sized cache (the
-    persisted frame carries no raw html), and a stage + union per run.
+    Plan shape: each row crosses the JVM↔Python boundary exactly ONCE —
+    one mapInPandas running the ``fused`` policy of the extraction row
+    kernel (:func:`ocr_spark.functions.udfs.extract_batch`): extract →
+    route → parse → validate and, for routed-to-fallback rows, the
+    permissive tier-2 extraction inline over the same DOM segmentation.
+    The unified result (html already dropped) is persisted once so the
+    sinks and lineage reuse it, and the nested per-type response travels
+    as a JSON string decoded JVM-side with ``from_json`` (whole-stage
+    codegen).  Fusing saves a second html parse for the fallback slice,
+    an input-sized cache (the persisted frame carries no raw html), and a
+    stage + union per run over the two-stage composition.
     """
     t0 = time.monotonic()
     run_id = run_id or uuid.uuid4().hex[:12]
@@ -234,40 +225,17 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
         admitted = lin.anti_join_done(admitted, f"{output_path}/data")
     admitted = spread_partitions(admitted, partitions, salt)
 
-    # the persisted frame is ≲ extracted-text-sized (fused path carries no
-    # raw html); DISK_ONLY remains the right level when even that does not
-    # fit cluster memory (100 TB story, docs/SCALE.md)
+    # the persisted frame is ≲ extracted-text-sized (it carries no raw
+    # html); DISK_ONLY remains the right level when even that does not fit
+    # cluster memory (100 TB story, docs/SCALE.md)
     from pyspark import StorageLevel
-    level = getattr(StorageLevel, storage_level)
 
-    p1 = p2 = None
-    if fuse_tiers:
-        # --- ONE fused pass: tier 1 + inline tier 2 on the fallback rows -----
-        fused = udfs.fused_single_pass_udf(run_date, mode, tier2_enabled)
-        unified = admitted.mapInPandas(fused, udfs.FUSED_SCHEMA)
-    else:
-        # --- two-stage twin: tier-1 pass, then tier 2 on the failed slice ----
-        fused1 = udfs.fused_tier1_udf(run_date, mode, route=tier2_enabled)
-        p1 = admitted.mapInPandas(fused1, udfs.FUSED_SCHEMA)
-        p1.persist(level)
-
-        parts = [p1.filter(~F.col("needs_tier2"))]
-        if tier2_enabled:
-            fallback = p1.filter(F.col("needs_tier2")).select(
-                "url", "warc_ts", "lang", "html",
-                F.col("src_text").alias("text"), "tier2_reason")
-            p2 = fallback.mapInPandas(udfs.fused_tier2_udf(run_date, mode),
-                                      udfs.FUSED_SCHEMA)
-            p2.persist(level)
-            parts.append(p2)
-
-        unified = parts[0]
-        for part in parts[1:]:
-            unified = unified.unionByName(part)
-    unified = unified.drop("html", "src_text").withColumn(
-        "spans", F.from_json("spans_json", _SPANS_TYPE))
-    if fuse_tiers:
-        unified.persist(level)
+    # --- ONE fused pass: tier 1 + inline tier 2 on the fallback rows -------
+    fused = udfs.extract_udf(run_date, mode, "fused", tier2_enabled)
+    unified = (admitted.mapInPandas(fused, udfs.FUSED_SCHEMA)
+               .drop("html", "src_text")
+               .withColumn("spans", F.from_json("spans_json", _SPANS_TYPE)))
+    unified.persist(getattr(StorageLevel, storage_level))
 
     # --- writes.  ONE partitioned write carries both the unified table and
     #     the per-type response payload: ``data/`` is hive-partitioned by
@@ -277,7 +245,7 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
     #     on read).  Compared with the round-1 layout (data + 3 datos_*
     #     sinks) this cuts 3 write jobs and keeps the wide per-type struct
     #     decode out of the write path entirely.  Lineage is aggregated from
-    #     the persisted tier frames — no output read-back — and written
+    #     the persisted unified frame — no output read-back — and written
     #     strictly last (write-audit-publish order).
 
     # resume appends (overwrite would drop previously committed runs);
@@ -304,24 +272,19 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
             writer = writer.partitionBy(partition_by)
         writer.parquet(f"{output_path}/{sub}")
 
-    def _write_data() -> None:
-        if p1 is not None:
-            # (two-stage twin) materialize tier 1 first: the unified DAG's
-            # two p1 branches (direct + tier-2 input) would otherwise race
-            # to compute the same uncached partitions inside the write job.
-            # The fused path has one frame and one computing consumer —
-            # the write itself fills the cache.
-            p1.count()
-        _write(unified.select(*_UNIFIED_COLS, "response_json"),
-               "data", "doc_type")
-
-    # quarantine derives from the admission split, not the tier caches, so
-    # its write overlaps the tier-1 materialization fully
+    # quarantine derives from the admission split, not the unified cache,
+    # so its write overlaps the extraction fully.  The writes run on pool
+    # threads: inheritable_thread_target hands them the caller's local
+    # properties (job group, description), which plain threads would drop
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+    write = inheritable_thread_target(spark)(_write)
     with ThreadPoolExecutor(max_workers=2) as pool:
         futures = [
-            pool.submit(_write, quarantined, "quarantine"),
-            pool.submit(_write_data),
+            pool.submit(write, quarantined, "quarantine"),
+            pool.submit(write, unified.select(*_UNIFIED_COLS, "response_json"),
+                        "data", "doc_type"),
         ]
         for fut in futures:
             fut.result()  # surface the first failure
@@ -335,10 +298,7 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
     summary_df.write.mode("append").parquet(f"{output_path}/lineage_summary")
     summary = summary_df.collect()[0].asDict()
     lrows.unpersist()
-
-    for cached in (p1, p2, unified if fuse_tiers else None):
-        if cached is not None:
-            cached.unpersist()
+    unified.unpersist()
     summary["wall_ms"] = int((time.monotonic() - t0) * 1000)
     return summary
 

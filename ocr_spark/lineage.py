@@ -37,7 +37,7 @@ def lineage_rows(unified: DataFrame, run_id: str) -> DataFrame:
     """One lineage row per physical output partition of *unified*.
 
     ``wall_ms`` is the partition's Python-stage extraction wall (summed
-    per-row ``proc_us`` shares recorded inside the fused UDFs) — the T7
+    per-row ``proc_us`` shares stamped by the extraction row kernel) — the T7
     latency-guard evidence: a straggling partition shows up here, and the
     speculation configs in ``job.build_session`` are its cluster-side
     reaper.  Null when the frame carries no ``proc_us`` column.

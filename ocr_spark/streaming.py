@@ -1,7 +1,7 @@
 """Structured Streaming ingest variant (SURVEY.md §7 stretch).
 
 The batch pipeline's source is an Iceberg/parquet snapshot; this module runs
-the SAME fused extraction stages over a stream of page files as they land
+the SAME extraction row kernel over a stream of page files as they land
 (the Common-Crawl "WARC drop" pattern — at production scale the source would
 be Kafka or an Iceberg streaming read, both drop-in `readStream` swaps).
 
@@ -16,7 +16,7 @@ Three surfaces:
   are dropped — deliberate, the batch pipeline is the source of truth).
 * :func:`run_streaming_pipeline` — the full dual-tier pipeline via
   ``foreachBatch``: each micro-batch goes through exactly the batch stages
-  (admission → fused tier-1 → tier-2 branch → union) and is appended to the
+  (admission → one fused tier-1 + inline tier-2 pass) and is appended to the
   same output layout as :func:`ocr_spark.job.run_pipeline`, with one lineage
   row per micro-batch.  The streaming checkpoint gives resume-from-offset;
   outputs are idempotent per batch_id because every write is keyed by
@@ -59,8 +59,8 @@ def transform_stream(stream: DataFrame, run_date: date,
     pipeline are flagged (``needs_tier2``) but not re-extracted here: the
     stream is the low-latency tier, the batch job the completeness tier.
     """
-    fused = udfs.fused_tier1_udf(run_date, mode, route=True)
-    return (stream.mapInPandas(fused, udfs.FUSED_SCHEMA)
+    tier1 = udfs.extract_udf(run_date, mode, "tier1")
+    return (stream.mapInPandas(tier1, udfs.FUSED_SCHEMA)
             .drop("html", "src_text"))
 
 
@@ -203,7 +203,7 @@ def run_streaming_pipeline(spark: SparkSession, input_path: str,
         # the batch job's single fused pass (tier 1 + inline tier 2) —
         # micro-batches run the exact batch stages, so stream and batch
         # digests stay equal by construction
-        fused = udfs.fused_single_pass_udf(run_date, mode, tier2_enabled)
+        fused = udfs.extract_udf(run_date, mode, "fused", tier2_enabled)
         unified = admitted.mapInPandas(fused, udfs.FUSED_SCHEMA)
         unified = unified.drop("html", "src_text").withColumn(
             "spans", F.from_json("spans_json", job._SPANS_TYPE))

@@ -52,8 +52,7 @@ def test_extract_parity_not_vacuous(spark):
 
     sf = "/root/testdata/sf0.001"
     docs = entrymod._docs(spark, sf).select("doc_id", "text").limit(40)
-    fused = udfs.dni_parse_udf(entrymod.RUN_DATE, engine=udfs.TIER1_ENGINE,
-                               route=True)
+    fused = udfs.parse_udf("dni", entrymod.RUN_DATE)
     both = (docs.withColumn("_a", fused(F.col("text"), F.lit(95.0)))
             .select(F.to_json("_a").alias("j")).collect())
     assert len(both) == 40
@@ -73,8 +72,7 @@ def test_extract_parity_detects_divergence(spark):
 
     sf = "/root/testdata/sf0.001"
     docs = entrymod._docs(spark, sf).select("doc_id", "text").limit(10)
-    fused = udfs.dni_parse_udf(entrymod.RUN_DATE, engine=udfs.TIER1_ENGINE,
-                               route=True)
+    fused = udfs.parse_udf("dni", entrymod.RUN_DATE)
     cmp = (docs.withColumn("_a", fused(F.col("text"), F.lit(95.0)))
            .withColumn("_b", fused(F.col("text"), F.lit(10.0)))
            .select(F.to_json("_a").alias("a"), F.to_json("_b").alias("b"))

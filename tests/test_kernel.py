@@ -1,0 +1,137 @@
+"""The extraction row kernel and the parse UDF, without Spark.
+
+* Goldens (``kernel_goldens.json``, frozen ``run_date``) pin every column
+  the kernel emits, per policy × mode × tier 2 on/off × doc_type, and the
+  parse UDF's output per doc_type; positive controls show a one-byte
+  change in any compared column breaks them.
+* The differential check: the ``fused`` policy's rows equal the two-stage
+  composition — ``tier1`` rows not routed to tier 2, unioned with
+  ``tier2`` over the routed slice — in every mode, tier 2 on and off.
+"""
+
+from __future__ import annotations
+
+import functools
+import json
+import math
+
+import pandas as pd
+import pytest
+
+from tests import kernel_goldens as kg
+
+
+@pytest.fixture(scope="module")
+def goldens() -> dict[str, str]:
+    data = json.loads(kg.GOLDENS.read_text())
+    assert data["run_date"] == kg.RUN_DATE.isoformat()
+    assert data["n_pages"] == kg.N_PAGES
+    return data["digests"]
+
+
+@functools.lru_cache(maxsize=None)
+def _pages() -> pd.DataFrame:
+    return kg.pages()
+
+
+@functools.lru_cache(maxsize=None)
+def _out(policy: str, mode: str, route: bool) -> pd.DataFrame:
+    """Kernel output over the golden pages (cached: never mutate it)."""
+    pdf = _pages()
+    src = kg.tier2_input(pdf) if policy == "tier2" else pdf
+    return kg.current_kernel(src, mode, policy, route)
+
+
+@functools.lru_cache(maxsize=None)
+def _parse_out(doc_type: str) -> tuple[list[str], pd.DataFrame]:
+    names, texts, confs = kg.parse_cases()
+    return names, kg.current_parse(doc_type, pd.Series(texts),
+                                   pd.Series(confs, dtype="float64"))
+
+
+@pytest.mark.parametrize("mode", kg.MODES)
+@pytest.mark.parametrize("config", sorted(kg.CONFIGS))
+def test_kernel_goldens(goldens, config, mode):
+    policy, route = kg.CONFIGS[config]
+    out = _out(policy, mode, route)
+    assert len(out) == kg.N_PAGES + len(kg.edge_rows())
+    got = kg.kernel_digests(out, f"{config}/{mode}")
+    assert got == {k: goldens[k] for k in got}
+
+
+@pytest.mark.parametrize("doc_type", kg.DOC_TYPES)
+def test_parse_udf_goldens(goldens, doc_type):
+    names, out = _parse_out(doc_type)
+    assert len(out) == len(names)
+    assert kg.parse_digest(names, out) == goldens[f"parse/{doc_type}"]
+
+
+def _one_byte_change(value):
+    if hasattr(value, "item"):  # numpy scalar
+        value = value.item()
+    if isinstance(value, str):
+        return value[:-1] + ("x" if value[-1:] != "x" else "y")
+    if isinstance(value, bool):
+        return not value
+    if isinstance(value, float):
+        return math.nextafter(value, math.inf)
+    return value + 1
+
+
+@pytest.mark.parametrize("column", kg.CANON_COLS)
+def test_kernel_goldens_catch_one_byte_change(goldens, column):
+    """Positive control: the goldens compare every canonical column."""
+    out = _out("fused", "standard", True).copy()
+    pos = out[column].first_valid_index()
+    out.at[pos, column] = _one_byte_change(out.at[pos, column])
+    prefix = "fused/tier2=on/standard"
+    got = kg.kernel_digests(out, prefix)
+    assert got != {k: goldens[k] for k in got}
+
+
+@pytest.mark.parametrize("column", kg.PARSE_COLS)
+def test_parse_goldens_catch_one_byte_change(goldens, column):
+    names, out = _parse_out("dni")
+    out = out.copy()
+    value = out.at[0, column]
+    if column == "response":
+        value = {**value, "confianza_global": value["confianza_global"] + 1}
+    else:
+        value = _one_byte_change(value)
+    out.at[0, column] = value
+    assert kg.parse_digest(names, out) != goldens["parse/dni"]
+
+
+def _rows(df: pd.DataFrame) -> list[tuple]:
+    """Every column but the timing stamp, as tuples ordered by url."""
+    df = df.drop(columns="proc_us").sort_values("url").astype(object)
+    return [tuple(r) for r in df.itertuples(index=False)]
+
+
+@pytest.mark.parametrize("route", [True, False], ids=["tier2=on", "tier2=off"])
+@pytest.mark.parametrize("mode", kg.MODES)
+def test_fused_equals_two_stage(mode, route):
+    """``fused`` == ``tier1`` rows kept at tier 1 ∪ ``tier2`` over the
+    ``tier1`` fallback slice (its html/src_text passthrough as input)."""
+    tier1 = _out("tier1", mode, route)
+    routed = tier1["needs_tier2"].astype(bool)
+    parts = [tier1[~routed]]
+    if route:
+        fallback = (tier1[routed][["url", "warc_ts", "lang", "html",
+                                   "src_text", "tier2_reason"]]
+                    .rename(columns={"src_text": "text"}))
+        assert 0 < len(fallback) < len(tier1)
+        parts.append(kg.current_kernel(fallback, mode, "tier2", route))
+    else:
+        assert not routed.any()
+    two_stage = pd.concat(parts, ignore_index=True)
+    fused = _out("fused", mode, route)
+    assert set(fused["tier"]) == ({1, 2} if route else {1})
+    assert _rows(fused) == _rows(two_stage)
+
+
+def test_extract_batch_empty_batch():
+    from ocr_spark.functions import udfs
+    out = udfs.extract_batch(_pages().iloc[:0], kg.RUN_DATE)
+    assert list(out.columns) == [f.name for f in udfs.FUSED_SCHEMA.fields]
+    assert out.empty

@@ -16,6 +16,13 @@ from hypothesis import given, settings, strategies as st
 from tests.conftest import RUN_DATE
 from tests.fixture_texts import DNI_TEXTS, PERMIS_TEXTS, NIF_TEXTS
 
+# the oracle is the reference checkout (package ``app``, see conftest.py);
+# without it the kernel goldens in test_kernel.py are the parity pin
+pytest.importorskip(
+    "app.parsers",
+    reason="reference checkout missing: package app.parsers (see "
+           "tests/conftest.py REFERENCE) is not importable")
+
 from app.parsers import dni_parser as ref_dni
 from app.parsers import permis_parser as ref_permis
 from app.parsers import nif_parser as ref_nif

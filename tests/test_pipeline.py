@@ -72,34 +72,6 @@ def test_typed_outputs_match_pure_parser(spark, pipeline_out, pages_path):
                [e["code"] for e in resp["errores_detectados"]]
 
 
-@pytest.mark.parametrize("mode,tier2", [("standard", True),
-                                         ("aggressive", True),
-                                         ("layout", True),
-                                         ("standard", False)])
-def test_single_pass_matches_two_stage(spark, pages_path, tmp_path,
-                                       mode, tier2):
-    """The fused single-pass pipeline (default) and the two-stage twin
-    (fuse_tiers=False) must produce byte-identical output in EVERY mode
-    and with tier 2 on or off: same global digest, same counts, and
-    row-for-row equal data sinks (every unified column + spans)."""
-    s_fused = run_pipeline(spark, pages_path, str(tmp_path / "fused"),
-                           RUN_DATE, partitions=8, mode=mode,
-                           tier2_enabled=tier2)
-    s_two = run_pipeline(spark, pages_path, str(tmp_path / "two"),
-                         RUN_DATE, partitions=8, mode=mode,
-                         tier2_enabled=tier2, fuse_tiers=False)
-    assert s_fused["digest"] == s_two["digest"]
-    for k in ("input_count", "extracted_count", "valid_count", "tier2_count"):
-        assert s_fused[k] == s_two[k], k
-    a = spark.read.parquet(f"{tmp_path}/fused/data")
-    b = spark.read.parquet(f"{tmp_path}/two/data")
-    cols = sorted(set(a.columns) - {"spans"})  # spans compared via json cast
-    proj = [F.col(c) for c in cols] + [F.to_json("spans").alias("spans_j")]
-    rows_a = sorted(map(tuple, a.select(*proj).collect()))
-    rows_b = sorted(map(tuple, b.select(*proj).collect()))
-    assert rows_a == rows_b
-
-
 def test_rerun_digest_identical(spark, pages_path, tmp_path):
     """Same input + same run-date ⇒ identical global digest (determinism),
     at any partition count and with salting on or off."""
@@ -327,11 +299,11 @@ def test_canonicalize_urls_unifies_identity(spark, tmp_path):
 
 def test_pipeline_job_count_budget(spark, pages_path, tmp_path):
     """Fixed-cost regression guard: one pipeline run must stay within its
-    Spark job budget (6 actions — tier-1 materialize, 2 sink writes,
-    lineage, summary write+collect — plus AQE per-query-stage sub-jobs;
-    measures 14 today). A regression (e.g. reintroducing per-type sinks or
-    an output read-back) is invisible to value tests but caps small-input
-    scaling efficiency."""
+    Spark job budget (5 actions — 2 sink writes, lineage write, summary
+    write+collect — plus AQE per-query-stage sub-jobs; measures 11 on a
+    240-page input at local[4]). A regression (e.g. reintroducing per-type
+    sinks or an output read-back) is invisible to value tests but caps
+    small-input scaling efficiency."""
     tracker = spark.sparkContext.statusTracker()
     all_before = set(tracker.getJobIdsForGroup(None) or [])
     run_pipeline(spark, pages_path, str(tmp_path / "budget"), RUN_DATE,
@@ -339,7 +311,38 @@ def test_pipeline_job_count_budget(spark, pages_path, tmp_path):
     all_after = set(spark.sparkContext.statusTracker()
                     .getJobIdsForGroup(None) or [])
     n_jobs = len(all_after - all_before)
-    assert 0 < n_jobs <= 16, f"pipeline ran {n_jobs} Spark jobs"
+    assert 0 < n_jobs <= 14, f"pipeline ran {n_jobs} Spark jobs"
+
+
+def test_sink_jobs_keep_caller_job_group(spark, pages_path, tmp_path):
+    """run_pipeline and run_curation submit their sink writes from pool
+    threads; PySpark local properties are per thread, so without
+    inheritance those jobs ran with no job group. Every job either entry
+    point runs must carry the caller's group."""
+    from ocr_spark import curate
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    untagged_before = set(tracker.getJobIdsForGroup(None) or [])
+    sc.setJobGroup("sink_group_test", "sink jobs inherit the job group")
+    try:
+        out = str(tmp_path / "ex")
+        run_pipeline(spark, pages_path, out, RUN_DATE, partitions=4)
+        docs = str(tmp_path / "docs")
+        (spark.read.parquet(f"{out}/data")
+         .select(F.xxhash64("url").alias("doc_id"),
+                 F.col("extracted_text").alias("text"))
+         .write.parquet(docs))
+        curate.run_curation(spark, docs, str(tmp_path / "cur"),
+                            partitions=4)
+        tagged = tracker.getJobIdsForGroup("sink_group_test") or []
+    finally:
+        # the shared session's later tests count jobs under group None
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    untagged = set(tracker.getJobIdsForGroup(None) or []) - untagged_before
+    assert tagged
+    assert not untagged, f"{len(untagged)} jobs ran without the job group"
 
 
 def test_extract_then_curate_integration(spark, tmp_path):
@@ -391,17 +394,17 @@ def test_resume_anti_join_surfaces_non_path_errors(spark, tmp_path):
         _lin.anti_join_done(pages, bad).count()
 
 
-def test_parse_udfs_null_confidence_routes_to_tier2(spark):
+@pytest.mark.parametrize("doc_type", ["dni", "permiso_circulacion", "nif"])
+def test_parse_udfs_null_confidence_routes_to_tier2(spark, doc_type):
     """Arrow delivers NULL doubles to pandas UDFs as NaN, not None: a
     None-only guard let NaN through, and `NaN < 50.0` is False — a
     null-confidence row was reported tier1_acceptat instead of routed.
-    All three contract-surface parse UDFs must treat null as 0.0."""
+    The parse UDF must treat null as 0.0 for every doc type."""
     from ocr_spark.functions import udfs as u
 
     df = spark.createDataFrame(
         [("APELLIDOS GARCIA", None)],
         "text string, confidence double")
-    for factory in (u.dni_parse_udf, u.permis_parse_udf, u.nif_parse_udf):
-        fn = factory(RUN_DATE)
-        row = df.select(fn("text", "confidence").alias("r")).collect()[0]["r"]
-        assert row["needs_tier2"] is True, factory.__name__
+    fn = u.parse_udf(doc_type, RUN_DATE)
+    row = df.select(fn("text", "confidence").alias("r")).collect()[0]["r"]
+    assert row["needs_tier2"] is True

@@ -37,30 +37,29 @@ def test_tpch_q1_partial_aggregation(spark):
     assert plans.codegen_stage_count(df) >= 1
 
 
-def test_pipeline_one_python_pass_per_tier(spark):
-    """The two-stage twin crosses JVM↔Python exactly once per tier (§4.2-2)."""
+def _kernel_frame(spark, policy):
     from datetime import date
     from ocr_spark import job, pagegen
     from ocr_spark.functions import udfs
     pages = pagegen.generate_df(spark, 8, partitions=2)
-    fused = udfs.fused_tier1_udf(date(2026, 8, 16), "standard", route=True)
-    p1 = job.spread_partitions(pages, 4).mapInPandas(fused, udfs.FUSED_SCHEMA)
-    unified = p1.filter(~F.col("needs_tier2")).drop("html", "src_text")
-    # pagegen itself is one mapInPandas; the pipeline adds exactly one more
-    assert plans.python_eval_count(unified) == 2
+    kernel = udfs.extract_udf(date(2026, 8, 16), "standard", policy)
+    return (job.spread_partitions(pages, 4)
+            .mapInPandas(kernel, udfs.FUSED_SCHEMA)
+            .drop("html", "src_text"))
+
+
+def test_pipeline_one_python_pass_per_tier(spark):
+    """The tier-1 policy (streaming, compare) crosses JVM↔Python exactly
+    once (§4.2-2), its routing filter included."""
+    tier1 = _kernel_frame(spark, "tier1").filter(~F.col("needs_tier2"))
+    # pagegen itself is one mapInPandas; the kernel adds exactly one more
+    assert plans.python_eval_count(tier1) == 2
 
 
 def test_pipeline_single_pass_one_python_stage_total(spark):
-    """The DEFAULT fused pipeline crosses JVM↔Python exactly once for the
-    whole dual-tier extraction — no second stage, no union."""
-    from datetime import date
-    from ocr_spark import job, pagegen
-    from ocr_spark.functions import udfs
-    pages = pagegen.generate_df(spark, 8, partitions=2)
-    fused = udfs.fused_single_pass_udf(date(2026, 8, 16), "standard", True)
-    unified = (job.spread_partitions(pages, 4)
-               .mapInPandas(fused, udfs.FUSED_SCHEMA)
-               .drop("html", "src_text"))
+    """The fused pipeline crosses JVM↔Python exactly once for the whole
+    dual-tier extraction — no second stage, no union."""
+    unified = _kernel_frame(spark, "fused")
     # pagegen itself is one mapInPandas; the whole pipeline adds ONE more
     assert plans.python_eval_count(unified) == 2
     assert "Union" not in plans.physical_plan(unified)
