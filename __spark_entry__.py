@@ -51,7 +51,7 @@ def entry(spark: SparkSession) -> DataFrame:
     Generates deterministic Common-Crawl-style pages (same generator as the
     driver bench), runs :func:`ocr_spark.job.run_pipeline` — admission →
     url-hash repartition → fused tier-1 strip+route+parse+validate →
-    tier-2 fallback branch → doc_type-partitioned sink + lineage — and
+    tier-2 fallback branch → doc_type-partitioned sink + run summary — and
     returns the per-doc_type validity/confidence rollup read back from the
     written output, with the run's order-independent global digest attached
     to every row (stable across reruns: frozen run date + deterministic
@@ -1389,7 +1389,7 @@ def q_pipeline_curate(spark, sf_dir):
     (VERDICT r4 Next-round #2): deterministic Common-Crawl-style pages →
     the full extraction pipeline (admission → url-hash repartition →
     fused dual-tier extract/route/parse/validate → doc_type-partitioned
-    sink + per-partition lineage) → the curation chain over the
+    sink + observed run summary) → the curation chain over the
     EXTRACTED text (quality → repetition → lang gate → exact dedup →
     PII scrub → 2000-token sharding), run TWICE at deliberately
     different physical layouts (partitions=8/salt=0 vs partitions=3/

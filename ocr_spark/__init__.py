@@ -15,7 +15,7 @@ Layout:
   - :mod:`ocr_spark.functions`   pandas UDFs + native Column expressions
   - :mod:`ocr_spark.html_extract` tier-1/tier-2 HTML → text extraction
   - :mod:`ocr_spark.job`         the batch pipeline (read → extract → write)
-  - :mod:`ocr_spark.lineage`     per-partition lineage rows + resume
+  - :mod:`ocr_spark.lineage`     observed run summary + resume
   - :mod:`ocr_spark.operators`   dedup / similarity / text-stats / multimodal
   - :mod:`ocr_spark.pagegen`     deterministic synthetic pages generator
 """

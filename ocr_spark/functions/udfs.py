@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import json
 import re
-import time
 from datetime import date
 
 import pandas as pd
@@ -135,9 +134,6 @@ FUSED_SCHEMA = T.StructType([
     T.StructField("confianza_global", T.IntegerType()),
     T.StructField("response_json", T.StringType()),
     T.StructField("spans_json", T.StringType()),
-    # per-row share of the Arrow batch's Python-stage wall (µs) — the T7
-    # latency-guard evidence trail: lineage aggregates it per partition
-    T.StructField("proc_us", T.LongType()),
 ])
 
 _FUSED_COLS = [f.name for f in FUSED_SCHEMA.fields]
@@ -194,7 +190,6 @@ def extract_batch(pdf: pd.DataFrame, run_date: date, mode: str = "standard",
     *route* ``False`` turns the tier-1 router off.  Rows with no html use
     the ``text`` column: confidence 100 at tier 1, 95 (0 if empty) at tier 2.
     """
-    t0 = time.monotonic()
     tier2_only = policy == "tier2"
     reasons = pdf["tier2_reason"] if tier2_only else [None] * len(pdf)
     rows = []
@@ -231,19 +226,15 @@ def extract_batch(pdf: pd.DataFrame, run_date: date, mode: str = "standard",
             dt, xt, conf, run_date, TIER2_ENGINE, route=False)
         rows.append(_row(url, ts, lang, None, text, dt, 2, False, reason, xt,
                          TIER2_ENGINE, conf, resp, spans))
-    out = pd.DataFrame(rows, columns=_FUSED_COLS)
-    if len(out):
-        # per-row share of the batch's Python wall (µs)
-        out["proc_us"] = int((time.monotonic() - t0) * 1e6 / len(out))
-    return out
+    return pd.DataFrame(rows, columns=_FUSED_COLS)
 
 
 def _row(url, ts, lang, html, src_text, doc_type, tier, needs, reason, xt,
          engine, conf, resp, spans) -> tuple:
-    """One :data:`FUSED_SCHEMA` row (``proc_us`` is stamped per batch)."""
+    """One :data:`FUSED_SCHEMA` row."""
     return (url, ts, lang, html, src_text, doc_type, tier, needs, reason, xt,
             engine, conf, resp["valido"], resp["confianza_global"],
-            _dumps(resp), _dumps(spans) if spans else None, 0)
+            _dumps(resp), _dumps(spans) if spans else None)
 
 
 def extract_udf(run_date: date, mode: str = "standard",

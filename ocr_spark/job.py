@@ -9,7 +9,8 @@
         the permissive tier-2 extraction INLINE over the same
         DOM segmentation → re-route → re-parse                  [T1/T2/T5/T6]
       → ONE data sink partitioned by doc_type (unified columns +
-        response_json; typed view via read_datos) + quarantine + lineage
+        response_json; typed view via read_datos) + quarantine, both
+        observed (DataFrame.observe) → one lineage_summary row
 
 Scale notes (designed for 10^12 docs / 1000 executors, tested on local[*]):
 * the only shuffle is the single explicit ``repartition`` — everything after
@@ -80,8 +81,8 @@ def build_session(app: str = "ocr_spark", master: Optional[str] = None,
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         # T7 straggler reaper: re-launch tasks running far beyond the stage
         # median (a wedged page/regex can't hold a partition hostage on a
-        # real cluster; no-op under local mode). Per-partition extraction
-        # wall lands in lineage.wall_ms for the audit trail.
+        # real cluster; no-op under local mode). Per-task extraction time
+        # is in the event log (spark.eventLog.enabled) for the audit trail.
         .config("spark.speculation", "true")
         .config("spark.speculation.multiplier", "4")
         .config("spark.speculation.quantile", "0.9")
@@ -191,7 +192,6 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
                  mode: str = "standard", resume: bool = False,
                  tier2_enabled: bool = True, run_id: Optional[str] = None,
                  input_df: Optional[DataFrame] = None,
-                 storage_level: str = "MEMORY_AND_DISK",
                  canonicalize_urls: bool = False,
                  respect_noindex: bool = False) -> dict:
     """Execute the full pipeline; returns run metrics (counts, digest, wall).
@@ -201,12 +201,15 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
     kernel (:func:`ocr_spark.functions.udfs.extract_batch`): extract →
     route → parse → validate and, for routed-to-fallback rows, the
     permissive tier-2 extraction inline over the same DOM segmentation.
-    The unified result (html already dropped) is persisted once so the
-    sinks and lineage reuse it, and the nested per-type response travels
-    as a JSON string decoded JVM-side with ``from_json`` (whole-stage
-    codegen).  Fusing saves a second html parse for the fallback slice,
-    an input-sized cache (the persisted frame carries no raw html), and a
-    stage + union per run over the two-stage composition.
+    The nested per-type response travels as a JSON string decoded
+    JVM-side with ``from_json`` (whole-stage codegen).  Fusing saves a
+    second html parse for the fallback slice and a stage + union per run
+    over the two-stage composition.
+
+    The ``data/`` write is the extraction's only consumer: the summary
+    counts and digest are observed on it (and ``quarantined_count`` on
+    the ``quarantine/`` write), so no job re-reads or caches the output.
+    ``input_count`` counts the rows written to ``data/``.
     """
     t0 = time.monotonic()
     run_id = run_id or uuid.uuid4().hex[:12]
@@ -225,17 +228,11 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
         admitted = lin.anti_join_done(admitted, f"{output_path}/data")
     admitted = spread_partitions(admitted, partitions, salt)
 
-    # the persisted frame is ≲ extracted-text-sized (it carries no raw
-    # html); DISK_ONLY remains the right level when even that does not fit
-    # cluster memory (100 TB story, docs/SCALE.md)
-    from pyspark import StorageLevel
-
     # --- ONE fused pass: tier 1 + inline tier 2 on the fallback rows -------
     fused = udfs.extract_udf(run_date, mode, "fused", tier2_enabled)
     unified = (admitted.mapInPandas(fused, udfs.FUSED_SCHEMA)
                .drop("html", "src_text")
                .withColumn("spans", F.from_json("spans_json", _SPANS_TYPE)))
-    unified.persist(getattr(StorageLevel, storage_level))
 
     # --- writes.  ONE partitioned write carries both the unified table and
     #     the per-type response payload: ``data/`` is hive-partitioned by
@@ -244,9 +241,9 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
     #     the typed struct on demand via :func:`read_datos` (``from_json``
     #     on read).  Compared with the round-1 layout (data + 3 datos_*
     #     sinks) this cuts 3 write jobs and keeps the wide per-type struct
-    #     decode out of the write path entirely.  Lineage is aggregated from
-    #     the persisted unified frame — no output read-back — and written
-    #     strictly last (write-audit-publish order).
+    #     decode out of the write path entirely.  The summary is observed
+    #     on the sink writes — no output read-back — and written strictly
+    #     last (write-audit-publish order).
 
     # resume appends (overwrite would drop previously committed runs);
     # quarantine is re-derived every run, so under resume drop rows already
@@ -272,8 +269,13 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
             writer = writer.partitionBy(partition_by)
         writer.parquet(f"{output_path}/{sub}")
 
-    # quarantine derives from the admission split, not the unified cache,
-    # so its write overlaps the extraction fully.  The writes run on pool
+    # observe last, after the select and the resume anti-join, so the
+    # metrics sit above every exchange and count exactly the written rows
+    data, quarantined, data_obs, q_obs = lin.observe_sinks(
+        unified.select(*_UNIFIED_COLS, "response_json"), quarantined)
+
+    # quarantine derives from the admission split, not the extraction, so
+    # its write overlaps the extraction fully.  The writes run on pool
     # threads: inheritable_thread_target hands them the caller's local
     # properties (job group, description), which plain threads would drop
     from concurrent.futures import ThreadPoolExecutor
@@ -283,22 +285,14 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
     with ThreadPoolExecutor(max_workers=2) as pool:
         futures = [
             pool.submit(write, quarantined, "quarantine"),
-            pool.submit(write, unified.select(*_UNIFIED_COLS, "response_json"),
-                        "data", "doc_type"),
+            pool.submit(write, data, "data", "doc_type"),
         ]
         for fut in futures:
             fut.result()  # surface the first failure
 
-    lrows = lin.lineage_rows(unified, run_id).persist()
-    lrows.write.mode("append").parquet(f"{output_path}/lineage")
-    wall_ms = int((time.monotonic() - t0) * 1000)
-    # fold the summary from the ~P cached lineage rows (XOR re-folds
-    # exactly) instead of a second full aggregation pass over unified
-    summary_df = lin.summary_from_lineage(lrows, run_id, wall_ms)
-    summary_df.write.mode("append").parquet(f"{output_path}/lineage_summary")
-    summary = summary_df.collect()[0].asDict()
-    lrows.unpersist()
-    unified.unpersist()
+    summary = lin.write_summary(spark, data_obs, q_obs, run_id,
+                                int((time.monotonic() - t0) * 1000),
+                                f"{output_path}/lineage_summary")
     summary["wall_ms"] = int((time.monotonic() - t0) * 1000)
     return summary
 
@@ -320,8 +314,6 @@ def main() -> None:
     ap.add_argument("--canonicalize-urls", action="store_true",
                     help="normalize the url column (case/ports/fragments/"
                          "query order) before resume/dedup")
-    ap.add_argument("--storage-level", default="MEMORY_AND_DISK",
-                    choices=["MEMORY_AND_DISK", "DISK_ONLY", "MEMORY_ONLY"])
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
@@ -330,11 +322,11 @@ def main() -> None:
         spark, args.input, args.output, date.fromisoformat(args.run_date),
         partitions=args.partitions, salt=args.salt, mode=args.mode,
         resume=args.resume, tier2_enabled=not args.no_tier2,
-        storage_level=args.storage_level,
         canonicalize_urls=args.canonicalize_urls,
         respect_noindex=args.respect_noindex)
     print({k: summary[k] for k in ("run_id", "input_count", "extracted_count",
-                                   "valid_count", "tier2_count", "digest", "wall_ms")})
+                                   "valid_count", "tier2_count", "digest",
+                                   "quarantined_count", "wall_ms")})
 
 
 if __name__ == "__main__":

@@ -1,16 +1,18 @@
-"""Per-partition lineage rows + resume-from-checkpoint (SURVEY.md §4.3).
+"""Run summary + resume-from-checkpoint (SURVEY.md §4.3).
 
-Each run appends one row per *output partition*::
+Each run appends one summary row to ``lineage_summary/``::
 
-    (run_id, partition_id, input_count, extracted_count, valid_count,
-     tier2_count, digest)
+    (run_id, partition_id = -1, input_count, extracted_count, valid_count,
+     tier2_count, digest, quarantined_count, wall_ms)
 
-plus one ``partition_id = -1`` summary row carrying the global digest and
-wall-clock.  ``digest`` is an **XOR-aggregate of xxhash64(url,
-extracted_text, valido, confianza)** — order-independent and
-overflow-free, so the global digest is identical at any parallelism level
-(the N vs 4N determinism check in BASELINE.md) and per-partition digests
-are stable for a fixed partition count (partition = xxhash64(url) % P).
+The counts and the digest are observed on the run's own sink writes
+(``DataFrame.observe``) — no extra job over the output.  ``digest`` is an
+**XOR-aggregate of xxhash64(url, extracted_text, valido, confianza)** —
+order-independent and overflow-free, so it is identical at any
+parallelism level (the N vs 4N determinism check in BASELINE.md) and the
+digests of resumed drops XOR to the digest of one run over their union.
+Per-task extraction time — the straggler evidence — is in Spark's event
+log.
 
 Resume = left-anti join of the input against already-written output urls —
 the durable analog of the reference's stateless "delete after use" service
@@ -22,10 +24,12 @@ No PII ever lands here: only counts and hashes (Z6 redaction contract,
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-LINEAGE_COLS = ("run_id", "partition_id", "input_count", "extracted_count",
-                "valid_count", "tier2_count", "digest", "wall_ms")
+_SUMMARY_SCHEMA = ("run_id string, partition_id int, input_count bigint, "
+                   "extracted_count bigint, valid_count bigint, "
+                   "tier2_count bigint, digest bigint, "
+                   "quarantined_count bigint, wall_ms bigint")
 
 
 def row_digest_col() -> F.Column:
@@ -33,73 +37,52 @@ def row_digest_col() -> F.Column:
     return F.xxhash64("url", "extracted_text", "valido", "confianza_global")
 
 
-def lineage_rows(unified: DataFrame, run_id: str) -> DataFrame:
-    """One lineage row per physical output partition of *unified*.
+def summary_aggs() -> list[F.Column]:
+    """The run summary's aggregates over output rows — observed on the
+    ``data/`` write and recomputed by :func:`global_summary`."""
+    return [
+        F.count("*").alias("input_count"),
+        F.count(F.when(F.length("extracted_text") > 0, 1)).alias("extracted_count"),
+        F.count(F.when(F.col("valido"), 1)).alias("valid_count"),
+        F.count(F.when(F.col("tier") == 2, 1)).alias("tier2_count"),
+        F.bit_xor(row_digest_col()).alias("digest"),
+    ]
 
-    ``wall_ms`` is the partition's Python-stage extraction wall (summed
-    per-row ``proc_us`` shares stamped by the extraction row kernel) — the T7
-    latency-guard evidence: a straggling partition shows up here, and the
-    speculation configs in ``job.build_session`` are its cluster-side
-    reaper.  Null when the frame carries no ``proc_us`` column.
+
+def observe_sinks(data: DataFrame, quarantined: DataFrame
+                  ) -> tuple[DataFrame, DataFrame, Observation, Observation]:
+    """Attach the summary observations to the two sink frames.
+
+    Call it last, on the exact frames written: the metrics are collected
+    in the write's result stage, where Spark merges each partition's
+    accumulators once, so retried or speculative tasks never double-count.
     """
-    wall = (F.floor(F.sum("proc_us") / 1000).cast("long")
-            if "proc_us" in unified.columns else F.lit(None).cast("long"))
-    return (
-        unified
-        .withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("input_count"),
-            F.count(F.when(F.length("extracted_text") > 0, 1)).alias("extracted_count"),
-            F.count(F.when(F.col("valido"), 1)).alias("valid_count"),
-            F.count(F.when(F.col("tier") == 2, 1)).alias("tier2_count"),
-            F.bit_xor(row_digest_col()).alias("digest"),
-            wall.alias("wall_ms"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .select(*LINEAGE_COLS)
-    )
+    data_obs, q_obs = Observation(), Observation()
+    return (data.observe(data_obs, *summary_aggs()),
+            quarantined.observe(q_obs,
+                                F.count("*").alias("quarantined_count")),
+            data_obs, q_obs)
 
 
-def summary_from_lineage(lineage: DataFrame, run_id: str,
-                         wall_ms: int) -> DataFrame:
-    """Global summary row folded from the per-partition lineage rows.
-
-    Counts sum and the XOR digest re-folds exactly (XOR is associative), so
-    this is identical to :func:`global_summary` over the full frame while
-    aggregating ~P rows instead of re-scanning the corpus — the batch job
-    uses it to avoid a second full pass per run.
-    """
-    return (
-        lineage.agg(
-            F.coalesce(F.sum("input_count"), F.lit(0)).alias("input_count"),
-            F.coalesce(F.sum("extracted_count"), F.lit(0)).alias("extracted_count"),
-            F.coalesce(F.sum("valid_count"), F.lit(0)).alias("valid_count"),
-            F.coalesce(F.sum("tier2_count"), F.lit(0)).alias("tier2_count"),
-            F.bit_xor("digest").alias("digest"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("partition_id", F.lit(-1))
-        .withColumn("wall_ms", F.lit(wall_ms).cast("long"))
-        .select(*LINEAGE_COLS)
-    )
+def write_summary(spark: SparkSession, data_obs: Observation,
+                  q_obs: Observation, run_id: str, wall_ms: int, path: str,
+                  mode: str = "append") -> dict:
+    """Write the one summary row built from the sink observations to
+    *path* and return it as a dict."""
+    summary = {"run_id": run_id, "partition_id": -1, **data_obs.get,
+               **q_obs.get, "wall_ms": wall_ms}
+    spark.createDataFrame([summary], _SUMMARY_SCHEMA) \
+        .write.mode(mode).parquet(path)
+    return summary
 
 
 def global_summary(unified: DataFrame, run_id: str, wall_ms: int) -> DataFrame:
-    """Single order/parallelism-independent summary row (partition_id = -1)."""
-    return (
-        unified.agg(
-            F.count("*").alias("input_count"),
-            F.count(F.when(F.length("extracted_text") > 0, 1)).alias("extracted_count"),
-            F.count(F.when(F.col("valido"), 1)).alias("valid_count"),
-            F.count(F.when(F.col("tier") == 2, 1)).alias("tier2_count"),
-            F.bit_xor(row_digest_col()).alias("digest"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("partition_id", F.lit(-1))
-        .withColumn("wall_ms", F.lit(wall_ms).cast("long"))
-        .select(*LINEAGE_COLS)
-    )
+    """Single order/parallelism-independent summary row over *unified*
+    (partition_id = -1) — the reference the observed summary is checked
+    against."""
+    return unified.agg(*summary_aggs()).select(
+        F.lit(run_id).alias("run_id"), F.lit(-1).alias("partition_id"), "*",
+        F.lit(wall_ms).cast("long").alias("wall_ms"))
 
 
 def anti_join_done(pages: DataFrame, output_data_path: str) -> DataFrame:

@@ -17,11 +17,12 @@ Three surfaces:
 * :func:`run_streaming_pipeline` — the full dual-tier pipeline via
   ``foreachBatch``: each micro-batch goes through exactly the batch stages
   (admission → one fused tier-1 + inline tier-2 pass) and is appended to the
-  same output layout as :func:`ocr_spark.job.run_pipeline`, with one lineage
-  row per micro-batch.  The streaming checkpoint gives resume-from-offset;
-  outputs are idempotent per batch_id because every write is keyed by
-  ``run_id = <run>-<batch_id>`` (an Iceberg sink would make the append
-  transactional as well).
+  same output layout as :func:`ocr_spark.job.run_pipeline`, with one
+  summary row per micro-batch observed on its own sink writes
+  (``run_id = <run>-<batch_id>``).  The streaming checkpoint gives
+  resume-from-offset; outputs are idempotent per batch_id because every
+  write targets its own ``batch_id=`` directory (an Iceberg sink would make
+  the append transactional as well).
 
 Determinism: the same frozen ``run_date`` parameter as the batch job; the
 global output digest (XOR of row digests) over all micro-batches equals the
@@ -30,6 +31,7 @@ batch pipeline's digest on the same input — asserted in tests.
 
 from __future__ import annotations
 
+import time
 from datetime import date
 from typing import Optional
 
@@ -108,7 +110,7 @@ def host_profiles(extracted: DataFrame, timeout: str = "NoTimeout") -> DataFrame
 
     ``applyInPandasWithState`` keeps (pages_seen, n_valido, n_tier2) per host
     across micro-batches and emits the updated profile whenever a host
-    appears in a batch — the streaming analog of the lineage rollup, keyed by
+    appears in a batch — the streaming analog of the run summary, keyed by
     the skew dimension (hot hosts surface immediately).
     """
     import pandas as pd
@@ -148,7 +150,7 @@ def run_streaming_pipeline(spark: SparkSession, input_path: str,
     """Full dual-tier pipeline as a streaming query via ``foreachBatch``.
 
     Each micro-batch runs the exact batch stages and lands in the batch
-    job's layout (data / quarantine / lineage) with one extra hive
+    job's layout (data / quarantine / lineage_summary) with one extra hive
     partition level, ``batch_id=<n>`` — reading ``{output}/data`` surfaces
     it as an ordinary column.  ``foreachBatch`` is at-least-once: a batch
     replayed after a failure between sink writes and checkpoint commit
@@ -178,7 +180,8 @@ def run_streaming_pipeline(spark: SparkSession, input_path: str,
     if not os.path.isdir(f"{output_path}/_checkpoint"):
         # lineage_summary included: the batch job writes it in the same
         # layout, and leaving it behind would describe deleted rows (any
-        # audit reconciling summary against data would double-count)
+        # audit reconciling summary against data would double-count);
+        # lineage is the per-partition layout older versions wrote
         stale = [sub for sub in ("data", "quarantine", "lineage",
                                  "lineage_summary")
                  if os.path.isdir(f"{output_path}/{sub}")]
@@ -197,6 +200,7 @@ def run_streaming_pipeline(spark: SparkSession, input_path: str,
             shutil.rmtree(f"{output_path}/{sub}")
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
+        t0 = time.monotonic()
         admitted, quarantined = job.admission_split(batch_df)
         admitted = job.spread_partitions(admitted, partitions)
 
@@ -207,18 +211,19 @@ def run_streaming_pipeline(spark: SparkSession, input_path: str,
         unified = admitted.mapInPandas(fused, udfs.FUSED_SCHEMA)
         unified = unified.drop("html", "src_text").withColumn(
             "spans", F.from_json("spans_json", job._SPANS_TYPE))
-        unified.persist()
+        data, quarantined, data_obs, q_obs = lin.observe_sinks(
+            unified.select(*job._UNIFIED_COLS, "response_json"), quarantined)
 
         bsub = f"batch_id={batch_id}"
         quarantined.write.mode("overwrite").parquet(
             f"{output_path}/quarantine/{bsub}")
-        (unified.select(*job._UNIFIED_COLS, "response_json")
-         .write.mode("overwrite").partitionBy("doc_type")
+        (data.write.mode("overwrite").partitionBy("doc_type")
          .parquet(f"{output_path}/data/{bsub}"))
-        lin.lineage_rows(unified.select(*job._UNIFIED_COLS, "proc_us"),
-                         f"{run_id}-{batch_id}") \
-            .write.mode("overwrite").parquet(f"{output_path}/lineage/{bsub}")
-        unified.unpersist()
+        # overwrite: a replayed batch rewrites its own summary row
+        lin.write_summary(spark, data_obs, q_obs, f"{run_id}-{batch_id}",
+                          int((time.monotonic() - t0) * 1000),
+                          f"{output_path}/lineage_summary/{bsub}",
+                          mode="overwrite")
 
     stream = read_pages_stream(spark, input_path, max_files_per_trigger)
     writer = (stream.writeStream

@@ -1,11 +1,10 @@
 """Frozen-date goldens for the extraction row kernel and the parse UDF.
 
-The goldens pin, per doc_type, every column the kernel emits except the
-timing stamp ``proc_us`` — ``response_json``, ``spans_json``, tier and
-``tier2_reason`` included, which the 20k-page pipeline digest does not
-cover.  They were recorded from the code whose per-url parity with the
-reference parsers was last verified, and ``tests/test_kernel.py`` replays
-them without Spark.
+The goldens pin, per doc_type, the kernel columns in :data:`CANON_COLS`
+— ``response_json``, ``spans_json``, tier and ``tier2_reason`` included,
+which the 20k-page pipeline digest does not cover.  They were recorded
+from the code whose per-url parity with the reference parsers was last
+verified, and ``tests/test_kernel.py`` replays them without Spark.
 
 Regenerate (only for a deliberate output change, and say why in the
 commit)::

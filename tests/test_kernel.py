@@ -103,8 +103,8 @@ def test_parse_goldens_catch_one_byte_change(goldens, column):
 
 
 def _rows(df: pd.DataFrame) -> list[tuple]:
-    """Every column but the timing stamp, as tuples ordered by url."""
-    df = df.drop(columns="proc_us").sort_values("url").astype(object)
+    """Every column, as tuples ordered by url."""
+    df = df.sort_values("url").astype(object)
     return [tuple(r) for r in df.itertuples(index=False)]
 
 

@@ -65,6 +65,36 @@ def test_pipeline_single_pass_one_python_stage_total(spark):
     assert "Union" not in plans.physical_plan(unified)
 
 
+def test_pipeline_observes_summary_above_the_exchange(spark, tmp_path,
+                                                     monkeypatch):
+    """run_pipeline observes its summary on the data-write frame with no
+    Exchange above the CollectMetrics node: the metrics are collected in
+    the write's result stage, where Spark merges each partition's
+    accumulators once, so task retries and speculation never
+    double-count."""
+    from datetime import date
+
+    from ocr_spark import job, lineage, pagegen
+
+    observed = []
+    observe_sinks = lineage.observe_sinks
+
+    def spy(data, quarantined):
+        out = observe_sinks(data, quarantined)
+        observed.append(out[0])
+        return out
+
+    monkeypatch.setattr(lineage, "observe_sinks", spy)
+    job.run_pipeline(spark, "", str(tmp_path / "obs"), date(2026, 8, 16),
+                     partitions=2,
+                     input_df=pagegen.generate_df(spark, 8, partitions=2))
+    (data,) = observed
+    lines = plans.physical_plan(data).splitlines()
+    top = next(i for i, line in enumerate(lines) if "CollectMetrics" in line)
+    assert not any("Exchange" in line for line in lines[:top]), lines
+    assert any("Exchange" in line for line in lines[top:])  # the repartition
+
+
 def test_scan_reads_no_filters_for_full_count(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id")
     assert plans.read_schema_columns(docs) == ["doc_id"]

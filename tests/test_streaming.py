@@ -39,6 +39,15 @@ def test_stream_matches_batch_digest(spark, stream_input, tmp_path):
     assert stream_summary["input_count"] == N_PAGES
     assert stream_summary["digest"] == batch["digest"]
     assert stream_summary["valid_count"] == batch["valid_count"]
+    # one observed summary row per micro-batch; together they are the batch
+    # run's summary
+    rows = spark.read.parquet(f"{out}/lineage_summary").collect()
+    assert sorted(r["batch_id"] for r in rows) == [0, 1]
+    assert sorted(r["run_id"] for r in rows) == ["stream-0", "stream-1"]
+    for key in ("input_count", "valid_count", "tier2_count",
+                "quarantined_count"):
+        assert sum(r[key] for r in rows) == batch[key], key
+    assert rows[0]["digest"] ^ rows[1]["digest"] == batch["digest"]
 
 
 def test_stream_resume_is_idempotent(spark, stream_input, tmp_path):

@@ -4,14 +4,14 @@
 ``bench_scaling.py`` evidences the N→4N criterion for the extraction
 pipeline alone; this tool runs the LITERAL 100-TB story — deterministic
 crawl pages → the fused extraction pipeline (admission → url-hash
-repartition → extract/route/parse/validate → typed sink + lineage) →
+repartition → extract/route/parse/validate → typed sink + run summary) →
 the curation chain over the extracted text (quality → repetition →
 lang gate → exact dedup → PII scrub → 2000-token sharding, three
 sinks) — as ONE job in a fresh JVM per run, at local[N] and local[4N]
 on the same input, alternating so shared-VM drift hits both sides
 equally, medians over --repeats.
 
-Per-stage cost split: ``extract`` (includes its data/lineage sinks),
+Per-stage cost split: ``extract`` (includes its data/quarantine/summary sinks),
 ``prep`` (the skinny (doc_id, text) projection written between stages —
 on a real cluster this is the table handoff), ``curate`` (includes its
 data/report/summary sinks).  Both stage digests (extraction xxhash64
@@ -182,9 +182,10 @@ def main() -> None:
         "pages": args.pages,
         "input": gen,
         "partitions": args.partitions,
-        "stage_split_note": "extract includes data+lineage sinks; prep is "
-                            "the (doc_id, text) handoff write; curate "
-                            "includes data/report/summary sinks",
+        "stage_split_note": "extract includes data+quarantine+summary "
+                            "sinks; prep is the (doc_id, text) handoff "
+                            "write; curate includes data/report/summary "
+                            "sinks",
         "runs": all_runs,
         "medians": {
             str(c): {k: med(c, k) for k in

@@ -7,7 +7,7 @@ parallelism levels in fresh JVMs:
 
     efficiency = throughput(local[4N]) / (4 × throughput(local[N]))
 
-and additionally require the output lineage digests to be identical across
+and additionally require the run-summary digests to be identical across
 both runs (order/parallelism independence).
 
 Usage::

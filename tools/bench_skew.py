@@ -3,13 +3,15 @@
 Plants the salt mechanism's pathological input — ONE url re-captured for
 ~30% of the corpus (url-hash placement puts every capture in a single
 partition) — and runs the SAME pipeline with ``salt=0`` and ``salt=8``.
-Straggler severity is read from the pipeline's own per-partition lineage
-rows: ``wall_ms`` is the partition's Python-stage extraction wall and
-``input_count`` its row count, so
+Straggler severity is read from Spark's event log (uncompressed, enabled
+for this session): per-task times of the extraction stage, as
+``perfbench/eventlog.py`` computes ``job.fused_stage_straggler_ratio``,
 
-    straggler_ratio = max(partition wall) / median(partition wall)
+    straggler_ratio = max(task time) / median(task time)
 
-collapses toward ~1 when the salt spreads the hot url's captures.  The
+which collapses toward ~1 when the salt spreads the hot url's captures.
+Per-partition row counts come from the pipeline's own placement,
+``job.spread_partitions``, grouped by ``spark_partition_id()``.  The
 global digest must be IDENTICAL across both runs — placement must never
 change a single output byte.
 
@@ -28,6 +30,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import statistics
 import time
 from datetime import date
@@ -70,26 +73,25 @@ def run_once(spark, pages_path: str, out: str, partitions: int, salt: int,
 
     from ocr_spark import job
 
-    t0 = time.monotonic()
+    placed = job.spread_partitions(job.read_pages(spark, pages_path),
+                                   partitions, salt)
+    counts = sorted(r["count"] for r in placed.groupBy(
+        F.spark_partition_id().alias("partition_id")).count().collect())
+    t0 = time.time()
     summary = job.run_pipeline(
         spark, pages_path, out, RUN_DATE, partitions=partitions, salt=salt)
-    wall_s = time.monotonic() - t0
-    lineage = (spark.read.parquet(f"{out}/lineage")
-               .filter(F.col("partition_id") >= 0)
-               .select("partition_id", "input_count", "wall_ms").collect())
-    walls = sorted(r["wall_ms"] for r in lineage)
-    counts = sorted(r["input_count"] for r in lineage)
-    med_wall = statistics.median(walls) or 1
+    t1 = time.time()
     result = {
         "salt": salt,
         "digest": summary["digest"],
-        "wall_s": round(wall_s, 2),
-        "n_partitions": len(walls),
+        "wall_s": round(t1 - t0, 2),
+        "n_partitions": len(counts),
         "max_partition_rows": counts[-1],
         "median_partition_rows": statistics.median(counts),
-        "max_partition_wall_ms": walls[-1],
-        "median_partition_wall_ms": med_wall,
-        "straggler_ratio": round(walls[-1] / med_wall, 3),
+        # event-log window of this run; straggler_ratio is filled in from
+        # it once the session has stopped and the log is complete
+        "window": {"name": "extract", "start_ms": int(t0 * 1000),
+                   "end_ms": int(t1 * 1000) + 1},
     }
     if curate_chain:
         # the 100-TB story continues past extraction: run the curation
@@ -127,11 +129,22 @@ def main() -> None:
     import tempfile
 
     from ocr_spark import job
+    from perfbench import eventlog
 
+    wd = tempfile.mkdtemp(prefix="bench_skew_")
+    os.mkdir(f"{wd}/eventlog")
+    confs = {"spark.eventLog.enabled": "true",
+             "spark.eventLog.dir": f"file://{wd}/eventlog",
+             "spark.eventLog.compress": "false",
+             "spark.eventLog.rolling.enabled": "false"}
+    # build_session takes no extra configs; event logging must be on
+    # before the JVM starts
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        [f"--conf {k}={v}" for k, v in confs.items()]
+        + [os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")])
     spark = job.build_session("bench_skew", master="local[32]",
                               shuffle_partitions=args.partitions)
     spark.sparkContext.setLogLevel("ERROR")
-    wd = tempfile.mkdtemp(prefix="bench_skew_")
     try:
         pages_path = f"{wd}/pages.parquet"
         skewed_pages(spark, args.pages, args.hot_pct, args.partitions) \
@@ -143,6 +156,13 @@ def main() -> None:
                             args.partitions, s,
                             curate_chain=not args.no_curate)
                    for s in (0, 8)]
+        app_id = spark.sparkContext.applicationId
+        spark.stop()  # closes the event log under its final name
+        events = eventlog.load(f"{wd}/eventlog", app_id)
+        for r in results:
+            r["straggler_ratio"] = round(eventlog.layer_metrics(
+                events, [r.pop("window")])["job.fused_stage_straggler_ratio"],
+                3)
         blob = {
             "bench": "skew_salt",
             "pages": args.pages,
@@ -160,7 +180,7 @@ def main() -> None:
                 results[0]["curate_digest"] == results[1]["curate_digest"])
         Path(args.out).write_text(json.dumps(blob, indent=2) + "\n")
         print(json.dumps(blob, indent=2))
-        print("\n| salt | max rows/part | straggler ratio (wall) | job wall s |")
+        print("\n| salt | max rows/part | straggler ratio (task time) | job wall s |")
         print("|---|---|---|---|")
         for r in results:
             print(f"| {r['salt']} | {r['max_partition_rows']} | "

@@ -45,7 +45,7 @@ def main() -> None:
         resume=args.resume)
     print({k: summary[k] for k in ("run_id", "input_count", "extracted_count",
                                    "valid_count", "tier2_count", "digest",
-                                   "wall_ms")})
+                                   "quarantined_count", "wall_ms")})
 
 
 if __name__ == "__main__":
