@@ -24,11 +24,7 @@ from ocr_spark.validators import DNI_CHECK_LETTERS
 RE_DOC = r"(\d{8}[A-Z]|[XYZ]\d{7}[A-Z])"
 RE_DNI_EXACT = r"^\d{8}[A-Z]$"
 RE_NIE_EXACT = r"^[XYZ]\d{7}[A-Z]$"
-RE_CIF = r"([ABCDEFGHJKLMNPQRSUVW]\d{7}[A-J0-9])"
-RE_PLATE_MODERN = r"(\d{4}[A-Z]{3})"
-RE_VIN = r"([A-HJ-NPR-Z0-9]{17})"
 RE_DATE_DMY = r"(\d{2})[-/.](\d{2})[-/.](\d{4})"
-RE_CP = r"(\d{5})"
 
 
 # --- C1: DNI/NIE check letter --------------------------------------------------

@@ -121,8 +121,6 @@ FUSED_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
     T.StructField("warc_ts", T.TimestampType()),
     T.StructField("lang", T.StringType()),
-    T.StructField("html", T.BinaryType()),       # passthrough for the tier-2 branch
-    T.StructField("src_text", T.StringType()),   # passthrough for html-less rows
     T.StructField("doc_type", T.StringType()),
     T.StructField("tier", T.IntegerType()),
     T.StructField("needs_tier2", T.BooleanType()),
@@ -209,12 +207,8 @@ def extract_batch(pdf: pd.DataFrame, run_date: date, mode: str = "standard",
             resp, needs, reason = parse_dispatch(
                 dt, xt, conf, run_date, TIER1_ENGINE, route)
             if policy == "tier1" or not needs:
-                # html/src_text pass through ONLY for the tier-1 fallback
-                # slice — carrying the raw page for every row would make a
-                # tier-1 output ~input-sized when most rows never reach tier 2
-                keep = html if needs else None, text if needs else None
-                rows.append(_row(url, ts, lang, *keep, dt, 1, needs, reason,
-                                 xt, TIER1_ENGINE, conf, resp, None))
+                rows.append(_row(url, ts, lang, dt, 1, needs, reason, xt,
+                                 TIER1_ENGINE, conf, resp, None))
                 continue
         if blocks is None:
             xt = text or ""
@@ -224,16 +218,16 @@ def extract_batch(pdf: pd.DataFrame, run_date: date, mode: str = "standard",
         dt = route_doc_type(bound_parse_text(xt))
         resp, _, _ = parse_dispatch(
             dt, xt, conf, run_date, TIER2_ENGINE, route=False)
-        rows.append(_row(url, ts, lang, None, text, dt, 2, False, reason, xt,
+        rows.append(_row(url, ts, lang, dt, 2, False, reason, xt,
                          TIER2_ENGINE, conf, resp, spans))
     return pd.DataFrame(rows, columns=_FUSED_COLS)
 
 
-def _row(url, ts, lang, html, src_text, doc_type, tier, needs, reason, xt,
-         engine, conf, resp, spans) -> tuple:
+def _row(url, ts, lang, doc_type, tier, needs, reason, xt, engine, conf,
+         resp, spans) -> tuple:
     """One :data:`FUSED_SCHEMA` row."""
-    return (url, ts, lang, html, src_text, doc_type, tier, needs, reason, xt,
-            engine, conf, resp["valido"], resp["confianza_global"],
+    return (url, ts, lang, doc_type, tier, needs, reason, xt, engine, conf,
+            resp["valido"], resp["confianza_global"],
             _dumps(resp), _dumps(spans) if spans else None)
 
 

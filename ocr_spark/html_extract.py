@@ -252,9 +252,9 @@ def sniff_kind(data: bytes) -> str:
 # html.parser.HTMLParser spends most of its time in per-tag regex machinery
 # (parse_starttag/parse_endtag/updatepos) — ~30 ms for a 100 KB page, which
 # at Common-Crawl page sizes makes the DOM walk the pipeline bottleneck.
-# This scanner finds tags with str.find and drives the SAME _BlockCollector
-# handlers, so block semantics are identical (differential-tested); any
-# surprise falls back to the HTMLParser path.
+# This scanner finds tags with str.find and applies the SAME _BlockCollector
+# handler semantics, so block semantics are identical (differential-tested);
+# any surprise falls back to the HTMLParser path.
 
 # Reuse html.parser's own tolerant tokenization regexes so tag/attr edge
 # behavior ("<P<div" is a tag named "p<div"; quotes only delimit after "=")
@@ -294,7 +294,7 @@ _ATTR_CONTINUE = frozenset("abcdefghijklmnopqrstuvwxyz=/"
 # Outcome kinds: "s" start tag, "se" self-closing (start+end), "d" the
 # whole slice is data (bogus tag), "e" end tag, "n" no handler (bogus
 # comment / ``</>``).  The third tuple slot is the tag's precomputed
-# collector CLASS (``_tag_class``) so the replay path dispatches on one
+# collector CLASS (``_tag_class``) so the collector dispatch keys on one
 # int instead of re-walking the frozenset memberships per occurrence.
 _START_CACHE: dict[str, tuple[str, str, int]] = {}
 _END_CACHE: dict[str, tuple[str, str, int]] = {}
@@ -350,13 +350,15 @@ def _fast_scan(text: str, col: _BlockCollector) -> None:
 
     # Collector state hoisted into locals — the per-tag bound-method call
     # plus 3-4 frozenset probes plus self-attribute loads/stores were ~35%
-    # of end-to-end extraction CPU.  The inline dispatch below is an exact
-    # transliteration of _BlockCollector.handle_starttag/handle_endtag/
-    # handle_data keyed on the precomputed ``_tag_class`` int (gated by the
-    # same 20k-example differential fuzz as the scanner itself).  blocks
-    # and _buf are the collector's OWN list objects (mutated in place);
-    # the int counters are written back at every normal exit, so callers'
-    # ``col._flush()`` and the html.parser fallback see identical state.
+    # of end-to-end extraction CPU.  Each tag is lexed to an outcome
+    # ``(kind, tag, cls)`` and applied by the ONE collector dispatch at the
+    # bottom of the loop: an exact transliteration of
+    # _BlockCollector.handle_starttag/handle_endtag keyed on the
+    # precomputed ``_tag_class`` int (gated by the same 20k-example
+    # differential fuzz as the scanner itself).  blocks and _buf are the
+    # collector's OWN list objects (mutated in place); the int counters
+    # are written back at every normal exit, so callers' ``col._flush()``
+    # and the html.parser fallback see identical state.
     blocks = col.blocks
     buf = col._buf
     buf_append = buf.append
@@ -398,48 +400,6 @@ def _fast_scan(text: str, col: _BlockCollector) -> None:
                 _BLOCK_CACHE[key] = blk
         if blk is not _NO_BLOCK:
             blocks.append(blk)
-
-    def handle_start(tag: str) -> None:
-        # _BlockCollector.handle_starttag, uncached/slow-path form
-        nonlocal skip_depth, a_depth, pre_depth, boiler_depth, main_depth
-        if tag in _SKIP_SUBTREE:
-            skip_depth += 1
-            return
-        if skip_depth:
-            return
-        if tag == "a":
-            a_depth += 1
-        if tag == "br":
-            buf_append("\n" if pre_depth else " ")
-        if tag == "pre":
-            flush()
-            pre_depth += 1
-        elif tag in _BLOCK_TAGS:
-            flush()
-            if tag in _BOILERPLATE_TAGS:
-                boiler_depth += 1
-            if tag in _MAIN_TAGS:
-                main_depth += 1
-
-    def handle_end(tag: str) -> None:
-        # _BlockCollector.handle_endtag, uncached/slow-path form
-        nonlocal skip_depth, a_depth, pre_depth, boiler_depth, main_depth
-        if tag in _SKIP_SUBTREE:
-            skip_depth = skip_depth - 1 if skip_depth > 0 else 0
-            return
-        if skip_depth:
-            return
-        if tag == "a":
-            a_depth = a_depth - 1 if a_depth > 0 else 0
-        if tag == "pre":
-            flush()
-            pre_depth = pre_depth - 1 if pre_depth > 0 else 0
-        elif tag in _BLOCK_TAGS:
-            flush()
-            if tag in _BOILERPLATE_TAGS:
-                boiler_depth = boiler_depth - 1 if boiler_depth > 0 else 0
-            if tag in _MAIN_TAGS:
-                main_depth = main_depth - 1 if main_depth > 0 else 0
 
     # EOF-scan memos (per document).  Absence of these needles is monotone:
     # every search here starts at a non-decreasing position, so a search
@@ -523,68 +483,30 @@ def _fast_scan(text: str, col: _BlockCollector) -> None:
             sl = text[lt:gt_any + 1] if gt_any - lt < _CACHE_KEY_MAX else None
             hit = end_cache_get(sl) if sl is not None else None
             if hit is not None:
-                if hit[0] == "e":
-                    # inline handle_endtag keyed on the cached class
-                    cls = hit[2]
-                    if cls == _C_BLOCK:
-                        if not skip_depth and buf:
-                            flush()
-                    elif cls == _C_A:
-                        if not skip_depth and a_depth:
-                            a_depth -= 1
-                    elif cls == _C_SKIP:
-                        if skip_depth:
-                            skip_depth -= 1
-                    elif cls == _C_BOILER:
-                        if not skip_depth:
-                            if buf:
-                                flush()
-                            if boiler_depth:
-                                boiler_depth -= 1
-                    elif cls == _C_MAIN:
-                        if not skip_depth:
-                            if buf:
-                                flush()
-                            if main_depth:
-                                main_depth -= 1
-                    elif cls == _C_PRE:
-                        if not skip_depth:
-                            if buf:
-                                flush()
-                            if pre_depth:
-                                pre_depth -= 1
-                    # _C_BR / _C_NOOP end tags have no collector effect
+                kind, tag, cls = hit
                 pos = gt_any + 1
-                continue
-            m = _RE_ENDTAGFIND.match(text, lt)  # </ \s* name \s* >
-            if m:
-                name = m.group(1).lower()
-                handle_end(name)
-                pos = m.end()
-                outcome = ("e", name, _tag_class(name))
             else:
-                nm = _RE_TAGNAME.match(text, lt + 2)
-                if nm:
-                    gt = find(">", nm.end())
-                    name = nm.group(1).lower()
-                    handle_end(name)
-                    pos = gt + 1  # gt >= 0 because gt_any existed
-                    outcome = ("e", name, _tag_class(name))
-                elif text.startswith("</>", lt):
-                    pos = lt + 3
-                    outcome = ("n", "", _C_NOOP)
-                else:  # bogus comment: skip to ">"
+                m = _RE_ENDTAGFIND.match(text, lt)  # </ \s* name \s* >
+                if m:
+                    kind, tag = "e", m.group(1).lower()
+                    pos = m.end()
+                else:
+                    nm = _RE_TAGNAME.match(text, lt + 2)
+                    if nm:
+                        kind, tag = "e", nm.group(1).lower()
+                        # >= 0 because gt_any existed
+                        pos = find(">", nm.end()) + 1
+                    else:  # "</>" or a bogus comment: skip to ">"
+                        kind, tag = "n", ""
+                        pos = lt + 3 if text.startswith("</>", lt) else gt_any + 1
+                cls = _tag_class(tag)
+                if pos <= lt:  # defensive: always advance, never cache
                     pos = gt_any + 1
-                    outcome = ("n", "", _C_NOOP)
-            if pos <= lt:  # defensive: always advance
-                pos = gt_any + 1
-                outcome = None
-            # cache only slice-determined outcomes (every path above that
-            # set one ends exactly at gt_any + 1 — asserted by construction)
-            if (outcome is not None and sl is not None
-                    and pos == gt_any + 1
-                    and len(_END_CACHE) < _CACHE_MAX):
-                _END_CACHE[sl] = outcome
+                # cache only slice-determined outcomes (every path above
+                # ends exactly at gt_any + 1 — asserted by construction)
+                elif (sl is not None and pos == gt_any + 1
+                        and len(_END_CACHE) < _CACHE_MAX):
+                    _END_CACHE[sl] = (kind, tag, cls)
         elif nxt == "!" or nxt == "?":
             if text.startswith("<!--", lt):
                 cm = None if no_ccl else _RE_COMMENTCLOSE.search(text, lt + 4)
@@ -638,6 +560,7 @@ def _fast_scan(text: str, col: _BlockCollector) -> None:
                     pos = recover(lt)
                     continue
                 pos = gt + 1
+            continue
         elif nxt and ("a" <= nxt <= "z" or "A" <= nxt <= "Z"):
             if no_gt:
                 gt_naive = -1
@@ -648,148 +571,156 @@ def _fast_scan(text: str, col: _BlockCollector) -> None:
             # see the endtag branch: never materialize uncacheable far keys
             sl = (text[lt:gt_naive + 1]
                   if 0 < gt_naive and gt_naive - lt < _CACHE_KEY_MAX else None)
-            if sl is not None:
-                hit = start_cache_get(sl)
-                if hit is not None:
-                    kind = hit[0]
-                    if kind == "s":
-                        # inline handle_starttag keyed on the cached class,
-                        # ordered by corpus frequency (a, then blocks)
-                        cls = hit[2]
-                        if cls == _C_A:
-                            if not skip_depth:
-                                a_depth += 1
-                        elif cls == _C_BLOCK:
-                            if not skip_depth and buf:
-                                flush()
-                        elif cls == _C_BOILER:
-                            if not skip_depth:
-                                if buf:
-                                    flush()
-                                boiler_depth += 1
-                        elif cls == _C_MAIN:
-                            if not skip_depth:
-                                if buf:
-                                    flush()
-                                main_depth += 1
-                        elif cls == _C_SKIP:
-                            skip_depth += 1
-                        elif cls == _C_BR:
-                            if not skip_depth:
-                                buf_append("\n" if pre_depth else " ")
-                        elif cls == _C_PRE:
-                            if not skip_depth:
-                                if buf:
-                                    flush()
-                                pre_depth += 1
-                        # _C_NOOP start tags have no collector effect
-                        pos = gt_naive + 1
-                        tag = hit[1]
-                        if tag in _CDATA_TAGS:
-                            em = _RE_CDATA_END[tag].search(text, pos)
-                            if em is None:
-                                pos = n
-                                break
-                            handle_end(tag)
-                            pos = em.end()
-                    elif kind == "se":
-                        tag = hit[1]
-                        handle_start(tag)
-                        handle_end(tag)
-                        pos = gt_naive + 1
-                    else:  # "d": bogus tag — raw data, no charref decode
-                        if not skip_depth and sl:
-                            buf_append(sl)
-                            if a_depth:
-                                link_chars += len(sl)
-                        pos = gt_naive + 1
-                    continue
-            # mirror of check_for_whole_start_tag + parse_starttag
-            lm = _RE_LOCATE_START.match(text, lt)
-            j = lm.end()
-            scan_work += j - lt
-            if scan_work > scan_budget:
-                emit(text[lt:])
-                break
-            after = text[j: j + 1]
-            if after == ">":
-                endpos = j + 1
-            elif after == "/":
-                if text.startswith("/>", j):
-                    endpos = j + 2
-                else:  # "/" then EOF/junk: incomplete → goahead resync
+            hit = start_cache_get(sl) if sl is not None else None
+            if hit is not None:
+                kind, tag, cls = hit
+                pos = gt_naive + 1
+            else:
+                # mirror of check_for_whole_start_tag + parse_starttag
+                lm = _RE_LOCATE_START.match(text, lt)
+                j = lm.end()
+                scan_work += j - lt
+                if scan_work > scan_budget:
+                    emit(text[lt:])
+                    break
+                after = text[j: j + 1]
+                if after == ">":
+                    endpos = j + 1
+                elif after == "/":
+                    if text.startswith("/>", j):
+                        endpos = j + 2
+                    else:  # "/" then EOF/junk: incomplete → goahead resync
+                        pos = recover(lt)
+                        continue
+                elif after == "" or after in _ATTR_CONTINUE:
+                    # EOF inside tag / attribute value → goahead resync
                     pos = recover(lt)
                     continue
-            elif after == "" or after in _ATTR_CONTINUE:
-                # EOF inside tag / attribute value → goahead resync
-                pos = recover(lt)
-                continue
-            else:
-                endpos = j if j > lt else lt + 1
-            nm = _RE_TAGNAME.match(text, lt + 1)
-            tag = nm.group(1).lower()
-            k = nm.end()
-            while k < endpos:  # walk attrs to find where they stop
-                am = _RE_ATTR.match(text, k)
-                if not am:
-                    break
-                k = am.end()
-            end = text[k:endpos].strip()
-            # Soundness: ``endpos == gt_naive + 1`` guarantees the outcome
-            # is a function of the slice alone, in ANY document.  The only
-            # construct that reads past the naive ">" is a quoted attribute
-            # value still open at it; whether that scan *starts* is decided
-            # by the slice prefix, and when it does start the parse can
-            # never land back exactly on gt+1: either the closing quote is
-            # found beyond (endpos > gt+1 → not cached) or the quoted
-            # alternative fails and backtracks to a name-only attr, leaving
-            # the next char "=" — which hits the ATTR_CONTINUE incomplete-
-            # tag branch above (data-to-EOF, not cached).  So any slice
-            # that reaches this line with endpos == gt+1 parses identically
-            # wherever it appears.  (Names, bare values and whitespace all
-            # exclude ">" by charset.)  Gated empirically by the
-            # quote-adversarial differential fuzz in tests.
-            cacheable = (sl is not None and endpos == gt_naive + 1
-                         and len(_START_CACHE) < _CACHE_MAX)
-            if end not in (">", "/>"):
-                # bogus input: the whole tag text becomes data — RAW, no
-                # charref conversion (parse_starttag calls handle_data
-                # directly, bypassing the convert_charrefs path)
-                chunk = text[lt:endpos]
-                if not skip_depth and chunk:
-                    buf_append(chunk)
-                    if a_depth:
-                        link_chars += len(chunk)
+                else:
+                    endpos = j if j > lt else lt + 1
+                nm = _RE_TAGNAME.match(text, lt + 1)
+                tag = nm.group(1).lower()
+                k = nm.end()
+                while k < endpos:  # walk attrs to find where they stop
+                    am = _RE_ATTR.match(text, k)
+                    if not am:
+                        break
+                    k = am.end()
+                end = text[k:endpos].strip()
+                if end not in (">", "/>"):
+                    # bogus input: the whole tag text becomes data
+                    kind, tag, cls = "d", "", _C_NOOP
+                else:
+                    kind = "se" if end == "/>" else "s"
+                    cls = _tag_class(tag)
                 pos = endpos
-                if cacheable:
-                    _START_CACHE[sl] = ("d", "", _C_NOOP)
-                continue
-            handle_start(tag)
-            if end == "/>":
-                handle_end(tag)
-                pos = endpos
-                if cacheable:
-                    _START_CACHE[sl] = ("se", tag, _tag_class(tag))
-                continue
-            pos = endpos
-            if cacheable:
-                _START_CACHE[sl] = ("s", tag, _tag_class(tag))
-            if tag in _CDATA_TAGS:
-                # raw-text element: scan for the FULL end tag, mirroring
-                # html.parser.set_cdata_mode's r"</\s*script\s*>" — so
-                # "</ script>" closes the element and "</scriptx>" stays in
-                # CDATA mode.  em.end() is parse_endtag's gtpos (the "\s*"
-                # cannot contain ">", so the regex's ">" is the first one).
-                em = _RE_CDATA_END[tag].search(text, pos)
-                if em is None:
-                    pos = n
-                    break
-                handle_end(tag)
-                pos = em.end()
+                # Soundness: ``endpos == gt_naive + 1`` guarantees the
+                # outcome is a function of the slice alone, in ANY
+                # document.  The only construct that reads past the naive
+                # ">" is a quoted attribute value still open at it; whether
+                # that scan *starts* is decided by the slice prefix, and
+                # when it does start the parse can never land back exactly
+                # on gt+1: either the closing quote is found beyond
+                # (endpos > gt+1 → not cached) or the quoted alternative
+                # fails and backtracks to a name-only attr, leaving the
+                # next char "=" — which hits the ATTR_CONTINUE
+                # incomplete-tag branch above (data-to-EOF, not cached).
+                # So any slice that reaches this line with endpos == gt+1
+                # parses identically wherever it appears.  (Names, bare
+                # values and whitespace all exclude ">" by charset.)  Gated
+                # empirically by the quote-adversarial differential fuzz.
+                if (sl is not None and endpos == gt_naive + 1
+                        and len(_START_CACHE) < _CACHE_MAX):
+                    _START_CACHE[sl] = (kind, tag, cls)
         else:
             # stray "<" is literal text
             emit("<")
             pos = lt + 1
+            continue
+
+        # --- the one collector dispatch: apply (kind, tag, cls) ------------
+        if kind == "s" or kind == "se":
+            # handle_starttag, ordered by corpus frequency (a, then blocks)
+            if cls == _C_A:
+                if not skip_depth:
+                    a_depth += 1
+            elif cls == _C_BLOCK:
+                if not skip_depth and buf:
+                    flush()
+            elif cls == _C_BOILER:
+                if not skip_depth:
+                    if buf:
+                        flush()
+                    boiler_depth += 1
+            elif cls == _C_MAIN:
+                if not skip_depth:
+                    if buf:
+                        flush()
+                    main_depth += 1
+            elif cls == _C_SKIP:
+                skip_depth += 1
+            elif cls == _C_BR:
+                if not skip_depth:
+                    buf_append("\n" if pre_depth else " ")
+            elif cls == _C_PRE:
+                if not skip_depth:
+                    if buf:
+                        flush()
+                    pre_depth += 1
+            # _C_NOOP start tags have no collector effect
+            if kind == "s":
+                if tag not in _CDATA_TAGS:
+                    continue
+                # raw-text element: scan for the FULL end tag, mirroring
+                # html.parser.set_cdata_mode's r"</\s*script\s*>" — so
+                # "</ script>" closes the element and "</scriptx>" stays in
+                # CDATA mode.  em.end() is parse_endtag's gtpos (the "\s*"
+                # cannot contain ">", so the regex's ">" is the first one);
+                # the close then takes the end-tag effects below.
+                em = _RE_CDATA_END[tag].search(text, pos)
+                if em is None:
+                    pos = n
+                    break
+                pos = em.end()
+        elif kind == "d":
+            # bogus tag: the raw slice is data, no charref conversion
+            # (parse_starttag calls handle_data directly, bypassing the
+            # convert_charrefs path)
+            if not skip_depth:
+                chunk = text[lt:pos]
+                buf_append(chunk)
+                if a_depth:
+                    link_chars += len(chunk)
+            continue
+        # handle_endtag for "e", "se" and a CDATA close ("n" is _C_NOOP)
+        if cls == _C_BLOCK:
+            if not skip_depth and buf:
+                flush()
+        elif cls == _C_A:
+            if not skip_depth and a_depth:
+                a_depth -= 1
+        elif cls == _C_SKIP:
+            if skip_depth:
+                skip_depth -= 1
+        elif cls == _C_BOILER:
+            if not skip_depth:
+                if buf:
+                    flush()
+                if boiler_depth:
+                    boiler_depth -= 1
+        elif cls == _C_MAIN:
+            if not skip_depth:
+                if buf:
+                    flush()
+                if main_depth:
+                    main_depth -= 1
+        elif cls == _C_PRE:
+            if not skip_depth:
+                if buf:
+                    flush()
+                if pre_depth:
+                    pre_depth -= 1
+        # _C_BR / _C_NOOP end tags have no collector effect
 
     # write the hoisted counters back so col._flush() (every caller) and
     # any later feed through the collector see the exact post-scan state

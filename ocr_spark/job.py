@@ -224,55 +224,57 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
         pages = pages.withColumn("url", canonical_url(F.col("url")))
     admitted, quarantined = admission_split(
         pages, respect_noindex=respect_noindex)
-    if resume:
-        admitted = lin.anti_join_done(admitted, f"{output_path}/data")
-    admitted = spread_partitions(admitted, partitions, salt)
-
-    # --- ONE fused pass: tier 1 + inline tier 2 on the fallback rows -------
-    fused = udfs.extract_udf(run_date, mode, "fused", tier2_enabled)
-    unified = (admitted.mapInPandas(fused, udfs.FUSED_SCHEMA)
-               .drop("html", "src_text")
-               .withColumn("spans", F.from_json("spans_json", _SPANS_TYPE)))
-
-    # --- writes.  ONE partitioned write carries both the unified table and
-    #     the per-type response payload: ``data/`` is hive-partitioned by
-    #     doc_type with the canonical response JSON alongside the unified
-    #     columns, so per-type consumers get partition pruning for free and
-    #     the typed struct on demand via :func:`read_datos` (``from_json``
-    #     on read).  Compared with the round-1 layout (data + 3 datos_*
-    #     sinks) this cuts 3 write jobs and keeps the wide per-type struct
-    #     decode out of the write path entirely.  The summary is observed
-    #     on the sink writes — no output read-back — and written strictly
-    #     last (write-audit-publish order).
-
     # resume appends (overwrite would drop previously committed runs);
     # quarantine is re-derived every run, so under resume drop rows already
-    # quarantined to keep the sink exactly-once too
-    write_mode = "append" if resume else "overwrite"
+    # quarantined to keep that sink exactly-once too
     if resume:
-        from pyspark.errors import AnalysisException
+        admitted = lin.anti_join_done(admitted, f"{output_path}/data")
+        quarantined = lin.anti_join_done(quarantined,
+                                         f"{output_path}/quarantine")
+    admitted = spread_partitions(admitted, partitions, salt)
+    data = extract_frame(admitted, run_date, mode, tier2_enabled)
+    return write_run(spark, data, quarantined, output_path, "",
+                     "append" if resume else "overwrite", run_id, t0)
 
-        from ocr_spark.lineage import _is_path_not_found
-        try:
-            prior_q = spark.read.parquet(f"{output_path}/quarantine") \
-                .select("url").localCheckpoint(eager=True)
-            quarantined = quarantined.join(prior_q, "url", "left_anti")
-        except AnalysisException as exc:
-            if not _is_path_not_found(exc):
-                raise  # any other failure must surface — silently
-                # skipping the anti-join would append duplicate rows
-            # no prior quarantine output: first run, nothing to dedup
+
+def extract_frame(admitted: DataFrame, run_date: date, mode: str,
+                  tier2_enabled: bool) -> DataFrame:
+    """The ONE fused pass over *admitted* pages — tier 1 + inline tier 2 on
+    the fallback rows — as the ``data/`` sink's columns: the unified row
+    plus the canonical ``response_json``.  Shared by the batch job and the
+    streaming micro-batches."""
+    fused = udfs.extract_udf(run_date, mode, "fused", tier2_enabled)
+    return (admitted.mapInPandas(fused, udfs.FUSED_SCHEMA)
+            .withColumn("spans", F.from_json("spans_json", _SPANS_TYPE))
+            .select(*_UNIFIED_COLS, "response_json"))
+
+
+def write_run(spark: SparkSession, data: DataFrame, quarantined: DataFrame,
+              output_path: str, suffix: str, write_mode: str, run_id: str,
+              t0: float) -> dict:
+    """Write one run's sinks and its summary row; return the summary.
+
+    Every sink lands at ``{output_path}/<sink>{suffix}`` with *write_mode*
+    (the streaming micro-batches pass ``/batch_id=<n>``).  ONE partitioned
+    write carries both the unified table and the per-type response
+    payload: ``data/`` is hive-partitioned by doc_type with the canonical
+    response JSON alongside the unified columns, so per-type consumers get
+    partition pruning for free and the typed struct on demand via
+    :func:`read_datos` (``from_json`` on read).  The summary is observed on
+    the two sink writes — no output read-back — and written strictly last
+    (write-audit-publish order), with the sinks' *write_mode*: a fresh run
+    replaces the summary along with the rows it describes, a resumed drop
+    appends its own row.
+    """
+    # observe last, after the select and the resume anti-join, so the
+    # metrics sit above every exchange and count exactly the written rows
+    data, quarantined, data_obs, q_obs = lin.observe_sinks(data, quarantined)
 
     def _write(df: DataFrame, sub: str, partition_by: Optional[str] = None) -> None:
         writer = df.write.mode(write_mode)
         if partition_by:
             writer = writer.partitionBy(partition_by)
-        writer.parquet(f"{output_path}/{sub}")
-
-    # observe last, after the select and the resume anti-join, so the
-    # metrics sit above every exchange and count exactly the written rows
-    data, quarantined, data_obs, q_obs = lin.observe_sinks(
-        unified.select(*_UNIFIED_COLS, "response_json"), quarantined)
+        writer.parquet(f"{output_path}/{sub}{suffix}")
 
     # quarantine derives from the admission split, not the extraction, so
     # its write overlaps the extraction fully.  The writes run on pool
@@ -292,7 +294,8 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
 
     summary = lin.write_summary(spark, data_obs, q_obs, run_id,
                                 int((time.monotonic() - t0) * 1000),
-                                f"{output_path}/lineage_summary")
+                                f"{output_path}/lineage_summary{suffix}",
+                                write_mode)
     summary["wall_ms"] = int((time.monotonic() - t0) * 1000)
     return summary
 

@@ -1,6 +1,7 @@
 """Run summary + resume-from-checkpoint (SURVEY.md §4.3).
 
-Each run appends one summary row to ``lineage_summary/``::
+Each run writes one summary row to ``lineage_summary/`` — replacing it
+on a fresh run, appended on a resumed drop, like the sinks::
 
     (run_id, partition_id = -1, input_count, extracted_count, valid_count,
      tier2_count, digest, quarantined_count, wall_ms)
@@ -66,9 +67,10 @@ def observe_sinks(data: DataFrame, quarantined: DataFrame
 
 def write_summary(spark: SparkSession, data_obs: Observation,
                   q_obs: Observation, run_id: str, wall_ms: int, path: str,
-                  mode: str = "append") -> dict:
+                  mode: str) -> dict:
     """Write the one summary row built from the sink observations to
-    *path* and return it as a dict."""
+    *path* with *mode* — the mode of the sinks it describes — and return
+    it as a dict."""
     summary = {"run_id": run_id, "partition_id": -1, **data_obs.get,
                **q_obs.get, "wall_ms": wall_ms}
     spark.createDataFrame([summary], _SUMMARY_SCHEMA) \

@@ -71,9 +71,6 @@ _STOP_KEYWORDS_INLINE = ("DOMICILIO", "FECHA", "ADMINISTRACIÓN", "ADMINISTRACIO
 _STOP_KEYWORDS_BLOCK = ("DOMICILIO", "FECHA", "ADMINISTRACIÓN", "ADMINISTRACION",
                         "CÓDIGO", "CODIGO", "ANAGRAMA", "N.I.F", "NIF")
 
-_ADDRESS_KEYS = ("completo", "calle", "numero", "piso_puerta",
-                 "municipio", "provincia", "codigo_postal")
-
 
 # ---------------------------------------------------------------------------
 # Address sub-parsers (N7/N8)

@@ -10,8 +10,6 @@ from __future__ import annotations
 
 from typing import Optional
 
-ITEM_FIELDS = ("code", "severity", "field", "message", "evidence", "suggested_fix")
-
 
 def item(code: str, severity: str, message: str, field: Optional[str] = None,
          evidence: Optional[str] = None, suggested_fix: Optional[str] = None) -> dict:

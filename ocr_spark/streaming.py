@@ -15,10 +15,11 @@ Three surfaces:
   monitoring (late pages up to the watermark are still counted; later ones
   are dropped — deliberate, the batch pipeline is the source of truth).
 * :func:`run_streaming_pipeline` — the full dual-tier pipeline via
-  ``foreachBatch``: each micro-batch goes through exactly the batch stages
-  (admission → one fused tier-1 + inline tier-2 pass) and is appended to the
-  same output layout as :func:`ocr_spark.job.run_pipeline`, with one
-  summary row per micro-batch observed on its own sink writes
+  ``foreachBatch``: each micro-batch runs the batch job's own body
+  (admission → :func:`ocr_spark.job.extract_frame`, one fused tier-1 +
+  inline tier-2 pass → :func:`ocr_spark.job.write_run`) into the same
+  output layout as :func:`ocr_spark.job.run_pipeline`, with one summary
+  row per micro-batch observed on its own sink writes
   (``run_id = <run>-<batch_id>``).  The streaming checkpoint gives
   resume-from-offset; outputs are idempotent per batch_id because every
   write targets its own ``batch_id=`` directory (an Iceberg sink would make
@@ -38,7 +39,6 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocr_spark import job
-from ocr_spark import lineage as lin
 from ocr_spark.functions import udfs
 from ocr_spark.schema import PAGES_SCHEMA
 
@@ -62,8 +62,7 @@ def transform_stream(stream: DataFrame, run_date: date,
     stream is the low-latency tier, the batch job the completeness tier.
     """
     tier1 = udfs.extract_udf(run_date, mode, "tier1")
-    return (stream.mapInPandas(tier1, udfs.FUSED_SCHEMA)
-            .drop("html", "src_text"))
+    return stream.mapInPandas(tier1, udfs.FUSED_SCHEMA)
 
 
 def quality_rollup(extracted: DataFrame, window: str = "1 hour",
@@ -200,30 +199,17 @@ def run_streaming_pipeline(spark: SparkSession, input_path: str,
             shutil.rmtree(f"{output_path}/{sub}")
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
+        # the batch job's own body — one fused pass (tier 1 + inline tier
+        # 2), concurrent observed sink writes, one summary row — so stream
+        # and batch digests stay equal by construction.  overwrite: a
+        # replayed batch rewrites its own batch_id= rows and summary row
         t0 = time.monotonic()
         admitted, quarantined = job.admission_split(batch_df)
         admitted = job.spread_partitions(admitted, partitions)
-
-        # the batch job's single fused pass (tier 1 + inline tier 2) —
-        # micro-batches run the exact batch stages, so stream and batch
-        # digests stay equal by construction
-        fused = udfs.extract_udf(run_date, mode, "fused", tier2_enabled)
-        unified = admitted.mapInPandas(fused, udfs.FUSED_SCHEMA)
-        unified = unified.drop("html", "src_text").withColumn(
-            "spans", F.from_json("spans_json", job._SPANS_TYPE))
-        data, quarantined, data_obs, q_obs = lin.observe_sinks(
-            unified.select(*job._UNIFIED_COLS, "response_json"), quarantined)
-
-        bsub = f"batch_id={batch_id}"
-        quarantined.write.mode("overwrite").parquet(
-            f"{output_path}/quarantine/{bsub}")
-        (data.write.mode("overwrite").partitionBy("doc_type")
-         .parquet(f"{output_path}/data/{bsub}"))
-        # overwrite: a replayed batch rewrites its own summary row
-        lin.write_summary(spark, data_obs, q_obs, f"{run_id}-{batch_id}",
-                          int((time.monotonic() - t0) * 1000),
-                          f"{output_path}/lineage_summary/{bsub}",
-                          mode="overwrite")
+        data = job.extract_frame(admitted, run_date, mode, tier2_enabled)
+        job.write_run(spark, data, quarantined, output_path,
+                      f"/batch_id={batch_id}", "overwrite",
+                      f"{run_id}-{batch_id}", t0)
 
     stream = read_pages_stream(spark, input_path, max_files_per_trigger)
     writer = (stream.writeStream

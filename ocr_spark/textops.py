@@ -186,7 +186,7 @@ def correct_id_ocr(raw: str) -> str:
     return raw
 
 
-# --- PII redaction (lineage/metrics only — never in data output) -------------
+# --- PII redaction (log-string helpers; no pipeline stage calls them) ---------
 
 def redact_id(doc: Optional[str]) -> str:
     """``12345678A`` → ``1234****A``. Parity: ``app/utils/redact.py:10-17``

@@ -129,63 +129,101 @@ def test_fast_scanner_matches_htmlparser():
         assert fast(text) == _segment_htmlparser(text), (i, text[:120])
 
 
-def test_fast_scanner_fuzz_matches_htmlparser():
-    from hypothesis import given, settings, strategies as st
+# Differential-fuzz alphabet: tag and markup fragments that exercise every
+# scanner path — start/end/self-closing outcomes and their class dispatch,
+# CDATA closes, bogus tags, comments, marked sections, charrefs, quotes.
+FUZZ_FRAGMENTS = [
+    "<div>", "</div>", "<p>", "</p>", "<a href=x>", "</a>", "<pre>", "</pre>",
+    "<script>", "</script>", "<br/>", "<!-- c -->", "<", ">", "&lt;",
+    "&amp;", "&#65;", "&", "<main>", "</main>", "<nav>", "</nav>",
+    '<img src="a>b">', "<b", "</", "<!doctype h>", "</p attr=x>", "</ p>",
+    "<p/q>", "<p =>", "'", '"', "/", "<!", "<?", "<!-", "-->",
+    "<![CDATA[x]]>", "<![CDATA[a>b]]>", "<?php x?>", "]]>", "<!--",
+    "<style>", "</style>", "--",
+    "</ script>", "</scriptx>", "</script >", "</ style>", "</stylex>",
+    "</script foo>",
+    # self-closing, upper-case and end-only forms of classed tags, and a
+    # skipped subtree that is not raw text (its tags apply under skip)
+    "<br>", "</br>", "<pre/>", "<script/>", "<A HREF=y>", "</A>", "</Div >",
+    "<footer>", "<article>", "<noscript>", "</noscript>",
+    # bogus tags: a NUL ends the tag name, and the tag text becomes raw data
+    "<p\x00>", "<b\x00 c>",
+    # quote-adversarial: tag-outcome cache aliasing — values spanning the
+    # naive ">", mixed nesting, unterminated quotes (caches persist across
+    # fuzz examples exactly as across documents)
+    '<a b="x>y">', '<a b="x>', "<a b='x>y'>", '<a b=\'"\' c="x>z">',
+    '<a b=">">', "<a b='>'>", '<a b="c" d=">">', '<a "x>', '<a b=">',
+    '<a b= "x>y">', '<div class="nav">', "=", '"',
+    # marked sections: spaced closes, EOF names, MS-Office forms (unknown
+    # keywords raise in both engines → degraded path, covered separately)
+    "<![CDATA[x] ]>", "<![if a]>", "<![cdata", "<![include q]]>", "<![",
+    "<a b=", "<a /",
+    # comments close on --\s*> (200k-fuzz regression)
+    "<!---- >", "-- >", "<!-- x -- >", "<!--a--\t>",
+]
 
+
+def _assert_fast_scan_matches(text: str) -> None:
+    """``_fast_scan`` builds the html.parser twin's block list, or raises
+    the one deliberate escape: unknown/garbled marked sections raise
+    ``ValueError`` so ``_segment`` re-runs through the html.parser path
+    (which itself raises → degraded mode for these inputs).  Any other
+    exception type is a crash regression and fails the fuzz, not a
+    silent fallback."""
     from ocr_spark.html_extract import (_BlockCollector, _fast_scan,
                                         _segment_htmlparser)
 
-    # NUL bytes are excluded: html.parser has its own NUL quirks and no
+    col = _BlockCollector()
+    try:
+        _fast_scan(text, col)
+    except ValueError as exc:
+        assert "marked section" in str(exc), exc
+        return
+    col._flush()
+    assert col.blocks == _segment_htmlparser(text), repr(text[:200])
+
+
+def test_fast_scanner_fuzz_matches_htmlparser():
+    from hypothesis import given, settings, strategies as st
+
+    # NUL bytes are excluded from free text (only the two bogus-tag
+    # fragments carry one): html.parser has its own NUL quirks and no
     # decoded real-world page contains them; the scanner must merely not
     # crash there (covered by test_malformed_html_degrades_not_crashes).
     frag = st.one_of(
-        st.sampled_from(["<div>", "</div>", "<p>", "</p>", "<a href=x>",
-                         "</a>", "<pre>", "</pre>", "<script>", "</script>",
-                         "<br/>", "<!-- c -->", "<", ">", "&lt;", "&amp;",
-                         "&#65;", "&", "<main>", "</main>", "<nav>", "</nav>",
-                         '<img src="a>b">', "<b", "</", "<!doctype h>",
-                         "</p attr=x>", "</ p>", "<p/q>", "<p =>", "'", '"',
-                         "/", "<!", "<?", "<!-", "-->", "<![CDATA[x]]>",
-                         "<![CDATA[a>b]]>", "<?php x?>", "]]>", "<!--",
-                         "<style>", "</style>", "--",
-                         "</ script>", "</scriptx>", "</script >",
-                         "</ style>", "</stylex>", "</script foo>",
-                         # quote-adversarial: tag-outcome cache aliasing —
-                         # values spanning the naive ">", mixed nesting,
-                         # unterminated quotes (caches persist across fuzz
-                         # examples exactly as across documents)
-                         '<a b="x>y">', '<a b="x>', "<a b='x>y'>",
-                         '<a b=\'"\' c="x>z">', '<a b=">">', "<a b='>'>",
-                         '<a b="c" d=">">', '<a "x>', '<a b=">',
-                         '<a b= "x>y">', '<div class="nav">', "=", '"',
-                         # marked sections: spaced closes, EOF names,
-                         # MS-Office forms (unknown keywords raise in both
-                         # engines → degraded path, covered separately)
-                         "<![CDATA[x] ]>", "<![if a]>", "<![cdata",
-                         "<![include q]]>", "<![", "<a b=", "<a /",
-                         # comments close on --\s*> (200k-fuzz regression)
-                         "<!---- >", "-- >", "<!-- x -- >", "<!--a--\t>"]),
+        st.sampled_from(FUZZ_FRAGMENTS),
         st.text(max_size=12,
                 alphabet=st.characters(blacklist_characters="\x00")))
 
     @settings(max_examples=400, deadline=None)
     @given(st.lists(frag, max_size=25).map("".join))
     def inner(text):
-        col = _BlockCollector()
-        try:
-            _fast_scan(text, col)
-        except ValueError as exc:
-            # the ONLY deliberate escape hatch: unknown/garbled marked
-            # sections raise so _segment re-runs through the html.parser
-            # path (which itself raises → degraded mode for these inputs).
-            # Any other exception type is a crash regression and must
-            # fail the fuzz, not silently fall back.
-            assert "marked section" in str(exc), exc
-            return
-        col._flush()
-        assert col.blocks == _segment_htmlparser(text), repr(text[:200])
+        _assert_fast_scan_matches(text)
 
     inner()
+
+
+# filler between fragments: markup-significant ASCII, whitespace, entity
+# and quote characters, and non-ASCII (no NUL — see the hypothesis fuzz)
+_FUZZ_FILLER = ("abcxyzABCXYZ0123456789 \t\n\r<>/=&;#'\"!?-[]"
+                "\u00e9\u00d1\u20ac\u00a0")
+
+
+def test_fast_scanner_seeded_differential_fuzz():
+    """20,000 seeded documents over :data:`FUZZ_FRAGMENTS` plus filler:
+    the scanner's block list equals the html.parser twin's on every one."""
+    import random
+
+    rng = random.Random(20_000)
+    for _ in range(20_000):
+        parts = []
+        for _ in range(rng.randrange(26)):
+            if rng.random() < 0.75:
+                parts.append(rng.choice(FUZZ_FRAGMENTS))
+            else:
+                parts.append("".join(rng.choice(_FUZZ_FILLER)
+                                     for _ in range(rng.randrange(13))))
+        _assert_fast_scan_matches("".join(parts))
 
 
 def test_tag_cache_no_cross_document_aliasing():

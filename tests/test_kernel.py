@@ -112,14 +112,14 @@ def _rows(df: pd.DataFrame) -> list[tuple]:
 @pytest.mark.parametrize("mode", kg.MODES)
 def test_fused_equals_two_stage(mode, route):
     """``fused`` == ``tier1`` rows kept at tier 1 ∪ ``tier2`` over the
-    ``tier1`` fallback slice (its html/src_text passthrough as input)."""
+    ``tier1`` fallback slice (its pages, with the routed ``tier2_reason``,
+    as input)."""
     tier1 = _out("tier1", mode, route)
     routed = tier1["needs_tier2"].astype(bool)
     parts = [tier1[~routed]]
     if route:
-        fallback = (tier1[routed][["url", "warc_ts", "lang", "html",
-                                   "src_text", "tier2_reason"]]
-                    .rename(columns={"src_text": "text"}))
+        fallback = _pages().merge(tier1[routed][["url", "tier2_reason"]],
+                                  on="url")
         assert 0 < len(fallback) < len(tier1)
         parts.append(kg.current_kernel(fallback, mode, "tier2", route))
     else:

@@ -145,6 +145,21 @@ def test_summary_counts_quarantined_rows(spark, tmp_path):
     assert (row["input_count"], row["quarantined_count"]) == (1, 2)
 
 
+def test_fresh_run_replaces_summary(spark, tmp_path):
+    """A fresh run overwrites ``data/`` and ``quarantine/``, so it replaces
+    the summary too: two fresh runs into one output leave one summary row,
+    and it describes the rows in ``data/``."""
+    out = str(tmp_path / "fresh")
+    pages = pagegen.generate_df(spark, 40, partitions=2)
+    for run_id in ("f1", "f2"):
+        run_pipeline(spark, "", out, RUN_DATE, partitions=2, input_df=pages,
+                     run_id=run_id)
+    rows = spark.read.parquet(f"{out}/lineage_summary").collect()
+    assert [r["run_id"] for r in rows] == ["f2"]
+    assert rows[0]["input_count"] == \
+        spark.read.parquet(f"{out}/data").count() == 40
+
+
 def test_build_session_enables_speculation():
     """T7 straggler reaper: build_session (not the shared test session)
     turns speculation on — assert the configs are in its builder recipe."""

@@ -44,8 +44,7 @@ def _kernel_frame(spark, policy):
     pages = pagegen.generate_df(spark, 8, partitions=2)
     kernel = udfs.extract_udf(date(2026, 8, 16), "standard", policy)
     return (job.spread_partitions(pages, 4)
-            .mapInPandas(kernel, udfs.FUSED_SCHEMA)
-            .drop("html", "src_text"))
+            .mapInPandas(kernel, udfs.FUSED_SCHEMA))
 
 
 def test_pipeline_one_python_pass_per_tier(spark):
