@@ -68,6 +68,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_spark import lineage as lin
 from ocr_spark.operators import dedup, textstats, urls
 
 DEFAULT_LANGS = ("en", "es", "de", "fr")
@@ -309,6 +310,13 @@ def run_curation(spark: SparkSession, input_path: str, output_path: str,
       ``xxhash64(doc_id, scrubbed_text)`` (order-free and overflow-free
       → identical at any parallelism), wall ms.
 
+    The summary is observed on the two sink writes
+    (:func:`ocr_spark.lineage.write_observed`): the counts on ``report/``,
+    the token total, shard count and digest on ``data/`` — no job re-reads
+    the verdicts for it, and it is written strictly after both sinks.
+    ``n_shards`` is ``size(collect_set(shard_id))``, so the driver holds
+    one long per shard (about one per *budget_tokens* kept tokens).
+
     Returns the summary as a dict.
     """
     t0 = time.monotonic()
@@ -334,53 +342,32 @@ def run_curation(spark: SparkSession, input_path: str, output_path: str,
                       clf_model=clf_model,
                       min_logodds_x1000=min_logodds_x1000,
                       substr_dedup_k=substr_dedup_k)
-    # the verdict frame feeds three sinks and the summary — materialize
-    # once (eagerly: the two sink jobs below run concurrently and must
-    # not race to compute an unmaterialized checkpoint) instead of
-    # re-running the gates per consumer
+    # the verdict frame feeds both sinks — materialize once (eagerly: the
+    # two sink jobs below run concurrently and must not race to compute an
+    # unmaterialized checkpoint) instead of re-running the gates per sink
     verdicts = verdicts.localCheckpoint(eager=True)
-
-    def _write_data() -> None:
-        (verdicts.filter("keep")
-         .select("doc_id", F.col("scrubbed_text").alias("text"),
-                 "n_tokens", "shard_id")
-         .repartition(partitions, "shard_id")
-         .sortWithinPartitions("shard_id", "doc_id")
-         .write.mode("overwrite").parquet(f"{output_path}/data"))
-
-    def _write_report() -> None:
-        (verdicts.select("doc_id", "keep", "drop_reason")
-         .write.mode("overwrite").parquet(f"{output_path}/report"))
-
-    # data and report are independent reads of the checkpointed frame —
-    # overlap them (the run_pipeline sink idiom, caller's job group kept);
-    # the summary stays strictly last (write-audit-publish order)
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
-    inherit = inheritable_thread_target(spark)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for fut in [pool.submit(inherit(_write_data)),
-                    pool.submit(inherit(_write_report))]:
-            fut.result()  # surface the first failure
-
-    # every sum is coalesced: over ZERO rows sum() is NULL, the summary
-    # dict would carry Nones, and createDataFrame cannot infer types from
-    # them — an empty crawl day must publish a zero-count summary, not die
-    # at the last step after the data/report sinks were already written
-    row = (verdicts.agg(
-        F.count("*").alias("input_count"),
-        F.coalesce(F.sum(F.col("keep").cast("long")),
-                   F.lit(0)).alias("kept_count"),
-        *[F.coalesce(F.sum((F.col("drop_reason") == r).cast("long")),
-                     F.lit(0)).alias(f"n_{r}")
-          for r in REASONS],
-        F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("total_tokens"),
-        F.countDistinct("shard_id").alias("n_shards"),
-        F.coalesce(F.bit_xor(F.when(F.col("keep"),
-                                    F.xxhash64("doc_id", "scrubbed_text"))),
-                   F.lit(0)).alias("digest")).collect()[0])
-    summary = row.asDict()
+    kept = (verdicts.filter("keep")
+            .select("doc_id", F.col("scrubbed_text").alias("text"),
+                    "n_tokens", "shard_id")
+            .repartition(partitions, "shard_id")
+            .sortWithinPartitions("shard_id", "doc_id"))
+    # the summary is observed on the two sink writes; the counts never
+    # see NULL, but over ZERO kept rows sum() and bit_xor() are NULL, and
+    # createDataFrame cannot infer a type from None — an empty crawl day
+    # must publish a zero-count summary, not die at the last step
+    summary = lin.write_observed(spark, [
+        (verdicts.select("doc_id", "keep", "drop_reason"),
+         f"{output_path}/report", None,
+         [F.count("*").alias("input_count"),
+          F.count(F.when(F.col("keep"), 1)).alias("kept_count"),
+          *[F.count(F.when(F.col("drop_reason") == r, 1)).alias(f"n_{r}")
+            for r in REASONS]]),
+        (kept, f"{output_path}/data", None,
+         [F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("total_tokens"),
+          F.size(F.collect_set("shard_id")).alias("n_shards"),
+          F.coalesce(F.bit_xor(F.xxhash64("doc_id", "text")),
+                     F.lit(0)).alias("digest")]),
+    ], "overwrite")
     summary["wall_ms"] = int((time.monotonic() - t0) * 1000)
     (spark.createDataFrame([tuple(summary.values())],
                            list(summary.keys()))

@@ -9,8 +9,9 @@
         the permissive tier-2 extraction INLINE over the same
         DOM segmentation → re-route → re-parse                  [T1/T2/T5/T6]
       → ONE data sink partitioned by doc_type (unified columns +
-        response_json; typed view via read_datos) + quarantine, both
-        observed (DataFrame.observe) → one lineage_summary row
+        response_json; typed view via read_datos) + quarantine,
+        written concurrently and observed (DataFrame.observe) by
+        lineage.write_observed → one lineage_summary row
 
 Scale notes (designed for 10^12 docs / 1000 executors, tested on local[*]):
 * the only shuffle is the single explicit ``repartition`` — everything after
@@ -46,8 +47,6 @@ from ocr_spark.functions import udfs
 from ocr_spark.schema import PAGES_SCHEMA
 
 MAX_HTML_BYTES = 5 * 1024 * 1024  # reference's 5 MB admission cap (S4)
-
-DOC_TYPES = ("dni", "permiso_circulacion", "nif")
 
 # unified output row (same schema for every doc type → single table)
 _UNIFIED_COLS = ("url", "warc_ts", "lang", "doc_type", "tier", "tier2_reason",
@@ -266,33 +265,14 @@ def write_run(spark: SparkSession, data: DataFrame, quarantined: DataFrame,
     replaces the summary along with the rows it describes, a resumed drop
     appends its own row.
     """
-    # observe last, after the select and the resume anti-join, so the
-    # metrics sit above every exchange and count exactly the written rows
-    data, quarantined, data_obs, q_obs = lin.observe_sinks(data, quarantined)
-
-    def _write(df: DataFrame, sub: str, partition_by: Optional[str] = None) -> None:
-        writer = df.write.mode(write_mode)
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(f"{output_path}/{sub}{suffix}")
-
     # quarantine derives from the admission split, not the extraction, so
-    # its write overlaps the extraction fully.  The writes run on pool
-    # threads: inheritable_thread_target hands them the caller's local
-    # properties (job group, description), which plain threads would drop
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
-    write = inheritable_thread_target(spark)(_write)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futures = [
-            pool.submit(write, quarantined, "quarantine"),
-            pool.submit(write, data, "data", "doc_type"),
-        ]
-        for fut in futures:
-            fut.result()  # surface the first failure
-
-    summary = lin.write_summary(spark, data_obs, q_obs, run_id,
+    # its write overlaps the extraction fully
+    metrics = lin.write_observed(spark, [
+        (data, f"{output_path}/data{suffix}", "doc_type", lin.summary_aggs()),
+        (quarantined, f"{output_path}/quarantine{suffix}", None,
+         [F.count("*").alias("quarantined_count")]),
+    ], write_mode)
+    summary = lin.write_summary(spark, metrics, run_id,
                                 int((time.monotonic() - t0) * 1000),
                                 f"{output_path}/lineage_summary{suffix}",
                                 write_mode)

@@ -7,7 +7,9 @@ on a fresh run, appended on a resumed drop, like the sinks::
      tier2_count, digest, quarantined_count, wall_ms)
 
 The counts and the digest are observed on the run's own sink writes
-(``DataFrame.observe``) — no extra job over the output.  ``digest`` is an
+(``DataFrame.observe``) — no extra job over the output.  One writer,
+:func:`write_observed`, does that for every sink set: the batch job, the
+streaming micro-batches and the curation job.  ``digest`` is an
 **XOR-aggregate of xxhash64(url, extracted_text, valido, confianza)** —
 order-independent and overflow-free, so it is identical at any
 parallelism level (the N vs 4N determinism check in BASELINE.md) and the
@@ -24,6 +26,8 @@ No PII ever lands here: only counts and hashes (Z6 redaction contract,
 """
 
 from __future__ import annotations
+
+from typing import Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
@@ -50,29 +54,58 @@ def summary_aggs() -> list[F.Column]:
     ]
 
 
-def observe_sinks(data: DataFrame, quarantined: DataFrame
-                  ) -> tuple[DataFrame, DataFrame, Observation, Observation]:
-    """Attach the summary observations to the two sink frames.
+def write_observed(spark: SparkSession, sinks: list[tuple], mode: str
+                   ) -> dict:
+    """Write every sink concurrently with *mode*; return the metrics
+    observed on the writes, merged in sink order.
 
-    Call it last, on the exact frames written: the metrics are collected
-    in the write's result stage, where Spark merges each partition's
-    accumulators once, so retried or speculative tasks never double-count.
+    Each sink is ``(frame, path, partition_by, aggs)``: *frame* is written
+    as parquet to *path* (hive-partitioned by *partition_by* unless it is
+    None) with one ``Observation`` of the *aggs* columns attached as its
+    last operator — after every select, anti-join and exchange the caller
+    applied — so the metrics count exactly the written rows and are
+    collected in the write's result stage, where Spark merges each
+    partition's accumulators once: retried or speculative tasks never
+    double-count.
+
+    The writes run on pool threads: ``inheritable_thread_target`` hands
+    them the caller's local properties (job group, description), which
+    plain threads would drop.  The first failure, in sink order, is
+    raised once every write has ended; the caller writes its summary
+    strictly after this returns (write-audit-publish order).
     """
-    data_obs, q_obs = Observation(), Observation()
-    return (data.observe(data_obs, *summary_aggs()),
-            quarantined.observe(q_obs,
-                                F.count("*").alias("quarantined_count")),
-            data_obs, q_obs)
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    def _write(df: DataFrame, path: str, partition_by: Optional[str]) -> None:
+        writer = df.write.mode(mode)
+        if partition_by:
+            writer = writer.partitionBy(partition_by)
+        writer.parquet(path)
+
+    write = inheritable_thread_target(spark)(_write)
+    observations = [Observation() for _ in sinks]
+    with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+        futures = [pool.submit(write, frame.observe(obs, *aggs), path,
+                               partition_by)
+                   for obs, (frame, path, partition_by, aggs)
+                   in zip(observations, sinks)]
+        for fut in futures:
+            fut.result()  # surface the first failure
+    metrics: dict = {}
+    for obs in observations:
+        metrics.update(obs.get)
+    return metrics
 
 
-def write_summary(spark: SparkSession, data_obs: Observation,
-                  q_obs: Observation, run_id: str, wall_ms: int, path: str,
-                  mode: str) -> dict:
-    """Write the one summary row built from the sink observations to
-    *path* with *mode* — the mode of the sinks it describes — and return
-    it as a dict."""
-    summary = {"run_id": run_id, "partition_id": -1, **data_obs.get,
-               **q_obs.get, "wall_ms": wall_ms}
+def write_summary(spark: SparkSession, metrics: dict, run_id: str,
+                  wall_ms: int, path: str, mode: str) -> dict:
+    """Write the one summary row built from the sinks' observed *metrics*
+    to *path* with *mode* — the mode of the sinks it describes — and
+    return it as a dict."""
+    summary = {"run_id": run_id, "partition_id": -1, **metrics,
+               "wall_ms": wall_ms}
     spark.createDataFrame([summary], _SUMMARY_SCHEMA) \
         .write.mode(mode).parquet(path)
     return summary
@@ -90,37 +123,22 @@ def global_summary(unified: DataFrame, run_id: str, wall_ms: int) -> DataFrame:
 def anti_join_done(pages: DataFrame, output_data_path: str) -> DataFrame:
     """Drop pages whose url already exists in the output (resume).
 
+    A missing output path means no prior run — nothing to resume from.
+    Existence is asked of the Hadoop FileSystem, not learnt from a failed
+    read, so any read failure of an existing path (mispointed path without
+    a url column, unreadable layout, transient store error) surfaces:
+    skipping the anti-join would re-extract and append rows already
+    committed — silent duplication.
+
     The done-set is pinned eagerly (``localCheckpoint``): the resumed run
     later appends to the same path, and a lazy scan re-evaluated after
     those writes (cache eviction, executor loss) would see the newly
     written rows and wrongly drop in-flight work.
     """
     spark = pages.sparkSession
-    from pyspark.errors import AnalysisException
-    try:
-        done = (spark.read.parquet(output_data_path).select("url")
-                .localCheckpoint(eager=True))
-    except AnalysisException as exc:
-        if not _is_path_not_found(exc):
-            raise  # any OTHER read failure must surface: skipping the
-            # anti-join (mispointed path without a url column, unreadable
-            # layout, transient store error) would re-extract and append
-            # rows already committed — silent duplication
-        return pages  # no prior output — nothing to resume from
+    path = spark._jvm.org.apache.hadoop.fs.Path(output_data_path)
+    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
+        return pages
+    done = (spark.read.parquet(output_data_path).select("url")
+            .localCheckpoint(eager=True))
     return pages.join(done, on="url", how="left_anti")
-
-
-def _is_path_not_found(exc) -> bool:
-    """True iff an AnalysisException means the read path does not exist —
-    the only error class the resume anti-joins may swallow."""
-    cls = None
-    get = getattr(exc, "getCondition", None) or getattr(
-        exc, "getErrorClass", None)
-    if get is not None:
-        try:
-            cls = get()
-        except Exception:
-            cls = None
-    if cls is not None:
-        return "PATH_NOT_FOUND" in cls
-    return "PATH_NOT_FOUND" in str(exc)

@@ -438,6 +438,36 @@ def test_extract_then_curate_integration(spark, tmp_path):
     assert kept.filter("shard_id is null").count() == 0
 
 
+def test_known_answer_extraction_and_curation(spark, tmp_path):
+    """The 20k-page contract: extraction reproduces the digest unchanged
+    since round 1, and curating its ``(doc_id, text)`` handoff reproduces
+    the whole curation summary (recorded before the summary moved onto
+    the sink writes)."""
+    from ocr_spark import curate
+
+    out = str(tmp_path / "ex")
+    s = run_pipeline(spark, "", out, date(2026, 8, 16), partitions=8,
+                     input_df=pagegen.generate_df(spark, 20000))
+    assert s["digest"] == -2518734284186716871
+    assert s["input_count"] == 20000
+    docs = str(tmp_path / "docs")
+    (spark.read.parquet(f"{out}/data")
+     .select(F.xxhash64("url").alias("doc_id"),
+             F.coalesce(F.col("extracted_text"), F.lit("")).alias("text"))
+     .repartition(8).write.parquet(docs))
+    c = curate.run_curation(spark, docs, str(tmp_path / "cur"),
+                            budget_tokens=2000)
+    want = {
+        "input_count": 20000, "kept_count": 743, "n_url_blocked": 0,
+        "n_low_quality": 0, "n_repetitive": 1242, "n_lang_filtered": 18015,
+        "n_contaminated": 0, "n_high_surprisal": 0,
+        "n_classifier_rejected": 0, "n_exact_duplicate": 0,
+        "n_near_duplicate": 0, "n_host_capped": 0, "total_tokens": 37656,
+        "n_shards": 19, "digest": 4916869636476366793}
+    assert list(c) == [*want, "wall_ms"]   # the summary/ sink's key order
+    assert {k: c[k] for k in want} == want
+
+
 def test_resume_anti_join_surfaces_non_path_errors(spark, tmp_path):
     """anti_join_done may swallow ONLY path-not-found: any other read
     failure (here: a mispointed path whose parquet lacks a url column)

@@ -64,34 +64,54 @@ def test_pipeline_single_pass_one_python_stage_total(spark):
     assert "Union" not in plans.physical_plan(unified)
 
 
-def test_pipeline_observes_summary_above_the_exchange(spark, tmp_path,
-                                                     monkeypatch):
-    """run_pipeline observes its summary on the data-write frame with no
-    Exchange above the CollectMetrics node: the metrics are collected in
-    the write's result stage, where Spark merges each partition's
-    accumulators once, so task retries and speculation never
-    double-count."""
-    from datetime import date
-
-    from ocr_spark import job, lineage, pagegen
-
-    observed = []
-    observe_sinks = lineage.observe_sinks
-
-    def spy(data, quarantined):
-        out = observe_sinks(data, quarantined)
-        observed.append(out[0])
-        return out
-
-    monkeypatch.setattr(lineage, "observe_sinks", spy)
-    job.run_pipeline(spark, "", str(tmp_path / "obs"), date(2026, 8, 16),
-                     partitions=2,
-                     input_df=pagegen.generate_df(spark, 8, partitions=2))
-    (data,) = observed
-    lines = plans.physical_plan(data).splitlines()
+def _assert_metrics_above_exchange(frame, exchange_key):
+    """*frame*'s CollectMetrics node has no Exchange above it and an
+    Exchange on *exchange_key* below it."""
+    lines = plans.physical_plan(frame).splitlines()
     top = next(i for i, line in enumerate(lines) if "CollectMetrics" in line)
     assert not any("Exchange" in line for line in lines[:top]), lines
-    assert any("Exchange" in line for line in lines[top:])  # the repartition
+    assert any("Exchange" in line and exchange_key in line
+               for line in lines[top:]), lines
+
+
+def test_pipeline_observes_summary_above_the_exchange(spark, tmp_path,
+                                                     monkeypatch):
+    """The shared sink writer observes each summary on the exact frame it
+    writes, with no Exchange above the CollectMetrics node: the metrics
+    are collected in the write's result stage, where Spark merges each
+    partition's accumulators once, so task retries and speculation never
+    double-count.  Checked on run_pipeline's ``data/`` frame (above the
+    url repartition) and run_curation's ``data/`` frame (above the
+    shard_id repartition)."""
+    from datetime import date
+
+    from ocr_spark import curate, job, pagegen
+
+    observed = []
+    frame_cls = type(spark.range(1))
+    observe = frame_cls.observe
+
+    def spy(self, observation, *exprs):
+        out = observe(self, observation, *exprs)
+        observed.append(out)
+        return out
+
+    monkeypatch.setattr(frame_cls, "observe", spy)
+    out = tmp_path / "obs"
+    job.run_pipeline(spark, "", str(out), date(2026, 8, 16),
+                     partitions=2,
+                     input_df=pagegen.generate_df(spark, 8, partitions=2))
+    (data,) = [f for f in observed if "response_json" in f.columns]
+    _assert_metrics_above_exchange(data, "xxhash64")
+
+    (spark.read.parquet(str(out / "data"))
+     .select(F.xxhash64("url").alias("doc_id"),
+             F.col("extracted_text").alias("text"))
+     .write.parquet(str(tmp_path / "docs")))
+    curate.run_curation(spark, str(tmp_path / "docs"), str(tmp_path / "cur"),
+                        partitions=2)
+    (kept,) = [f for f in observed if "shard_id" in f.columns]
+    _assert_metrics_above_exchange(kept, "shard_id")
 
 
 def test_scan_reads_no_filters_for_full_count(spark):
