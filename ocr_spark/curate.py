@@ -233,54 +233,37 @@ def curate(df: DataFrame, bench: Optional[DataFrame] = None,
                                           F.lit("host_capped"))))
                     .drop("_cap_drop", url_col))
 
-    scrubbed = textstats.scrub_pii(F.col(text_col))
-    if substr_dedup_k is not None:
+    out = verdicts.withColumn("keep", F.col("drop_reason").isNull())
+    survivors = verdicts.filter(F.col("drop_reason").isNull())
+    if substr_dedup_k is None:
+        final_text = textstats.scrub_pii(F.col(text_col))
+        kept = survivors.select(F.col(id_col), final_text.alias("text"))
+    else:
         # rewrite path: admitted text goes through ExactSubstr removal,
         # so the final text is join-carried (it no longer equals any
         # expression over the input column)
-        survivors = (verdicts.filter(F.col("drop_reason").isNull())
-                     .select(id_col, text_col))
-        kept = (dedup.dedup_substrings(survivors, k=substr_dedup_k,
-                                       id_col=id_col, text_col=text_col)
+        kept = (dedup.dedup_substrings(survivors.select(id_col, text_col),
+                                       k=substr_dedup_k, id_col=id_col,
+                                       text_col=text_col)
                 .select(F.col(id_col),
                         textstats.scrub_pii(F.col("text_clean"))
                         .alias("text"))
                 .localCheckpoint(eager=False))   # shards + annotate join
-        shards = textstats.token_shards(kept, budget_tokens,
-                                        id_col=id_col, text_col="text")
-        out = (verdicts
-               .withColumn("keep", F.col("drop_reason").isNull())
-               .join(kept.select(F.col(id_col),
-                                 F.col("text").alias("_final_text")),
-                     id_col, "left")
-               .withColumn("scrubbed_md5",
-                           F.when(F.col("keep"), F.md5("_final_text")))
-               .join(shards.select(id_col, "n_tokens", "shard_id"),
-                     id_col, "left"))
-        cols = [id_col, "keep", "drop_reason", "n_tokens", "shard_id",
-                "scrubbed_md5"]
-        if with_text:
-            out = out.withColumn("scrubbed_text",
-                                 F.when(F.col("keep"),
-                                        F.col("_final_text")))
-            cols.append("scrubbed_text")
-        return out.select(*cols)
-
-    kept = (verdicts.filter(F.col("drop_reason").isNull())
-            .select(F.col(id_col), scrubbed.alias("text")))
+        out = out.join(kept.select(F.col(id_col),
+                                   F.col("text").alias("_final_text")),
+                       id_col, "left")
+        final_text = F.col("_final_text")
     shards = textstats.token_shards(kept, budget_tokens, id_col=id_col,
                                     text_col="text")
-    out = (verdicts
-           .withColumn("keep", F.col("drop_reason").isNull())
-           .withColumn("scrubbed_md5",
-                       F.when(F.col("keep"), F.md5(scrubbed)))
+    out = (out.withColumn("scrubbed_md5",
+                          F.when(F.col("keep"), F.md5(final_text)))
            .join(shards.select(id_col, "n_tokens", "shard_id"),
                  id_col, "left"))
     cols = [id_col, "keep", "drop_reason", "n_tokens", "shard_id",
             "scrubbed_md5"]
     if with_text:
         out = out.withColumn("scrubbed_text",
-                             F.when(F.col("keep"), scrubbed))
+                             F.when(F.col("keep"), final_text))
         cols.append("scrubbed_text")
     return out.select(*cols)
 
@@ -352,9 +335,9 @@ def run_curation(spark: SparkSession, input_path: str, output_path: str,
             .repartition(partitions, "shard_id")
             .sortWithinPartitions("shard_id", "doc_id"))
     # the summary is observed on the two sink writes; the counts never
-    # see NULL, but over ZERO kept rows sum() and bit_xor() are NULL, and
-    # createDataFrame cannot infer a type from None — an empty crawl day
-    # must publish a zero-count summary, not die at the last step
+    # see NULL, but over ZERO kept rows sum() is NULL, and createDataFrame
+    # cannot infer a type from None — an empty crawl day must publish a
+    # zero-count summary, not die at the last step
     summary = lin.write_observed(spark, [
         (verdicts.select("doc_id", "keep", "drop_reason"),
          f"{output_path}/report", None,
@@ -365,8 +348,7 @@ def run_curation(spark: SparkSession, input_path: str, output_path: str,
         (kept, f"{output_path}/data", None,
          [F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("total_tokens"),
           F.size(F.collect_set("shard_id")).alias("n_shards"),
-          F.coalesce(F.bit_xor(F.xxhash64("doc_id", "text")),
-                     F.lit(0)).alias("digest")]),
+          lin.xor_digest("doc_id", "text").alias("digest")]),
     ], "overwrite")
     summary["wall_ms"] = int((time.monotonic() - t0) * 1000)
     (spark.createDataFrame([tuple(summary.values())],

@@ -272,12 +272,10 @@ def write_run(spark: SparkSession, data: DataFrame, quarantined: DataFrame,
         (quarantined, f"{output_path}/quarantine{suffix}", None,
          [F.count("*").alias("quarantined_count")]),
     ], write_mode)
-    summary = lin.write_summary(spark, metrics, run_id,
-                                int((time.monotonic() - t0) * 1000),
-                                f"{output_path}/lineage_summary{suffix}",
-                                write_mode)
-    summary["wall_ms"] = int((time.monotonic() - t0) * 1000)
-    return summary
+    return lin.write_summary(spark, metrics, run_id,
+                             int((time.monotonic() - t0) * 1000),
+                             f"{output_path}/lineage_summary{suffix}",
+                             write_mode)
 
 
 def main() -> None:

@@ -10,16 +10,19 @@ The counts and the digest are observed on the run's own sink writes
 (``DataFrame.observe``) — no extra job over the output.  One writer,
 :func:`write_observed`, does that for every sink set: the batch job, the
 streaming micro-batches and the curation job.  ``digest`` is an
-**XOR-aggregate of xxhash64(url, extracted_text, valido, confianza)** —
+**XOR-aggregate of xxhash64(url, extracted_text, valido, confianza)**
+(:func:`xor_digest`, curation's digest rule too) —
 order-independent and overflow-free, so it is identical at any
-parallelism level (the N vs 4N determinism check in BASELINE.md) and the
-digests of resumed drops XOR to the digest of one run over their union.
-Per-task extraction time — the straggler evidence — is in Spark's event
-log.
+parallelism level (the N vs 4N determinism check in BASELINE.md), an
+empty drop digests to the XOR identity 0, and the digests of resumed
+drops XOR to the digest of one run over their union.  Per-task
+extraction time — the straggler evidence — is in Spark's event log.
 
 Resume = left-anti join of the input against already-written output urls —
 the durable analog of the reference's stateless "delete after use" service
-turned idempotent batch (``ROADMAP.md:155-163`` result-cache design).
+turned idempotent batch (``ROADMAP.md:155-163`` result-cache design).  The
+done-set is pinned by its parquet file listing, not by a checkpoint
+(:func:`anti_join_done`).
 
 No PII ever lands here: only counts and hashes (Z6 redaction contract,
 ``app/utils/redact.py``).
@@ -37,9 +40,10 @@ _SUMMARY_SCHEMA = ("run_id string, partition_id int, input_count bigint, "
                    "quarantined_count bigint, wall_ms bigint")
 
 
-def row_digest_col() -> F.Column:
-    """Per-row 64-bit content hash of the extraction contract fields."""
-    return F.xxhash64("url", "extracted_text", "valido", "confianza_global")
+def xor_digest(*cols: str) -> F.Column:
+    """XOR-aggregate of the per-row ``xxhash64(*cols)`` — 0 (the XOR
+    identity) over zero rows, so empty drops still XOR to the union."""
+    return F.coalesce(F.bit_xor(F.xxhash64(*cols)), F.lit(0))
 
 
 def summary_aggs() -> list[F.Column]:
@@ -50,7 +54,8 @@ def summary_aggs() -> list[F.Column]:
         F.count(F.when(F.length("extracted_text") > 0, 1)).alias("extracted_count"),
         F.count(F.when(F.col("valido"), 1)).alias("valid_count"),
         F.count(F.when(F.col("tier") == 2, 1)).alias("tier2_count"),
-        F.bit_xor(row_digest_col()).alias("digest"),
+        xor_digest("url", "extracted_text", "valido",
+                   "confianza_global").alias("digest"),
     ]
 
 
@@ -128,17 +133,18 @@ def anti_join_done(pages: DataFrame, output_data_path: str) -> DataFrame:
     read, so any read failure of an existing path (mispointed path without
     a url column, unreadable layout, transient store error) surfaces:
     skipping the anti-join would re-extract and append rows already
-    committed — silent duplication.
+    committed — silent duplication.  The read infers the schema for the
+    same reason: an explicit ``url string`` schema would read a url-less
+    parquet path as NULL urls and drop nothing.
 
-    The done-set is pinned eagerly (``localCheckpoint``): the resumed run
-    later appends to the same path, and a lazy scan re-evaluated after
-    those writes (cache eviction, executor loss) would see the newly
-    written rows and wrongly drop in-flight work.
+    The done-set needs no checkpoint: a parquet DataFrame lists its files
+    when it is created, and this run only appends new files, so a
+    re-executed scan (task retry, executor loss) reads the same done-set
+    and never sees the rows this run appends.
     """
     spark = pages.sparkSession
     path = spark._jvm.org.apache.hadoop.fs.Path(output_data_path)
     if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
         return pages
-    done = (spark.read.parquet(output_data_path).select("url")
-            .localCheckpoint(eager=True))
+    done = spark.read.parquet(output_data_path).select("url")
     return pages.join(done, on="url", how="left_anti")

@@ -26,6 +26,14 @@ for p in (str(REPO), str(REFERENCE)):
 RUN_DATE = date.today()
 
 
+def count_jobs(spark, fn) -> int:
+    """Number of Spark jobs, outside any job group, that ``fn()`` runs."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None) or [])
+    fn()
+    return len(set(tracker.getJobIdsForGroup(None) or []) - before)
+
+
 @pytest.fixture(scope="session")
 def run_date() -> date:
     return RUN_DATE

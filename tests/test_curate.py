@@ -8,6 +8,7 @@ import json
 from pyspark.sql import functions as F
 
 from ocr_spark import curate
+from tests.conftest import count_jobs
 
 BASE = ("the quick brown fox jumps over the lazy dog and runs far away "
         "into the green forest while the rain keeps falling all day long")
@@ -132,10 +133,8 @@ def test_curation_job_count_budget(spark, tmp_path):
     three jobs)."""
     inp = str(tmp_path / "docs.parquet")
     _corpus(spark).write.parquet(inp)
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None) or [])
-    curate.run_curation(spark, inp, str(tmp_path / "out"), partitions=2)
-    n_jobs = len(set(tracker.getJobIdsForGroup(None) or []) - before)
+    n_jobs = count_jobs(spark, lambda: curate.run_curation(
+        spark, inp, str(tmp_path / "out"), partitions=2))
     assert 0 < n_jobs <= 15, f"curation ran {n_jobs} Spark jobs"
 
 
