@@ -133,9 +133,10 @@ def test_observed_summary_over_resumed_drops(spark, pages_path, tmp_path):
     s3 = run_pipeline(spark, pages_path, out, RUN_DATE, partitions=4,
                       resume=True, run_id="d3")
     assert s3["input_count"] == 0 and s3["digest"] == 0
-    rows = {r["run_id"]: r.asDict() for r in
-            spark.read.parquet(f"{out}/lineage_summary").collect()}
-    assert rows == {"d1": s1, "d2": s2, "d3": s3}
+    rows = spark.read.parquet(f"{out}/lineage_summary").collect()
+    assert sorted(r["run_id"] for r in rows) == ["d1", "d2", "d3"]
+    assert {r["run_id"]: r.asDict() for r in rows} == \
+        {"d1": s1, "d2": s2, "d3": s3}
 
 
 def test_summary_counts_quarantined_rows(spark, tmp_path):
