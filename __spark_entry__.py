@@ -1387,14 +1387,14 @@ def q_pipeline_curate(spark, sf_dir):
     """Capstone COMPOSITION — the literal 100 TB story as one job
     (VERDICT r3 Next-round #8), upgraded to an EMPTY-DIFF oracle
     (VERDICT r4 Next-round #2): deterministic Common-Crawl-style pages →
-    the full extraction pipeline (admission → url-hash repartition →
+    the full extraction pipeline (admission → capture-hash repartition →
     fused dual-tier extract/route/parse/validate → doc_type-partitioned
     sink + observed run summary) → the curation chain over the
     EXTRACTED text (quality → repetition → lang gate → exact dedup →
     PII scrub → 2000-token sharding), run TWICE at deliberately
-    different physical layouts (partitions=8/salt=0 vs partitions=3/
-    salt=2 — different shuffle fan-out, different url-hash salting) on
-    the identical input.  Emitted rows are per-row DISAGREEMENTS between
+    different physical layouts (partitions=8 vs partitions=3 — different
+    shuffle fan-out, so every capture lands elsewhere) on the identical
+    input.  Emitted rows are per-row DISAGREEMENTS between
     the two runs — full extraction output per url, full curation verdict
     per doc — so the DuckDB oracle is the empty relation and the
     docstring claim the old rollup could only assert via digests
@@ -1410,9 +1410,9 @@ def q_pipeline_curate(spark, sf_dir):
     wd = tempfile.mkdtemp(prefix="pipecur_")
     try:
         pages = pagegen.generate_df(spark, 480, partitions=8)
-        for tag, parts, salt in (("a", 8, 0), ("b", 3, 2)):
+        for tag, parts in (("a", 8), ("b", 3)):
             job.run_pipeline(spark, "", f"{wd}/{tag}", RUN_DATE,
-                             partitions=parts, salt=salt, input_df=pages,
+                             partitions=parts, input_df=pages,
                              canonicalize_urls=True)
 
         def extracted(tag):

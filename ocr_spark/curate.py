@@ -351,9 +351,8 @@ def run_curation(spark: SparkSession, input_path: str, output_path: str,
           lin.xor_digest("doc_id", "text").alias("digest")]),
     ], "overwrite")
     summary["wall_ms"] = int((time.monotonic() - t0) * 1000)
-    (spark.createDataFrame([tuple(summary.values())],
-                           list(summary.keys()))
-     .write.mode("overwrite").json(f"{output_path}/summary"))
+    lin.one_row(spark, summary).write.mode("overwrite") \
+        .json(f"{output_path}/summary")
     return summary
 
 

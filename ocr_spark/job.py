@@ -3,7 +3,7 @@
     pages (url, warc_ts, html, text, lang)
       → admission gates (size cap, decodable) + quarantine      [S2–S4]
       → resume anti-join                                        [§4.3]
-      → repartition(P, xxhash64(url) [+ salt])                  [§4.2-1]
+      → repartition(P, xxhash64(url, warc_ts, text))            [§4.2-1]
       → ONE fused pUDF pass: tier-1 strip → route → parse →
         validate, and — for rows the router sends to fallback —
         the permissive tier-2 extraction INLINE over the same
@@ -17,8 +17,9 @@ Scale notes (designed for 10^12 docs / 1000 executors, tested on local[*]):
 * the only shuffle is the single explicit ``repartition`` — everything after
   is narrow (one fused pUDF, filters), so scaling is governed by the parse
   stage which is embarrassingly parallel;
-* hot hosts are spread by hashing the full url (doc-level, not host-level);
-  ``--salt`` adds an extra random-ish key term for pathological cases;
+* rows are placed by capture identity (url, warc_ts, text), so salting is
+  always on: hot hosts AND a flood of captures of one url spread over all
+  partitions with no per-job knob;
 * AQE left on for post-shuffle coalesce; Arrow batch size capped because a
   page can be ~100 KB of text (``§4.2-2``);
 * tier-2 work runs ONLY for rows the tier-1 router sends to fallback — the
@@ -29,7 +30,7 @@ Scale notes (designed for 10^12 docs / 1000 executors, tested on local[*]):
 CLI::
 
     python -m ocr_spark.job --input pages.parquet --output /out \
-        --run-date 2026-08-16 --partitions 256 [--salt 8] [--resume]
+        --run-date 2026-08-16 --partitions 256 [--resume]
 """
 
 from __future__ import annotations
@@ -168,26 +169,21 @@ def admission_split(pages: DataFrame,
     return admitted, quarantined
 
 
-def spread_partitions(pages: DataFrame, partitions: int, salt: int = 0) -> DataFrame:
-    """Balance work by document, not by input-file layout (§4.2-1).
+def spread_partitions(pages: DataFrame, partitions: int) -> DataFrame:
+    """Balance work by capture, not by input-file layout (§4.2-1).
 
-    Hashing the full url already splits hot hosts across partitions.  The
-    optional salt handles the case url-hashing cannot: one url re-crawled
-    millions of times.  The salt term must therefore vary *across captures
-    of the same url* — it hashes the capture identity (timestamp + content),
-    not the url again (which would be a per-url constant and spread
-    nothing).  Rows identical in every column still co-locate; that is
-    dedup's job, not placement's.
+    The key is the capture identity (url, timestamp, content): hashing the
+    url alone splits hot hosts but lands every re-crawl of one url in a
+    single partition, so the capture columns salt every row, always.
+    Rows identical in every column still co-locate; that is dedup's job,
+    not placement's.  Digests are XOR aggregates, so placement never
+    changes them.
     """
-    if salt > 1:
-        capture = F.pmod(F.xxhash64("url", "warc_ts", "text", F.lit(salt)),
-                         F.lit(salt))
-        return pages.repartition(partitions, F.xxhash64("url"), capture)
-    return pages.repartition(partitions, F.xxhash64("url"))
+    return pages.repartition(partitions, F.xxhash64("url", "warc_ts", "text"))
 
 
 def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
-                 run_date: date, partitions: int = 64, salt: int = 0,
+                 run_date: date, partitions: int = 64,
                  mode: str = "standard", resume: bool = False,
                  tier2_enabled: bool = True, run_id: Optional[str] = None,
                  input_df: Optional[DataFrame] = None,
@@ -230,7 +226,7 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
         admitted = lin.anti_join_done(admitted, f"{output_path}/data")
         quarantined = lin.anti_join_done(quarantined,
                                          f"{output_path}/quarantine")
-    admitted = spread_partitions(admitted, partitions, salt)
+    admitted = spread_partitions(admitted, partitions)
     data = extract_frame(admitted, run_date, mode, tier2_enabled)
     return write_run(spark, data, quarantined, output_path, "",
                      "append" if resume else "overwrite", run_id, t0)
@@ -284,7 +280,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--run-date", required=True, help="YYYY-MM-DD (freezes the clock)")
     ap.add_argument("--partitions", type=int, default=64)
-    ap.add_argument("--salt", type=int, default=0)
     ap.add_argument("--mode", default="standard",
                     choices=["standard", "aggressive", "layout"])
     ap.add_argument("--resume", action="store_true")
@@ -301,7 +296,7 @@ def main() -> None:
     spark = build_session(master=args.master, shuffle_partitions=args.partitions)
     summary = run_pipeline(
         spark, args.input, args.output, date.fromisoformat(args.run_date),
-        partitions=args.partitions, salt=args.salt, mode=args.mode,
+        partitions=args.partitions, mode=args.mode,
         resume=args.resume, tier2_enabled=not args.no_tier2,
         canonicalize_urls=args.canonicalize_urls,
         respect_noindex=args.respect_noindex)

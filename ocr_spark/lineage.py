@@ -111,9 +111,18 @@ def write_summary(spark: SparkSession, metrics: dict, run_id: str,
     return it as a dict."""
     summary = {"run_id": run_id, "partition_id": -1, **metrics,
                "wall_ms": wall_ms}
-    spark.createDataFrame([summary], _SUMMARY_SCHEMA) \
-        .write.mode(mode).parquet(path)
+    one_row(spark, summary, _SUMMARY_SCHEMA).write.mode(mode).parquet(path)
     return summary
+
+
+def one_row(spark: SparkSession, row: dict,
+            schema: Optional[str] = None) -> DataFrame:
+    """*row* as a one-row frame that writes in ONE task.  A local list is
+    parallelized over ``defaultParallelism`` tasks; a pandas frame crosses
+    through Arrow into a JVM-local relation instead."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame([row]), schema)
 
 
 def global_summary(unified: DataFrame, run_id: str, wall_ms: int) -> DataFrame:

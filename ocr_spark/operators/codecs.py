@@ -67,24 +67,6 @@ def encode_bmp(rgb: np.ndarray) -> bytes:
     return header + pixel_data
 
 
-def downsample_bmp(payload: bytes, max_px: int) -> tuple[bytes, int, int] | None:
-    """Real area downsample of a BMP to fit max_px; (bytes, w, h) or None."""
-    px = decode_bmp(payload)
-    if px is None:
-        return None
-    h, w = px.shape[:2]
-    factor = -(-max(w, h) // max_px)  # ceil division
-    if factor <= 1:
-        return payload, w, h
-    nh, nw = h // factor, w // factor
-    if nh == 0 or nw == 0:
-        return payload, w, h
-    cropped = px[:nh * factor, :nw * factor].astype(np.uint32)
-    small = (cropped.reshape(nh, factor, nw, factor, 3)
-             .mean(axis=(1, 3)).astype(np.uint8))
-    return encode_bmp(small), nw, nh
-
-
 # ---------------------------------------------------------------------------
 # PNG (stdlib zlib inflate + numpy row unfiltering — RFC 2083)
 # ---------------------------------------------------------------------------

@@ -367,14 +367,6 @@ def sample_frames(df: DataFrame, every_ms: int = 1000,
     return slim.mapInPandas(process, schema=FRAME_SCHEMA)
 
 
-def media_metadata_stats(df: DataFrame) -> DataFrame:
-    """Metadata-only rollup — never touches the binary column (pruned scan)."""
-    return (df.groupBy("kind")
-            .agg(F.count("*").alias("n"),
-                 F.avg(F.col("meta.width")).alias("avg_width"),
-                 F.max(F.col("meta.duration_ms")).alias("max_duration_ms")))
-
-
 def synthetic_media(spark, rows: int = 64) -> DataFrame:
     """Deterministic media table for tests/benches.
 

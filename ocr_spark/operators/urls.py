@@ -152,17 +152,6 @@ def blocklist_annotate(df: DataFrame, blocked: DataFrame,
             .withColumn("url_blocked", F.col("blocked_domain").isNotNull()))
 
 
-def blocklist_filter(df: DataFrame, blocked: DataFrame,
-                     url_col: str = "url", id_col: str = "doc_id",
-                     domain_col: str = "domain") -> DataFrame:
-    """Rows of *df* whose url host falls under NO blocklist domain —
-    the filter form of :func:`blocklist_annotate`, same scale shape."""
-    return (blocklist_annotate(df, blocked, url_col=url_col,
-                               id_col=id_col, domain_col=domain_col)
-            .filter(~F.col("url_blocked"))
-            .drop("blocked_domain", "url_blocked"))
-
-
 _ROBOTS_NAME_FIRST = (r"(?is)<meta\b[^>]*\bname\s*=\s*['\"]robots['\"]"
                       r"[^>]*\bcontent\s*=\s*['\"]([^'\"]*)['\"]")
 _ROBOTS_CONTENT_FIRST = (r"(?is)<meta\b[^>]*\bcontent\s*=\s*"

@@ -8,7 +8,8 @@ byte-exactly, so ``pipeline(html) == text`` is the per-row invariant.
 Key properties:
 * fully deterministic from ``doc_id`` (seed folded into a splitmix-style
   hash) — no RNG state, so distributed generation is order-independent;
-* Zipf-skewed host distribution (hot hosts ⇒ exercises salted repartition);
+* Zipf-skewed host distribution (hot hosts ⇒ exercises the capture-hash
+  repartition, whose salting is always on);
 * document mix: DNI frontal / DNI with MRZ / Permís / NIF / plain prose,
   with valid *and* corrupted field values so every validation path fires;
 * link-heavy wrapper on a slice of pages drives tier-1 confidence down and

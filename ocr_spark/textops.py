@@ -198,10 +198,3 @@ def redact_id(doc: Optional[str]) -> str:
     if not doc or len(doc) < 7:
         return "***"
     return doc[:4] + "****" + doc[-1]
-
-
-def redact_name(name: Optional[str]) -> str:
-    """``JOAQUIN`` → ``J******``. Parity: ``app/utils/redact.py:20-28``."""
-    if not name:
-        return "***"
-    return name[0] + "*" * (len(name) - 1)

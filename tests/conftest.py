@@ -26,12 +26,26 @@ for p in (str(REPO), str(REFERENCE)):
 RUN_DATE = date.today()
 
 
-def count_jobs(spark, fn) -> int:
-    """Number of Spark jobs, outside any job group, that ``fn()`` runs."""
+def _new_jobs(spark, fn) -> list[int]:
+    """Ids of the Spark jobs, outside any job group, that ``fn()`` runs."""
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None) or [])
     fn()
-    return len(set(tracker.getJobIdsForGroup(None) or []) - before)
+    return sorted(set(tracker.getJobIdsForGroup(None) or []) - before)
+
+
+def count_jobs(spark, fn) -> int:
+    """Number of Spark jobs, outside any job group, that ``fn()`` runs."""
+    return len(_new_jobs(spark, fn))
+
+
+def job_tasks(spark, fn) -> list[int]:
+    """Tasks of each Spark job, outside any job group, that ``fn()`` runs
+    — in job order."""
+    tracker = spark.sparkContext.statusTracker()
+    return [sum(tracker.getStageInfo(stage).numTasks
+                for stage in tracker.getJobInfo(job).stageIds)
+            for job in _new_jobs(spark, fn)]
 
 
 @pytest.fixture(scope="session")

@@ -8,7 +8,7 @@ import json
 from pyspark.sql import functions as F
 
 from ocr_spark import curate
-from tests.conftest import count_jobs
+from tests.conftest import count_jobs, job_tasks
 
 BASE = ("the quick brown fox jumps over the lazy dog and runs far away "
         "into the green forest while the rain keeps falling all day long")
@@ -136,6 +136,17 @@ def test_curation_job_count_budget(spark, tmp_path):
     n_jobs = count_jobs(spark, lambda: curate.run_curation(
         spark, inp, str(tmp_path / "out"), partitions=2))
     assert 0 < n_jobs <= 15, f"curation ran {n_jobs} Spark jobs"
+
+
+def test_curation_summary_write_runs_one_task(spark, tmp_path):
+    """Curation's one-row ``summary/`` JSON write — its last job — runs
+    ONE task; built from a local list it ran ``defaultParallelism`` (4)
+    tasks."""
+    inp = str(tmp_path / "docs.parquet")
+    _corpus(spark).write.parquet(inp)
+    tasks = job_tasks(spark, lambda: curate.run_curation(
+        spark, inp, str(tmp_path / "out"), partitions=2))
+    assert tasks[-1] == 1, tasks
 
 
 def test_curate_url_gates(spark):

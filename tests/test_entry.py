@@ -119,8 +119,8 @@ def test_stream_vs_batch_diff_empty(spark):
 
 def test_pipeline_curate_diff_empty(spark):
     """The registered pipeline_curate query must return the empty diff:
-    the extraction→curation capstone is row-identical across different
-    partition counts and url-hash salts on the same input."""
+    the extraction→curation capstone is row-identical across two
+    partition counts (8 vs 3) on the same input."""
     assert entrymod.q_pipeline_curate(spark, "/root/testdata/sf0.001") \
         .count() == 0
 

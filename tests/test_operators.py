@@ -372,12 +372,6 @@ def test_media_stub_guard(spark):
         multimodal.extract_media_features(media, deterministic_fake=False).collect()
 
 
-def test_media_metadata_stats(spark):
-    media = multimodal.synthetic_media(spark, rows=30)
-    stats = {r["kind"]: r["n"] for r in multimodal.media_metadata_stats(media).collect()}
-    assert stats == {"image": 10, "audio": 10, "video": 10}
-
-
 # --- temporal ----------------------------------------------------------------------
 
 def test_asof_join_semantics(spark):
@@ -524,7 +518,7 @@ def test_bmp_roundtrip_and_downsample():
     blob = codecs.encode_bmp(px)
     back = codecs.decode_bmp(blob)
     assert back is not None and np.array_equal(back, px)  # lossless
-    small, w, h = codecs.downsample_bmp(blob, max_px=16)
+    small, w, h = codecs.downsample_image(blob, max_px=16)
     assert max(w, h) <= 16
     spx = codecs.decode_bmp(small)
     assert spx.shape == (h, w, 3)
@@ -2294,16 +2288,18 @@ def test_bare_host_root_dot(spark):
 def test_blocklist_filter_and_entry_normalization(spark):
     from ocr_spark.operators import urls
     docs, bl = _bl_frames(spark)
-    kept = sorted(r["doc_id"]
-                  for r in urls.blocklist_filter(docs, bl).collect())
+    annotated = urls.blocklist_annotate(docs, bl)
+    kept = sorted(r["doc_id"] for r in
+                  annotated.filter(~F.col("url_blocked")).collect())
     assert kept == [3, 7, 8, 11]
     # entries are trimmed + casefolded: ' Other.Example ' blocks other.example
     extra = spark.createDataFrame([(9, "http://x.other.example/")],
                                   ["doc_id", "url"])
     row = urls.blocklist_annotate(extra, bl).collect()[0]
     assert row["blocked_domain"] == "other.example"
-    # original columns pass through the filter unchanged
-    assert urls.blocklist_filter(docs, bl).columns == ["doc_id", "url"]
+    # original columns pass through; the two verdict columns are appended
+    assert annotated.columns == ["doc_id", "url", "blocked_domain",
+                                 "url_blocked"]
 
 
 def test_host_cap_deterministic(spark):

@@ -232,9 +232,10 @@ def main() -> None:
         "partitions": args.partitions,
         "config": {
             "arrow_max_records_per_batch": 512,
-            "aqe": True, "salt": 0,
+            "aqe": True,
             "equalize_load": args.equalize_load,
-            "shuffle": "repartition(P, xxhash64(url)) — the only wide op",
+            "shuffle": "repartition(P, xxhash64(url, warc_ts, text)) — "
+                       "the only wide op",
         },
         "n_cores": args.n,
         "repeats": args.repeats,

@@ -1,29 +1,25 @@
-"""Skew-salt evidence bench (§4.2-1 / VERDICT r2 item 8).
+"""Skew-placement evidence bench (§4.2-1 / VERDICT r2 item 8).
 
-Plants the salt mechanism's pathological input — ONE url re-captured for
-~30% of the corpus (url-hash placement puts every capture in a single
-partition) — and runs the SAME pipeline with ``salt=0`` and ``salt=8``.
-Straggler severity is read from Spark's event log (uncompressed, enabled
-for this session): per-task times of the extraction stage, as
+Plants the pathological input for placement — ONE url re-captured for
+~30% of the corpus (url-hash placement would put every capture in a
+single partition) — and runs the pipeline once under its one placement,
+the capture-identity hash ``xxhash64(url, warc_ts, text)``.  Straggler
+severity is read from Spark's event log (uncompressed, enabled for this
+session): per-task times of the extraction stage, as
 ``perfbench/eventlog.py`` computes ``job.fused_stage_straggler_ratio``,
 
     straggler_ratio = max(task time) / median(task time)
 
-which collapses toward ~1 when the salt spreads the hot url's captures.
-Per-partition row counts come from the pipeline's own placement,
+which stays near 1 when the flood's captures are spread.  Per-partition
+row counts come from the pipeline's own placement,
 ``job.spread_partitions``, grouped by ``spark_partition_id()``.  The
-global digest must be IDENTICAL across both runs — placement must never
-change a single output byte.
-
-Host skew needs no salt: urls are distinct there and ``xxhash64(url)``
-already spreads them (asserted by the placement unit test); the salt
-exists precisely for same-url capture floods, which is what this bench
-plants.
+digest is an XOR aggregate, so placement cannot change it: compare it
+across code versions on the same ``--pages``/``--hot-pct``.
 
 Usage::
 
     python tools/bench_skew.py [--pages 24000] [--partitions 32] \
-        [--hot-pct 30] [--out BENCH_skew.json]
+        [--hot-pct 30] [--no-curate] [--out result.json]
 """
 
 from __future__ import annotations
@@ -67,22 +63,21 @@ def skewed_pages(spark, rows: int, hot_pct: int, partitions: int):
             .mapInPandas(gen, schema=PAGES_SCHEMA))
 
 
-def run_once(spark, pages_path: str, out: str, partitions: int, salt: int,
+def run_once(spark, pages_path: str, out: str, partitions: int,
              curate_chain: bool = True) -> dict:
     from pyspark.sql import functions as F
 
     from ocr_spark import job
 
     placed = job.spread_partitions(job.read_pages(spark, pages_path),
-                                   partitions, salt)
+                                   partitions)
     counts = sorted(r["count"] for r in placed.groupBy(
         F.spark_partition_id().alias("partition_id")).count().collect())
     t0 = time.time()
     summary = job.run_pipeline(
-        spark, pages_path, out, RUN_DATE, partitions=partitions, salt=salt)
+        spark, pages_path, out, RUN_DATE, partitions=partitions)
     t1 = time.time()
     result = {
-        "salt": salt,
         "digest": summary["digest"],
         "wall_s": round(t1 - t0, 2),
         "n_partitions": len(counts),
@@ -95,10 +90,10 @@ def run_once(spark, pages_path: str, out: str, partitions: int, salt: int,
     }
     if curate_chain:
         # the 100-TB story continues past extraction: run the curation
-        # chain over this salted run's output.  doc identity must include
+        # chain over this run's output.  doc identity must include
         # warc_ts — the flood makes url itself non-unique by design — so
-        # the chain's digest stays salt-invariant (placement never changes
-        # an output byte, end to end)
+        # the chain's digest stays placement-invariant (placement never
+        # changes an output byte, end to end)
         from ocr_spark import curate
 
         t1 = time.monotonic()
@@ -120,7 +115,9 @@ def main() -> None:
     ap.add_argument("--pages", type=int, default=24000)
     ap.add_argument("--partitions", type=int, default=32)
     ap.add_argument("--hot-pct", type=int, default=30)
-    ap.add_argument("--out", default=str(REPO / "BENCH_skew.json"))
+    ap.add_argument("--out", default=None,
+                    help="also write the result JSON here (BENCH_skew.json "
+                         "keeps the salt=0 vs salt=8 history)")
     ap.add_argument("--no-curate", action="store_true",
                     help="skip the attached curation chain (round-2 shape)")
     args = ap.parse_args()
@@ -149,42 +146,29 @@ def main() -> None:
         pages_path = f"{wd}/pages.parquet"
         skewed_pages(spark, args.pages, args.hot_pct, args.partitions) \
             .write.mode("overwrite").parquet(pages_path)
-        # warmup (JIT + Python worker pool) so neither measured run pays it
-        run_once(spark, pages_path, f"{wd}/warm", args.partitions, 0,
+        # warmup (JIT + Python worker pool) so the measured run does not
+        # pay it
+        run_once(spark, pages_path, f"{wd}/warm", args.partitions,
                  curate_chain=not args.no_curate)
-        results = [run_once(spark, pages_path, f"{wd}/salt{s}",
-                            args.partitions, s,
-                            curate_chain=not args.no_curate)
-                   for s in (0, 8)]
+        result = run_once(spark, pages_path, f"{wd}/run", args.partitions,
+                          curate_chain=not args.no_curate)
         app_id = spark.sparkContext.applicationId
         spark.stop()  # closes the event log under its final name
         events = eventlog.load(f"{wd}/eventlog", app_id)
-        for r in results:
-            r["straggler_ratio"] = round(eventlog.layer_metrics(
-                events, [r.pop("window")])["job.fused_stage_straggler_ratio"],
-                3)
+        result["straggler_ratio"] = round(eventlog.layer_metrics(
+            events, [result.pop("window")])[
+                "job.fused_stage_straggler_ratio"], 3)
         blob = {
-            "bench": "skew_salt",
+            "bench": "skew_capture_placement",
             "pages": args.pages,
             "hot_url_pct": args.hot_pct,
             "partitions": args.partitions,
             "master": "local[32]",
-            "runs": results,
-            "digests_identical": results[0]["digest"] == results[1]["digest"],
-            "straggler_collapse":
-                round(results[0]["straggler_ratio"]
-                      / results[1]["straggler_ratio"], 2),
+            "run": result,
         }
-        if not args.no_curate:
-            blob["curate_digests_identical"] = (
-                results[0]["curate_digest"] == results[1]["curate_digest"])
-        Path(args.out).write_text(json.dumps(blob, indent=2) + "\n")
+        if args.out:
+            Path(args.out).write_text(json.dumps(blob, indent=2) + "\n")
         print(json.dumps(blob, indent=2))
-        print("\n| salt | max rows/part | straggler ratio (task time) | job wall s |")
-        print("|---|---|---|---|")
-        for r in results:
-            print(f"| {r['salt']} | {r['max_partition_rows']} | "
-                  f"{r['straggler_ratio']} | {r['wall_s']} |")
     finally:
         shutil.rmtree(wd, ignore_errors=True)
 

@@ -17,7 +17,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--run-date", required=True)
     ap.add_argument("--partitions", type=int, default=64)
-    ap.add_argument("--salt", type=int, default=0)
     ap.add_argument("--mode", default="standard")
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--warmup", default=None,
@@ -41,7 +40,7 @@ def main() -> None:
                          partitions=min(args.partitions, 8))
     summary = job.run_pipeline(
         spark, args.input, args.output, date.fromisoformat(args.run_date),
-        partitions=args.partitions, salt=args.salt, mode=args.mode,
+        partitions=args.partitions, mode=args.mode,
         resume=args.resume)
     print({k: summary[k] for k in ("run_id", "input_count", "extracted_count",
                                    "valid_count", "tier2_count", "digest",
