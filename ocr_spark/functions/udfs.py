@@ -171,13 +171,13 @@ def _dumps(obj) -> str:
 
 
 def extract_batch(pdf: pd.DataFrame, run_date: date, mode: str = "standard",
-                  policy: str = "fused", route: bool = True) -> pd.DataFrame:
+                  policy: str = "fused") -> pd.DataFrame:
     """The extraction row kernel: one pages batch → :data:`FUSED_SCHEMA` rows.
 
     Each page is segmented once and *policy* picks the tiers run over it:
 
     * ``tier1`` — tier-1 keep → route → parse, routing decision kept
-      (streaming; the engine comparison's tier-1 cells);
+      (the engine comparison's tier-1 cells);
     * ``fused`` — as ``tier1``, but a routed row emits ONLY its tier-2 row,
       computed over the SAME blocks (the batch and streaming pipelines);
       equal to the two-stage composition, ``tier1`` then ``tier2`` over the
@@ -185,8 +185,8 @@ def extract_batch(pdf: pd.DataFrame, run_date: date, mode: str = "standard",
     * ``tier2`` — permissive keep (+spans) → route → final parse, with
       ``tier2_reason`` read from the input (the comparison's tier-2 cells).
 
-    *route* ``False`` turns the tier-1 router off.  Rows with no html use
-    the ``text`` column: confidence 100 at tier 1, 95 (0 if empty) at tier 2.
+    Rows with no html use the ``text`` column: confidence 100 at tier 1,
+    95 (0 if empty) at tier 2.
     """
     tier2_only = policy == "tier2"
     reasons = pdf["tier2_reason"] if tier2_only else [None] * len(pdf)
@@ -205,7 +205,7 @@ def extract_batch(pdf: pd.DataFrame, run_date: date, mode: str = "standard",
                 xt, conf = html_extract.tier1_from_blocks(blocks, mode)
             dt = route_doc_type(bound_parse_text(xt))
             resp, needs, reason = parse_dispatch(
-                dt, xt, conf, run_date, TIER1_ENGINE, route)
+                dt, xt, conf, run_date, TIER1_ENGINE, route=True)
             if policy == "tier1" or not needs:
                 rows.append(_row(url, ts, lang, dt, 1, needs, reason, xt,
                                  TIER1_ENGINE, conf, resp, None))
@@ -232,7 +232,7 @@ def _row(url, ts, lang, doc_type, tier, needs, reason, xt, engine, conf,
 
 
 def extract_udf(run_date: date, mode: str = "standard",
-                policy: str = "fused", route: bool = True):
+                policy: str = "fused"):
     """mapInPandas function running :func:`extract_batch` over every batch.
 
     Input: the pages schema (plus ``tier2_reason`` for the ``tier2``
@@ -241,6 +241,6 @@ def extract_udf(run_date: date, mode: str = "standard",
 
     def fn(iterator):
         for pdf in iterator:
-            yield extract_batch(pdf, run_date, mode, policy, route)
+            yield extract_batch(pdf, run_date, mode, policy)
 
     return fn

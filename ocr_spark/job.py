@@ -31,6 +31,9 @@ CLI::
 
     python -m ocr_spark.job --input pages.parquet --output /out \
         --run-date 2026-08-16 --partitions 256 [--resume]
+
+Every run keeps one contract: admission gates, tier 1 on every admitted
+row, tier 2 on the rows the router flags.  No flag turns a tier off.
 """
 
 from __future__ import annotations
@@ -185,7 +188,7 @@ def spread_partitions(pages: DataFrame, partitions: int) -> DataFrame:
 def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
                  run_date: date, partitions: int = 64,
                  mode: str = "standard", resume: bool = False,
-                 tier2_enabled: bool = True, run_id: Optional[str] = None,
+                 run_id: Optional[str] = None,
                  input_df: Optional[DataFrame] = None,
                  canonicalize_urls: bool = False,
                  respect_noindex: bool = False) -> dict:
@@ -227,18 +230,18 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
         quarantined = lin.anti_join_done(quarantined,
                                          f"{output_path}/quarantine")
     admitted = spread_partitions(admitted, partitions)
-    data = extract_frame(admitted, run_date, mode, tier2_enabled)
+    data = extract_frame(admitted, run_date, mode)
     return write_run(spark, data, quarantined, output_path, "",
                      "append" if resume else "overwrite", run_id, t0)
 
 
-def extract_frame(admitted: DataFrame, run_date: date, mode: str,
-                  tier2_enabled: bool) -> DataFrame:
+def extract_frame(admitted: DataFrame, run_date: date,
+                  mode: str) -> DataFrame:
     """The ONE fused pass over *admitted* pages — tier 1 + inline tier 2 on
     the fallback rows — as the ``data/`` sink's columns: the unified row
     plus the canonical ``response_json``.  Shared by the batch job and the
     streaming micro-batches."""
-    fused = udfs.extract_udf(run_date, mode, "fused", tier2_enabled)
+    fused = udfs.extract_udf(run_date, mode, "fused")
     return (admitted.mapInPandas(fused, udfs.FUSED_SCHEMA)
             .withColumn("spans", F.from_json("spans_json", _SPANS_TYPE))
             .select(*_UNIFIED_COLS, "response_json"))
@@ -275,7 +278,9 @@ def write_run(spark: SparkSession, data: DataFrame, quarantined: DataFrame,
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser(description="ocr_spark batch extraction pipeline")
+    ap = argparse.ArgumentParser(
+        description="ocr_spark batch extraction pipeline: admission gates, "
+                    "tier 1 on every admitted row, tier 2 on routed rows")
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument("--run-date", required=True, help="YYYY-MM-DD (freezes the clock)")
@@ -283,7 +288,6 @@ def main() -> None:
     ap.add_argument("--mode", default="standard",
                     choices=["standard", "aggressive", "layout"])
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--no-tier2", action="store_true")
     ap.add_argument("--respect-noindex", action="store_true",
                     help="quarantine pages whose meta robots lists noindex "
                          "(publisher opt-out; changes digests)")
@@ -297,7 +301,7 @@ def main() -> None:
     summary = run_pipeline(
         spark, args.input, args.output, date.fromisoformat(args.run_date),
         partitions=args.partitions, mode=args.mode,
-        resume=args.resume, tier2_enabled=not args.no_tier2,
+        resume=args.resume,
         canonicalize_urls=args.canonicalize_urls,
         respect_noindex=args.respect_noindex)
     print({k: summary[k] for k in ("run_id", "input_count", "extracted_count",

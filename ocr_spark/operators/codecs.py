@@ -4,7 +4,7 @@ No external media library ships in this environment, but these formats
 need none — BMP is a header + raw pixel rows (numpy slicing), PNG is
 stdlib ``zlib`` + per-row unfiltering (numpy), and WAV is stdlib
 ``wave``.  They make the multimodal operators REAL end-to-end for
-image/audio payloads: actual pixel decode, actual downsampling, actual
+image/audio payloads: actual pixel decode, actual re-encode, actual
 PCM frame slicing — while the remaining compressed formats (JPEG/H.264)
 stay behind the ``HAVE_MEDIA_LIBS`` guard in
 :mod:`ocr_spark.operators.multimodal`.
@@ -325,40 +325,12 @@ def decode_image(payload: bytes) -> tuple[np.ndarray, str] | None:
 
 def _posterize_332(rgb: np.ndarray) -> np.ndarray:
     """Quantize to the 3-3-2-bit web-safe-ish cube (≤256 colors) so any
-    RGB image becomes GIF-encodable after resampling."""
+    RGB image becomes GIF-encodable after compositing."""
     out = rgb.copy()
     out[..., 0] &= 0xE0
     out[..., 1] &= 0xE0
     out[..., 2] &= 0xC0
     return out
-
-
-def downsample_image(payload: bytes, max_px: int
-                     ) -> tuple[bytes, int, int] | None:
-    """Real area downsample of a BMP/PNG/JPEG/GIF to fit ``max_px``,
-    re-encoded in the SAME container (GIF via 3-3-2 posterize);
-    (bytes, w, h) or None for other formats."""
-    decoded = decode_image(payload)
-    if decoded is None:
-        return None
-    px, fmt = decoded
-    h, w = px.shape[:2]
-    factor = -(-max(w, h) // max_px)  # ceil division
-    if factor <= 1:
-        return payload, w, h
-    nh, nw = h // factor, w // factor
-    if nh == 0 or nw == 0:
-        return payload, w, h
-    cropped = px[:nh * factor, :nw * factor].astype(np.uint32)
-    small = (cropped.reshape(nh, factor, nw, factor, 3)
-             .mean(axis=(1, 3)).astype(np.uint8))
-    if fmt == "gif":
-        # block-mean can mint >256 colors; GIF re-encode needs a palette,
-        # so posterize to the 3-3-2 cube first (real pipelines quantize)
-        return encode_gif([_posterize_332(small)]), nw, nh
-    encode = {"bmp": encode_bmp, "png": encode_png,
-              "jpeg": encode_jpeg}[fmt]
-    return encode(small), nw, nh
 
 
 # ---------------------------------------------------------------------------

@@ -7,7 +7,7 @@ formats that need no external library (:mod:`ocr_spark.operators.codecs`):
 color types, every bit depth, Adam7 interlace), baseline JPEG
 (pure-numpy Huffman + dequant + IDCT, 4:4:4/4:2:2/4:2:0, restart
 markers), and GIF (from-scratch LZW, palettes, animation compositing)
-images are pixel-decoded/downsampled/re-encoded; PCM-16 WAV audio is
+images are pixel-decoded/re-encoded; PCM-16 WAV audio is
 decoded/sliced via stdlib ``wave``; Motion-JPEG AVI video is demuxed and
 frame-decoded; progressive (SOF2) JPEG decodes through the same
 multi-scan coefficient path.  What remains stubbed behind
@@ -211,62 +211,12 @@ def extract_media_features(df: DataFrame, deterministic_fake: bool = True,
     return slim.mapInPandas(process, schema=FEATURES_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("kind", T.StringType(), True),
-    T.StructField("payload", T.BinaryType(), True),
-    T.StructField("width", T.IntegerType(), True),
-    T.StructField("height", T.IntegerType(), True),
-])
-
 FRAME_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
     T.StructField("frame_idx", T.IntegerType(), False),
     T.StructField("ts_ms", T.IntegerType(), True),
     T.StructField("frame", T.BinaryType(), True),
 ])
-
-
-def resize_images(df: DataFrame, max_px: int = 512,
-                  deterministic_fake: bool = True) -> DataFrame:
-    """Image rows → capped-dimension payloads (P7 resize analog).
-
-    BMP and PNG payloads get a REAL area downsample (decode → block-mean →
-    re-encode in the same container, :func:`codecs.downsample_image`).
-    Other formats need external codecs: the deterministic fake scales the
-    recorded dims and truncates the payload proportionally, so schema,
-    batch shape, and the byte-budget behavior are exercised end-to-end
-    either way.
-    """
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload, meta in zip(
-                    pdf["media_id"], pdf["kind"], pdf["payload"], pdf["meta"]):
-                payload = bytes(payload or b"")
-                real = codecs.downsample_image(payload, max_px)
-                if real is not None:
-                    out, w, h = real
-                    rows.append({"media_id": mid, "kind": kind,
-                                 "payload": out, "width": w, "height": h})
-                    continue
-                if not deterministic_fake:
-                    raise NotImplementedError(
-                        "non-BMP image codecs not present")
-                # meta is nullable in MEDIA_SCHEMA — guard like payload
-                w = (meta["width"] if meta is not None else None) or max_px
-                h = (meta["height"] if meta is not None else None) or max_px
-                scale = min(1.0, max_px / max(w, h, 1))
-                keep = max(1, int(len(payload) * scale * scale))
-                rows.append({"media_id": mid, "kind": kind,
-                             "payload": payload[:keep],
-                             "width": int(w * scale), "height": int(h * scale)})
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZED_SCHEMA])
-
-    slim = df.filter(F.col("kind") == "image") \
-        .select("media_id", "kind", "payload", "meta")
-    return slim.mapInPandas(process, schema=RESIZED_SCHEMA)
 
 
 def sample_frames(df: DataFrame, every_ms: int = 1000,
@@ -288,8 +238,8 @@ def sample_frames(df: DataFrame, every_ms: int = 1000,
             rows = []
             for mid, payload, meta in zip(
                     pdf["media_id"], pdf["payload"], pdf["meta"]):
-                # P7 cap before any decode — the other operators truncate
-                # via media_features/resize; this one decodes directly
+                # P7 cap before any decode — media_features truncates
+                # via its own size policy; this one decodes directly
                 payload = bytes(payload or b"")[:MAX_PAYLOAD_BYTES]
                 avi = codecs.decode_avi_mjpeg(payload)
                 if avi is not None:

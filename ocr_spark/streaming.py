@@ -1,29 +1,28 @@
 """Structured Streaming ingest variant (SURVEY.md §7 stretch).
 
 The batch pipeline's source is an Iceberg/parquet snapshot; this module runs
-the SAME extraction row kernel over a stream of page files as they land
-(the Common-Crawl "WARC drop" pattern — at production scale the source would
-be Kafka or an Iceberg streaming read, both drop-in `readStream` swaps).
+the SAME pipeline over a stream of page files as they land (the
+Common-Crawl "WARC drop" pattern — at production scale the source would be
+Kafka or an Iceberg streaming read, both drop-in `readStream` swaps).
 
-Three surfaces:
+Two surfaces:
 
 * :func:`read_pages_stream` — file-source stream with the canonical pages
   schema; ``maxFilesPerTrigger`` bounds micro-batch size.
-* :func:`transform_stream` + :func:`quality_rollup` — a pure streaming
-  transformation (tier-1 fused extract+parse per micro-batch, no stateful
-  shuffle) and a watermarked windowed aggregation over it for live quality
-  monitoring (late pages up to the watermark are still counted; later ones
-  are dropped — deliberate, the batch pipeline is the source of truth).
 * :func:`run_streaming_pipeline` — the full dual-tier pipeline via
   ``foreachBatch``: each micro-batch runs the batch job's own body
-  (admission → :func:`ocr_spark.job.extract_frame`, one fused tier-1 +
-  inline tier-2 pass → :func:`ocr_spark.job.write_run`) into the same
-  output layout as :func:`ocr_spark.job.run_pipeline`, with one summary
-  row per micro-batch observed on its own sink writes
+  (admission gates + quarantine → :func:`ocr_spark.job.extract_frame`,
+  one fused tier-1 + inline tier-2 pass → :func:`ocr_spark.job.write_run`)
+  into the same output layout as :func:`ocr_spark.job.run_pipeline`, with
+  one summary row per micro-batch observed on its own sink writes
   (``run_id = <run>-<batch_id>``).  The streaming checkpoint gives
   resume-from-offset; outputs are idempotent per batch_id because every
   write targets its own ``batch_id=`` directory (an Iceberg sink would make
   the append transactional as well).
+
+Every row a stream reads passes the batch job's admission gates: a
+null-url, empty or oversize page lands in ``quarantine/`` with its reason
+and never reaches the Python stage.
 
 Determinism: the same frozen ``run_date`` parameter as the batch job; the
 global output digest (XOR of row digests) over all micro-batches equals the
@@ -36,10 +35,9 @@ import time
 from datetime import date
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ocr_spark import job
-from ocr_spark.functions import udfs
 from ocr_spark.schema import PAGES_SCHEMA
 
 
@@ -52,96 +50,9 @@ def read_pages_stream(spark: SparkSession, path: str,
     return reader.parquet(path)
 
 
-def transform_stream(stream: DataFrame, run_date: date,
-                     mode: str = "standard") -> DataFrame:
-    """Tier-1 fused extraction over a streaming DataFrame.
-
-    Stateless map — no shuffle, so it composes with any downstream streaming
-    sink or stateful operator.  Rows that would go to tier 2 in the batch
-    pipeline are flagged (``needs_tier2``) but not re-extracted here: the
-    stream is the low-latency tier, the batch job the completeness tier.
-    """
-    tier1 = udfs.extract_udf(run_date, mode, "tier1")
-    return stream.mapInPandas(tier1, udfs.FUSED_SCHEMA)
-
-
-def quality_rollup(extracted: DataFrame, window: str = "1 hour",
-                   watermark: str = "2 hours") -> DataFrame:
-    """Watermarked windowed quality monitor over the extraction stream.
-
-    Late pages within the watermark still update their window; anything
-    later is dropped (the batch pipeline remains the source of truth).
-    """
-    return (extracted
-            .withWatermark("warc_ts", watermark)
-            .groupBy(F.window("warc_ts", window).alias("w"), "doc_type")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum(F.col("valido").cast("int")).alias("n_valido"),
-                 F.avg("confianza_global").alias("avg_conf"),
-                 F.sum(F.col("needs_tier2").cast("int")).alias("n_tier2"))
-            .select(F.col("w.start").alias("window_start"),
-                    F.col("w.end").alias("window_end"),
-                    "doc_type", "n_docs", "n_valido", "avg_conf", "n_tier2"))
-
-
-def dedup_stream(extracted: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Exactly-once-per-url within the watermark horizon.
-
-    Uses ``dropDuplicatesWithinWatermark``: plain ``dropDuplicates`` only
-    evicts state when the EVENT-TIME column is part of the dedup key, so
-    keyed on url alone it would keep every url ever seen (unbounded state
-    growth until executor OOM on a continuous crawl) and suppress
-    re-crawls past the horizon forever.  The WithinWatermark form is the
-    bounded-state version of the batch job's anti-join resume (§4.3):
-    state per url is dropped once the watermark passes it, and a url
-    re-crawled after the horizon is admitted again.
-    """
-    return (extracted.withWatermark("warc_ts", watermark)
-            .dropDuplicatesWithinWatermark(["url"]))
-
-
-HOST_PROFILE_SCHEMA = "host string, pages_seen bigint, n_valido bigint, n_tier2 bigint"
-_HOST_STATE_SCHEMA = "pages_seen bigint, n_valido bigint, n_tier2 bigint"
-
-
-def host_profiles(extracted: DataFrame, timeout: str = "NoTimeout") -> DataFrame:
-    """Custom stateful operator: per-host running crawl profile.
-
-    ``applyInPandasWithState`` keeps (pages_seen, n_valido, n_tier2) per host
-    across micro-batches and emits the updated profile whenever a host
-    appears in a batch — the streaming analog of the run summary, keyed by
-    the skew dimension (hot hosts surface immediately).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update(key, pdfs, state):
-        host = key[0]
-        pages = valido = tier2 = 0
-        for pdf in pdfs:
-            pages += len(pdf)
-            valido += int(pdf["valido"].fillna(False).sum())
-            tier2 += int(pdf["needs_tier2"].fillna(False).sum())
-        if state.exists:
-            p0, v0, t0 = state.get
-        else:
-            p0 = v0 = t0 = 0
-        state.update((p0 + pages, v0 + valido, t0 + tier2))
-        p, v, t = state.get
-        yield pd.DataFrame({"host": [host], "pages_seen": [p],
-                            "n_valido": [v], "n_tier2": [t]})
-
-    hosted = extracted.withColumn(
-        "host", F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1))
-    return (hosted.groupBy("host").applyInPandasWithState(
-        update, HOST_PROFILE_SCHEMA, _HOST_STATE_SCHEMA,
-        "update", getattr(GroupStateTimeout, timeout)))
-
-
 def run_streaming_pipeline(spark: SparkSession, input_path: str,
                            output_path: str, run_date: date,
                            partitions: int = 8, mode: str = "standard",
-                           tier2_enabled: bool = True,
                            run_id: str = "stream",
                            max_files_per_trigger: Optional[int] = None,
                            available_now: bool = True,
@@ -206,7 +117,7 @@ def run_streaming_pipeline(spark: SparkSession, input_path: str,
         t0 = time.monotonic()
         admitted, quarantined = job.admission_split(batch_df)
         admitted = job.spread_partitions(admitted, partitions)
-        data = job.extract_frame(admitted, run_date, mode, tier2_enabled)
+        data = job.extract_frame(admitted, run_date, mode)
         job.write_run(spark, data, quarantined, output_path,
                       f"/batch_id={batch_id}", "overwrite",
                       f"{run_id}-{batch_id}", t0)

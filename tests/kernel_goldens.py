@@ -38,12 +38,12 @@ CANON_COLS = ("url", "doc_type", "tier", "needs_tier2", "tier2_reason",
 PARSE_COLS = ("response", "needs_tier2", "tier2_reason")
 PARSE_CONFS = (95.0, 10.0, None)
 
-# (policy, route) configurations the kernel goldens cover, by key prefix
+# kernel policy each golden key prefix covers (the fused prefix keeps its
+# ``tier2=on`` suffix so the recorded digests keep their keys)
 CONFIGS = {
-    "fused/tier2=on": ("fused", True),
-    "fused/tier2=off": ("fused", False),
-    "tier1": ("tier1", True),
-    "tier2": ("tier2", True),
+    "fused/tier2=on": "fused",
+    "tier1": "tier1",
+    "tier2": "tier2",
 }
 
 
@@ -127,15 +127,15 @@ def parse_digest(names: list[str], out: pd.DataFrame) -> str:
 def compute(kernel, parse) -> dict[str, str]:
     """Every golden digest.
 
-    ``kernel(pdf, mode, policy, route)`` returns the kernel's output batch;
+    ``kernel(pdf, mode, policy)`` returns the kernel's output batch;
     ``parse(doc_type, texts, confidences)`` the parse UDF's output frame.
     """
     pdf = pages()
     digests: dict[str, str] = {}
     for mode in MODES:
-        for prefix, (policy, route) in CONFIGS.items():
+        for prefix, policy in CONFIGS.items():
             src = tier2_input(pdf) if policy == "tier2" else pdf
-            out = kernel(src, mode, policy, route)
+            out = kernel(src, mode, policy)
             digests.update(kernel_digests(out, f"{prefix}/{mode}"))
     names, texts, confs = parse_cases()
     conf_s = pd.Series(confs, dtype="float64")
@@ -145,9 +145,9 @@ def compute(kernel, parse) -> dict[str, str]:
     return digests
 
 
-def current_kernel(pdf, mode, policy, route):
+def current_kernel(pdf, mode, policy):
     from ocr_spark.functions import udfs
-    return udfs.extract_batch(pdf, RUN_DATE, mode, policy, route)
+    return udfs.extract_batch(pdf, RUN_DATE, mode, policy)
 
 
 def current_parse(doc_type, texts, confidences):

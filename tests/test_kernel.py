@@ -1,12 +1,12 @@
 """The extraction row kernel and the parse UDF, without Spark.
 
 * Goldens (``kernel_goldens.json``, frozen ``run_date``) pin every column
-  the kernel emits, per policy × mode × tier 2 on/off × doc_type, and the
-  parse UDF's output per doc_type; positive controls show a one-byte
-  change in any compared column breaks them.
+  the kernel emits, per policy × mode × doc_type, and the parse UDF's
+  output per doc_type; positive controls show a one-byte change in any
+  compared column breaks them.
 * The differential check: the ``fused`` policy's rows equal the two-stage
   composition — ``tier1`` rows not routed to tier 2, unioned with
-  ``tier2`` over the routed slice — in every mode, tier 2 on and off.
+  ``tier2`` over the routed slice — in every mode.
 """
 
 from __future__ import annotations
@@ -35,11 +35,11 @@ def _pages() -> pd.DataFrame:
 
 
 @functools.lru_cache(maxsize=None)
-def _out(policy: str, mode: str, route: bool) -> pd.DataFrame:
+def _out(policy: str, mode: str) -> pd.DataFrame:
     """Kernel output over the golden pages (cached: never mutate it)."""
     pdf = _pages()
     src = kg.tier2_input(pdf) if policy == "tier2" else pdf
-    return kg.current_kernel(src, mode, policy, route)
+    return kg.current_kernel(src, mode, policy)
 
 
 @functools.lru_cache(maxsize=None)
@@ -52,8 +52,7 @@ def _parse_out(doc_type: str) -> tuple[list[str], pd.DataFrame]:
 @pytest.mark.parametrize("mode", kg.MODES)
 @pytest.mark.parametrize("config", sorted(kg.CONFIGS))
 def test_kernel_goldens(goldens, config, mode):
-    policy, route = kg.CONFIGS[config]
-    out = _out(policy, mode, route)
+    out = _out(kg.CONFIGS[config], mode)
     assert len(out) == kg.N_PAGES + len(kg.edge_rows())
     got = kg.kernel_digests(out, f"{config}/{mode}")
     assert got == {k: goldens[k] for k in got}
@@ -81,7 +80,7 @@ def _one_byte_change(value):
 @pytest.mark.parametrize("column", kg.CANON_COLS)
 def test_kernel_goldens_catch_one_byte_change(goldens, column):
     """Positive control: the goldens compare every canonical column."""
-    out = _out("fused", "standard", True).copy()
+    out = _out("fused", "standard").copy()
     pos = out[column].first_valid_index()
     out.at[pos, column] = _one_byte_change(out.at[pos, column])
     prefix = "fused/tier2=on/standard"
@@ -108,25 +107,21 @@ def _rows(df: pd.DataFrame) -> list[tuple]:
     return [tuple(r) for r in df.itertuples(index=False)]
 
 
-@pytest.mark.parametrize("route", [True, False], ids=["tier2=on", "tier2=off"])
 @pytest.mark.parametrize("mode", kg.MODES)
-def test_fused_equals_two_stage(mode, route):
+def test_fused_equals_two_stage(mode):
     """``fused`` == ``tier1`` rows kept at tier 1 ∪ ``tier2`` over the
     ``tier1`` fallback slice (its pages, with the routed ``tier2_reason``,
     as input)."""
-    tier1 = _out("tier1", mode, route)
+    tier1 = _out("tier1", mode)
     routed = tier1["needs_tier2"].astype(bool)
-    parts = [tier1[~routed]]
-    if route:
-        fallback = _pages().merge(tier1[routed][["url", "tier2_reason"]],
-                                  on="url")
-        assert 0 < len(fallback) < len(tier1)
-        parts.append(kg.current_kernel(fallback, mode, "tier2", route))
-    else:
-        assert not routed.any()
-    two_stage = pd.concat(parts, ignore_index=True)
-    fused = _out("fused", mode, route)
-    assert set(fused["tier"]) == ({1, 2} if route else {1})
+    fallback = _pages().merge(tier1[routed][["url", "tier2_reason"]],
+                              on="url")
+    assert 0 < len(fallback) < len(tier1)
+    two_stage = pd.concat(
+        [tier1[~routed], kg.current_kernel(fallback, mode, "tier2")],
+        ignore_index=True)
+    fused = _out("fused", mode)
+    assert set(fused["tier"]) == {1, 2}
     assert _rows(fused) == _rows(two_stage)
 
 

@@ -186,9 +186,6 @@ def test_winnowing_fingerprints(spark, docs):
 
 def test_resize_and_frame_sample(spark):
     media = multimodal.synthetic_media(spark, rows=30)
-    resized = multimodal.resize_images(media, max_px=320).collect()
-    assert resized and all(r["width"] <= 320 and r["height"] <= 320
-                           for r in resized)
     frames = multimodal.sample_frames(media, every_ms=5000).collect()
     by_media = {}
     for f in frames:
@@ -518,12 +515,6 @@ def test_bmp_roundtrip_and_downsample():
     blob = codecs.encode_bmp(px)
     back = codecs.decode_bmp(blob)
     assert back is not None and np.array_equal(back, px)  # lossless
-    small, w, h = codecs.downsample_image(blob, max_px=16)
-    assert max(w, h) <= 16
-    spx = codecs.decode_bmp(small)
-    assert spx.shape == (h, w, 3)
-    # block-mean preserves overall brightness closely
-    assert abs(float(spx.mean()) - float(px.mean())) < 8.0
     assert codecs.decode_bmp(b"not a bitmap") is None
 
 
@@ -557,7 +548,7 @@ def test_png_roundtrip_filters_and_color_types():
     """Real PNG codec: lossless encode→decode round trip; decode of
     streams forward-filtered with EVERY RFC 2083 filter type (the test
     applies the filter, the codec must invert it); gray/RGBA color-type
-    normalization; container-preserving downsample; garbage safety."""
+    normalization; garbage safety."""
     import struct
     import zlib
 
@@ -625,9 +616,6 @@ def test_png_roundtrip_filters_and_color_types():
     assert np.array_equal(codecs.decode_png(build_png(rgba, 2, 6)),
                           rgba[..., :3])
 
-    small = codecs.downsample_image(codecs.encode_png(px), 8)
-    assert small is not None and small[0].startswith(b"\x89PNG\r\n\x1a\n")
-    assert max(small[1], small[2]) <= 8
     for junk in (b"", b"\x89PNG\r\n\x1a\n", b"\x89PNG\r\n\x1a\nXXXX",
                  b"notpng", codecs.encode_png(px)[:40]):
         assert codecs.decode_png(junk) is None
@@ -822,15 +810,6 @@ def test_media_features_real_decode(spark):
             assert w >= 48 and h >= 32  # real decoded dims
         elif kind == "audio":
             assert f[1] == 8000.0       # real decoded framerate
-    # real resize halves real dims
-    resized = {r["media_id"]: r for r in
-               multimodal.resize_images(media, max_px=24).collect()}
-    for mid, r in resized.items():
-        assert max(r["width"], r["height"]) <= 24
-        from ocr_spark.operators import codecs
-        # real re-encode in the ORIGINAL container (BMP rows stay BMP,
-        # PNG rows stay PNG) — both decodable
-        assert codecs.decode_image(bytes(r["payload"])) is not None
 
 
 def test_ivf_persisted_index(spark, tmp_path):
@@ -1462,11 +1441,9 @@ def test_gif_lzw_reference_and_roundtrip(spark):
     assert all(np.array_equal(a, b) for a, b in zip(frames, [f1, f2]))
     for junk in (b"", b"GIF89a", b"GIF89a" + b"\x00" * 20, b"nope"):
         assert codecs.decode_gif(junk) is None
-    # single-frame GIF surfaces as an image; downsample keeps the format
+    # single-frame GIF surfaces as an image
     single = codecs.encode_gif([f1])
     assert codecs.decode_image(single)[1] == "gif"
-    small = codecs.downsample_image(single, 7)
-    assert small is not None and small[0][:6] == b"GIF89a"
     # animated-GIF video path: real per-tick frames, each a decodable GIF
     media = multimodal.synthetic_media(spark, rows=18)
     sampled = multimodal.sample_frames(media, every_ms=250).collect()
@@ -2870,9 +2847,6 @@ def test_media_operators_null_meta(spark):
 
     schema = ("media_id long, kind string, payload binary, "
               "meta struct<width:int,height:int,duration_ms:int>")
-    img = spark.createDataFrame(
-        [(1, "image", bytearray(b"not-an-image"), None)], schema)
-    assert multimodal.resize_images(img).count() == 1
     vid = spark.createDataFrame(
         [(2, "video", bytearray(b"not-a-video"), None)], schema)
     assert multimodal.sample_frames(vid).count() >= 1

@@ -1,4 +1,5 @@
-"""Structured Streaming ingest variant: batch-equivalence, resume, watermark."""
+"""Structured Streaming ingest variant: batch-equivalence, resume,
+admission."""
 
 from __future__ import annotations
 
@@ -90,72 +91,55 @@ def test_stream_batch_replay_is_idempotent(spark, stream_input, tmp_path):
     assert data2.select("url").distinct().count() == N_PAGES
 
 
-def test_host_profiles_stateful(spark, stream_input, tmp_path):
-    """applyInPandasWithState accumulates per-host counters across batches."""
-    stream = streaming.read_pages_stream(spark, stream_input,
-                                         max_files_per_trigger=1)
-    extracted = streaming.transform_stream(stream, RUN_DATE)
-    profiles = streaming.host_profiles(extracted)
-    q = (profiles.writeStream.outputMode("update")
-         .format("memory").queryName("hp")
-         .option("checkpointLocation", str(tmp_path / "ck_hp"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    rows = spark.sql("select * from hp").collect()
-    assert rows
-    # update mode re-emits a host each batch it appears in; the max per host
-    # is the final running total, and totals must cover every input page
-    final = {}
-    for r in rows:
-        final[r["host"]] = max(final.get(r["host"], 0), r["pages_seen"])
-    assert sum(final.values()) == N_PAGES
-    assert all(h.startswith("host-") for h in final)
+@pytest.fixture(scope="module")
+def gated_input(tmp_path_factory):
+    """Two page files, each with rows the admission gates quarantine: a
+    missing url, an empty payload and an oversize html page."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_spark.job import MAX_HTML_BYTES
+
+    d = tmp_path_factory.mktemp("gated_in")
+    ts = pagegen._BASE_TS
+    gated = [
+        [{"url": None, "warc_ts": ts, "html": b"<p>APELLIDOS</p>",
+          "text": None, "lang": "es"}],
+        [{"url": "gate://empty", "warc_ts": ts, "html": None, "text": None,
+          "lang": "es"},
+         {"url": "gate://oversize", "warc_ts": ts,
+          "html": b"x" * (MAX_HTML_BYTES + 1), "text": None, "lang": "es"}],
+    ]
+    for part, extra in enumerate(gated):
+        rows = [pagegen.page_for(i) for i in range(part * 20, part * 20 + 20)]
+        pq.write_table(pa.Table.from_pylist(rows + extra),
+                       str(d / f"part{part}.parquet"))
+    return str(d)
 
 
-def test_quality_rollup_watermark(spark, stream_input, tmp_path):
-    """Watermarked windowed rollup drains under availableNow and sums to input."""
-    stream = streaming.read_pages_stream(spark, stream_input)
-    extracted = streaming.transform_stream(stream, RUN_DATE)
-    rollup = streaming.quality_rollup(extracted, window="1 hour",
-                                      watermark="2 hours")
-    # complete mode: every window is visible even before the watermark closes
-    # it (the fixture's pages all land inside one hour, so append mode would
-    # emit nothing until a later event advanced the watermark past the window)
-    q = (rollup.writeStream.outputMode("complete")
-         .format("memory").queryName("qr")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    rows = spark.sql("select * from qr").collect()
-    assert rows, "no windows emitted"
-    assert sum(r["n_docs"] for r in rows) == N_PAGES
-    assert {r["doc_type"] for r in rows} == {"dni", "permiso_circulacion", "nif"}
+def test_stream_quarantines_like_batch(spark, gated_input, tmp_path):
+    """Every streamed row passes the batch job's admission gates: the
+    stream's ``quarantine/`` holds the same (url, reason) rows as a batch
+    run over the same files, and the per-batch ``quarantined_count``
+    values sum to the batch run's count."""
+    out = str(tmp_path / "stream_out")
+    streaming.run_streaming_pipeline(spark, gated_input, out, RUN_DATE,
+                                     partitions=2, max_files_per_trigger=1)
+    batch_out = str(tmp_path / "batch_out")
+    batch = run_pipeline(spark, gated_input, batch_out, RUN_DATE,
+                         partitions=2)
 
+    def quarantine(path):
+        return sorted((r["url"] or "", r["reason"]) for r in
+                      spark.read.parquet(f"{path}/quarantine").collect())
 
-def test_dedup_stream_bounded_state(spark, stream_input, tmp_path):
-    """Streaming per-url dedup: duplicate urls across micro-batches are
-    suppressed.  Uses dropDuplicatesWithinWatermark — plain
-    dropDuplicates(['url']) would never evict state (the event-time
-    column is not in the key), growing unboundedly on a continuous
-    crawl."""
-    import shutil
-
-    dup_dir = tmp_path / "dup_in"
-    dup_dir.mkdir()
-    # the same two files twice -> every url appears in >= 2 batches
-    shutil.copy(f"{stream_input}/part0.parquet", dup_dir / "a.parquet")
-    shutil.copy(f"{stream_input}/part1.parquet", dup_dir / "b.parquet")
-    shutil.copy(f"{stream_input}/part0.parquet", dup_dir / "c.parquet")
-    shutil.copy(f"{stream_input}/part1.parquet", dup_dir / "d.parquet")
-    stream = streaming.read_pages_stream(spark, str(dup_dir),
-                                         max_files_per_trigger=1)
-    deduped = streaming.dedup_stream(stream.withColumn(
-        "warc_ts", stream["warc_ts"].cast("timestamp")))
-    q = (deduped.select("url").writeStream.outputMode("append")
-         .format("memory").queryName("dd")
-         .option("checkpointLocation", str(tmp_path / "ck_dd"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    urls = [r["url"] for r in spark.sql("select url from dd").collect()]
-    assert len(urls) == N_PAGES            # each url exactly once
-    assert len(set(urls)) == N_PAGES
+    expected = [("", "missing_url"), ("gate://empty", "empty_payload"),
+                ("gate://oversize", "oversize")]
+    assert quarantine(batch_out) == expected
+    assert quarantine(out) == expected
+    rows = spark.read.parquet(f"{out}/lineage_summary").collect()
+    assert sorted(r["batch_id"] for r in rows) == [0, 1]
+    assert sorted(r["quarantined_count"] for r in rows) == [1, 2]
+    assert sum(r["quarantined_count"] for r in rows) == \
+        batch["quarantined_count"] == 3
+    assert sum(r["input_count"] for r in rows) == batch["input_count"] == 40

@@ -16,6 +16,11 @@ row counts come from the pipeline's own placement,
 digest is an XOR aggregate, so placement cannot change it: compare it
 across code versions on the same ``--pages``/``--hot-pct``.
 
+The master is ``local[N]`` with ``N`` = ``$SPARK_GRAFT_CPUS`` (default: the
+host's CPU count).  More task slots than cores would co-run every
+extraction task and time-slice them, so a task's time would track the
+stage wall instead of its rows and the ratio would understate skew.
+
 Usage::
 
     python tools/bench_skew.py [--pages 24000] [--partitions 32] \
@@ -139,7 +144,8 @@ def main() -> None:
     os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
         [f"--conf {k}={v}" for k, v in confs.items()]
         + [os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")])
-    spark = job.build_session("bench_skew", master="local[32]",
+    master = f"local[{os.environ.get('SPARK_GRAFT_CPUS') or os.cpu_count()}]"
+    spark = job.build_session("bench_skew", master=master,
                               shuffle_partitions=args.partitions)
     spark.sparkContext.setLogLevel("ERROR")
     try:
@@ -163,7 +169,7 @@ def main() -> None:
             "pages": args.pages,
             "hot_url_pct": args.hot_pct,
             "partitions": args.partitions,
-            "master": "local[32]",
+            "master": master,
             "run": result,
         }
         if args.out:
