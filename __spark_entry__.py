@@ -1406,14 +1406,15 @@ def q_pipeline_curate(spark, sf_dir):
     import tempfile
 
     from ocr_spark import curate as curate_mod, job, pagegen
+    from ocr_spark.operators.urls import canonical_url
 
     wd = tempfile.mkdtemp(prefix="pipecur_")
     try:
-        pages = pagegen.generate_df(spark, 480, partitions=8)
+        pages = (pagegen.generate_df(spark, 480, partitions=8)
+                 .withColumn("url", canonical_url(F.col("url"))))
         for tag, parts in (("a", 8), ("b", 3)):
             job.run_pipeline(spark, "", f"{wd}/{tag}", RUN_DATE,
-                             partitions=parts, input_df=pages,
-                             canonicalize_urls=True)
+                             partitions=parts, input_df=pages)
 
         def extracted(tag):
             return _canon_json(spark.read.parquet(f"{wd}/{tag}/data"), "url")

@@ -69,6 +69,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark import lineage as lin
+from ocr_spark.localrel import local_df
 from ocr_spark.operators import dedup, textstats, urls
 
 DEFAULT_LANGS = ("en", "es", "de", "fr")
@@ -351,7 +352,7 @@ def run_curation(spark: SparkSession, input_path: str, output_path: str,
           lin.xor_digest("doc_id", "text").alias("digest")]),
     ], "overwrite")
     summary["wall_ms"] = int((time.monotonic() - t0) * 1000)
-    lin.one_row(spark, summary).write.mode("overwrite") \
+    local_df(spark, [summary]).write.mode("overwrite") \
         .json(f"{output_path}/summary")
     return summary
 

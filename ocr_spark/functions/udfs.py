@@ -132,6 +132,7 @@ FUSED_SCHEMA = T.StructType([
     T.StructField("confianza_global", T.IntegerType()),
     T.StructField("response_json", T.StringType()),
     T.StructField("spans_json", T.StringType()),
+    T.StructField("error", T.StringType()),
 ])
 
 _FUSED_COLS = [f.name for f in FUSED_SCHEMA.fields]
@@ -187,6 +188,12 @@ def extract_batch(pdf: pd.DataFrame, run_date: date, mode: str = "standard",
 
     Rows with no html use the ``text`` column: confidence 100 at tier 1,
     95 (0 if empty) at tier 2.
+
+    A row whose route/parse/validate raises does not fail the batch: it
+    is emitted at the tier that raised, with its routed doc_type,
+    ``valido`` false, ``confianza_global`` 0, a minimal response and
+    ``error = "extract_error:<ExceptionClass>"`` (the class only: no
+    message, no PII).  Clean rows carry ``error`` NULL.
     """
     tier2_only = policy == "tier2"
     reasons = pdf["tier2_reason"] if tier2_only else [None] * len(pdf)
@@ -203,32 +210,45 @@ def extract_batch(pdf: pd.DataFrame, run_date: date, mode: str = "standard",
                 xt, conf = (text or ""), 100.0
             else:
                 xt, conf = html_extract.tier1_from_blocks(blocks, mode)
-            dt = route_doc_type(bound_parse_text(xt))
-            resp, needs, reason = parse_dispatch(
-                dt, xt, conf, run_date, TIER1_ENGINE, route=True)
+            dt, resp, needs, reason, error = _route_parse(
+                xt, conf, run_date, TIER1_ENGINE, True)
             if policy == "tier1" or not needs:
                 rows.append(_row(url, ts, lang, dt, 1, needs, reason, xt,
-                                 TIER1_ENGINE, conf, resp, None))
+                                 TIER1_ENGINE, conf, resp, None, error))
                 continue
         if blocks is None:
             xt = text or ""
             conf, spans = (95.0 if xt else 0.0), html_extract.detect_spans(xt)
         else:
             xt, conf, spans = html_extract.tier2_from_blocks(blocks, mode, True)
-        dt = route_doc_type(bound_parse_text(xt))
-        resp, _, _ = parse_dispatch(
-            dt, xt, conf, run_date, TIER2_ENGINE, route=False)
+        dt, resp, _, _, error = _route_parse(
+            xt, conf, run_date, TIER2_ENGINE, False)
         rows.append(_row(url, ts, lang, dt, 2, False, reason, xt,
-                         TIER2_ENGINE, conf, resp, spans))
+                         TIER2_ENGINE, conf, resp, spans, error))
     return pd.DataFrame(rows, columns=_FUSED_COLS)
 
 
+def _route_parse(xt: str, conf: float, run_date: date, engine: str,
+                 route: bool) -> tuple:
+    """(doc_type, response, needs_tier2, reason, error) for one row's
+    text; an exception becomes the failure response and its error tag
+    (needs_tier2 false, so a failed row never reaches tier 2)."""
+    dt = None
+    try:
+        dt = route_doc_type(bound_parse_text(xt))
+        return (dt, *parse_dispatch(dt, xt, conf, run_date, engine, route),
+                None)
+    except Exception as exc:
+        return (dt, {"valido": False, "confianza_global": 0}, False, None,
+                f"extract_error:{type(exc).__name__}")
+
+
 def _row(url, ts, lang, doc_type, tier, needs, reason, xt, engine, conf,
-         resp, spans) -> tuple:
+         resp, spans, error) -> tuple:
     """One :data:`FUSED_SCHEMA` row."""
     return (url, ts, lang, doc_type, tier, needs, reason, xt, engine, conf,
             resp["valido"], resp["confianza_global"],
-            _dumps(resp), _dumps(spans) if spans else None)
+            _dumps(resp), _dumps(spans) if spans else None, error)
 
 
 def extract_udf(run_date: date, mode: str = "standard",

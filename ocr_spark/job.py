@@ -13,6 +13,10 @@
         written concurrently and observed (DataFrame.observe) by
         lineage.write_observed → one lineage_summary row
 
+Everything after the read is :func:`run_pages`, the one run body: the
+batch job calls it once, the stream (:mod:`ocr_spark.streaming`) once per
+micro-batch, so batch and stream cannot drift apart.
+
 Scale notes (designed for 10^12 docs / 1000 executors, tested on local[*]):
 * the only shuffle is the single explicit ``repartition`` — everything after
   is narrow (one fused pUDF, filters), so scaling is governed by the parse
@@ -30,10 +34,14 @@ Scale notes (designed for 10^12 docs / 1000 executors, tested on local[*]):
 CLI::
 
     python -m ocr_spark.job --input pages.parquet --output /out \
-        --run-date 2026-08-16 --partitions 256 [--resume]
+        --run-date 2026-08-16 [--partitions 256] \
+        [--mode standard|aggressive|layout] [--resume] [--master local[4]]
 
 Every run keeps one contract: admission gates, tier 1 on every admitted
-row, tier 2 on the rows the router flags.  No flag turns a tier off.
+row, tier 2 on the rows the router flags.  No flag turns a tier off or
+reshapes the input: a caller that wants canonical urls or honors crawl
+directives (:mod:`ocr_spark.operators.urls`) shapes the pages frame and
+passes it to :func:`run_pipeline` as ``input_df``.
 """
 
 from __future__ import annotations
@@ -52,10 +60,11 @@ from ocr_spark.schema import PAGES_SCHEMA
 
 MAX_HTML_BYTES = 5 * 1024 * 1024  # reference's 5 MB admission cap (S4)
 
-# unified output row (same schema for every doc type → single table)
+# unified output row (same schema for every doc type → single table);
+# ``error`` is NULL unless the row's route/parse/validate raised
 _UNIFIED_COLS = ("url", "warc_ts", "lang", "doc_type", "tier", "tier2_reason",
                  "extracted_text", "ocr_engine", "ocr_confidence",
-                 "valido", "confianza_global", "spans")
+                 "valido", "confianza_global", "spans", "error")
 
 _SPANS_TYPE = "array<struct<field:string,start:int,end:int>>"
 
@@ -134,37 +143,21 @@ def preflight(pages: DataFrame) -> None:
             f"{PAGES_SCHEMA.simpleString()}")
 
 
-def admission_split(pages: DataFrame,
-                    respect_noindex: bool = False) -> tuple[DataFrame,
-                                                            DataFrame]:
+def admission_split(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(admitted, quarantined) — S2–S4 gates as native filters.
 
-    Oversized html or rows with neither html nor text are quarantined with a
-    reason instead of failing the job (the batch analog of HTTP 400).
-
-    ``respect_noindex`` (opt-in: it changes output row sets and digests)
-    additionally quarantines pages whose html carries a
-    ``<meta name="robots">`` listing ``noindex`` — the publisher opt-out
-    a compliant training-corpus ingest honors.  The check is one JVM
-    regexp over the already-scanned html column, BEFORE the Python
-    extraction stage spends anything on the page.
+    A row with no url (``missing_url``), with neither html nor text
+    (``empty_payload``) or with html over the 5 MB cap (``oversize``) is
+    quarantined with that reason instead of failing the job (the batch
+    analog of HTTP 400).  Shaping the input — canonical urls, crawl
+    directives — is the caller's: it passes the shaped frame as
+    ``input_df``.
     """
     reason = (
         F.when(F.col("url").isNull(), F.lit("missing_url"))
         .when(F.col("html").isNull() & F.col("text").isNull(), F.lit("empty_payload"))
         .when(F.length("html") > MAX_HTML_BYTES, F.lit("oversize"))
     )
-    if respect_noindex:
-        from ocr_spark.operators.urls import (_ROBOTS_CONTENT_FIRST,
-                                              _ROBOTS_NAME_FIRST)
-        h = F.col("html").cast("string")
-        robots = F.lower(F.coalesce(
-            F.nullif(F.regexp_extract(h, _ROBOTS_NAME_FIRST, 1), F.lit("")),
-            F.nullif(F.regexp_extract(h, _ROBOTS_CONTENT_FIRST, 1),
-                     F.lit("")),
-            F.lit("")))
-        reason = reason.when(
-            robots.rlike(r"(^|[,\s])noindex([,\s]|$)"), F.lit("noindex"))
     tagged = pages.withColumn("_q_reason", reason)
     admitted = tagged.filter(F.col("_q_reason").isNull()).drop("_q_reason")
     quarantined = (tagged.filter(F.col("_q_reason").isNotNull())
@@ -189,10 +182,21 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
                  run_date: date, partitions: int = 64,
                  mode: str = "standard", resume: bool = False,
                  run_id: Optional[str] = None,
-                 input_df: Optional[DataFrame] = None,
-                 canonicalize_urls: bool = False,
-                 respect_noindex: bool = False) -> dict:
-    """Execute the full pipeline; returns run metrics (counts, digest, wall).
+                 input_df: Optional[DataFrame] = None) -> dict:
+    """Execute the full pipeline over *input_df*, or the pages at
+    *input_path*; returns the run summary (counts, digest, wall) that
+    :func:`run_pages` wrote."""
+    pages = input_df if input_df is not None else read_pages(spark, input_path)
+    preflight(pages)
+    return run_pages(spark, pages, output_path, run_date, partitions, mode,
+                     resume, run_id or uuid.uuid4().hex[:12])
+
+
+def run_pages(spark: SparkSession, pages: DataFrame, output_path: str,
+              run_date: date, partitions: int, mode: str, resume: bool,
+              run_id: str, suffix: str = "") -> dict:
+    """The run body shared by the batch job and every streaming
+    micro-batch: gates → resume → placement → kernel → sinks → summary.
 
     Plan shape: each row crosses the JVM↔Python boundary exactly ONCE —
     one mapInPandas running the ``fused`` policy of the extraction row
@@ -200,70 +204,36 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
     route → parse → validate and, for routed-to-fallback rows, the
     permissive tier-2 extraction inline over the same DOM segmentation.
     The nested per-type response travels as a JSON string decoded
-    JVM-side with ``from_json`` (whole-stage codegen).  Fusing saves a
-    second html parse for the fallback slice and a stage + union per run
-    over the two-stage composition.
+    JVM-side with ``from_json`` (whole-stage codegen).
 
-    The ``data/`` write is the extraction's only consumer: the summary
-    counts and digest are observed on it (and ``quarantined_count`` on
-    the ``quarantine/`` write), so no job re-reads or caches the output.
-    ``input_count`` counts the rows written to ``data/``.
+    Every sink lands at ``{output_path}/<sink>{suffix}`` (the streaming
+    micro-batches pass ``/batch_id=<n>``), appended under *resume* and
+    overwritten otherwise.  ``data/`` is hive-partitioned by doc_type with
+    the canonical response JSON alongside the unified columns, so
+    per-type consumers get partition pruning and the typed struct on
+    demand via :func:`read_datos`.  The ``data/`` write is the
+    extraction's only consumer: the summary counts and digest are
+    observed on it (and ``quarantined_count`` on the ``quarantine/``
+    write), so no job re-reads or caches the output; ``input_count``
+    counts the rows written to ``data/``.  The summary row is written
+    strictly last (write-audit-publish order) with the sinks' mode: a
+    fresh run replaces it along with the rows it describes, a resumed
+    drop appends its own row.
     """
     t0 = time.monotonic()
-    run_id = run_id or uuid.uuid4().hex[:12]
-
-    pages = input_df if input_df is not None else read_pages(spark, input_path)
-    preflight(pages)
-    if canonicalize_urls:
-        # normalize the identity key BEFORE resume/dedup/lineage: raw crawl
-        # urls for one resource differ in case/ports/fragments/query order
-        # (opt-in — it changes the url column, hence every digest)
-        from ocr_spark.operators.urls import canonical_url
-        pages = pages.withColumn("url", canonical_url(F.col("url")))
-    admitted, quarantined = admission_split(
-        pages, respect_noindex=respect_noindex)
-    # resume appends (overwrite would drop previously committed runs);
+    write_mode = "append" if resume else "overwrite"
+    admitted, quarantined = admission_split(pages)
     # quarantine is re-derived every run, so under resume drop rows already
     # quarantined to keep that sink exactly-once too
     if resume:
         admitted = lin.anti_join_done(admitted, f"{output_path}/data")
         quarantined = lin.anti_join_done(quarantined,
                                          f"{output_path}/quarantine")
-    admitted = spread_partitions(admitted, partitions)
-    data = extract_frame(admitted, run_date, mode)
-    return write_run(spark, data, quarantined, output_path, "",
-                     "append" if resume else "overwrite", run_id, t0)
-
-
-def extract_frame(admitted: DataFrame, run_date: date,
-                  mode: str) -> DataFrame:
-    """The ONE fused pass over *admitted* pages — tier 1 + inline tier 2 on
-    the fallback rows — as the ``data/`` sink's columns: the unified row
-    plus the canonical ``response_json``.  Shared by the batch job and the
-    streaming micro-batches."""
-    fused = udfs.extract_udf(run_date, mode, "fused")
-    return (admitted.mapInPandas(fused, udfs.FUSED_SCHEMA)
+    data = (spread_partitions(admitted, partitions)
+            .mapInPandas(udfs.extract_udf(run_date, mode, "fused"),
+                         udfs.FUSED_SCHEMA)
             .withColumn("spans", F.from_json("spans_json", _SPANS_TYPE))
             .select(*_UNIFIED_COLS, "response_json"))
-
-
-def write_run(spark: SparkSession, data: DataFrame, quarantined: DataFrame,
-              output_path: str, suffix: str, write_mode: str, run_id: str,
-              t0: float) -> dict:
-    """Write one run's sinks and its summary row; return the summary.
-
-    Every sink lands at ``{output_path}/<sink>{suffix}`` with *write_mode*
-    (the streaming micro-batches pass ``/batch_id=<n>``).  ONE partitioned
-    write carries both the unified table and the per-type response
-    payload: ``data/`` is hive-partitioned by doc_type with the canonical
-    response JSON alongside the unified columns, so per-type consumers get
-    partition pruning for free and the typed struct on demand via
-    :func:`read_datos` (``from_json`` on read).  The summary is observed on
-    the two sink writes — no output read-back — and written strictly last
-    (write-audit-publish order), with the sinks' *write_mode*: a fresh run
-    replaces the summary along with the rows it describes, a resumed drop
-    appends its own row.
-    """
     # quarantine derives from the admission split, not the extraction, so
     # its write overlaps the extraction fully
     metrics = lin.write_observed(spark, [
@@ -288,12 +258,6 @@ def main() -> None:
     ap.add_argument("--mode", default="standard",
                     choices=["standard", "aggressive", "layout"])
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--respect-noindex", action="store_true",
-                    help="quarantine pages whose meta robots lists noindex "
-                         "(publisher opt-out; changes digests)")
-    ap.add_argument("--canonicalize-urls", action="store_true",
-                    help="normalize the url column (case/ports/fragments/"
-                         "query order) before resume/dedup")
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
@@ -301,9 +265,7 @@ def main() -> None:
     summary = run_pipeline(
         spark, args.input, args.output, date.fromisoformat(args.run_date),
         partitions=args.partitions, mode=args.mode,
-        resume=args.resume,
-        canonicalize_urls=args.canonicalize_urls,
-        respect_noindex=args.respect_noindex)
+        resume=args.resume)
     print({k: summary[k] for k in ("run_id", "input_count", "extracted_count",
                                    "valid_count", "tier2_count", "digest",
                                    "quarantined_count", "wall_ms")})

@@ -34,6 +34,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from ocr_spark.localrel import local_df
+
 _SUMMARY_SCHEMA = ("run_id string, partition_id int, input_count bigint, "
                    "extracted_count bigint, valid_count bigint, "
                    "tier2_count bigint, digest bigint, "
@@ -111,18 +113,8 @@ def write_summary(spark: SparkSession, metrics: dict, run_id: str,
     return it as a dict."""
     summary = {"run_id": run_id, "partition_id": -1, **metrics,
                "wall_ms": wall_ms}
-    one_row(spark, summary, _SUMMARY_SCHEMA).write.mode(mode).parquet(path)
+    local_df(spark, [summary], _SUMMARY_SCHEMA).write.mode(mode).parquet(path)
     return summary
-
-
-def one_row(spark: SparkSession, row: dict,
-            schema: Optional[str] = None) -> DataFrame:
-    """*row* as a one-row frame that writes in ONE task.  A local list is
-    parallelized over ``defaultParallelism`` tasks; a pandas frame crosses
-    through Arrow into a JVM-local relation instead."""
-    import pandas as pd
-
-    return spark.createDataFrame(pd.DataFrame([row]), schema)
 
 
 def global_summary(unified: DataFrame, run_id: str, wall_ms: int) -> DataFrame:

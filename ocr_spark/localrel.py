@@ -7,7 +7,7 @@ local[32] in this environment (32 worker spin-ups, or one task dragging 32
 parent partitions after a coalesce).  Routing the same rows through a
 pandas payload produces an Arrow-backed local relation: no Python tasks at
 action time, ~25× faster for the tiny frames this repo builds driver-side
-(IVF centroids and probe lists, planted test rows, collected summaries).
+(IVF centroids and probe lists, planted test rows, run summaries).
 
 At cluster scale the same rule holds: driver-local inputs should enter the
 plan as a local relation (broadcastable, no job), not as a parallelized
@@ -20,17 +20,22 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 
-def local_df(spark: SparkSession, rows, schema) -> DataFrame:
+def local_df(spark: SparkSession, rows, schema=None) -> DataFrame:
     """Arrow-path ``createDataFrame`` for small driver-side row lists.
 
-    ``rows`` is a list of tuples; ``schema`` a DDL string ("a int, b
-    array<double>") or a ``StructType``.  Column order must match the
-    tuples, as with the plain-list form.
+    ``rows`` is a list of tuples or of dicts; ``schema`` a DDL string ("a
+    int, b array<double>"), a ``StructType`` or, for dicts only, None: the
+    columns are then the keys in order and their types inferred.  Tuples
+    follow the schema's column order, as with the plain-list form.  The
+    frame runs in ONE task, however many the session's default
+    parallelism.
     """
     if isinstance(schema, str):
         names = [f.split()[0].strip() for f in _split_fields(schema)]
-    else:
+    elif schema is not None:
         names = list(schema.fieldNames())
+    else:
+        names = None
     pdf = pd.DataFrame(rows, columns=names)
     return spark.createDataFrame(pdf, schema=schema)
 

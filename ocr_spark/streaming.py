@@ -10,15 +10,16 @@ Two surfaces:
 * :func:`read_pages_stream` — file-source stream with the canonical pages
   schema; ``maxFilesPerTrigger`` bounds micro-batch size.
 * :func:`run_streaming_pipeline` — the full dual-tier pipeline via
-  ``foreachBatch``: each micro-batch runs the batch job's own body
-  (admission gates + quarantine → :func:`ocr_spark.job.extract_frame`,
-  one fused tier-1 + inline tier-2 pass → :func:`ocr_spark.job.write_run`)
-  into the same output layout as :func:`ocr_spark.job.run_pipeline`, with
-  one summary row per micro-batch observed on its own sink writes
-  (``run_id = <run>-<batch_id>``).  The streaming checkpoint gives
-  resume-from-offset; outputs are idempotent per batch_id because every
-  write targets its own ``batch_id=`` directory (an Iceberg sink would make
-  the append transactional as well).
+  ``foreachBatch``: each micro-batch is ONE call of the batch job's run
+  body, :func:`ocr_spark.job.run_pages` (admission gates + quarantine,
+  one fused tier-1 + inline tier-2 pass, observed sinks, one summary
+  row), into the same output layout as :func:`ocr_spark.job.run_pipeline`
+  (``run_id = <run>-<batch_id>``).  The stream drains what the source
+  holds (``trigger(availableNow=True)``) and returns when it is done; the
+  streaming checkpoint gives resume-from-offset on the next call.
+  Outputs are idempotent per batch_id because every write targets its own
+  ``batch_id=`` directory (an Iceberg sink would make the append
+  transactional as well).
 
 Every row a stream reads passes the batch job's admission gates: a
 null-url, empty or oversize page lands in ``quarantine/`` with its reason
@@ -31,7 +32,6 @@ batch pipeline's digest on the same input — asserted in tests.
 
 from __future__ import annotations
 
-import time
 from datetime import date
 from typing import Optional
 
@@ -55,22 +55,21 @@ def run_streaming_pipeline(spark: SparkSession, input_path: str,
                            partitions: int = 8, mode: str = "standard",
                            run_id: str = "stream",
                            max_files_per_trigger: Optional[int] = None,
-                           available_now: bool = True,
                            allow_reset: bool = False):
-    """Full dual-tier pipeline as a streaming query via ``foreachBatch``.
+    """Full dual-tier pipeline as a streaming query via ``foreachBatch``;
+    drains everything currently in the source, then returns the stopped
+    query.
 
-    Each micro-batch runs the exact batch stages and lands in the batch
-    job's layout (data / quarantine / lineage_summary) with one extra hive
-    partition level, ``batch_id=<n>`` — reading ``{output}/data`` surfaces
-    it as an ordinary column.  ``foreachBatch`` is at-least-once: a batch
-    replayed after a failure between sink writes and checkpoint commit
-    re-executes ``_process``.  Writes are therefore **idempotent per
-    batch_id**: every sink targets its own ``batch_id=`` directory with
-    mode=overwrite, so a replay rewrites exactly that partition instead of
-    appending duplicates.  ``available_now=True`` drains everything
-    currently in the source and stops — the batch-equivalent mode used in
-    tests; leave it False for a continuously running ingest.  Restarting
-    with the same checkpoint resumes after the last committed micro-batch.
+    Each micro-batch runs the batch job's run body and lands in its layout
+    (data / quarantine / lineage_summary) with one extra hive partition
+    level, ``batch_id=<n>`` — reading ``{output}/data`` surfaces it as an
+    ordinary column.  ``foreachBatch`` is at-least-once: a batch replayed
+    after a failure between sink writes and checkpoint commit re-executes
+    ``_process``.  Writes are therefore **idempotent per batch_id**: every
+    sink targets its own ``batch_id=`` directory with mode=overwrite, so a
+    replay rewrites exactly that partition instead of appending
+    duplicates.  Calling again with the same checkpoint resumes after the
+    last committed micro-batch.
 
     Starting with NO checkpoint (first run, or checkpoint lost) means the
     stream will reprocess the whole source with a fresh batch numbering,
@@ -110,24 +109,17 @@ def run_streaming_pipeline(spark: SparkSession, input_path: str,
             shutil.rmtree(f"{output_path}/{sub}")
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # the batch job's own body — one fused pass (tier 1 + inline tier
-        # 2), concurrent observed sink writes, one summary row — so stream
-        # and batch digests stay equal by construction.  overwrite: a
-        # replayed batch rewrites its own batch_id= rows and summary row
-        t0 = time.monotonic()
-        admitted, quarantined = job.admission_split(batch_df)
-        admitted = job.spread_partitions(admitted, partitions)
-        data = job.extract_frame(admitted, run_date, mode)
-        job.write_run(spark, data, quarantined, output_path,
-                      f"/batch_id={batch_id}", "overwrite",
-                      f"{run_id}-{batch_id}", t0)
+        # overwrite (resume=False): a replayed batch rewrites its own
+        # batch_id= rows and summary row
+        job.run_pages(spark, batch_df, output_path, run_date, partitions,
+                      mode, False, f"{run_id}-{batch_id}",
+                      suffix=f"/batch_id={batch_id}")
 
-    stream = read_pages_stream(spark, input_path, max_files_per_trigger)
-    writer = (stream.writeStream
-              .foreachBatch(_process)
-              .option("checkpointLocation", f"{output_path}/_checkpoint"))
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-        return query
-    return writer.start()
+    query = (read_pages_stream(spark, input_path, max_files_per_trigger)
+             .writeStream
+             .foreachBatch(_process)
+             .option("checkpointLocation", f"{output_path}/_checkpoint")
+             .trigger(availableNow=True)
+             .start())
+    query.awaitTermination()
+    return query

@@ -197,3 +197,11 @@ NIF_TEXTS: dict[str, str] = {
                            "Código Electrónico\nA1B2C3D4E5F6A7B8\n"),
     "invalid_cif_control": NIF_BASIC.replace("B76261874", "B76261875"),
 }
+
+# A one-row batch with this text made ``dni.validate`` raise
+# ``ValueError: Invalid isoformat string: '20-2-76-37'`` (one space between
+# ``819971`` and ``FÑN``; a newline or nothing there does not raise).  The
+# parsers keep that behaviour for parity; the kernel isolates the row.
+CRASH_TEXT = ('IDESP 5270507 4Q29/X;PQ"ÁT V3W\n'
+              '-276379819971 FÑN/VM 00/0A G.C\n'
+              '© corporation all rights reser')

@@ -130,3 +130,32 @@ def test_extract_batch_empty_batch():
     out = udfs.extract_batch(_pages().iloc[:0], kg.RUN_DATE)
     assert list(out.columns) == [f.name for f in udfs.FUSED_SCHEMA.fields]
     assert out.empty
+
+
+@pytest.mark.parametrize("policy", ["fused", "tier2"])
+def test_raising_row_is_isolated(policy):
+    """A row whose parse raises is emitted at the tier that raised as a
+    failure row tagged with its exception class; the rest of the batch
+    is exactly what it is without that row."""
+    from ocr_spark.functions import udfs
+    from tests.fixture_texts import CRASH_TEXT
+
+    clean = _pages().iloc[:40]
+    crash = pd.DataFrame([{"url": "edge://crash",
+                           "warc_ts": clean["warc_ts"].iloc[0],
+                           "html": None, "text": CRASH_TEXT, "lang": "es"}])
+    src = pd.concat([clean, crash], ignore_index=True)
+    if policy == "tier2":
+        src, clean = kg.tier2_input(src), kg.tier2_input(clean)
+    out = udfs.extract_batch(src, kg.RUN_DATE, policy=policy)
+    bad = out[out["url"] == "edge://crash"].iloc[0]
+    assert bad["error"] == "extract_error:ValueError"
+    assert bad["tier"] == (1 if policy == "fused" else 2)
+    assert bad["doc_type"] == "dni"
+    assert not bad["valido"] and bad["confianza_global"] == 0
+    assert json.loads(bad["response_json"]) == {"valido": False,
+                                               "confianza_global": 0}
+    rest = out[out["url"] != "edge://crash"]
+    assert rest["error"].isna().all()
+    assert _rows(rest) == _rows(udfs.extract_batch(clean, kg.RUN_DATE,
+                                                   policy=policy))

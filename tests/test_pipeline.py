@@ -198,27 +198,6 @@ def test_quarantine(spark, tmp_path):
     assert [r["url"] for r in admitted.collect()] == ["u-ok"]
 
 
-def test_respect_noindex_gate(spark):
-    """Opt-in publisher opt-out: meta-robots noindex pages quarantine
-    with their own reason; default behavior unchanged."""
-    rows = [
-        ("u-ni", None, b'<html><head><meta name="robots" content='
-                       b'"noindex"></head><body>x</body></html>', None, "es"),
-        ("u-ok", None, b"<html><body><pre>APELLIDOS</pre></body></html>",
-         None, "es"),
-    ]
-    schema = ("url string, warc_ts timestamp, html binary, "
-              "text string, lang string")
-    df = spark.createDataFrame(rows, schema=schema)
-    admitted, quarantined = admission_split(df, respect_noindex=True)
-    assert {r["url"]: r["reason"] for r in quarantined.collect()} \
-        == {"u-ni": "noindex"}
-    assert [r["url"] for r in admitted.collect()] == ["u-ok"]
-    # off by default: both admitted
-    a0, q0 = admission_split(df)
-    assert q0.count() == 0 and a0.count() == 2
-
-
 def test_resume_skips_done(spark, pages_path, tmp_path):
     out = str(tmp_path / "resume")
     run_pipeline(spark, pages_path, out, RUN_DATE, partitions=4)
@@ -307,6 +286,27 @@ def test_fixture_pages_through_pipeline(spark, tmp_path):
         assert row["extracted_text"] == expected[row["url"]], row["url"]
 
 
+def test_raising_row_does_not_fail_the_run(spark, tmp_path):
+    """A page whose parse raises lands in ``data/`` as a failure row with
+    its exception class in ``error``; the run completes and every other
+    row has ``error`` NULL."""
+    from tests.fixture_texts import CRASH_TEXT
+
+    crash = spark.createDataFrame(
+        [("edge://crash", None, None, CRASH_TEXT, "es")],
+        schema="url string, warc_ts timestamp, html binary, text string, lang string")
+    pages = pagegen.generate_df(spark, 40, partitions=2).unionByName(crash)
+    out = str(tmp_path / "crash")
+    s = run_pipeline(spark, None, out, date(2026, 8, 16), partitions=2,
+                     input_df=pages)
+    assert s["input_count"] == 41
+    failed = (spark.read.parquet(f"{out}/data")
+              .filter(F.col("error").isNotNull()).collect())
+    assert [(r["url"], r["error"], r["valido"], r["confianza_global"])
+            for r in failed] == [("edge://crash", "extract_error:ValueError",
+                                  False, 0)]
+
+
 def test_incremental_backfill_by_partition(spark, tmp_path):
     """The 10^12-doc operating mode: a date/hour-partitioned source is
     processed slice by slice into ONE output with resume on — each run
@@ -337,20 +337,22 @@ def test_incremental_backfill_by_partition(spark, tmp_path):
 
 
 def test_canonicalize_urls_unifies_identity(spark, tmp_path):
-    """With canonicalize_urls, messy variants of one resource share the
-    SAME url key in the output (so resume anti-joins and exact dedup see
-    one identity); a resumed re-crawl under a different variant is then
-    skipped as already-done."""
+    """With canonical urls in ``input_df``, messy variants of one resource
+    share the SAME url key in the output (so resume anti-joins and exact
+    dedup see one identity); a resumed re-crawl under a different variant
+    is then skipped as already-done."""
+    from ocr_spark.operators.urls import canonical_url
+
     body = b"<html><body><pre>APELLIDOS\nCOLL</pre></body></html>"
     mk = lambda rows: spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, html binary, text string, lang string")
+        rows, "url string, warc_ts timestamp, html binary, text string, lang string"
+    ).withColumn("url", canonical_url(F.col("url")))
     out = str(tmp_path / "canon")
     run_pipeline(spark, "", out, RUN_DATE, partitions=2,
                  input_df=mk([("HTTP://Example.COM:80/a/?b=2&a=1#x",
                                None, body, None, "es"),
                               ("http://example.com/other", None, body,
-                               None, "es")]),
-                 canonicalize_urls=True)
+                               None, "es")]))
     data = spark.read.parquet(f"{out}/data")
     assert sorted(r["url"] for r in data.collect()) == [
         "http://example.com/a?a=1&b=2", "http://example.com/other"]
@@ -358,7 +360,7 @@ def test_canonicalize_urls_unifies_identity(spark, tmp_path):
     s2 = run_pipeline(spark, "", out, RUN_DATE, partitions=2,
                       input_df=mk([("http://Example.com/a?a=1&b=2#frag2",
                                     None, body, None, "es")]),
-                      canonicalize_urls=True, resume=True, run_id="r2")
+                      resume=True, run_id="r2")
     assert s2["input_count"] == 0
     assert spark.read.parquet(f"{out}/data").count() == 2
 

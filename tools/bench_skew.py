@@ -21,9 +21,16 @@ host's CPU count).  More task slots than cores would co-run every
 extraction task and time-slice them, so a task's time would track the
 stage wall instead of its rows and the ratio would understate skew.
 
+``--partitions`` defaults to ``N``, so the extraction stage runs in one
+wave of tasks.  The result records ``waves = ceil(P / N)``.  The
+straggler ratio is row-skew evidence only at one wave: with more, a
+task's time also depends on the wave and slot it ran in, so the ratio
+mixes wave placement into the row skew.  Compare it with the
+per-partition rows (max / median) either way.
+
 Usage::
 
-    python tools/bench_skew.py [--pages 24000] [--partitions 32] \
+    python tools/bench_skew.py [--pages 24000] [--partitions N] \
         [--hot-pct 30] [--no-curate] [--out result.json]
 """
 
@@ -31,6 +38,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import math
 import os
 import statistics
 import time
@@ -118,7 +126,9 @@ def run_once(spark, pages_path: str, out: str, partitions: int,
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", type=int, default=24000)
-    ap.add_argument("--partitions", type=int, default=32)
+    ap.add_argument("--partitions", type=int, default=None,
+                    help="extraction partitions (default: the master's "
+                         "task slots, one wave)")
     ap.add_argument("--hot-pct", type=int, default=30)
     ap.add_argument("--out", default=None,
                     help="also write the result JSON here (BENCH_skew.json "
@@ -126,6 +136,8 @@ def main() -> None:
     ap.add_argument("--no-curate", action="store_true",
                     help="skip the attached curation chain (round-2 shape)")
     args = ap.parse_args()
+    slots = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    args.partitions = args.partitions or slots
 
     import shutil
     import tempfile
@@ -144,7 +156,7 @@ def main() -> None:
     os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
         [f"--conf {k}={v}" for k, v in confs.items()]
         + [os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")])
-    master = f"local[{os.environ.get('SPARK_GRAFT_CPUS') or os.cpu_count()}]"
+    master = f"local[{slots}]"
     spark = job.build_session("bench_skew", master=master,
                               shuffle_partitions=args.partitions)
     spark.sparkContext.setLogLevel("ERROR")
@@ -170,6 +182,7 @@ def main() -> None:
             "hot_url_pct": args.hot_pct,
             "partitions": args.partitions,
             "master": master,
+            "waves": math.ceil(args.partitions / slots),
             "run": result,
         }
         if args.out:
