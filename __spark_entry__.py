@@ -65,7 +65,7 @@ def entry(spark: SparkSession) -> DataFrame:
     try:
         pages = pagegen.generate_df(spark, 320, partitions=4)
         summary = job.run_pipeline(spark, "", f"{wd}/out", RUN_DATE,
-                                   partitions=8, input_df=pages)
+                                   input_df=pages)
         data = spark.read.parquet(f"{wd}/out/data")
         rollup = (data.groupBy("doc_type")
                   .agg(F.count("*").alias("n_docs"),
@@ -1560,9 +1560,8 @@ def q_stream_vs_batch(spark, sf_dir):
         pagegen.generate_df(spark, 60, partitions=2) \
             .write.mode("overwrite").parquet(f"{wd}/in")
         streaming.run_streaming_pipeline(spark, f"{wd}/in", f"{wd}/s",
-                                         RUN_DATE, partitions=2)
-        job.run_pipeline(spark, f"{wd}/in", f"{wd}/b", RUN_DATE,
-                         partitions=2)
+                                         RUN_DATE)
+        job.run_pipeline(spark, f"{wd}/in", f"{wd}/b", RUN_DATE)
         stream = _canon_json(
             spark.read.parquet(f"{wd}/s/data").drop("batch_id"), "url")
         batch = _canon_json(spark.read.parquet(f"{wd}/b/data"), "url")

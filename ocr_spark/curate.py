@@ -69,6 +69,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark import lineage as lin
+from ocr_spark.job import build_session, size_partitions
 from ocr_spark.localrel import local_df
 from ocr_spark.operators import dedup, textstats, urls
 
@@ -273,7 +274,7 @@ def run_curation(spark: SparkSession, input_path: str, output_path: str,
                  bench_path: Optional[str] = None,
                  langs: tuple[str, ...] = DEFAULT_LANGS,
                  budget_tokens: int = 2000, near_dup: bool = False,
-                 partitions: int = 32,
+                 partitions: Optional[int] = None,
                  blocklist_path: Optional[str] = None,
                  url_col: str = "url",
                  max_per_host: Optional[int] = None,
@@ -287,7 +288,8 @@ def run_curation(spark: SparkSession, input_path: str, output_path: str,
 
     * ``{out}/data``    — kept docs (doc_id, text=scrubbed, n_tokens,
       shard_id), clustered by shard id so a training reader streams
-      whole shards sequentially.
+      whole shards sequentially; *partitions* of them, by default
+      :func:`ocr_spark.job.size_partitions` of the input.
     * ``{out}/report``  — per-doc verdict (doc_id, keep, drop_reason).
     * ``{out}/summary`` — one row: counts per reason, kept count, total
       tokens, shard count, XOR-aggregate digest of
@@ -333,7 +335,7 @@ def run_curation(spark: SparkSession, input_path: str, output_path: str,
     kept = (verdicts.filter("keep")
             .select("doc_id", F.col("scrubbed_text").alias("text"),
                     "n_tokens", "shard_id")
-            .repartition(partitions, "shard_id")
+            .repartition(partitions or size_partitions(docs), "shard_id")
             .sortWithinPartitions("shard_id", "doc_id"))
     # the summary is observed on the two sink writes; the counts never
     # see NULL, but over ZERO kept rows sum() is NULL, and createDataFrame
@@ -358,7 +360,6 @@ def run_curation(spark: SparkSession, input_path: str, output_path: str,
 
 
 def main() -> None:
-    from ocr_spark.job import build_session
     ap = argparse.ArgumentParser(
         description="ocr_spark corpus curation pipeline")
     ap.add_argument("--input", required=True, help="documents parquet")
@@ -390,17 +391,15 @@ def main() -> None:
     ap.add_argument("--substr-dedup-k", type=int, default=None,
                     help="remove duplicated k-token spans from admitted "
                          "docs (ExactSubstr rewrite; keeps corpus-first)")
-    ap.add_argument("--partitions", type=int, default=32)
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    spark = build_session(app="ocr_spark-curate", master=args.master,
-                          shuffle_partitions=args.partitions)
+    spark = build_session(app="ocr_spark-curate", master=args.master)
     summary = run_curation(
         spark, args.input, args.output, bench_path=args.bench,
         langs=tuple(l for l in args.langs.split(",") if l),
         budget_tokens=args.budget_tokens, near_dup=args.near_dup,
-        partitions=args.partitions, blocklist_path=args.blocklist,
+        blocklist_path=args.blocklist,
         url_col=args.url_col, max_per_host=args.max_per_host,
         lm_seed_path=args.lm_seed, max_surprisal_x1000=args.max_surprisal,
         clf_seed_path=args.clf_seed, min_logodds_x1000=args.min_logodds,

@@ -4,6 +4,7 @@
       → admission gates (size cap, decodable) + quarantine      [S2–S4]
       → resume anti-join                                        [§4.3]
       → repartition(P, xxhash64(url, warc_ts, text))            [§4.2-1]
+        (P from :func:`size_partitions`: the input's size and the slots)
       → ONE fused pUDF pass: tier-1 strip → route → parse →
         validate, and — for rows the router sends to fallback —
         the permissive tier-2 extraction INLINE over the same
@@ -34,7 +35,7 @@ Scale notes (designed for 10^12 docs / 1000 executors, tested on local[*]):
 CLI::
 
     python -m ocr_spark.job --input pages.parquet --output /out \
-        --run-date 2026-08-16 [--partitions 256] \
+        --run-date 2026-08-16 \
         [--mode standard|aggressive|layout] [--resume] [--master local[4]]
 
 Every run keeps one contract: admission gates, tier 1 on every admitted
@@ -70,7 +71,7 @@ _SPANS_TYPE = "array<struct<field:string,start:int,end:int>>"
 
 
 def build_session(app: str = "ocr_spark", master: Optional[str] = None,
-                  shuffle_partitions: int = 64) -> SparkSession:
+                  shuffle_partitions: Optional[int] = None) -> SparkSession:
     import os
     builder = (
         SparkSession.builder.appName(app)
@@ -78,7 +79,6 @@ def build_session(app: str = "ocr_spark", master: Optional[str] = None,
         # hold 32 concurrent task slots' shuffle+cache state (no-op if the
         # session already exists or on a real cluster where executors size it)
         .config("spark.driver.memory", os.environ.get("OCR_SPARK_DRIVER_MEM", "24g"))
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -99,6 +99,8 @@ def build_session(app: str = "ocr_spark", master: Optional[str] = None,
         .config("spark.speculation.multiplier", "4")
         .config("spark.speculation.quantile", "0.9")
     )
+    if shuffle_partitions:  # joins and aggregates; placement never reads it
+        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     if master:
         builder = builder.master(master)
     return builder.getOrCreate()
@@ -178,14 +180,29 @@ def spread_partitions(pages: DataFrame, partitions: int) -> DataFrame:
     return pages.repartition(partitions, F.xxhash64("url", "warc_ts", "text"))
 
 
+def size_partitions(df: DataFrame) -> int:
+    """P for placing *df*: one partition per task slot, or one per scan
+    split (``spark.sql.files.maxPartitionBytes``) of the optimizer's size
+    estimate if that is more; reading the estimate runs no job.  A frame
+    without statistics reports ``spark.sql.defaultSizeInBytes`` and gets
+    the slots."""
+    slots = df.sparkSession.sparkContext.defaultParallelism
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if size >= conf.defaultSizeInBytes():
+        return slots
+    return max(slots, -(-size // conf.filesMaxPartitionBytes()))
+
+
 def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
-                 run_date: date, partitions: int = 64,
+                 run_date: date, partitions: Optional[int] = None,
                  mode: str = "standard", resume: bool = False,
                  run_id: Optional[str] = None,
                  input_df: Optional[DataFrame] = None) -> dict:
     """Execute the full pipeline over *input_df*, or the pages at
     *input_path*; returns the run summary (counts, digest, wall) that
-    :func:`run_pages` wrote."""
+    :func:`run_pages` wrote.  *partitions* overrides the derived P
+    (:func:`size_partitions`) for layout witnesses and benchmarks."""
     pages = input_df if input_df is not None else read_pages(spark, input_path)
     preflight(pages)
     return run_pages(spark, pages, output_path, run_date, partitions, mode,
@@ -193,8 +210,8 @@ def run_pipeline(spark: SparkSession, input_path: str, output_path: str,
 
 
 def run_pages(spark: SparkSession, pages: DataFrame, output_path: str,
-              run_date: date, partitions: int, mode: str, resume: bool,
-              run_id: str, suffix: str = "") -> dict:
+              run_date: date, partitions: Optional[int], mode: str,
+              resume: bool, run_id: str, suffix: str = "") -> dict:
     """The run body shared by the batch job and every streaming
     micro-batch: gates → resume → placement → kernel → sinks → summary.
 
@@ -229,7 +246,8 @@ def run_pages(spark: SparkSession, pages: DataFrame, output_path: str,
         admitted = lin.anti_join_done(admitted, f"{output_path}/data")
         quarantined = lin.anti_join_done(quarantined,
                                          f"{output_path}/quarantine")
-    data = (spread_partitions(admitted, partitions)
+    data = (spread_partitions(admitted,
+                              partitions or size_partitions(admitted))
             .mapInPandas(udfs.extract_udf(run_date, mode, "fused"),
                          udfs.FUSED_SCHEMA)
             .withColumn("spans", F.from_json("spans_json", _SPANS_TYPE))
@@ -254,18 +272,16 @@ def main() -> None:
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument("--run-date", required=True, help="YYYY-MM-DD (freezes the clock)")
-    ap.add_argument("--partitions", type=int, default=64)
     ap.add_argument("--mode", default="standard",
                     choices=["standard", "aggressive", "layout"])
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    spark = build_session(master=args.master, shuffle_partitions=args.partitions)
+    spark = build_session(master=args.master)
     summary = run_pipeline(
         spark, args.input, args.output, date.fromisoformat(args.run_date),
-        partitions=args.partitions, mode=args.mode,
-        resume=args.resume)
+        mode=args.mode, resume=args.resume)
     print({k: summary[k] for k in ("run_id", "input_count", "extracted_count",
                                    "valid_count", "tier2_count", "digest",
                                    "quarantined_count", "wall_ms")})

@@ -226,7 +226,7 @@ def write_local(rows: int, out: str, n_hosts: int = N_HOSTS) -> None:
     pq.write_table(table, out)
 
 
-def generate_df(spark, rows: int, n_hosts: int = N_HOSTS, partitions: int = 32):
+def generate_df(spark, rows: int, n_hosts: int = N_HOSTS, partitions: int | None = None):
     """Distributed generator: ``spark.range`` → ``mapInPandas``.
 
     Deterministic per id, so the result is identical at any parallelism —

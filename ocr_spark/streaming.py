@@ -12,11 +12,13 @@ Two surfaces:
 * :func:`run_streaming_pipeline` — the full dual-tier pipeline via
   ``foreachBatch``: each micro-batch is ONE call of the batch job's run
   body, :func:`ocr_spark.job.run_pages` (admission gates + quarantine,
-  one fused tier-1 + inline tier-2 pass, observed sinks, one summary
-  row), into the same output layout as :func:`ocr_spark.job.run_pipeline`
-  (``run_id = <run>-<batch_id>``).  The stream drains what the source
-  holds (``trigger(availableNow=True)``) and returns when it is done; the
-  streaming checkpoint gives resume-from-offset on the next call.
+  placement sized by :func:`ocr_spark.job.size_partitions` from the
+  micro-batch's own size, one fused tier-1 + inline tier-2 pass,
+  observed sinks, one summary row), into the same output layout as
+  :func:`ocr_spark.job.run_pipeline` (``run_id = <run>-<batch_id>``).
+  The stream drains what the source holds (``trigger(availableNow=True)``)
+  and returns when it is done; the streaming checkpoint gives
+  resume-from-offset on the next call.
   Outputs are idempotent per batch_id because every write targets its own
   ``batch_id=`` directory (an Iceberg sink would make the append
   transactional as well).
@@ -52,8 +54,7 @@ def read_pages_stream(spark: SparkSession, path: str,
 
 def run_streaming_pipeline(spark: SparkSession, input_path: str,
                            output_path: str, run_date: date,
-                           partitions: int = 8, mode: str = "standard",
-                           run_id: str = "stream",
+                           mode: str = "standard", run_id: str = "stream",
                            max_files_per_trigger: Optional[int] = None,
                            allow_reset: bool = False):
     """Full dual-tier pipeline as a streaming query via ``foreachBatch``;
@@ -111,7 +112,7 @@ def run_streaming_pipeline(spark: SparkSession, input_path: str,
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         # overwrite (resume=False): a replayed batch rewrites its own
         # batch_id= rows and summary row
-        job.run_pages(spark, batch_df, output_path, run_date, partitions,
+        job.run_pages(spark, batch_df, output_path, run_date, None,
                       mode, False, f"{run_id}-{batch_id}",
                       suffix=f"/batch_id={batch_id}")
 

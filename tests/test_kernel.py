@@ -159,3 +159,67 @@ def test_raising_row_is_isolated(policy):
     assert rest["error"].isna().all()
     assert _rows(rest) == _rows(udfs.extract_batch(clean, kg.RUN_DATE,
                                                    policy=policy))
+
+
+_FUZZ_TOKENS = (b"<![", b"<!--", b"&#x", b"stream", b"/FlateDecode", b"(",
+                b"\\")
+
+
+def _mutate(data: bytes, rng) -> bytes:
+    """One seeded mutation of *data*: truncation, byte flips, a repeated
+    slice, or inserts of a token that opens a construct the scanners
+    special-case (CDATA, comment, char ref, PDF stream, PDF string)."""
+    op = rng.randrange(4)
+    if op == 0:
+        return data[:rng.randrange(len(data) + 1)]
+    if op == 1 and data:
+        out = bytearray(data)
+        for _ in range(rng.randint(1, 16)):
+            out[rng.randrange(len(out))] = rng.randrange(256)
+        return bytes(out)
+    at = rng.randrange(len(data) + 1)
+    if op == 2:
+        end = min(len(data), at + rng.randint(1, 256))
+        piece = data[at:end] * rng.randint(2, 200)
+    else:
+        piece = rng.choice(_FUZZ_TOKENS) * rng.randint(1, 400)
+    return data[:at] + piece + data[at:]
+
+
+def test_mutated_pages_never_escape_the_kernel():
+    """Seeded no-escape fuzz: mutated ``pagegen`` html, ``make_pdf`` blobs
+    of the fixture texts and the parser crasher, as html and as text,
+    through every kernel policy.  No mutant may raise out of
+    ``extract_batch`` or lose its row; how many rows carry an ``error`` is
+    not asserted."""
+    import random
+
+    from ocr_spark import pagegen
+    from ocr_spark.functions import udfs
+    from ocr_spark.sources.pdf import make_pdf
+    from tests.fixture_texts import (CRASH_TEXT, DNI_TEXTS, NIF_TEXTS,
+                                     PERMIS_TEXTS)
+
+    texts = [*DNI_TEXTS.values(), *PERMIS_TEXTS.values(),
+             *NIF_TEXTS.values(), CRASH_TEXT]
+    seeds = ([pagegen.page_for(i)["html"] for i in range(0, 400, 20)]
+             + [make_pdf(t, compress=c) for t in texts if t
+                for c in (True, False)]
+             + [CRASH_TEXT.encode()])
+    rng = random.Random(20261020)
+    ts = pagegen._BASE_TS
+    rows = []
+    for i in range(1500):
+        data = rng.choice(seeds)
+        for _ in range(rng.randint(1, 3)):
+            data = _mutate(data, rng)
+        as_text = i % 5 == 0
+        rows.append({"url": f"fuzz://{i}", "warc_ts": ts,
+                     "html": None if as_text else data,
+                     "text": data.decode("utf-8", "replace") if as_text
+                     else None, "lang": "es"})
+    pdf = pd.DataFrame(rows)
+    for policy in ("tier1", "fused", "tier2"):
+        src = kg.tier2_input(pdf) if policy == "tier2" else pdf
+        out = udfs.extract_batch(src, kg.RUN_DATE, policy=policy)
+        assert list(out["url"]) == list(pdf["url"]), policy

@@ -818,7 +818,7 @@ def test_ivf_persisted_index(spark, tmp_path):
     import numpy as np
 
     from ocr_spark.operators import similarity
-    from ocr_spark import plans
+    from tests import plans
 
     rng = np.random.RandomState(11)
     rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(200)]

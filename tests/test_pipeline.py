@@ -365,18 +365,42 @@ def test_canonicalize_urls_unifies_identity(spark, tmp_path):
     assert spark.read.parquet(f"{out}/data").count() == 2
 
 
-def test_pipeline_job_count_budget(spark, pages_path, tmp_path):
+@pytest.mark.parametrize("partitions", [4, None])
+def test_pipeline_job_count_budget(spark, pages_path, tmp_path, partitions):
     """Fixed-cost regression guard: one pipeline run must stay within its
     Spark job budget: the quarantine write, the data write (one job for
     its repartition shuffle's map stage, one for the write itself — the
     summary counts and digest are observed on it) and the one-row summary
     write; measures 4 on a 240-page input at local[4]. A regression (e.g.
     reintroducing per-type sinks, a cache, or an output read-back) is
-    invisible to value tests but caps small-input scaling efficiency."""
+    invisible to value tests but caps small-input scaling efficiency.
+    With P unset the budget is the same: sizing reads plan statistics
+    and runs no job."""
     n_jobs = count_jobs(spark, lambda: run_pipeline(
         spark, pages_path, str(tmp_path / "budget"), RUN_DATE,
-        partitions=4))
+        partitions=partitions))
     assert 0 < n_jobs <= 4, f"pipeline ran {n_jobs} Spark jobs"
+
+
+def test_size_partitions_from_input_and_slots(spark, pages_path):
+    """P is one partition per task slot for an input under one scan split
+    per slot, grows with the input past that, and falls back to the slots
+    when the frame has no statistics."""
+    from ocr_spark.job import size_partitions
+
+    slots = spark.sparkContext.defaultParallelism
+    pages = spark.read.parquet(pages_path)
+    assert size_partitions(pages) == slots
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        assert size_partitions(pages) > slots
+    finally:
+        spark.conf.set(key, before)
+    rdd = spark.createDataFrame(
+        spark.sparkContext.parallelize([("u", "t")]), "url string, text string")
+    assert size_partitions(rdd) == slots
 
 
 def test_resume_job_count_budget(spark, pages_path, tmp_path):

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
-from ocr_spark import plans
+from tests import plans
 
 SF = "/root/testdata/sf0.01"
 

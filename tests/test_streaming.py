@@ -29,8 +29,7 @@ def test_stream_matches_batch_digest(spark, stream_input, tmp_path):
     """availableNow streaming output digest == batch pipeline digest."""
     out = str(tmp_path / "stream_out")
     streaming.run_streaming_pipeline(
-        spark, stream_input, out, RUN_DATE, partitions=4,
-        max_files_per_trigger=1)
+        spark, stream_input, out, RUN_DATE, max_files_per_trigger=1)
 
     batch_out = str(tmp_path / "batch_out")
     batch = run_pipeline(spark, stream_input, batch_out, RUN_DATE, partitions=4)
@@ -54,11 +53,9 @@ def test_stream_matches_batch_digest(spark, stream_input, tmp_path):
 def test_stream_resume_is_idempotent(spark, stream_input, tmp_path):
     """Restarting with the same checkpoint processes nothing new."""
     out = str(tmp_path / "resume_out")
-    streaming.run_streaming_pipeline(spark, stream_input, out, RUN_DATE,
-                                     partitions=4)
+    streaming.run_streaming_pipeline(spark, stream_input, out, RUN_DATE)
     n1 = spark.read.parquet(f"{out}/data").count()
-    streaming.run_streaming_pipeline(spark, stream_input, out, RUN_DATE,
-                                     partitions=4)
+    streaming.run_streaming_pipeline(spark, stream_input, out, RUN_DATE)
     n2 = spark.read.parquet(f"{out}/data").count()
     assert n1 == N_PAGES and n2 == n1
 
@@ -70,8 +67,7 @@ def test_stream_batch_replay_is_idempotent(spark, stream_input, tmp_path):
     import shutil
 
     out = str(tmp_path / "replay_out")
-    streaming.run_streaming_pipeline(spark, stream_input, out, RUN_DATE,
-                                     partitions=4)
+    streaming.run_streaming_pipeline(spark, stream_input, out, RUN_DATE)
     data1 = spark.read.parquet(f"{out}/data")
     n1 = data1.count()
     d1 = lin.global_summary(data1, "chk", 0).collect()[0]["digest"]
@@ -79,12 +75,11 @@ def test_stream_batch_replay_is_idempotent(spark, stream_input, tmp_path):
     # without the checkpoint the existing output would be wiped — that is
     # never implicit: the un-authorized call must fail loudly...
     with pytest.raises(FileExistsError, match="allow_reset"):
-        streaming.run_streaming_pipeline(spark, stream_input, out, RUN_DATE,
-                                         partitions=4)
+        streaming.run_streaming_pipeline(spark, stream_input, out, RUN_DATE)
     # ...and the refused call must not have touched the committed output
     assert spark.read.parquet(f"{out}/data").count() == n1
     streaming.run_streaming_pipeline(spark, stream_input, out, RUN_DATE,
-                                     partitions=4, allow_reset=True)
+                                     allow_reset=True)
     data2 = spark.read.parquet(f"{out}/data")
     assert data2.count() == n1 == N_PAGES
     assert lin.global_summary(data2, "chk", 0).collect()[0]["digest"] == d1
@@ -124,7 +119,7 @@ def test_stream_quarantines_like_batch(spark, gated_input, tmp_path):
     values sum to the batch run's count."""
     out = str(tmp_path / "stream_out")
     streaming.run_streaming_pipeline(spark, gated_input, out, RUN_DATE,
-                                     partitions=2, max_files_per_trigger=1)
+                                     max_files_per_trigger=1)
     batch_out = str(tmp_path / "batch_out")
     batch = run_pipeline(spark, gated_input, batch_out, RUN_DATE,
                          partitions=2)

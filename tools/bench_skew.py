@@ -21,8 +21,10 @@ host's CPU count).  More task slots than cores would co-run every
 extraction task and time-slice them, so a task's time would track the
 stage wall instead of its rows and the ratio would understate skew.
 
-``--partitions`` defaults to ``N``, so the extraction stage runs in one
-wave of tasks.  The result records ``waves = ceil(P / N)``.  The
+``--partitions`` defaults to the pipeline's own P,
+``job.size_partitions`` of the written pages (``N`` unless the input is
+larger than ``N`` scan splits), so the row counts describe the placement
+the pipeline uses.  The result records ``waves = ceil(P / N)``.  The
 straggler ratio is row-skew evidence only at one wave: with more, a
 task's time also depends on the wave and slot it ran in, so the ratio
 mixes wave placement into the row skew.  Compare it with the
@@ -54,7 +56,7 @@ RUN_DATE = date(2026, 8, 16)
 HOT_URL = "https://hot-host.example/flooded-capture"
 
 
-def skewed_pages(spark, rows: int, hot_pct: int, partitions: int):
+def skewed_pages(spark, rows: int, hot_pct: int):
     """Deterministic corpus where ``hot_pct``% of pages are captures of ONE
     url (distinct warc_ts/content per capture, as a crawl flood would be)."""
     import pandas as pd
@@ -72,8 +74,7 @@ def skewed_pages(spark, rows: int, hot_pct: int, partitions: int):
                 batch.append(row)
             yield pd.DataFrame(batch)
 
-    return (spark.range(0, rows, numPartitions=partitions)
-            .mapInPandas(gen, schema=PAGES_SCHEMA))
+    return spark.range(0, rows).mapInPandas(gen, schema=PAGES_SCHEMA)
 
 
 def run_once(spark, pages_path: str, out: str, partitions: int,
@@ -127,8 +128,8 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", type=int, default=24000)
     ap.add_argument("--partitions", type=int, default=None,
-                    help="extraction partitions (default: the master's "
-                         "task slots, one wave)")
+                    help="extraction partitions (default: the "
+                         "pipeline's own, job.size_partitions)")
     ap.add_argument("--hot-pct", type=int, default=30)
     ap.add_argument("--out", default=None,
                     help="also write the result JSON here (BENCH_skew.json "
@@ -137,7 +138,6 @@ def main() -> None:
                     help="skip the attached curation chain (round-2 shape)")
     args = ap.parse_args()
     slots = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
-    args.partitions = args.partitions or slots
 
     import shutil
     import tempfile
@@ -157,18 +157,19 @@ def main() -> None:
         [f"--conf {k}={v}" for k, v in confs.items()]
         + [os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")])
     master = f"local[{slots}]"
-    spark = job.build_session("bench_skew", master=master,
-                              shuffle_partitions=args.partitions)
+    spark = job.build_session("bench_skew", master=master)
     spark.sparkContext.setLogLevel("ERROR")
     try:
         pages_path = f"{wd}/pages.parquet"
-        skewed_pages(spark, args.pages, args.hot_pct, args.partitions) \
+        skewed_pages(spark, args.pages, args.hot_pct) \
             .write.mode("overwrite").parquet(pages_path)
+        partitions = (args.partitions
+                      or job.size_partitions(job.read_pages(spark, pages_path)))
         # warmup (JIT + Python worker pool) so the measured run does not
         # pay it
-        run_once(spark, pages_path, f"{wd}/warm", args.partitions,
+        run_once(spark, pages_path, f"{wd}/warm", partitions,
                  curate_chain=not args.no_curate)
-        result = run_once(spark, pages_path, f"{wd}/run", args.partitions,
+        result = run_once(spark, pages_path, f"{wd}/run", partitions,
                           curate_chain=not args.no_curate)
         app_id = spark.sparkContext.applicationId
         spark.stop()  # closes the event log under its final name
@@ -180,9 +181,9 @@ def main() -> None:
             "bench": "skew_capture_placement",
             "pages": args.pages,
             "hot_url_pct": args.hot_pct,
-            "partitions": args.partitions,
+            "partitions": partitions,
             "master": master,
-            "waves": math.ceil(args.partitions / slots),
+            "waves": math.ceil(partitions / slots),
             "run": result,
         }
         if args.out:

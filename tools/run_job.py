@@ -16,7 +16,6 @@ def main() -> None:
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument("--run-date", required=True)
-    ap.add_argument("--partitions", type=int, default=64)
     ap.add_argument("--mode", default="standard")
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--warmup", default=None,
@@ -28,20 +27,18 @@ def main() -> None:
 
     from ocr_spark import job
 
-    # build_session layers the job's session-settable configs (shuffle
-    # partitions, AQE, Arrow batch cap, zstd, committer v2, speculation)
-    # on top of whatever spark-submit provided; master and driver memory
-    # are JVM-start settings and come from submit_job.sh's flags.
-    spark = job.build_session(app="ocr_spark-submit",
-                              shuffle_partitions=args.partitions)
+    # build_session layers the job's session-settable configs (AQE, Arrow
+    # batch cap, zstd, committer v2, speculation) on top of whatever
+    # spark-submit provided; master and driver memory are JVM-start
+    # settings and come from submit_job.sh's flags.  The job sizes its own
+    # partitions from the input and the executor slots.
+    spark = job.build_session(app="ocr_spark-submit")
     if args.warmup:
         job.run_pipeline(spark, args.warmup, f"{args.output}_warm",
-                         date.fromisoformat(args.run_date),
-                         partitions=min(args.partitions, 8))
+                         date.fromisoformat(args.run_date))
     summary = job.run_pipeline(
         spark, args.input, args.output, date.fromisoformat(args.run_date),
-        partitions=args.partitions, mode=args.mode,
-        resume=args.resume)
+        mode=args.mode, resume=args.resume)
     print({k: summary[k] for k in ("run_id", "input_count", "extracted_count",
                                    "valid_count", "tier2_count", "digest",
                                    "quarantined_count", "wall_ms")})
