@@ -1688,7 +1688,7 @@ def _compare_cells(spark):
     from ocr_spark import compare, pagegen
     _prune_stale_siblings(_COMPARE_CELLS)
     pages = pagegen.generate_df(spark, 256, partitions=8)
-    cells = compare.extraction_cells(pages, RUN_DATE, sample_rows=256)
+    cells = compare.extraction_cells(pages, RUN_DATE)
     cells.coalesce(1).write.mode("overwrite").parquet(_COMPARE_CELLS)
     return spark.read.parquet(_COMPARE_CELLS)
 
@@ -1708,7 +1708,7 @@ def q_engine_latency(spark, sf_dir):
     column) — rows-only by nature: timings are not value-stable."""
     from ocr_spark import compare, pagegen
     pages = pagegen.generate_df(spark, 256, partitions=8)
-    return compare.engine_latency(pages, RUN_DATE, sample_rows=256)
+    return compare.engine_latency(pages, RUN_DATE)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from ocr_spark.functions import udfs
 
 MODES = ("standard", "aggressive")
+SAMPLE_ROWS = 256
 
 
 def _extract_config(sample: DataFrame, run_date: date, tier: int,
@@ -32,11 +33,10 @@ def _extract_config(sample: DataFrame, run_date: date, tier: int,
                            udfs.FUSED_SCHEMA)
 
 
-def extraction_cells(pages: DataFrame, run_date: date,
-                     modes: tuple[str, ...] = MODES,
-                     sample_rows: int = 256) -> DataFrame:
-    """Per-(url, engine, mode) extraction outcomes over a fixed sample —
-    the pre-aggregation frame of the comparison matrix.
+def extraction_cells(pages: DataFrame, run_date: date) -> DataFrame:
+    """Per-(url, engine, mode) extraction outcomes over a fixed sample of
+    :data:`SAMPLE_ROWS` pages — the pre-aggregation frame of the
+    comparison matrix, over every mode in :data:`MODES`.
 
     Columns: engine, mode, doc_type, url, valido, confianza_global,
     n_chars.  Deterministic for a fixed sample + run_date, so it can be
@@ -50,10 +50,10 @@ def extraction_cells(pages: DataFrame, run_date: date,
     # lands inside the limit to partition layout, breaking the module's
     # rerun-determinism contract
     sample = (pages.orderBy("url", "warc_ts")
-              .limit(sample_rows).localCheckpoint(eager=False))
+              .limit(SAMPLE_ROWS).localCheckpoint(eager=False))
     parts = []
     for tier, engine in ((1, udfs.TIER1_ENGINE), (2, udfs.TIER2_ENGINE)):
-        for mode in modes:
+        for mode in MODES:
             ext = _extract_config(sample, run_date, tier, mode)
             parts.append(ext.select(
                 F.lit(engine).alias("engine"), F.lit(mode).alias("mode"),
@@ -88,9 +88,7 @@ def compare_rollup(cells: DataFrame) -> DataFrame:
         F.expr("(_chars * 10) DIV n_docs").alias("avg_chars_x10"))
 
 
-def engine_compare(pages: DataFrame, run_date: date,
-                   modes: tuple[str, ...] = MODES,
-                   sample_rows: int = 256) -> DataFrame:
+def engine_compare(pages: DataFrame, run_date: date) -> DataFrame:
     """Per-(engine, mode, doc_type) extraction quality over a fixed sample.
 
     Columns: engine, mode, doc_type, n_docs, n_valido, avg_conf_x100
@@ -98,12 +96,10 @@ def engine_compare(pages: DataFrame, run_date: date,
     avg_chars_x10.  Mirrors the reference's comparison matrix
     (``compare.py:37-169``) with validity standing in for OCR confidence.
     """
-    return compare_rollup(extraction_cells(pages, run_date, modes, sample_rows))
+    return compare_rollup(extraction_cells(pages, run_date))
 
 
-def engine_latency(pages: DataFrame, run_date: date,
-                   modes: tuple[str, ...] = MODES,
-                   sample_rows: int = 256) -> DataFrame:
+def engine_latency(pages: DataFrame, run_date: date) -> DataFrame:
     """Measured wall per (engine, mode) config over the fixed sample — the
     reference's per-config ``ms`` column (``compare.py:37-169``).
 
@@ -114,12 +110,12 @@ def engine_latency(pages: DataFrame, run_date: date,
     import time
 
     spark = pages.sparkSession
-    sample = pages.orderBy("url", "warc_ts").limit(sample_rows).persist()
+    sample = pages.orderBy("url", "warc_ts").limit(SAMPLE_ROWS).persist()
     sample.count()  # materialize so each config times extraction only
     rows = []
     try:
         for tier, engine in ((1, udfs.TIER1_ENGINE), (2, udfs.TIER2_ENGINE)):
-            for mode in modes:
+            for mode in MODES:
                 t0 = time.monotonic()
                 n = _extract_config(sample, run_date, tier, mode).count()
                 rows.append((engine, mode, n,

@@ -63,7 +63,7 @@ from __future__ import annotations
 
 import argparse
 import time
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -81,29 +81,28 @@ REASONS = ("url_blocked", "low_quality", "repetitive", "lang_filtered",
 
 
 def curate(df: DataFrame, bench: Optional[DataFrame] = None,
-           id_col: str = "doc_id", text_col: str = "text",
            langs: tuple[str, ...] = DEFAULT_LANGS,
-           budget_tokens: int = 2000, ngram_n: int = 13,
+           budget_tokens: int = 2000,
            near_dup: bool = False, with_text: bool = False,
            blocklist: Optional[DataFrame] = None,
-           url_col: str = "url",
            max_per_host: Optional[int] = None,
            lm_model: Optional[dict] = None,
            max_surprisal_x1000: Optional[int] = None,
            clf_model: Optional[dict] = None,
            min_logodds_x1000: Optional[int] = None,
            substr_dedup_k: Optional[int] = None) -> DataFrame:
-    """Per-document curation verdicts: (id, keep, drop_reason, n_tokens,
-    shard_id, scrubbed_md5[, scrubbed_text]).
+    """Per-document curation verdicts over a ``(doc_id, text[, url])``
+    frame: (doc_id, keep, drop_reason, n_tokens, shard_id,
+    scrubbed_md5[, scrubbed_text]).
 
     ``n_tokens``/``shard_id``/``scrubbed_md5`` are null for dropped
     docs; token counts and shards are computed over the SCRUBBED text
     (what a training run would actually read).  ``bench`` (optional) is
-    the eval table for decontamination; ``near_dup`` enables the
-    MinHash near-dedup stage over survivors.  ``blocklist`` (optional,
-    a ``domain`` DataFrame) turns on the URL domain gate and
-    ``max_per_host`` the per-host cap — both require ``url_col`` to
-    exist in *df*; the cap ranks survivors by id within
+    the eval table for decontamination (13-gram overlap); ``near_dup``
+    enables the MinHash near-dedup stage over survivors.  ``blocklist``
+    (optional, a ``domain`` DataFrame) turns on the URL domain gate and
+    ``max_per_host`` the per-host cap — both require a ``url`` column in
+    *df*; the cap ranks survivors by id within
     :func:`ocr_spark.operators.urls.bare_host` of the url.
     ``lm_model`` (a trained :func:`textstats.surprisal_model`) +
     ``max_surprisal_x1000`` turn on the CCNet-style fluency gate:
@@ -136,38 +135,33 @@ def curate(df: DataFrame, bench: Optional[DataFrame] = None,
         raise ValueError(
             "clf_model and min_logodds_x1000 must be given together")
     if blocklist is not None or max_per_host is not None:
-        if url_col not in df.columns:
+        if "url" not in df.columns:
             raise ValueError(
-                f"url gates need column {url_col!r}; have {df.columns}")
+                f"url gates need column 'url'; have {df.columns}")
     if blocklist is not None:
-        df = (urls.blocklist_annotate(df, blocklist, url_col=url_col,
-                                      id_col=id_col)
-              .drop("blocked_domain"))
+        df = urls.blocklist_annotate(df, blocklist).drop("blocked_domain")
     else:
         df = df.withColumn("url_blocked", F.lit(False))
-    feats = textstats.quality_features(df, text_col)
-    feats = textstats.repetition_features(feats, text_col)
+    feats = textstats.quality_features(df)
+    feats = textstats.repetition_features(feats)
     if bench is not None:
-        feats = textstats.decontaminate(feats, bench, id_col=id_col,
-                                        text_col=text_col, n=ngram_n)
+        feats = textstats.decontaminate(feats, bench)
     else:
         feats = feats.withColumn("contaminated", F.lit(False))
     if lm_model is not None:
-        feats = textstats.surprisal_score(feats, lm_model,
-                                          text_col=text_col)
+        feats = textstats.surprisal_score(feats, lm_model)
     else:
         feats = feats.withColumn("surprisal_x1000",
                                  F.lit(None).cast("bigint"))
     if clf_model is not None:
-        feats = textstats.quality_classifier_score(feats, clf_model,
-                                                   text_col=text_col)
+        feats = textstats.quality_classifier_score(feats, clf_model)
     else:
         feats = feats.withColumn("logodds_x1000",
                                  F.lit(None).cast("bigint"))
-    lang = textstats.language_id(F.col(text_col))
-    fp = textstats.fingerprint(F.col(text_col))
+    lang = textstats.language_id(F.col("text"))
+    fp = textstats.fingerprint(F.col("text"))
     keepers = (df.groupBy(fp.alias("_keep_fp"))
-               .agg(F.min(F.col(id_col)).alias("_keep_id")))
+               .agg(F.min(F.col("doc_id")).alias("_keep_id")))
     joined = (feats.withColumn("_fp", fp)
               .join(keepers,
                     F.col("_fp").eqNullSafe(F.col("_keep_fp")), "inner"))
@@ -183,10 +177,9 @@ def curate(df: DataFrame, bench: Optional[DataFrame] = None,
               .when(F.col("logodds_x1000")
                     < F.lit(min_logodds_x1000 or 0),
                     F.lit("classifier_rejected"))
-              .when(F.col(id_col) != F.col("_keep_id"),
+              .when(F.col("doc_id") != F.col("_keep_id"),
                     F.lit("exact_duplicate")))
-    carry = [id_col, text_col] \
-        + ([url_col] if max_per_host is not None else [])
+    carry = ["doc_id", "text"] + (["url"] if max_per_host is not None else [])
     verdicts = (joined.withColumn("drop_reason", reason)
                 .select(*carry, "drop_reason"))
     # three consumers follow (near-dup survivors, the shard pass's totals
@@ -196,72 +189,40 @@ def curate(df: DataFrame, bench: Optional[DataFrame] = None,
     verdicts = verdicts.localCheckpoint(eager=False)
 
     if near_dup:
-        survivors = (verdicts.filter(F.col("drop_reason").isNull())
-                     .select(id_col, text_col))
-        kept_ids = (dedup.dedup_near_minhash(survivors, id_col=id_col,
-                                             text_col=text_col)
-                    .select(id_col))
-        near_drops = (survivors.select(id_col)
-                      .join(kept_ids, id_col, "left_anti")
-                      .withColumn("_near_drop", F.lit(True))
-                      # skinny id list — checkpoint so downstream
-                      # re-evaluation never re-runs the MinHash stage
-                      .localCheckpoint(eager=False))
-        verdicts = (verdicts.join(near_drops, id_col, "left")
-                    .withColumn(
-                        "drop_reason",
-                        F.coalesce(F.col("drop_reason"),
-                                   F.when(F.col("_near_drop"),
-                                          F.lit("near_duplicate"))))
-                    .drop("_near_drop"))
-
+        verdicts = _drop_unkept_survivors(
+            verdicts, ["doc_id", "text"], dedup.dedup_near_minhash,
+            "near_duplicate")
     if max_per_host is not None:
-        survivors = (verdicts.filter(F.col("drop_reason").isNull())
-                     .select(id_col, url_col))
-        capped = (urls.host_cap(survivors, max_per_host, url_col=url_col,
-                                id_col=id_col)
-                  .select(id_col))
-        cap_drops = (survivors.select(id_col)
-                     .join(capped, id_col, "left_anti")
-                     .withColumn("_cap_drop", F.lit(True))
-                     # skinny id list — keep downstream re-evaluation off
-                     # the window stage, as with the near-dup drop list
-                     .localCheckpoint(eager=False))
-        verdicts = (verdicts.join(cap_drops, id_col, "left")
-                    .withColumn(
-                        "drop_reason",
-                        F.coalesce(F.col("drop_reason"),
-                                   F.when(F.col("_cap_drop"),
-                                          F.lit("host_capped"))))
-                    .drop("_cap_drop", url_col))
+        verdicts = _drop_unkept_survivors(
+            verdicts, ["doc_id", "url"],
+            lambda survivors: urls.host_cap(survivors, max_per_host),
+            "host_capped").drop("url")
 
     out = verdicts.withColumn("keep", F.col("drop_reason").isNull())
     survivors = verdicts.filter(F.col("drop_reason").isNull())
     if substr_dedup_k is None:
-        final_text = textstats.scrub_pii(F.col(text_col))
-        kept = survivors.select(F.col(id_col), final_text.alias("text"))
+        final_text = textstats.scrub_pii(F.col("text"))
+        kept = survivors.select("doc_id", final_text.alias("text"))
     else:
         # rewrite path: admitted text goes through ExactSubstr removal,
         # so the final text is join-carried (it no longer equals any
         # expression over the input column)
-        kept = (dedup.dedup_substrings(survivors.select(id_col, text_col),
-                                       k=substr_dedup_k, id_col=id_col,
-                                       text_col=text_col)
-                .select(F.col(id_col),
+        kept = (dedup.dedup_substrings(survivors.select("doc_id", "text"),
+                                       k=substr_dedup_k)
+                .select("doc_id",
                         textstats.scrub_pii(F.col("text_clean"))
                         .alias("text"))
                 .localCheckpoint(eager=False))   # shards + annotate join
-        out = out.join(kept.select(F.col(id_col),
+        out = out.join(kept.select("doc_id",
                                    F.col("text").alias("_final_text")),
-                       id_col, "left")
+                       "doc_id", "left")
         final_text = F.col("_final_text")
-    shards = textstats.token_shards(kept, budget_tokens, id_col=id_col,
-                                    text_col="text")
+    shards = textstats.token_shards(kept, budget_tokens)
     out = (out.withColumn("scrubbed_md5",
                           F.when(F.col("keep"), F.md5(final_text)))
-           .join(shards.select(id_col, "n_tokens", "shard_id"),
-                 id_col, "left"))
-    cols = [id_col, "keep", "drop_reason", "n_tokens", "shard_id",
+           .join(shards.select("doc_id", "n_tokens", "shard_id"),
+                 "doc_id", "left"))
+    cols = ["doc_id", "keep", "drop_reason", "n_tokens", "shard_id",
             "scrubbed_md5"]
     if with_text:
         out = out.withColumn("scrubbed_text",
@@ -270,19 +231,38 @@ def curate(df: DataFrame, bench: Optional[DataFrame] = None,
     return out.select(*cols)
 
 
+def _drop_unkept_survivors(verdicts: DataFrame, cols: list[str],
+                           keep: Callable[[DataFrame], DataFrame],
+                           reason: str) -> DataFrame:
+    """One set-dependent gate: the survivors of every earlier gate (their
+    *cols*) go to *keep*, and each survivor whose ``doc_id`` it does not
+    return drops with *reason*.  The skinny drop list is checkpointed so
+    downstream re-evaluation never re-runs the gate's own stage (MinHash,
+    host window)."""
+    survivors = (verdicts.filter(F.col("drop_reason").isNull())
+                 .select(*cols))
+    drops = (survivors.select("doc_id")
+             .join(keep(survivors).select("doc_id"), "doc_id", "left_anti")
+             .withColumn("_drop", F.lit(True))
+             .localCheckpoint(eager=False))
+    return (verdicts.join(drops, "doc_id", "left")
+            .withColumn("drop_reason",
+                        F.coalesce(F.col("drop_reason"),
+                                   F.when(F.col("_drop"), F.lit(reason))))
+            .drop("_drop"))
+
+
 def run_curation(spark: SparkSession, input_path: str, output_path: str,
                  bench_path: Optional[str] = None,
                  langs: tuple[str, ...] = DEFAULT_LANGS,
                  budget_tokens: int = 2000, near_dup: bool = False,
                  partitions: Optional[int] = None,
                  blocklist_path: Optional[str] = None,
-                 url_col: str = "url",
                  max_per_host: Optional[int] = None,
                  lm_seed_path: Optional[str] = None,
                  max_surprisal_x1000: Optional[int] = None,
                  clf_seed_path: Optional[str] = None,
                  min_logodds_x1000: Optional[int] = None,
-                 clf_bg_fraction: float = 0.1,
                  substr_dedup_k: Optional[int] = None) -> dict:
     """Execute the curation job: parquet in → three sinks out.
 
@@ -313,16 +293,15 @@ def run_curation(spark: SparkSession, input_path: str, output_path: str,
     lm_model = (textstats.surprisal_model(spark.read.parquet(lm_seed_path))
                 if lm_seed_path else None)
     # GPT-3 recipe: classifier positives = the clean seed corpus,
-    # negatives = a reproducible sample of the raw input itself
+    # negatives = a reproducible 10% sample of the raw input itself
     clf_model = (textstats.quality_classifier_model(
                      spark.read.parquet(clf_seed_path),
-                     textstats.deterministic_sample(
-                         docs, clf_bg_fraction, salt="clfbg"))
+                     textstats.deterministic_sample(docs, 0.1, salt="clfbg"))
                  if clf_seed_path else None)
     verdicts = curate(docs, bench=bench, langs=langs,
                       budget_tokens=budget_tokens, near_dup=near_dup,
                       with_text=True, blocklist=blocklist,
-                      url_col=url_col, max_per_host=max_per_host,
+                      max_per_host=max_per_host,
                       lm_model=lm_model,
                       max_surprisal_x1000=max_surprisal_x1000,
                       clf_model=clf_model,
@@ -373,7 +352,6 @@ def main() -> None:
                     help="enable the MinHash near-dedup stage")
     ap.add_argument("--blocklist", default=None,
                     help="domain-blocklist parquet (column: domain)")
-    ap.add_argument("--url-col", default="url")
     ap.add_argument("--max-per-host", type=int, default=None,
                     help="keep at most N surviving docs per url host")
     ap.add_argument("--lm-seed", default=None,
@@ -387,7 +365,6 @@ def main() -> None:
     ap.add_argument("--min-logodds", type=int, default=None,
                     help="drop docs below this milli-bits/token "
                          "seed-vs-background log-odds score")
-    ap.add_argument("--clf-bg-fraction", type=float, default=0.1)
     ap.add_argument("--substr-dedup-k", type=int, default=None,
                     help="remove duplicated k-token spans from admitted "
                          "docs (ExactSubstr rewrite; keeps corpus-first)")
@@ -399,11 +376,9 @@ def main() -> None:
         spark, args.input, args.output, bench_path=args.bench,
         langs=tuple(l for l in args.langs.split(",") if l),
         budget_tokens=args.budget_tokens, near_dup=args.near_dup,
-        blocklist_path=args.blocklist,
-        url_col=args.url_col, max_per_host=args.max_per_host,
+        blocklist_path=args.blocklist, max_per_host=args.max_per_host,
         lm_seed_path=args.lm_seed, max_surprisal_x1000=args.max_surprisal,
         clf_seed_path=args.clf_seed, min_logodds_x1000=args.min_logodds,
-        clf_bg_fraction=args.clf_bg_fraction,
         substr_dedup_k=args.substr_dedup_k)
     print(summary)
 

@@ -830,23 +830,15 @@ def detect_spans(text: str) -> list[dict]:
     return spans
 
 
-def extract_tier2(data: Optional[bytes], mode: str = "standard",
-                  with_spans: bool = True) -> tuple[str, float, list[dict]]:
-    """Permissive full-tree extraction + field spans.
+def tier2_from_blocks(blocks: list[Block], mode: str = "standard",
+                      with_spans: bool = True) -> tuple[str, float, list[dict]]:
+    """Permissive full-tree extraction + field spans over a pre-segmented
+    block list (see :func:`tier1_from_blocks` for why it takes blocks).
 
     Keeps every block below 0.9 link density (only pure link lists drop), so
     short labeled values that tier 1 discards survive.  Confidence is the
     reference's hardcoded Vision 95.0.
     """
-    if not data:
-        return "", 0.0, []
-    return tier2_from_blocks(_segment(data), mode, with_spans)
-
-
-def tier2_from_blocks(blocks: list[Block], mode: str = "standard",
-                      with_spans: bool = True) -> tuple[str, float, list[dict]]:
-    """Tier-2 keep rule + spans over a pre-segmented block list (see
-    :func:`tier1_from_blocks` for why this is split out)."""
     kept = [b for b in blocks if b.is_pre or b.link_density <= _T2_MAX_LINK_DENSITY]
     text = "\n".join(b.text for b in kept)
     if not text:

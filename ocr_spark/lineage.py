@@ -50,7 +50,7 @@ def xor_digest(*cols: str) -> F.Column:
 
 def summary_aggs() -> list[F.Column]:
     """The run summary's aggregates over output rows — observed on the
-    ``data/`` write and recomputed by :func:`global_summary`."""
+    ``data/`` write."""
     return [
         F.count("*").alias("input_count"),
         F.count(F.when(F.length("extracted_text") > 0, 1)).alias("extracted_count"),
@@ -117,13 +117,11 @@ def write_summary(spark: SparkSession, metrics: dict, run_id: str,
     return summary
 
 
-def global_summary(unified: DataFrame, run_id: str, wall_ms: int) -> DataFrame:
-    """Single order/parallelism-independent summary row over *unified*
-    (partition_id = -1) — the reference the observed summary is checked
-    against."""
-    return unified.agg(*summary_aggs()).select(
-        F.lit(run_id).alias("run_id"), F.lit(-1).alias("partition_id"), "*",
-        F.lit(wall_ms).cast("long").alias("wall_ms"))
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether *path* exists, asked of the Hadoop FileSystem that holds it
+    (local disk, HDFS or an object store alike)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
 
 
 def anti_join_done(pages: DataFrame, output_data_path: str) -> DataFrame:
@@ -138,14 +136,16 @@ def anti_join_done(pages: DataFrame, output_data_path: str) -> DataFrame:
     same reason: an explicit ``url string`` schema would read a url-less
     parquet path as NULL urls and drop nothing.
 
+    Urls match null-safe: a url-less row already in ``quarantine/`` is
+    done like any other, so a resumed rerun does not append it again.
+
     The done-set needs no checkpoint: a parquet DataFrame lists its files
     when it is created, and this run only appends new files, so a
     re-executed scan (task retry, executor loss) reads the same done-set
     and never sees the rows this run appends.
     """
     spark = pages.sparkSession
-    path = spark._jvm.org.apache.hadoop.fs.Path(output_data_path)
-    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
+    if not path_exists(spark, output_data_path):
         return pages
     done = spark.read.parquet(output_data_path).select("url")
-    return pages.join(done, on="url", how="left_anti")
+    return pages.join(done, pages["url"].eqNullSafe(done["url"]), "left_anti")

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def local_df(spark: SparkSession, rows, schema=None) -> DataFrame:
@@ -31,26 +32,7 @@ def local_df(spark: SparkSession, rows, schema=None) -> DataFrame:
     parallelism.
     """
     if isinstance(schema, str):
-        names = [f.split()[0].strip() for f in _split_fields(schema)]
-    elif schema is not None:
-        names = list(schema.fieldNames())
-    else:
-        names = None
+        schema = StructType.fromDDL(schema)
+    names = schema.fieldNames() if schema is not None else None
     pdf = pd.DataFrame(rows, columns=names)
     return spark.createDataFrame(pdf, schema=schema)
-
-
-def _split_fields(schema: str) -> list[str]:
-    """Split a DDL struct body on top-level commas ("a int, b array<int>"
-    → ["a int", "b array<int>"])."""
-    fields, depth, start = [], 0, 0
-    for i, ch in enumerate(schema):
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            fields.append(schema[start:i].strip())
-            start = i + 1
-    fields.append(schema[start:].strip())
-    return fields

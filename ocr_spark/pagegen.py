@@ -65,11 +65,11 @@ def _uniform(doc_id: int, salt: int) -> float:
     return _mix(doc_id, salt) / 2.0 ** 64
 
 
-def host_of(doc_id: int, n_hosts: int = N_HOSTS) -> int:
+def host_of(doc_id: int) -> int:
     """Zipf(s≈1.2) host rank via inverse-CDF: a few hosts dominate."""
     u = max(_uniform(doc_id, 1), 1e-12)
     rank = int(u ** (-1.0 / (ZIPF_S - 1.0)))
-    return min(rank, n_hosts - 1)
+    return min(rank, N_HOSTS - 1)
 
 
 def _dni_number(doc_id: int, valid: bool) -> str:
@@ -179,7 +179,7 @@ _FOOTER = ('<footer><a href="/legal">legal</a> <a href="/privacy">privacy</a>'
 _ADS = '<aside><a href="/ad1">buy now great offer</a><a href="/ad2">subscribe today</a></aside>'
 
 
-def page_for(doc_id: int, n_hosts: int = N_HOSTS) -> dict:
+def page_for(doc_id: int) -> dict:
     """Deterministic page row for *doc_id* (schema: url/warc_ts/html/text/lang)."""
     kind = _mix(doc_id, 0) % 10  # 0-2 dni, 3-4 mrz, 5-6 permis, 7-8 nif, 9 prose
     if kind <= 2:
@@ -193,7 +193,7 @@ def page_for(doc_id: int, n_hosts: int = N_HOSTS) -> dict:
     else:
         body, lang = _prose(doc_id), "ca" if _mix(doc_id, 51) % 3 == 0 else "es"
 
-    host = host_of(doc_id, n_hosts)
+    host = host_of(doc_id)
     url = f"https://host-{host}.example/doc/{doc_id}"
     # every 3rd page gets a link-heavy wrapper → low tier-1 confidence → tier-2
     heavy = _NAV * 3 + _ADS if doc_id % 3 == 0 else _NAV
@@ -216,17 +216,17 @@ def page_for(doc_id: int, n_hosts: int = N_HOSTS) -> dict:
 # writers
 # ---------------------------------------------------------------------------
 
-def write_local(rows: int, out: str, n_hosts: int = N_HOSTS) -> None:
+def write_local(rows: int, out: str) -> None:
     """Single-process parquet writer (tests / small benches)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    batch = [page_for(i, n_hosts) for i in range(rows)]
+    batch = [page_for(i) for i in range(rows)]
     table = pa.Table.from_pylist(batch)
     pq.write_table(table, out)
 
 
-def generate_df(spark, rows: int, n_hosts: int = N_HOSTS, partitions: int | None = None):
+def generate_df(spark, rows: int, partitions: int | None = None):
     """Distributed generator: ``spark.range`` → ``mapInPandas``.
 
     Deterministic per id, so the result is identical at any parallelism —
@@ -238,7 +238,7 @@ def generate_df(spark, rows: int, n_hosts: int = N_HOSTS, partitions: int | None
 
     def gen(iterator):
         for pdf in iterator:
-            yield pd.DataFrame([page_for(int(i), n_hosts) for i in pdf["id"]])
+            yield pd.DataFrame([page_for(int(i)) for i in pdf["id"]])
 
     return (spark.range(0, rows, numPartitions=partitions)
             .mapInPandas(gen, schema=PAGES_SCHEMA))
@@ -248,7 +248,6 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--rows", type=int, default=1000)
     ap.add_argument("--out", required=True)
-    ap.add_argument("--hosts", type=int, default=N_HOSTS)
     ap.add_argument("--spark", action="store_true",
                     help="generate distributed via Spark (directory output)")
     args = ap.parse_args()
@@ -256,9 +255,9 @@ def main() -> None:
         from pyspark.sql import SparkSession
         spark = (SparkSession.builder.appName("pagegen")
                  .config("spark.sql.session.timeZone", "UTC").getOrCreate())
-        generate_df(spark, args.rows, args.hosts).write.mode("overwrite").parquet(args.out)
+        generate_df(spark, args.rows).write.mode("overwrite").parquet(args.out)
     else:
-        write_local(args.rows, args.out, args.hosts)
+        write_local(args.rows, args.out)
     print(f"wrote {args.rows} pages to {args.out}")
 
 

@@ -8,14 +8,14 @@ Kafka or an Iceberg streaming read, both drop-in `readStream` swaps).
 Two surfaces:
 
 * :func:`read_pages_stream` — file-source stream with the canonical pages
-  schema; ``maxFilesPerTrigger`` bounds micro-batch size.
+  schema; Spark's default trigger sizing.
 * :func:`run_streaming_pipeline` — the full dual-tier pipeline via
   ``foreachBatch``: each micro-batch is ONE call of the batch job's run
   body, :func:`ocr_spark.job.run_pages` (admission gates + quarantine,
   placement sized by :func:`ocr_spark.job.size_partitions` from the
   micro-batch's own size, one fused tier-1 + inline tier-2 pass,
   observed sinks, one summary row), into the same output layout as
-  :func:`ocr_spark.job.run_pipeline` (``run_id = <run>-<batch_id>``).
+  :func:`ocr_spark.job.run_pipeline` (``run_id = stream-<batch_id>``).
   The stream drains what the source holds (``trigger(availableNow=True)``)
   and returns when it is done; the streaming checkpoint gives
   resume-from-offset on the next call.
@@ -35,33 +35,27 @@ batch pipeline's digest on the same input — asserted in tests.
 from __future__ import annotations
 
 from datetime import date
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ocr_spark import job
+from ocr_spark.lineage import path_exists
 from ocr_spark.schema import PAGES_SCHEMA
 
 
-def read_pages_stream(spark: SparkSession, path: str,
-                      max_files_per_trigger: Optional[int] = None) -> DataFrame:
+def read_pages_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream of pages (url, warc_ts, html, text, lang)."""
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return spark.readStream.schema(PAGES_SCHEMA).parquet(path)
 
 
 def run_streaming_pipeline(spark: SparkSession, input_path: str,
-                           output_path: str, run_date: date,
-                           mode: str = "standard", run_id: str = "stream",
-                           max_files_per_trigger: Optional[int] = None,
-                           allow_reset: bool = False):
+                           output_path: str, run_date: date):
     """Full dual-tier pipeline as a streaming query via ``foreachBatch``;
     drains everything currently in the source, then returns the stopped
     query.
 
-    Each micro-batch runs the batch job's run body and lands in its layout
+    Each micro-batch runs the batch job's run body (``standard`` mode,
+    ``run_id = stream-<n>``) and lands in its layout
     (data / quarantine / lineage_summary) with one extra hive partition
     level, ``batch_id=<n>`` — reading ``{output}/data`` surfaces it as an
     ordinary column.  ``foreachBatch`` is at-least-once: a batch replayed
@@ -76,47 +70,32 @@ def run_streaming_pipeline(spark: SparkSession, input_path: str,
     stream will reprocess the whole source with a fresh batch numbering,
     and per-batch_id overwrite only protects same-numbering replays: a
     rerun that splits the source into FEWER batches would leave stale
-    higher-batch_id partitions behind (duplicated rows).  Existing output
-    must therefore be cleared first — but deleting is NEVER implicit:
-    if output subdirectories exist without a checkpoint (e.g. the path
-    points at a batch job's output, whose layout is compatible), this
-    raises unless ``allow_reset=True`` explicitly authorizes the wipe.
+    higher-batch_id partitions behind (duplicated rows).  So if output
+    subdirectories exist without a checkpoint (e.g. the path points at a
+    batch job's output, whose layout is compatible), this raises and
+    touches nothing; the caller clears the output or picks an empty path.
     """
-    import os
-    import shutil
-
-    # local-fs paths (this sandbox); a cluster deployment on HDFS/object
-    # storage would do the same through the Hadoop FileSystem API
-    if not os.path.isdir(f"{output_path}/_checkpoint"):
+    if not path_exists(spark, f"{output_path}/_checkpoint"):
         # lineage_summary included: the batch job writes it in the same
-        # layout, and leaving it behind would describe deleted rows (any
-        # audit reconciling summary against data would double-count);
-        # lineage is the per-partition layout older versions wrote
-        stale = [sub for sub in ("data", "quarantine", "lineage",
-                                 "lineage_summary")
-                 if os.path.isdir(f"{output_path}/{sub}")]
-        if stale and not allow_reset:
+        # layout, and a summary left beside a fresh stream's rows would
+        # describe rows the stream never wrote
+        stale = [sub for sub in ("data", "quarantine", "lineage_summary")
+                 if path_exists(spark, f"{output_path}/{sub}")]
+        if stale:
             raise FileExistsError(
                 f"run_streaming_pipeline: {output_path} contains committed "
-                f"output ({', '.join(stale)}) but no _checkpoint — starting "
-                f"a fresh stream here would delete it.  Pass "
-                f"allow_reset=True to wipe and reprocess, or point the "
+                f"output ({', '.join(stale)}) but no _checkpoint — a fresh "
+                f"stream here would duplicate it.  Clear it, or point the "
                 f"stream at an empty output path.")
-        for sub in stale:
-            # no ignore_errors: a PARTIAL wipe that proceeded would leave
-            # stale batch_id partitions from the old numbering beside the
-            # fresh stream's rows — the exact duplicate-row hazard the
-            # FileExistsError guard above exists to prevent
-            shutil.rmtree(f"{output_path}/{sub}")
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         # overwrite (resume=False): a replayed batch rewrites its own
         # batch_id= rows and summary row
         job.run_pages(spark, batch_df, output_path, run_date, None,
-                      mode, False, f"{run_id}-{batch_id}",
+                      "standard", False, f"stream-{batch_id}",
                       suffix=f"/batch_id={batch_id}")
 
-    query = (read_pages_stream(spark, input_path, max_files_per_trigger)
+    query = (read_pages_stream(spark, input_path)
              .writeStream
              .foreachBatch(_process)
              .option("checkpointLocation", f"{output_path}/_checkpoint")

@@ -48,6 +48,13 @@ def job_tasks(spark, fn) -> list[int]:
             for job in _new_jobs(spark, fn)]
 
 
+def global_summary(data) -> dict:
+    """The run summary's aggregates recomputed over a read-back ``data/``
+    frame — the reference the observed summary is checked against."""
+    from ocr_spark.lineage import summary_aggs
+    return data.agg(*summary_aggs()).collect()[0].asDict()
+
+
 @pytest.fixture(scope="session")
 def run_date() -> date:
     return RUN_DATE

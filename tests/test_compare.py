@@ -12,7 +12,7 @@ from tests.conftest import RUN_DATE
 @pytest.fixture(scope="module")
 def comparison(spark):
     pages = pagegen.generate_df(spark, 128, partitions=4)
-    return compare.engine_compare(pages, RUN_DATE, sample_rows=128)
+    return compare.engine_compare(pages, RUN_DATE)
 
 
 def test_grid_covers_all_configs(comparison):
@@ -30,7 +30,7 @@ def test_grid_covers_all_configs(comparison):
 
 def test_deterministic(spark, comparison):
     pages = pagegen.generate_df(spark, 128, partitions=8)  # different layout
-    again = compare.engine_compare(pages, RUN_DATE, sample_rows=128)
+    again = compare.engine_compare(pages, RUN_DATE)
     key = lambda r: (r["engine"], r["mode"], r["doc_type"])  # noqa: E731
     assert sorted(map(tuple, comparison.collect()), key=str) == \
         sorted(map(tuple, again.collect()), key=str)
@@ -52,8 +52,7 @@ def test_engine_latency_axis(spark):
     from ocr_spark import compare, pagegen
 
     pages = pagegen.generate_df(spark, 64, partitions=2)
-    rows = compare.engine_latency(pages, date(2026, 8, 16),
-                                  sample_rows=64).collect()
+    rows = compare.engine_latency(pages, date(2026, 8, 16)).collect()
     assert len(rows) == 4  # 2 engines x 2 modes
     assert all(r["n_docs"] == 64 for r in rows)
     assert all(r["wall_ms"] >= 0 for r in rows)

@@ -7,8 +7,9 @@ from html import escape
 import pytest
 
 from ocr_spark import pagegen
-from ocr_spark.html_extract import (decode_html, detect_spans, extract_tier1,
-                                    extract_tier2, sniff_kind)
+from ocr_spark.html_extract import (_segment, decode_html, detect_spans,
+                                    extract_tier1, sniff_kind,
+                                    tier2_from_blocks)
 from tests.fixture_texts import DNI_TEXTS, NIF_TEXTS, PERMIS_TEXTS
 
 
@@ -27,7 +28,7 @@ def test_pre_roundtrip_byte_identical(name):
     """pipeline(html) must recover the text column byte-exactly (both tiers)."""
     text = ALL_TEXTS[name]
     t1, conf1 = extract_tier1(wrap(text))
-    t2, conf2, _ = extract_tier2(wrap(text))
+    t2, conf2, _ = tier2_from_blocks(_segment(wrap(text)))
     if text:
         assert t1 == text
         assert t2 == text
@@ -49,7 +50,7 @@ def test_boilerplate_is_stripped():
     assert "section 3 link" not in t1          # nav link list dropped
     assert "var x=" not in t1                  # script dropped
     assert "color:red" not in t1               # style dropped
-    t2, _, _ = extract_tier2(page["html"])
+    t2, _, _ = tier2_from_blocks(_segment(page["html"]))
     assert c1 < 100.0
 
 
@@ -337,7 +338,7 @@ def test_hostile_html_floods_are_bounded():
     for h in hostiles:
         t0 = _time.perf_counter()
         out1 = extract_tier1(h)
-        out2 = extract_tier2(h)
+        out2 = tier2_from_blocks(_segment(h))
         # generous smoke cap: the worst shape (locate-start budget) costs
         # ~3.6 s for both tiers on an idle box — the quadratic failure modes
         # this guards against took minutes to hours.  Linear growth itself
@@ -346,13 +347,14 @@ def test_hostile_html_floods_are_bounded():
         assert _time.perf_counter() - t0 < 10.0, h[:24]
         # deterministic under repetition (budget is char-counted, not timed)
         assert extract_tier1(h) == out1
-        assert extract_tier2(h) == out2
+        assert tier2_from_blocks(_segment(h)) == out2
 
 
 def test_malformed_html_degrades_not_crashes():
     text, conf = extract_tier1(b"<div><<<>>> <p unterminated")
     assert isinstance(text, str)
-    t2, _, spans = extract_tier2(b"\x00\xff\xfe garbage bytes <")
+    t2, _, spans = tier2_from_blocks(
+        _segment(b"\x00\xff\xfe garbage bytes <"))
     assert isinstance(t2, str) and isinstance(spans, list)
 
 

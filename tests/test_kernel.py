@@ -223,3 +223,31 @@ def test_mutated_pages_never_escape_the_kernel():
         src = kg.tier2_input(pdf) if policy == "tier2" else pdf
         out = udfs.extract_batch(src, kg.RUN_DATE, policy=policy)
         assert list(out["url"]) == list(pdf["url"]), policy
+
+
+def test_adversarial_page_cost_is_linear_in_bytes():
+    """Cap-sized adversarial pages — repeated unclosed ``<a href=x `` tags,
+    the kernel's worst shape — cost about 1 µs per byte whatever their
+    size: a 1 MB page costs at most 8× a 256 KB one (quadratic growth
+    reads ~16×) and under 5 µs/B.  Both bounds leave room for host drift;
+    no wall time is pinned.  Each page still lands at tier 2 without an
+    error."""
+    import time
+
+    from ocr_spark import pagegen
+    from ocr_spark.functions import udfs
+
+    def cost_us(n_bytes: int) -> float:
+        html = b"<a href=x " * (n_bytes // 10)
+        pdf = pd.DataFrame([{"url": "adv://a", "warc_ts": pagegen._BASE_TS,
+                             "html": html, "text": None, "lang": "es"}])
+        t0 = time.process_time()
+        out = udfs.extract_batch(pdf, kg.RUN_DATE)
+        cost = (time.process_time() - t0) * 1e6
+        assert list(out["tier"]) == [2] and out["error"].isna().all()
+        return cost
+
+    small, large = cost_us(256 * 1024), cost_us(1024 * 1024)
+    assert large <= 8 * small, (small, large)
+    assert large / (1024 * 1024) <= 5.0, (small, large)
+    assert small / (256 * 1024) <= 5.0, (small, large)

@@ -67,7 +67,8 @@ def test_sniff_routes_pdf_through_tiers():
     assert html_extract.sniff_kind(blob) == "pdf"
     t1, conf1 = html_extract.extract_tier1(blob)
     assert t1 == body and conf1 == 100.0
-    t2, conf2, spans = html_extract.extract_tier2(blob)
+    t2, conf2, spans = html_extract.tier2_from_blocks(
+        html_extract._segment(blob))
     assert t2 == body and conf2 == 95.0
 
 

@@ -13,7 +13,7 @@ from ocr_spark import pagegen
 from ocr_spark.functions.native import doc_type_router
 from ocr_spark.job import admission_split, run_pipeline
 from ocr_spark.parsers import dni as dni_parser
-from tests.conftest import RUN_DATE, count_jobs, job_tasks
+from tests.conftest import RUN_DATE, count_jobs, global_summary, job_tasks
 from tests.fixture_texts import DNI_TEXTS
 
 N_PAGES = 240
@@ -87,10 +87,8 @@ _OBSERVED = ("input_count", "extracted_count", "valid_count", "tier2_count",
 
 
 def _reference_summary(spark, out: str) -> dict:
-    """:func:`lineage.global_summary` over the read-back ``data/``."""
-    from ocr_spark import lineage as lin
-    data = spark.read.parquet(f"{out}/data")
-    row = lin.global_summary(data, "ref", 0).collect()[0].asDict()
+    """:func:`global_summary` over the read-back ``data/``."""
+    row = global_summary(spark.read.parquet(f"{out}/data"))
     return {k: row[k] for k in _OBSERVED}
 
 
@@ -224,6 +222,43 @@ def test_resume_completes_partial_run(spark, pages_path, tmp_path):
     data = spark.read.parquet(f"{out}/data")
     assert data.count() == N_PAGES
     assert data.select("url").distinct().count() == N_PAGES
+
+
+def test_resume_quarantines_url_less_row_once(spark, tmp_path):
+    """Resumed reruns re-derive quarantine, and the anti-join matches urls
+    null-safe: a url-less row already quarantined is done like any other
+    url.  Three resumed runs over one frame leave every row once, and only
+    the first counts its quarantined rows.  The anti-join stays a
+    broadcast hash join."""
+    import re
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_spark import lineage as lin
+    from tests.plans import physical_plan
+
+    ts = pagegen._BASE_TS
+    rows = [pagegen.page_for(i) for i in range(4)] + [
+        {"url": None, "warc_ts": ts, "html": b"<p>APELLIDOS</p>",
+         "text": None, "lang": "es"},
+        {"url": "gate://empty", "warc_ts": ts, "html": None, "text": None,
+         "lang": "es"}]
+    path = str(tmp_path / "pages.parquet")
+    pq.write_table(pa.Table.from_pylist(rows), path)
+    out = str(tmp_path / "out")
+    counts = [run_pipeline(spark, path, out, RUN_DATE, resume=True,
+                           run_id=f"r{i}")["quarantined_count"]
+              for i in range(3)]
+    assert counts == [2, 0, 0]
+    assert spark.read.parquet(f"{out}/data").count() == 4
+    reasons = sorted(r["reason"] for r in
+                     spark.read.parquet(f"{out}/quarantine").collect())
+    assert reasons == ["empty_payload", "missing_url"]
+    _, quarantined = admission_split(spark.read.parquet(path))
+    plan = physical_plan(lin.anti_join_done(quarantined,
+                                            f"{out}/quarantine"))
+    assert re.search(r"BroadcastHashJoin .*LeftAnti", plan), plan
 
 
 def test_doc_router(spark):

@@ -3,19 +3,21 @@ admission."""
 
 from __future__ import annotations
 
+import shutil
+from pathlib import Path
+
 import pytest
 
-from ocr_spark import lineage as lin
 from ocr_spark import pagegen, streaming
 from ocr_spark.job import run_pipeline
-from tests.conftest import RUN_DATE
+from tests.conftest import RUN_DATE, global_summary
 
 N_PAGES = 120
 
 
 @pytest.fixture(scope="module")
 def stream_input(tmp_path_factory):
-    """Two page files in one source dir — two+ micro-batches available."""
+    """Two page files in one source dir."""
     d = tmp_path_factory.mktemp("stream_in")
     pagegen.write_local(N_PAGES // 2, str(d / "part0.parquet"))
     import pyarrow as pa
@@ -25,17 +27,27 @@ def stream_input(tmp_path_factory):
     return str(d)
 
 
+def _stream_file_by_file(spark, src: str, tmp_path, out: str) -> None:
+    """Land *src*'s page files one at a time in a fresh source directory,
+    running the stream after each: every run resumes from the checkpoint
+    and commits the new file as the next micro-batch (``batch_id`` 0, 1,
+    ...)."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    for f in sorted(Path(src).glob("*.parquet")):
+        shutil.copy(f, landing / f.name)
+        streaming.run_streaming_pipeline(spark, str(landing), out, RUN_DATE)
+
+
 def test_stream_matches_batch_digest(spark, stream_input, tmp_path):
     """availableNow streaming output digest == batch pipeline digest."""
     out = str(tmp_path / "stream_out")
-    streaming.run_streaming_pipeline(
-        spark, stream_input, out, RUN_DATE, max_files_per_trigger=1)
+    _stream_file_by_file(spark, stream_input, tmp_path, out)
 
     batch_out = str(tmp_path / "batch_out")
     batch = run_pipeline(spark, stream_input, batch_out, RUN_DATE, partitions=4)
 
-    written = spark.read.parquet(f"{out}/data")
-    stream_summary = lin.global_summary(written, "check", 0).collect()[0]
+    stream_summary = global_summary(spark.read.parquet(f"{out}/data"))
     assert stream_summary["input_count"] == N_PAGES
     assert stream_summary["digest"] == batch["digest"]
     assert stream_summary["valid_count"] == batch["valid_count"]
@@ -61,29 +73,43 @@ def test_stream_resume_is_idempotent(spark, stream_input, tmp_path):
 
 
 def test_stream_batch_replay_is_idempotent(spark, stream_input, tmp_path):
-    """foreachBatch is at-least-once: simulate a replay of EVERY batch
-    (checkpoint lost, output kept) — the batch_id-keyed overwrite writes
-    must leave counts and digest unchanged, not append duplicates."""
-    import shutil
-
+    """foreachBatch is at-least-once: a crash after the sink writes but
+    before the commit replays the batch from its offsets.  Dropping the
+    last commit file makes the next run re-execute that batch — its
+    batch_id-keyed overwrite writes must leave counts and digest
+    unchanged, not append duplicates."""
     out = str(tmp_path / "replay_out")
-    streaming.run_streaming_pipeline(spark, stream_input, out, RUN_DATE)
+    _stream_file_by_file(spark, stream_input, tmp_path, out)
     data1 = spark.read.parquet(f"{out}/data")
     n1 = data1.count()
-    d1 = lin.global_summary(data1, "chk", 0).collect()[0]["digest"]
-    shutil.rmtree(f"{out}/_checkpoint")  # lose the commit log → full replay
-    # without the checkpoint the existing output would be wiped — that is
-    # never implicit: the un-authorized call must fail loudly...
-    with pytest.raises(FileExistsError, match="allow_reset"):
-        streaming.run_streaming_pipeline(spark, stream_input, out, RUN_DATE)
-    # ...and the refused call must not have touched the committed output
-    assert spark.read.parquet(f"{out}/data").count() == n1
-    streaming.run_streaming_pipeline(spark, stream_input, out, RUN_DATE,
-                                     allow_reset=True)
+    d1 = global_summary(data1)["digest"]
+
+    def files(batch_id):
+        part = Path(out, "data", f"batch_id={batch_id}")
+        return sorted(p.name for p in part.rglob("*.parquet"))
+
+    before = files(0), files(1)
+    commits = Path(out, "_checkpoint", "commits")
+    for name in ("1", ".1.crc"):
+        (commits / name).unlink(missing_ok=True)
+    streaming.run_streaming_pipeline(
+        spark, str(tmp_path / "landing"), out, RUN_DATE)
+    assert (commits / "1").exists()   # the replayed batch committed
+    assert files(0) == before[0]      # batch 0 untouched...
+    assert files(1) != before[1]      # ...batch 1 rewritten in place
     data2 = spark.read.parquet(f"{out}/data")
     assert data2.count() == n1 == N_PAGES
-    assert lin.global_summary(data2, "chk", 0).collect()[0]["digest"] == d1
+    assert global_summary(data2)["digest"] == d1
     assert data2.select("url").distinct().count() == N_PAGES
+    summaries = spark.read.parquet(f"{out}/lineage_summary").collect()
+    assert sorted(r["run_id"] for r in summaries) == ["stream-0", "stream-1"]
+
+    # with the whole checkpoint lost the stream would renumber its batches
+    # from 0: it refuses to start, and leaves the committed output alone
+    shutil.rmtree(f"{out}/_checkpoint")
+    with pytest.raises(FileExistsError, match="no _checkpoint"):
+        streaming.run_streaming_pipeline(spark, stream_input, out, RUN_DATE)
+    assert spark.read.parquet(f"{out}/data").count() == n1
 
 
 @pytest.fixture(scope="module")
@@ -118,8 +144,7 @@ def test_stream_quarantines_like_batch(spark, gated_input, tmp_path):
     run over the same files, and the per-batch ``quarantined_count``
     values sum to the batch run's count."""
     out = str(tmp_path / "stream_out")
-    streaming.run_streaming_pipeline(spark, gated_input, out, RUN_DATE,
-                                     max_files_per_trigger=1)
+    _stream_file_by_file(spark, gated_input, tmp_path, out)
     batch_out = str(tmp_path / "batch_out")
     batch = run_pipeline(spark, gated_input, batch_out, RUN_DATE,
                          partitions=2)
