@@ -2,11 +2,17 @@
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 ``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` (default 32) and
-prints ONE JSON line::
+writes the full result atomically to ``.bench/result.json``::
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {...per-query MEDIAN sec...}, "sf": 0.1,
      "protocol": "warm+median-of-3", "pages_per_sec": N, ...}
+
+The last stdout line is a short pointer to it, which a tail capture cannot
+clip::
+
+    {"metric": "...", "value": <total sec>, "unit": "sec",
+     "pipeline_digest": ..., "result": "<repo>/.bench/result.json"}
 
 The headline number is the full extraction pipeline (tier-1 HTML boilerplate
 strip → doc-type route → fused parse+validate pUDFs → tier-2 fallback branch →
@@ -49,6 +55,7 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 BENCH_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "20000"))
 REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
 RUN_DATE = date(2026, 8, 16)
+RESULT = Path(__file__).resolve().parent / ".bench" / "result.json"
 
 # operator-suite queries timed at the sf dir (fast, representative subset —
 # every family: text stats, dedup, scalar extraction, relational, similarity)
@@ -85,6 +92,18 @@ def _median_timed(fn) -> tuple[float, list[float]]:
         fn()
         runs.append(round(time.monotonic() - t0, 3))
     return statistics.median(runs), runs
+
+
+def write_result(result: dict, path: Path = RESULT) -> dict:
+    """Write ``result`` to ``path`` atomically (temp file + ``os.replace``)
+    and return the pointer line's object."""
+    path.parent.mkdir(parents=True, exist_ok=True)
+    tmp = path.with_suffix(f".tmp{os.getpid()}")
+    tmp.write_text(json.dumps(result, indent=1))
+    os.replace(tmp, path)
+    return {key: result.get(key)
+            for key in ("metric", "value", "unit", "pipeline_digest")} | {
+        "result": str(path)}
 
 
 def main() -> None:
@@ -152,7 +171,7 @@ def main() -> None:
         spark.stop()
 
     total = round(sum(timings.values()), 3)
-    print(json.dumps({
+    print(json.dumps(write_result({
         "metric": "pages/sec extraction throughput + operator suite wall",
         "value": total,
         "unit": "sec",
@@ -162,7 +181,7 @@ def main() -> None:
         "protocol": f"warm+median-of-{REPEATS}",
         "queries_runs": raw_runs,
         **extras,
-    }))
+    })))
 
 
 if __name__ == "__main__":

@@ -20,4 +20,46 @@ Layout:
   - :mod:`ocr_spark.pagegen`     deterministic synthetic pages generator
 """
 
+import os
+import sys
+
 __version__ = "0.1.0"
+
+
+def _reuse_unchanged_zip_directories() -> None:
+    """Backport CPython 3.13's cheap ``zipimporter.invalidate_caches``.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start of
+    every Python task.  Before 3.13 each ``zipimporter`` then re-parses its
+    archive's whole central directory: a reused worker holds 16 importers
+    on ``pyspark.zip``, the spark-core jar and the py4j zip, ~27k entries
+    and ~100 ms of CPU per task.  The replacement re-reads an archive only
+    when its ``(st_mtime_ns, st_size)`` changed since this process last
+    read it; otherwise the importer takes the shared cached directory.
+    """
+    import zipimport
+
+    original = zipimport.zipimporter.invalidate_caches
+    if sys.version_info >= (3, 13) or hasattr(original, "read_stamps"):
+        return
+    read_stamps: dict[str, tuple[int, int]] = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            read_stamps.pop(self.archive, None)
+            return original(self)
+        stamp = (st.st_mtime_ns, st.st_size)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None and read_stamps.get(self.archive) == stamp:
+            self._files = files
+        else:
+            original(self)
+            read_stamps[self.archive] = stamp
+
+    invalidate_caches.read_stamps = read_stamps
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_reuse_unchanged_zip_directories()
