@@ -745,6 +745,7 @@ def q_url_blocklist(spark, sf_dir):
     must not defeat matching either.  The DuckDB twin is an INDEPENDENT
     formulation (label-boundary LIKE precedence, longest first, dotless
     hosts by construction), not a mirror of the suffix-join."""
+    from ocr_spark.localrel import local_df
     from ocr_spark.operators import urls
     d = F.col("doc_id")
     host = F.concat(
@@ -759,10 +760,10 @@ def q_url_blocklist(spark, sf_dir):
         F.when(d % 4 == 2, F.lit(":8443")).otherwise(F.lit("")),
         F.lit("/page/"), d.cast("string"))
     docs = _docs(spark, sf_dir).select("doc_id", url.alias("url"))
-    bl = spark.createDataFrame(
-        [("blocked-zone.org",), ("host-7.example.com",),
-         ("host-3.example.com",), ("host-5.blocked-zone.org",)],
-        ["domain"])
+    bl = local_df(
+        spark, [("blocked-zone.org",), ("host-7.example.com",),
+                ("host-3.example.com",), ("host-5.blocked-zone.org",)],
+        "domain string")
     return (urls.blocklist_annotate(docs, bl)
             .select("doc_id", urls.bare_host(F.col("url")).alias("host"),
                     "blocked_domain", "url_blocked"))
@@ -818,13 +819,14 @@ def q_surprisal(spark, sf_dir):
     bit-identical across engines; the DuckDB twin is the explode +
     left-join formulation of the same model, vs the closure-shipped
     pandas-UDF scorer here."""
+    from ocr_spark.localrel import local_df
     from ocr_spark.operators import textstats
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     seed = docs.filter(F.col("doc_id") % 17 == 2)
     model = textstats.surprisal_model(seed, top_vocab=1500)
-    planted = spark.createDataFrame(
-        [(9001, _LM_GIBBERISH), (9002, _LM_FLUENT), (9003, "ab")],
-        ["doc_id", "text"])
+    planted = local_df(
+        spark, [(9001, _LM_GIBBERISH), (9002, _LM_FLUENT), (9003, "ab")],
+        "doc_id bigint, text string")
     corpus = docs.unionByName(planted)
     return (textstats.surprisal_score(corpus, model)
             .select("doc_id", "lm_grams", "surprisal_x1000"))
@@ -1347,14 +1349,15 @@ def q_corpus_curate(spark, sf_dir):
     code fires: exact copies (doc_id+30M of every 40th doc, the
     corpus_clean pattern), one junk page, one keyword-stuffed page."""
     from ocr_spark import curate as curate_mod
+    from ocr_spark.localrel import local_df
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     dups = docs.filter(F.col("doc_id") % 40 == 0).select(
         (F.col("doc_id") + 30_000_000).alias("doc_id"), "text")
-    planted = spark.createDataFrame(
-        [(92_000_001, "tiny junk"),
-         (92_000_002, "Buy cheap widgets now. "
-          + "best widgets best widgets best price\n" * 12)],
-        ["doc_id", "text"])
+    planted = local_df(
+        spark, [(92_000_001, "tiny junk"),
+                (92_000_002, "Buy cheap widgets now. "
+                 + "best widgets best widgets best price\n" * 12)],
+        "doc_id bigint, text string")
     corpus = docs.unionByName(dups).unionByName(planted)
     bench = docs.filter(F.col("doc_id") % 97 == 3)
     return curate_mod.curate(corpus, bench=bench, budget_tokens=2000)

@@ -24,9 +24,12 @@ Five families, each a standard pretraining-pipeline building block:
 Scale notes (10^12 docs): every candidate generator here is
 join-on-short-key — the shuffles are on (band, key) pairs whose
 cardinality is O(rows·bands), and hot buckets (boilerplate n-grams) are
-bounded by ``max_bucket`` to keep the self-join from exploding on skew
+bounded by :data:`MAX_BUCKET` to keep the self-join from exploding on skew
 (AQE skew-join handles the rest).  Signatures are fixed-width arrays —
 ~1 KB/row at k=128 — so the signature shuffle is far cheaper than text.
+
+Text operators read ``doc_id``/``text``, embedding operators
+``vec_id``/``embedding``.
 """
 
 from __future__ import annotations
@@ -42,25 +45,35 @@ from pyspark.sql.functions import pandas_udf
 from ocr_spark.operators.textstats import fingerprint, _ws_token_array
 
 SEED = 0x5EED
+# MinHash: signature length, LSH bands, shingle width in words.  One set
+# for every MinHash path, so the signature history fold_history writes and
+# the banding near_dedup_incremental reads always share a key universe.
+K = 128
+BANDS = 32
+SHINGLE_WIDTH = 3
+# n-grams shared by more than this many docs are dropped before the
+# ngram_jaccard_pairs self-join (the skew guard)
+MAX_BUCKET = 1000
+# embedding LSH: bands × hyperplanes per band
+EMBED_BANDS = 8
+PLANES_PER_BAND = 8
 
 
 # ---------------------------------------------------------------------------
 # exact
 # ---------------------------------------------------------------------------
 
-def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def exact_duplicates(df: DataFrame) -> DataFrame:
     """Duplicate groups: (fingerprint, n_dups, keep_id) for groups of ≥2."""
     return (df
-            .select(F.col(id_col).alias("id"), fingerprint(F.col(text_col)).alias("fp"))
+            .select(F.col("doc_id").alias("id"), fingerprint(F.col("text")).alias("fp"))
             .groupBy("fp")
             .agg(F.count("*").alias("n_dups"), F.min("id").alias("keep_id"))
             .filter(F.col("n_dups") >= 2)
             .select(F.col("fp").alias("fingerprint"), "n_dups", "keep_id"))
 
 
-def dedup_exact(df: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def dedup_exact(df: DataFrame) -> DataFrame:
     """Keep the lowest-id row per fingerprint (stable, deterministic).
 
     groupBy + ``min_by(struct)``: ``partial_min_by`` collapses a
@@ -72,8 +85,8 @@ def dedup_exact(df: DataFrame, id_col: str = "doc_id",
     filter-shape inference fires — the aggregate states the top-1-per-
     group intent directly instead of relying on that rule."""
     cols = df.columns
-    return (df.groupBy(fingerprint(F.col(text_col)).alias("_fp"))
-            .agg(F.min_by(F.struct(*cols), F.col(id_col)).alias("_row"))
+    return (df.groupBy(fingerprint(F.col("text")).alias("_fp"))
+            .agg(F.min_by(F.struct(*cols), F.col("doc_id")).alias("_row"))
             .select("_row.*"))
 
 
@@ -166,9 +179,7 @@ def _minhash_from_shingles(sh: np.ndarray, a: np.ndarray, b: np.ndarray,
     return vals.min(axis=1).astype(np.uint64)
 
 
-def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", k: int = 128,
-                       shingle_width: int = 3) -> DataFrame:
+def minhash_signatures(df: DataFrame, k: int = K) -> DataFrame:
     """(id, sig array<bigint>[k]) — numpy-vectorized MinHash per Arrow batch."""
     a, b = _hash_params(k)
 
@@ -177,17 +188,16 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
         out = []
         cache: dict[str, int] = {}  # token-hash memo shared across the batch
         for t in text:
-            sh = _shingles(t or "", shingle_width, cache)
+            sh = _shingles(t or "", SHINGLE_WIDTH, cache)
             out.append(_minhash_from_shingles(sh, a, b, k).astype(
                 np.int64).tolist())
         return pd.Series(out)
 
-    return df.select(F.col(id_col).alias("id"), _sig(F.col(text_col)).alias("sig"))
+    return df.select(F.col("doc_id").alias("id"), _sig(F.col("text")).alias("sig"))
 
 
-def minhash_band_keys(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", k: int = 128,
-                      bands: int = 32, shingle_width: int = 3) -> DataFrame:
+def minhash_band_keys(df: DataFrame, k: int = K,
+                      bands: int = BANDS) -> DataFrame:
     """(id, keys array<bigint>[bands]) — fused signature+banding.
 
     Computes the MinHash signature AND folds each band's slice to its LSH
@@ -208,7 +218,7 @@ def minhash_band_keys(df: DataFrame, id_col: str = "doc_id",
         out = []
         cache: dict[str, int] = {}
         for t in text:
-            sh = _shingles(t or "", shingle_width, cache)
+            sh = _shingles(t or "", SHINGLE_WIDTH, cache)
             if sh.size == 0:
                 # gramless (blank/whitespace-only) doc: the exact kernel
                 # defines J=0 against everything (empty union), so it can
@@ -226,8 +236,8 @@ def minhash_band_keys(df: DataFrame, id_col: str = "doc_id",
                         for v in folded])
         return pd.Series(out)
 
-    return df.select(F.col(id_col).alias("id"),
-                     _keys(F.col(text_col)).alias("keys"))
+    return df.select(F.col("doc_id").alias("id"),
+                     _keys(F.col("text")).alias("keys"))
 
 
 def band_candidates(keyed: DataFrame) -> DataFrame:
@@ -247,12 +257,12 @@ def band_candidates(keyed: DataFrame) -> DataFrame:
             .distinct())
 
 
-def _sig_band_buckets(sigs: DataFrame, bands: int, k: int) -> DataFrame:
-    """(id, band, key) LSH bucket rows derived JVM-side from signatures:
-    band key = xxhash64 of the signature slice, salted by the band index.
-    Shared by :func:`minhash_candidates` and
-    :func:`near_dedup_incremental` so batch and history keys always live
-    in the same universe.  ``bands`` must already be clamped to ≤ k.
+def _sig_band_buckets(sigs: DataFrame) -> DataFrame:
+    """(id, band, key) LSH bucket rows derived JVM-side from
+    :data:`K`-long signatures in :data:`BANDS` bands: band key = xxhash64
+    of the signature slice, salted by the band index.  Shared by
+    :func:`minhash_candidates` and :func:`near_dedup_incremental` so batch
+    and history keys always live in the same universe.
 
     All-zero signatures (``_minhash_from_shingles``'s encoding of a
     gramless document) are excluded: the exact kernel defines their
@@ -263,12 +273,12 @@ def _sig_band_buckets(sigs: DataFrame, bands: int, k: int) -> DataFrame:
     blank docs from flooding one bucket per band with identical keys
     (the quadratic self-join hazard)."""
     sigs = sigs.filter(F.exists("sig", lambda x: x != F.lit(0)))
-    rows_per_band = max(k // bands, 1)
+    rows_per_band = K // BANDS
     band_cols = [
         F.struct(F.lit(i).alias("band"),
                  F.xxhash64(F.slice("sig", i * rows_per_band + 1, rows_per_band),
                             F.lit(i)).alias("key"))
-        for i in range(bands)
+        for i in range(BANDS)
     ]
     return (sigs
             .select("id", F.explode(F.array(*band_cols)).alias("bk"))
@@ -276,31 +286,17 @@ def _sig_band_buckets(sigs: DataFrame, bands: int, k: int) -> DataFrame:
                     F.col("bk.key").alias("key")))
 
 
-def minhash_candidates(sigs: DataFrame, bands: int = 32,
-                       k: int = 128, validate: bool = False) -> DataFrame:
+def minhash_candidates(sigs: DataFrame) -> DataFrame:
     """LSH banding → candidate pairs (id_a < id_b), deduplicated.
 
     Band key = xxhash64 of the signature slice; the self-join shuffles on
-    (band, key) — never a cross join.  ``k`` MUST equal the signature
-    length the signatures were built with (``minhash_signatures``'s k) —
-    a mismatch silently degrades recall by banding the wrong slices.  It is
-    passed explicitly because deriving it from the data costs an extra
-    Spark action; ``validate=True`` spends that action (first row only) to
-    fail loudly instead.  :func:`near_duplicates_minhash` threads it
-    correctly; only direct callers need to care.
+    (band, key) — never a cross join.  The signatures must be
+    :data:`K` long, as :func:`minhash_signatures` builds them by default;
+    every caller in the library passes such signatures, since they all
+    share the module's :data:`K` / :data:`BANDS`, so the signature length
+    and the banding cannot disagree between them.
     """
-    if validate:
-        first = sigs.select(F.size("sig").alias("n")).first()
-        if first is not None and first["n"] != k:
-            raise ValueError(
-                f"minhash_candidates: k={k} but signatures have length "
-                f"{first['n']} — pass the same k used in minhash_signatures")
-    # more bands than hashes is unsatisfiable: with rows_per_band=1 the
-    # F.slice for bands k..bands-1 runs past the signature end and yields
-    # identical empty-array keys — one all-docs bucket and a quadratic
-    # self-join (same clamp as minhash_band_keys)
-    bands = min(bands, k)
-    buckets = _sig_band_buckets(sigs, bands, k)
+    buckets = _sig_band_buckets(sigs)
     left = buckets.alias("l")
     right = buckets.alias("r")
     return (left.join(right, ["band", "key"])
@@ -309,22 +305,20 @@ def minhash_candidates(sigs: DataFrame, bands: int = 32,
             .distinct())
 
 
-def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", n: int = 3,
-                        threshold: float = 0.5,
-                        max_bucket: int = 1000) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame, n: int = 3,
+                        threshold: float = 0.5) -> DataFrame:
     """Exact token-n-gram Jaccard pairs ≥ threshold, via explode + self-join.
 
-    ``max_bucket`` drops degenerate n-grams shared by more than N docs
-    (stopword boilerplate) — the standard skew guard: those n-grams carry
-    no signal and would quadratically blow up the join.
+    N-grams shared by more than :data:`MAX_BUCKET` docs (stopword
+    boilerplate) are dropped — the standard skew guard: those n-grams
+    carry no signal and would quadratically blow up the join.
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     grams = F.array_distinct(F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
         lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))))
     exploded = (df
-                .select(F.col(id_col).alias("id"), grams.alias("grams"))
+                .select(F.col("doc_id").alias("id"), grams.alias("grams"))
                 .withColumn("n_grams", F.size("grams"))
                 .select("id", "n_grams", F.explode("grams").alias("gram")))
     # the exploded gram frame feeds the document-frequency aggregate AND
@@ -338,7 +332,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     # skew guard: drop grams present in too many docs
     gram_df = exploded.join(
         exploded.groupBy("gram").agg(F.count("*").alias("df_count"))
-        .filter(F.col("df_count") <= max_bucket).select("gram"),
+        .filter(F.col("df_count") <= MAX_BUCKET).select("gram"),
         "gram")
     a = gram_df.alias("a")
     b = gram_df.alias("b")
@@ -354,10 +348,8 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
             .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
 
 
-def near_duplicates_minhash(df: DataFrame, id_col: str = "doc_id",
-                            text_col: str = "text", k: int = 128,
-                            bands: int = 32, threshold: float = 0.7,
-                            shingle_width: int = 3) -> DataFrame:
+def near_duplicates_minhash(df: DataFrame, k: int = K, bands: int = BANDS,
+                            threshold: float = 0.7) -> DataFrame:
     """MinHash-LSH candidates verified by exact n-gram Jaccard.
 
     Returns (id_a, id_b, jaccard ≥ threshold).  The verify join re-reads
@@ -366,14 +358,12 @@ def near_duplicates_minhash(df: DataFrame, id_col: str = "doc_id",
     (:func:`minhash_band_keys`): one Python stage emitting ``bands`` longs
     per row, no separate signature materialization.
     """
-    keyed = minhash_band_keys(df, id_col, text_col, k=k, bands=bands,
-                              shingle_width=shingle_width)
+    keyed = minhash_band_keys(df, k=k, bands=bands)
     cands = band_candidates(keyed)
-    return _verify_candidate_pairs(df, cands, id_col, text_col,
-                                   threshold, shingle_width)
+    return _verify_candidate_pairs(df, cands, threshold)
 
 
-def _shingle_jaccard_udf(shingle_width: int):
+def _shingle_jaccard_udf():
     """Arrow-batched exact shingle-Jaccard of two text columns — the ONE
     exact-verify kernel, shared by :func:`_verify_candidate_pairs` and
     :func:`near_dedup_incremental`'s recent-tier cross-batch check so the
@@ -384,8 +374,8 @@ def _shingle_jaccard_udf(shingle_width: int):
         out = []
         cache: dict[str, int] = {}
         for x, y in zip(ta, tb):
-            sa = set(_shingles(x or "", shingle_width, cache).tolist())
-            sb = set(_shingles(y or "", shingle_width, cache).tolist())
+            sa = set(_shingles(x or "", SHINGLE_WIDTH, cache).tolist())
+            sb = set(_shingles(y or "", SHINGLE_WIDTH, cache).tolist())
             union = len(sa | sb)
             out.append(len(sa & sb) / union if union else 0.0)
         return pd.Series(out)
@@ -393,19 +383,18 @@ def _shingle_jaccard_udf(shingle_width: int):
     return _jaccard
 
 
-def _verify_candidate_pairs(df: DataFrame, cands: DataFrame, id_col: str,
-                            text_col: str, threshold: float,
-                            shingle_width: int) -> DataFrame:
+def _verify_candidate_pairs(df: DataFrame, cands: DataFrame,
+                            threshold: float) -> DataFrame:
     """Exact-shingle-Jaccard verification of LSH candidate ``(id_a,
     id_b)`` pairs against the texts in *df* — the shared verify stage of
     :func:`near_duplicates_minhash` and :func:`near_dedup_incremental`.
     Re-reads only candidate texts; returns (id_a, id_b, jaccard ≥
     threshold)."""
-    texts = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+    texts = df.select(F.col("doc_id").alias("id"), "text")
     paired = (cands
               .join(texts.withColumnsRenamed({"id": "id_a", "text": "text_a"}), "id_a")
               .join(texts.withColumnsRenamed({"id": "id_b", "text": "text_b"}), "id_b"))
-    _jaccard = _shingle_jaccard_udf(shingle_width)
+    _jaccard = _shingle_jaccard_udf()
     return (paired
             .withColumn("jaccard", F.round(_jaccard("text_a", "text_b"), 6))
             .filter(F.col("jaccard") >= threshold)
@@ -416,8 +405,7 @@ def _verify_candidate_pairs(df: DataFrame, cands: DataFrame, id_col: str,
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash64(df: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
+def simhash64(df: DataFrame) -> DataFrame:
     """(id, simhash bigint) — 64-bit sign-aggregated token hash."""
 
     _BITS = np.arange(64, dtype=np.uint64)
@@ -444,19 +432,17 @@ def simhash64(df: DataFrame, id_col: str = "doc_id",
             out.append(sim - (1 << 64) if sim >= (1 << 63) else sim)
         return pd.Series(out, dtype="int64")
 
-    return df.select(F.col(id_col).alias("id"), _simhash(F.col(text_col)).alias("simhash"))
+    return df.select(F.col("doc_id").alias("id"), _simhash(F.col("text")).alias("simhash"))
 
 
-def near_duplicates_simhash(df: DataFrame, id_col: str = "doc_id",
-                            text_col: str = "text",
-                            max_hamming: int = 3) -> DataFrame:
+def near_duplicates_simhash(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Hamming-≤k pairs via pigeonhole banding + native bit_count verify.
 
     With k+1 = 4 chunks of 16 bits, any pair within Hamming distance 3
     agrees exactly on ≥1 chunk — so an exact-match join on each chunk finds
     every qualifying pair without a cross join.
     """
-    hashes = simhash64(df, id_col, text_col)
+    hashes = simhash64(df)
     n_chunks = max_hamming + 1
     width = 64 // n_chunks
     chunk_cols = [
@@ -489,17 +475,15 @@ def near_duplicates_simhash(df: DataFrame, id_col: str = "doc_id",
 # embedding near-dup
 # ---------------------------------------------------------------------------
 
-def near_duplicates_embedding(df: DataFrame, id_col: str = "vec_id",
-                              vec_col: str = "embedding",
-                              threshold: float = 0.95,
-                              bands: int = 8, planes_per_band: int = 8,
+def near_duplicates_embedding(df: DataFrame, threshold: float = 0.95,
                               brute_force: bool = False) -> DataFrame:
-    """Cosine-similar pairs ≥ threshold over an ``array<float>`` column.
+    """Cosine-similar pairs ≥ threshold over the ``array<float>``
+    ``embedding`` column, ids from ``vec_id``.
 
     ``brute_force=True`` is the exact O(n²) verifier (test scale only).
     The scale path is BANDED random-hyperplane LSH (OR-amplified, same
-    shape as the MinHash path): ``bands × planes_per_band`` fixed random
-    hyperplanes; each band's ``planes_per_band`` sign bits pack into one
+    shape as the MinHash path): :data:`EMBED_BANDS` × :data:`PLANES_PER_BAND`
+    fixed random hyperplanes; each band's sign bits pack into one
     integer key, a pair is a candidate if ANY band key collides
     (:func:`band_candidates` (band, key) equi-join), and every candidate
     is verified with the exact cosine.
@@ -507,12 +491,12 @@ def near_duplicates_embedding(df: DataFrame, id_col: str = "vec_id",
     Recall math — why banding is load-bearing: a single 16-plane key has
     P(collide) = (1 − θ/π)^16 ≈ 0.08 for a true cosine-0.9 pair
     (θ ≈ 0.45 rad), i.e. it silently MISSES >90% of genuine near-dups.
-    With the default 8 bands × 8 planes the per-band probability is
+    With 8 bands × 8 planes the per-band probability is
     ≈ 0.856^8 ≈ 0.29 and OR-amplification lifts recall to
     1 − (1 − 0.29)^8 ≈ 0.94 at cosine 0.9 (≈ 0.999 at 0.95).  False
     positives cost only verification work, never correctness.
     """
-    ids = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    ids = df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
 
     dot = F.expr("aggregate(zip_with(a.v, b.v, (x, y) -> CAST(x AS DOUBLE) * y), "
                  "0D, (acc, x) -> acc + x)")
@@ -530,11 +514,11 @@ def near_duplicates_embedding(df: DataFrame, id_col: str = "vec_id",
                          F.round(cosine, 6).alias("cosine")))
         return pairs.filter(F.col("cosine") >= threshold).distinct()
 
-    dim_row = df.select(F.size(vec_col).alias("d")).first()
+    dim_row = df.select(F.size("embedding").alias("d")).first()
     dim = dim_row["d"] if dim_row else 0
     rng = np.random.RandomState(SEED)
-    planes = rng.normal(size=(bands * planes_per_band, dim)).astype("float64")
-    weights = (1 << np.arange(planes_per_band)).astype(np.int64)
+    planes = rng.normal(size=(EMBED_BANDS * PLANES_PER_BAND, dim)).astype("float64")
+    weights = (1 << np.arange(PLANES_PER_BAND)).astype(np.int64)
 
     @pandas_udf(T.ArrayType(T.LongType()))
     def _band_keys(vec: pd.Series) -> pd.Series:
@@ -542,7 +526,7 @@ def near_duplicates_embedding(df: DataFrame, id_col: str = "vec_id",
             return pd.Series([], dtype="object")
         mat = np.array(list(vec), dtype="float64")      # n × dim
         signs = (mat @ planes.T) > 0                    # one BLAS call/batch
-        keys = signs.reshape(len(mat), bands, planes_per_band) @ weights
+        keys = signs.reshape(len(mat), EMBED_BANDS, PLANES_PER_BAND) @ weights
         return pd.Series(list(keys.astype(np.int64).tolist()))
 
     # band_candidates materializes the exploded (band, key) frame once, so
@@ -633,10 +617,7 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         f"component has diameter > {max_iter}; raise max_iter")
 
 
-def dedup_near_minhash(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", k: int = 128,
-                       bands: int = 32, threshold: float = 0.7,
-                       shingle_width: int = 3) -> DataFrame:
+def dedup_near_minhash(df: DataFrame, threshold: float = 0.7) -> DataFrame:
     """Keeper rows after MinHash near-dup clustering.
 
     Pairs → connected components → keep the min-id row of every component
@@ -644,23 +625,16 @@ def dedup_near_minhash(df: DataFrame, id_col: str = "doc_id",
     :func:`dedup_exact`: the output is the deduplicated corpus itself,
     which is what a pretraining data pipeline consumes downstream.
     """
-    pairs = near_duplicates_minhash(df, id_col, text_col, k=k, bands=bands,
-                                    threshold=threshold,
-                                    shingle_width=shingle_width)
-    return _keep_cluster_minima(df, pairs, id_col)
+    pairs = near_duplicates_minhash(df, threshold=threshold)
+    return _keep_cluster_minima(df, pairs, "doc_id")
 
 
-def dedup_near_embedding(df: DataFrame, id_col: str = "vec_id",
-                         vec_col: str = "embedding",
-                         threshold: float = 0.95,
-                         bands: int = 8, planes_per_band: int = 8) -> DataFrame:
+def dedup_near_embedding(df: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Keeper rows after embedding cosine near-dup clustering (the
     semantic-dedup pass of a pretraining pipeline): banded-LSH cosine
     pairs → connected components → min-id keeper per component."""
-    pairs = near_duplicates_embedding(df, id_col, vec_col,
-                                      threshold=threshold, bands=bands,
-                                      planes_per_band=planes_per_band)
-    return _keep_cluster_minima(df, pairs, id_col)
+    pairs = near_duplicates_embedding(df, threshold=threshold)
+    return _keep_cluster_minima(df, pairs, "vec_id")
 
 
 def _keep_cluster_minima(df: DataFrame, pairs: DataFrame,
@@ -676,19 +650,17 @@ def _keep_cluster_minima(df: DataFrame, pairs: DataFrame,
 # incremental (cross-batch) dedup
 # ---------------------------------------------------------------------------
 
-def dedup_incremental(new_df: DataFrame, history_fps: DataFrame,
-                      id_col: str = "doc_id", text_col: str = "text",
-                      fp_col: str = "fingerprint") -> DataFrame:
+def dedup_incremental(new_df: DataFrame, history_fps: DataFrame) -> DataFrame:
     """Exact dedup of a new batch AGAINST an already-admitted corpus — the
     daily-crawl-increment workflow (dedup today's crawl both within itself
     and against everything ingested before, without re-reading history).
 
     ``history_fps`` carries one md5 fingerprint per historical document
-    (column ``fp_col``); a new row survives iff its fingerprint (a) is the
-    lowest-``id_col`` holder within the new batch and (b) is absent from
-    history.  The result keeps a ``fingerprint`` column so the caller folds
-    it straight into the next increment's history
-    (``history.unionByName(result.select(fp_col))``).
+    (column ``fingerprint``); a new row survives iff its fingerprint (a) is
+    the lowest-``doc_id`` holder within the new batch and (b) is absent
+    from history.  The result keeps a ``fingerprint`` column so the caller
+    folds it straight into the next increment's history
+    (``history.unionByName(result.select("fingerprint"))``).
 
     Scale notes (10^12-doc history, 10^9-doc daily increment): the history
     side is fingerprints ONLY (~32 B/row vs multi-KB documents), and the
@@ -698,32 +670,28 @@ def dedup_incremental(new_df: DataFrame, history_fps: DataFrame,
     only the (much smaller) increment moves; AQE turns the join into a
     broadcast when the surviving increment is small enough.
     """
-    batch = new_df.withColumn(fp_col, fingerprint(F.col(text_col)))
+    batch = new_df.withColumn("fingerprint", fingerprint(F.col("text")))
     cols = batch.columns
     # min_by keeper, not a window — map-side combinable, hot-fingerprint
     # safe (see dedup_exact)
-    firsts = (batch.groupBy(F.col(fp_col).alias("_fp"))
-              .agg(F.min_by(F.struct(*cols), F.col(id_col)).alias("_row"))
+    firsts = (batch.groupBy(F.col("fingerprint").alias("_fp"))
+              .agg(F.min_by(F.struct(*cols), F.col("doc_id")).alias("_row"))
               .select("_row.*"))
     # no distinct() on the history side: right-side duplicates cannot
     # change a left_anti join's output, and a distinct would force a full
     # shuffle+aggregate of the (huge) history before the join
-    hist = history_fps.select(F.col(fp_col))
-    return firsts.join(hist, fp_col, "left_anti")
+    hist = history_fps.select("fingerprint")
+    return firsts.join(hist, "fingerprint", "left_anti")
 
 
-def fingerprint_history(df: DataFrame, text_col: str = "text",
-                        fp_col: str = "fingerprint") -> DataFrame:
+def fingerprint_history(df: DataFrame) -> DataFrame:
     """The compact history frame :func:`dedup_incremental` consumes: one
     distinct md5 fingerprint per admitted document."""
-    return df.select(fingerprint(F.col(text_col)).alias(fp_col)).distinct()
+    return df.select(fingerprint(F.col("text")).alias("fingerprint")).distinct()
 
 
 def near_dedup_incremental(new_df: DataFrame, history_sigs: DataFrame,
-                           id_col: str = "doc_id", text_col: str = "text",
-                           k: int = 128, bands: int = 32,
                            threshold: float = 0.7,
-                           shingle_width: int = 3,
                            recent_texts: DataFrame | None = None) -> DataFrame:
     """Near-dup dedup of a new crawl increment against the admitted
     corpus's compact MinHash history AND within itself — the semantic
@@ -748,8 +716,8 @@ def near_dedup_incremental(new_df: DataFrame, history_sigs: DataFrame,
        0.70/0.77/0.83/0.93, pairs ≥3σ from the threshold classify
        correctly, and pairs inside the ±0.10 band may flip either way —
        the disclosed precision trade of a text-free history.
-       **Opt-in exact tier**: pass ``recent_texts`` — an (``id_col``,
-       ``text_col``) frame for the newest slice of the admitted corpus
+       **Opt-in exact tier**: pass ``recent_texts`` — a (``doc_id``,
+       ``text``) frame for the newest slice of the admitted corpus
        (e.g. the last few increments, where near-dup pressure
        concentrates) — and candidates whose history doc is in that tier
        are verified by EXACT shingle Jaccard (the same kernel as the
@@ -768,7 +736,7 @@ def near_dedup_incremental(new_df: DataFrame, history_sigs: DataFrame,
        (:func:`_verify_candidate_pairs`), keepers by cluster minima.
 
     Fold the survivors' signatures into the next day's history with
-    ``history_sigs.unionByName(minhash_signatures(kept, ...))``.
+    ``history_sigs.unionByName(minhash_signatures(kept))``.
 
     ``history_sigs`` is read TWICE (band buckets + the verify join) — pass
     a materialized table (the parquet the previous increment wrote), not a
@@ -778,11 +746,9 @@ def near_dedup_incremental(new_df: DataFrame, history_sigs: DataFrame,
     increment's dominant Python cost — shingling + hashing its text — is
     paid exactly once; only candidate pairs ever reach the verify UDF.
     """
-    bands = min(bands, k)
-    bsigs = (minhash_signatures(new_df, id_col, text_col, k, shingle_width)
-             .localCheckpoint(eager=False))
-    bbuck = _sig_band_buckets(bsigs, bands, k)
-    hbuck = _sig_band_buckets(history_sigs.select("id", "sig"), bands, k)
+    bsigs = minhash_signatures(new_df).localCheckpoint(eager=False)
+    bbuck = _sig_band_buckets(bsigs)
+    hbuck = _sig_band_buckets(history_sigs.select("id", "sig"))
     cand = (bbuck.alias("b").join(hbuck.alias("h"), ["band", "key"])
             .select(F.col("b.id").alias("batch_id"),
                     F.col("h.id").alias("hist_id"))
@@ -794,12 +760,12 @@ def near_dedup_incremental(new_df: DataFrame, history_sigs: DataFrame,
         # Checkpoint the candidate frame — both branches consume it and
         # it is the whole banding pipeline upstream.
         cand = cand.localCheckpoint(eager=False)
-        recent = recent_texts.select(F.col(id_col).alias("hist_id"),
-                                     F.col(text_col).alias("hist_text"))
+        recent = recent_texts.select(F.col("doc_id").alias("hist_id"),
+                                     F.col("text").alias("hist_text"))
         recent_ids = recent.select("hist_id")
-        bt = new_df.select(F.col(id_col).alias("batch_id"),
-                           F.col(text_col).alias("batch_text"))
-        _jaccard = _shingle_jaccard_udf(shingle_width)
+        bt = new_df.select(F.col("doc_id").alias("batch_id"),
+                           F.col("text").alias("batch_text"))
+        _jaccard = _shingle_jaccard_udf()
         exact_dups = (cand.join(recent_ids, "hist_id", "left_semi")
                       .join(bt, "batch_id").join(recent, "hist_id")
                       .withColumn("j", F.round(
@@ -810,7 +776,7 @@ def near_dedup_incremental(new_df: DataFrame, history_sigs: DataFrame,
     est = (F.size(F.filter(F.zip_with("bsig", "hsig",
                                       lambda x, y: x == y),
                            lambda v: v))
-           / F.lit(float(k)))
+           / F.lit(float(K)))
     dup_ids = (cand
                .join(bsigs.select(F.col("id").alias("batch_id"),
                                   F.col("sig").alias("bsig")), "batch_id")
@@ -822,24 +788,20 @@ def near_dedup_incremental(new_df: DataFrame, history_sigs: DataFrame,
     if exact_dups is not None:
         dup_ids = dup_ids.unionByName(exact_dups)
     dup_ids = dup_ids.distinct()
-    fresh = new_df.join(dup_ids.withColumnRenamed("batch_id", id_col),
-                        id_col, "left_anti")
+    fresh = new_df.join(dup_ids.withColumnRenamed("batch_id", "doc_id"),
+                        "doc_id", "left_anti")
     fresh_sigs = bsigs.join(dup_ids.withColumnRenamed("batch_id", "id"),
                             "id", "left_anti")
-    pairs = _verify_candidate_pairs(
-        fresh, minhash_candidates(fresh_sigs, bands=bands, k=k),
-        id_col, text_col, threshold, shingle_width)
-    return _keep_cluster_minima(fresh, pairs, id_col)
+    pairs = _verify_candidate_pairs(fresh, minhash_candidates(fresh_sigs),
+                                    threshold)
+    return _keep_cluster_minima(fresh, pairs, "doc_id")
 
 
 def fold_history(kept: DataFrame,
                  prev_sigs: DataFrame | None,
                  prev_recent: DataFrame | None,
                  run_date,
-                 ttl_days: int = 7,
-                 id_col: str = "doc_id", text_col: str = "text",
-                 k: int = 128,
-                 shingle_width: int = 3) -> tuple[DataFrame, DataFrame]:
+                 ttl_days: int = 7) -> tuple[DataFrame, DataFrame]:
     """Retention bookkeeping between :func:`near_dedup_incremental` runs
     (VERDICT r4 Next-round #5): fold today's admitted docs forward and age
     text out of the exact-verify recent tier.
@@ -847,8 +809,8 @@ def fold_history(kept: DataFrame,
     Inputs: ``kept`` — the survivors :func:`near_dedup_incremental`
     returned today (rows of the original batch); ``prev_sigs`` — the
     signature history the run consumed (``None`` on day one); and
-    ``prev_recent`` — the text-carrying recent tier, an (``id_col``,
-    ``text_col``, ``admitted_on`` date) frame (``None`` on day one).
+    ``prev_recent`` — the text-carrying recent tier, a (``doc_id``,
+    ``text``, ``admitted_on`` date) frame (``None`` on day one).
     ``run_date`` is the increment's date — always explicit, never wall
     clock, so replaying an increment is deterministic.
 
@@ -880,12 +842,11 @@ def fold_history(kept: DataFrame,
     """
     from datetime import timedelta
 
-    new_sigs = minhash_signatures(kept, id_col, text_col, k, shingle_width)
+    new_sigs = minhash_signatures(kept)
     sigs = (prev_sigs.select("id", "sig").unionByName(new_sigs)
             if prev_sigs is not None else new_sigs)
     today = kept.select(
-        F.col(id_col), F.col(text_col),
-        F.lit(run_date).cast("date").alias("admitted_on"))
+        "doc_id", "text", F.lit(run_date).cast("date").alias("admitted_on"))
     if prev_recent is not None:
         cutoff = run_date - timedelta(days=ttl_days)
         survivors = prev_recent.filter(F.col("admitted_on") > F.lit(cutoff))
@@ -899,8 +860,7 @@ def fold_history(kept: DataFrame,
 # exact substring dedup (duplicated k-token spans, keep-first)
 # ---------------------------------------------------------------------------
 
-def duplicated_windows(df: DataFrame, k: int = 50, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def duplicated_windows(df: DataFrame, k: int = 50) -> DataFrame:
     """Every ``k``-token window occurrence whose content already appeared
     earlier in the corpus (corpus order = ``(id, pos)``) — the detection
     half of Lee et al. 2022 "Deduplicating Training Data Makes Language
@@ -928,8 +888,8 @@ def duplicated_windows(df: DataFrame, k: int = 50, id_col: str = "doc_id",
     window formulation distributes with one shuffle and is the standard
     Spark-shaped approximation (fixed k, whole-window granularity).
     """
-    base = df.select(F.col(id_col).alias("id"),
-                     _ws_token_array(F.col(text_col)).alias("_toks"))
+    base = df.select(F.col("doc_id").alias("id"),
+                     _ws_token_array(F.col("text")).alias("_toks"))
     return _duplicated_window_occurrences(base, k)
 
 
@@ -964,8 +924,7 @@ def _duplicated_window_occurrences(base: DataFrame, k: int) -> DataFrame:
             .select("id", "pos"))
 
 
-def dedup_substrings(df: DataFrame, k: int = 50, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def dedup_substrings(df: DataFrame, k: int = 50) -> DataFrame:
     """Remove duplicated ``k``-token spans from every document, keeping the
     corpus-first occurrence — the removal half of ExactSubstr dedup
     (Lee et al. 2022): verbatim boilerplate, licence blocks, and quoted
@@ -976,7 +935,7 @@ def dedup_substrings(df: DataFrame, k: int = 50, id_col: str = "doc_id",
     window occurrence ``[pos, pos+k)`` (overlapping occurrences merge
     naturally — including self-overlap inside a run like ``a a a …``).
     Output per input document (every doc survives, possibly empty):
-    ``(id_col, text_clean, n_tokens, n_tokens_removed)`` where
+    ``(doc_id, text_clean, n_tokens, n_tokens_removed)`` where
     ``text_clean`` re-joins the kept tokens of the CANONICAL token stream
     (lowercased, whitespace-collapsed — the same contract every dedup
     operator here compares under).
@@ -988,8 +947,8 @@ def dedup_substrings(df: DataFrame, k: int = 50, id_col: str = "doc_id",
     per-token cost is O(removed windows in that doc), no Python stage.
     """
     base = (df
-            .select(F.col(id_col).alias("id"),
-                    _ws_token_array(F.col(text_col)).alias("_toks"))
+            .select(F.col("doc_id").alias("id"),
+                    _ws_token_array(F.col("text")).alias("_toks"))
             .localCheckpoint(eager=False))
     dup_occ = _duplicated_window_occurrences(base, k)
     rem = dup_occ.groupBy("id").agg(F.collect_list("pos").alias("_rpos"))
@@ -1002,7 +961,7 @@ def dedup_substrings(df: DataFrame, k: int = 50, id_col: str = "doc_id",
                         F.coalesce(F.col("_rpos"),
                                    F.array().cast("array<int>")))
             .withColumn("_kept", kept)
-            .select(F.col("id").alias(id_col),
+            .select(F.col("id").alias("doc_id"),
                     F.array_join("_kept", " ").alias("text_clean"),
                     F.size("_toks").cast("bigint").alias("n_tokens"),
                     (F.size("_toks") - F.size("_kept")).cast("bigint")

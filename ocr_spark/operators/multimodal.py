@@ -173,14 +173,13 @@ def media_feature_vector(payload: bytes,
                                                         deterministic_fake)]
 
 
-def extract_media_features(df: DataFrame, deterministic_fake: bool = True,
-                           batch_max_bytes: int = 64 * 1024 * 1024) -> DataFrame:
+def extract_media_features(df: DataFrame,
+                           deterministic_fake: bool = True) -> DataFrame:
     """media table → (media_id, kind, n_bytes, sha_prefix, features).
 
-    ``mapInPandas`` so one Python worker handles an entire Arrow batch; the
-    ``batch_max_bytes`` argument documents the operational knob (pair with
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` so a batch of blobs
-    fits in worker memory).
+    ``mapInPandas`` so one Python worker handles an entire Arrow batch
+    (``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds how many
+    blobs one batch holds in worker memory).
     """
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -219,8 +218,7 @@ FRAME_SCHEMA = T.StructType([
 ])
 
 
-def sample_frames(df: DataFrame, every_ms: int = 1000,
-                  deterministic_fake: bool = True) -> DataFrame:
+def sample_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video/audio rows → one row per sampled frame (1→N mapInPandas shape).
 
     WAV payloads get REAL PCM windowing: the stream is decoded and each
@@ -228,9 +226,9 @@ def sample_frames(df: DataFrame, every_ms: int = 1000,
     AVI payloads get REAL container demux: the ``movi`` chunks are
     walked and the JPEG frame nearest each ``every_ms`` tick is emitted
     (decodable by :func:`codecs.decode_jpeg`).  Other video codecs
-    (H.264…) need external libs (stubbed): the fake emits
-    duration//every_ms deterministic payload slices, exercising the
-    explode-shaped batch contract either way.
+    (H.264…) need external libs (stubbed): the deterministic fake emits
+    duration//every_ms payload slices, exercising the explode-shaped
+    batch contract either way.
     """
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -299,8 +297,6 @@ def sample_frames(df: DataFrame, every_ms: int = 1000,
                                      "ts_ms": i * every_ms,
                                      "frame": codecs.encode_wav(clip, rate)})
                     continue
-                if not deterministic_fake:
-                    raise NotImplementedError("av codecs not present")
                 duration = (meta["duration_ms"] if meta is not None
                             else 0) or 0
                 n = (min(max(1, duration // every_ms), MAX_SAMPLED_FRAMES)

@@ -12,6 +12,8 @@
   at 10^12 scale that turns a full scan into a ~(n_probe/n_cells) scan,
   with the assignment stored as a partition-friendly int key.
 
+Every operator reads ids from ``vec_id`` and vectors from ``embedding``.
+
 Determinism: all randomness is a fixed-seed RandomState; ties broken by id.
 """
 
@@ -38,9 +40,8 @@ def _cosine_expr() -> F.Column:
     return F.when(den != 0, dot / den).otherwise(F.lit(0.0))
 
 
-def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                           id_col: str = "vec_id",
-                           vec_col: str = "embedding") -> DataFrame:
+def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame,
+                           k: int = 5) -> DataFrame:
     """Exact top-k: (query_id, rank, vec_id, cosine), rank 1..k.
 
     The query side is broadcast (queries are few); the corpus is scanned
@@ -52,11 +53,11 @@ def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 5,
     # null embeddings excluded on BOTH sides so the SQL form stays
     # row-identical with the matmul/IVF paths (whose numpy math cannot
     # represent them; a null row is not a meaningful candidate anyway)
-    c = (corpus.filter(F.col(vec_col).isNotNull())
-         .select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    c = (corpus.filter(F.col("embedding").isNotNull())
+         .select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
          .alias("c"))
-    q = (queries.filter(F.col(vec_col).isNotNull())
-         .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("v"))
+    q = (queries.filter(F.col("embedding").isNotNull())
+         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("v"))
          .alias("q"))
     scored = (c.join(F.broadcast(q), F.col("q.qid") != F.col("c.id"))
               .select(F.col("q.qid").alias("query_id"),
@@ -68,9 +69,8 @@ def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 5,
             .select("query_id", "rank", "vec_id", F.round("cosine", 6).alias("cosine")))
 
 
-def cosine_topk_matmul(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> DataFrame:
+def cosine_topk_matmul(corpus: DataFrame, queries: DataFrame,
+                       k: int = 5) -> DataFrame:
     """Exact top-k via per-partition numpy matmul + global re-rank.
 
     The scale path: the (small) normalized query matrix is closed over and
@@ -88,14 +88,16 @@ def cosine_topk_matmul(corpus: DataFrame, queries: DataFrame, k: int = 5,
     import numpy as np
     import pandas as pd
 
-    qrows = (queries.filter(F.col(vec_col).isNotNull())
-             .select(F.col(id_col).alias("qid"),
-                     F.col(vec_col).alias("v")).collect())
+    from ocr_spark.localrel import local_df
+
+    qrows = (queries.filter(F.col("embedding").isNotNull())
+             .select(F.col("vec_id").alias("qid"),
+                     F.col("embedding").alias("v")).collect())
     if not qrows:
         # an empty/all-null query set must return an empty frame like the
         # SQL path — norm(axis=1) on a 1-D empty array raises AxisError
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, rank int, vec_id long, cosine double")
+        return local_df(queries.sparkSession, [],
+                        "query_id long, rank int, vec_id long, cosine double")
     qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
     qmat = np.array([r["v"] for r in qrows], dtype=np.float64)
     qmat /= np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-30)
@@ -127,8 +129,8 @@ def cosine_topk_matmul(corpus: DataFrame, queries: DataFrame, k: int = 5,
     # a NULL embedding would build an object array and crash norm();
     # the SQL twin scores such rows 0.0 via its null-den fallback, but a
     # null vector is not a meaningful candidate either way — excluded
-    c = (corpus.filter(F.col(vec_col).isNotNull())
-         .select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")))
+    c = (corpus.filter(F.col("embedding").isNotNull())
+         .select(F.col("vec_id").alias("id"), F.col("embedding").alias("v")))
     cands = c.mapInPandas(local_topk,
                           "query_id long, vec_id long, cosine double")
     cands = cands.filter(F.col("query_id") != F.col("vec_id"))
@@ -143,12 +145,12 @@ def cosine_topk_matmul(corpus: DataFrame, queries: DataFrame, k: int = 5,
 # IVF (inverted-file) coarse quantizer
 # ---------------------------------------------------------------------------
 
-def _kmeans(vectors: np.ndarray, n_cells: int, iters: int = 10) -> np.ndarray:
-    """Deterministic Lloyd's k-means (fixed seed init, fixed iterations)."""
+def _kmeans(vectors: np.ndarray, n_cells: int) -> np.ndarray:
+    """Deterministic Lloyd's k-means (fixed seed init, 10 iterations)."""
     rng = np.random.RandomState(SEED)
     n = len(vectors)
     centroids = vectors[rng.choice(n, size=min(n_cells, n), replace=False)].copy()
-    for _ in range(iters):
+    for _ in range(10):
         d = ((vectors[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
         assign = d.argmin(axis=1)
         for j in range(len(centroids)):
@@ -158,8 +160,7 @@ def _kmeans(vectors: np.ndarray, n_cells: int, iters: int = 10) -> np.ndarray:
     return centroids
 
 
-def ivf_build(corpus: DataFrame, n_cells: int = 16, sample: int = 2048,
-              id_col: str = "vec_id", vec_col: str = "embedding"
+def ivf_build(corpus: DataFrame, n_cells: int = 16, sample: int = 2048
               ) -> tuple[np.ndarray, DataFrame]:
     """Train centroids on a deterministic sample; assign every vector.
 
@@ -177,13 +178,13 @@ def ivf_build(corpus: DataFrame, n_cells: int = 16, sample: int = 2048,
     both compile to TakeOrderedAndProject (per-partition top-k + merge,
     no full sort shuffle).
     """
-    corpus = corpus.filter(F.col(vec_col).isNotNull())  # null vectors are
+    corpus = corpus.filter(F.col("embedding").isNotNull())  # null vectors are
     # unindexable: np arithmetic in the sample/assign paths would crash
     bucket = F.conv(F.substring(
-        F.md5(F.concat(F.col(id_col).cast("string"), F.lit("ivf"))), 1, 8),
+        F.md5(F.concat(F.col("vec_id").cast("string"), F.lit("ivf"))), 1, 8),
         16, 10).cast("bigint")
-    sample_rows = (corpus.orderBy(bucket.asc(), F.col(id_col).asc())
-                   .limit(sample).select(vec_col).toPandas()[vec_col])
+    sample_rows = (corpus.orderBy(bucket.asc(), F.col("vec_id").asc())
+                   .limit(sample).select("embedding").toPandas()["embedding"])
     vectors = np.array([np.asarray(v, dtype="float64") for v in sample_rows])
     centroids = _kmeans(vectors, n_cells)
 
@@ -197,7 +198,7 @@ def ivf_build(corpus: DataFrame, n_cells: int = 16, sample: int = 2048,
             out.append(int(((bc - arr) ** 2).sum(axis=1).argmin()))
         return pd.Series(out, dtype="int32")
 
-    assigned = corpus.withColumn("cell", _assign(F.col(vec_col)))
+    assigned = corpus.withColumn("cell", _assign(F.col("embedding")))
     return centroids, assigned
 
 
@@ -235,18 +236,17 @@ def ivf_load(spark, path: str) -> tuple[np.ndarray, DataFrame]:
 
 
 def cosine_topk_ivf(assigned: DataFrame, centroids: np.ndarray,
-                    queries: DataFrame, k: int = 5, n_probe: int = 4,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
+                    queries: DataFrame, k: int = 5,
+                    n_probe: int = 4) -> DataFrame:
     """Approximate top-k probing only the ``n_probe`` nearest cells per query.
 
     The probe list is computed driver-side (queries are small); the corpus
     join is an equi-join on ``cell`` — with a bucketed/partitioned corpus
     this prunes to n_probe/n_cells of the data before any distance math.
     """
-    qrows = (queries.filter(F.col(vec_col).isNotNull())
-             .select(F.col(id_col).alias("qid"),
-                     F.col(vec_col).alias("v")).collect())
+    qrows = (queries.filter(F.col("embedding").isNotNull())
+             .select(F.col("vec_id").alias("qid"),
+                     F.col("embedding").alias("v")).collect())
     probe_rows = []
     for row in qrows:
         arr = np.asarray(row["v"], dtype="float64")
@@ -266,7 +266,7 @@ def cosine_topk_ivf(assigned: DataFrame, centroids: np.ndarray,
     # n_probe/n_cells inverted-list claim (plan-pinned in tests)
     needed = sorted({cell for _, cell, _ in probe_rows})
     c = (assigned.filter(F.col("cell").isin(needed))
-         .select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
+         .select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"),
                  "cell").alias("c"))
     scored = (c.join(F.broadcast(probes), "cell")
               .filter(F.col("q.qid") != F.col("c.id"))

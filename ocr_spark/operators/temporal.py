@@ -24,12 +24,11 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 
 def asof_join(left: DataFrame, right: DataFrame, on: str = "user_id",
-              ts: str = "ts", payload: Sequence[str] = ("value",),
-              suffix: str = "_asof") -> DataFrame:
+              ts: str = "ts", payload: Sequence[str] = ("value",)) -> DataFrame:
     """Backward as-of join: attach the latest right payload at-or-before
     each left row's timestamp, per key.
 
-    Output = every left row + ``<payload><suffix>`` columns (null when no
+    Output = every left row + ``<payload>_asof`` columns (null when no
     right row precedes it).  At equal timestamps the right row counts as
     visible (``<=`` semantics, matching DuckDB ``ASOF JOIN`` on
     ``l.ts >= r.ts``).  Multiple right rows sharing the same (key, ts) are
@@ -63,7 +62,7 @@ def asof_join(left: DataFrame, right: DataFrame, on: str = "user_id",
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     carried = unioned.withColumn("_asof", F.last("_rpay", ignorenulls=True).over(w))
     out = carried.filter(F.col("_is_left") == 1).select(
-        *lcols, *[F.col(f"_asof.{c}").alias(f"{c}{suffix}") for c in payload])
+        *lcols, *[F.col(f"_asof.{c}").alias(f"{c}_asof") for c in payload])
     return out
 
 

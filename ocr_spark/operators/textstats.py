@@ -20,6 +20,9 @@ codegen, no Python workers) and each has a DuckDB oracle twin in
 * :func:`drop_repeated_lines` — CCNet-style boilerplate-line removal
   (line document-frequency → anti-join → order-preserving reassembly)
 
+The DataFrame operators read documents as ``doc_id``/``text`` (strata
+from ``lang``).
+
 Scale: the per-doc operators are narrow Column-expression maps — no
 shuffle, no Python; a 100 TB scan stays I/O-bound.  corpus_clean adds one
 window shuffle (dup keeper) and drop_repeated_lines one groupBy shuffle on
@@ -80,10 +83,9 @@ def language_id(text: Column) -> Column:
     return expr.otherwise(F.lit("und"))
 
 
-def language_id_model(df: DataFrame, text_col: str = "text",
-                      out_col: str = "lang_pred",
-                      model_fn=None) -> DataFrame:
-    """Language-ID with a pluggable model slot (production shape).
+def language_id_model(df: DataFrame, model_fn=None) -> DataFrame:
+    """Language-ID with a pluggable model slot (production shape):
+    appends ``lang_pred``.
 
     ``model_fn`` has the fastText-style batch signature
     ``list[str] -> list[str]`` (one ISO-ish label per input).  It is
@@ -98,14 +100,14 @@ def language_id_model(df: DataFrame, text_col: str = "text",
     ``tests/test_operators.py::test_language_id_model_hook``).
     """
     if model_fn is None:
-        return df.withColumn(out_col, language_id(F.col(text_col)))
+        return df.withColumn("lang_pred", language_id(F.col("text")))
 
     @pandas_udf(T.StringType())
     def _predict(text: pd.Series) -> pd.Series:
         labels = model_fn([t or "" for t in text])
         return pd.Series(list(labels), dtype="object")
 
-    return df.withColumn(out_col, _predict(F.col(text_col)))
+    return df.withColumn("lang_pred", _predict(F.col("text")))
 
 
 # function-word list shared by the stopword ratio in Spark and its DuckDB
@@ -129,7 +131,7 @@ def _stopword_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(padded, F.lit(_STOP_COUNT_RE), 0))
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Append quality-feature columns + a composite ``quality_ok`` verdict.
 
     Features (all integer arithmetic → engine-portable):
@@ -140,7 +142,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
       gibberish have few).  Verdict: 20 ≤ n_chars, ≥ 5 tokens, 2 ≤ avg
       token len ≤ 12, digits < 30%.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     # materialize the shared regex scans ONCE as helper columns: the ratio
     # and verdict expressions below reference each of them several times,
     # and inlined (non-aliased) subtrees are re-evaluated per reference —
@@ -216,17 +218,16 @@ def token_count_bpe(text: Column) -> Column:
     ).cast("bigint")
 
 
-def winnowing_fingerprints(df: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", k: int = 8,
-                           window: int = 4) -> DataFrame:
+def winnowing_fingerprints(df: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD'03).
 
-    Rolling polynomial hash over character ``k``-grams; within every window
-    of ``window`` consecutive hashes the minimum is selected (rightmost on
-    ties), giving a position-robust fingerprint set whose overlap measures
-    local near-duplication — the classic MOSS scheme.  Vectorized numpy per
+    Rolling polynomial hash over character 8-grams; within every window
+    of 4 consecutive hashes the minimum is selected (rightmost on ties),
+    giving a position-robust fingerprint set whose overlap measures local
+    near-duplication — the classic MOSS scheme.  Vectorized numpy per
     Arrow batch; output is the sorted distinct selected hashes.
     """
+    k, window = 8, 4
     BASE = np.uint64(1000003)
     POWERS = BASE ** np.arange(k - 1, -1, -1, dtype=np.uint64)  # mod 2^64
 
@@ -250,20 +251,18 @@ def winnowing_fingerprints(df: DataFrame, id_col: str = "doc_id",
             [v - (1 << 64) if v >= (1 << 63) else v for v in _one(t or "")]
             for t in text])
 
-    return df.select(F.col(id_col).alias("id"),
-                     _winnow(F.col(text_col)).alias("fingerprints"))
+    return df.select(F.col("doc_id").alias("id"),
+                     _winnow(F.col("text")).alias("fingerprints"))
 
 
 # ---------------------------------------------------------------------------
 # corpus-level cleaning (what a pretraining pipeline actually runs)
 # ---------------------------------------------------------------------------
 
-def corpus_clean(df: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text",
-                 langs: tuple[str, ...] = ("en", "es", "de", "fr"),
-                 ) -> DataFrame:
+def corpus_clean(df: DataFrame) -> DataFrame:
     """The composed pretraining admission filter: quality gate + language
-    allowlist + exact-dup keeper, with a reason code per dropped doc.
+    allowlist (en, es, de, fr) + exact-dup keeper, with a reason code per
+    dropped doc.
 
     Output: every input row + ``keep`` boolean + ``drop_reason`` (null when
     kept; first failing gate otherwise: quality → lang → duplicate).  The
@@ -276,28 +275,26 @@ def corpus_clean(df: DataFrame, id_col: str = "doc_id",
     This is the operator a data pipeline runs nightly — the per-feature
     queries exist for inspection, this one for production.
     """
-    feats = quality_features(df, text_col)
-    lang = language_id(F.col(text_col))
-    fp = fingerprint(F.col(text_col))
+    feats = quality_features(df)
+    lang = language_id(F.col("text"))
+    fp = fingerprint(F.col("text"))
     keepers = (df.groupBy(fp.alias("_keep_fp"))
-               .agg(F.min(F.col(id_col)).alias("_keep_id")))
+               .agg(F.min(F.col("doc_id")).alias("_keep_id")))
     joined = (feats.withColumn("_fp", fp)
               .join(keepers,
                     F.col("_fp").eqNullSafe(F.col("_keep_fp")), "inner"))
     reason = (F.when(~F.col("quality_ok"), F.lit("low_quality"))
-              .when(~lang.isin(*langs), F.lit("lang_filtered"))
-              .when(F.col(id_col) != F.col("_keep_id"),
+              .when(~lang.isin("en", "es", "de", "fr"), F.lit("lang_filtered"))
+              .when(F.col("doc_id") != F.col("_keep_id"),
                     F.lit("exact_duplicate")))
     return (joined
             .withColumn("drop_reason", reason)
             .withColumn("keep", F.col("drop_reason").isNull())
-            .select(id_col, "keep", "drop_reason", "n_chars_calc",
+            .select("doc_id", "keep", "drop_reason", "n_chars_calc",
                     "n_tokens"))
 
 
-def drop_repeated_lines(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text",
-                        max_doc_freq: int = 2) -> DataFrame:
+def drop_repeated_lines(df: DataFrame, max_doc_freq: int = 2) -> DataFrame:
     """CCNet-style repeated-line removal: drop every line that appears in
     more than ``max_doc_freq`` documents (nav menus, cookie banners,
     copyright footers survive boilerplate stripping as text lines), then
@@ -308,8 +305,8 @@ def drop_repeated_lines(df: DataFrame, id_col: str = "doc_id",
     anti-join the frequent set → re-aggregate with ``array_agg`` sorted by
     position.  The joined key is the line hash, never the line text.
     """
-    lines = (df.select(F.col(id_col).alias("id"),
-                       F.posexplode(F.split(F.col(text_col), "\n"))
+    lines = (df.select(F.col("doc_id").alias("id"),
+                       F.posexplode(F.split(F.col("text"), "\n"))
                        .alias("pos", "line"))
              .withColumn("lh", F.md5(F.trim(F.lower("line")))))
     # the exploded line frame feeds the document-frequency aggregate AND the
@@ -330,7 +327,7 @@ def drop_repeated_lines(df: DataFrame, id_col: str = "doc_id",
                 F.count("*").alias("n_lines_kept")))
     # every input doc must appear in the output — a 100%-boilerplate page
     # (all lines frequent) keeps an empty clean_text instead of vanishing
-    return (df.select(F.col(id_col).alias("id")).join(agg, "id", "left")
+    return (df.select(F.col("doc_id").alias("id")).join(agg, "id", "left")
             .select("id",
                     F.coalesce("clean_text", F.lit("")).alias("clean_text"),
                     F.coalesce("n_lines_kept", F.lit(0)).cast("bigint")
@@ -379,9 +376,7 @@ def scrub_pii(text: Column) -> Column:
     return out
 
 
-def token_frequencies(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text",
-                      min_count: int = 2) -> DataFrame:
+def token_frequencies(df: DataFrame, min_count: int = 2) -> DataFrame:
     """Corpus token-frequency table — the input to tokenizer/vocab training.
 
     Lowercased whitespace tokens → (token, n_occurrences, n_docs), keeping
@@ -390,26 +385,25 @@ def token_frequencies(df: DataFrame, id_col: str = "doc_id",
     aggregate before the shuffle), so the shuffled volume is the partial
     vocabulary, not the corpus.
     """
-    toks = _ws_tokens(df, id_col, text_col).withColumnRenamed("doc_id", "_doc")
+    toks = _ws_tokens(df).withColumnRenamed("doc_id", "_doc")
     return (toks.groupBy("token")
             .agg(F.count("*").alias("n_occurrences"),
                  F.countDistinct("_doc").alias("n_docs"))
             .filter(F.col("n_occurrences") >= min_count))
 
 
-def _ws_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _ws_tokens(df: DataFrame) -> DataFrame:
     """Shared whitespace tokenization — (doc_id, token) rows, lowercased,
     empties dropped.  :func:`token_frequencies` and :func:`tfidf_top_terms`
     both build on this so their tokenization contract (and the DuckDB
     ``string_split_regex`` twin) can never silently desynchronize."""
-    return (df.select(F.col(id_col).alias("doc_id"),
-                      F.explode(F.split(F.lower(F.trim(F.col(text_col))),
+    return (df.select("doc_id",
+                      F.explode(F.split(F.lower(F.trim(F.col("text"))),
                                         r"\s+")).alias("token"))
             .filter(F.col("token") != ""))
 
 
-def tfidf_top_terms(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", k: int = 3) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     """Per-document top-``k`` TF-IDF terms — the standard keyword /
     topical-signature extractor for corpus curation and search indexing.
 
@@ -433,7 +427,7 @@ def tfidf_top_terms(df: DataFrame, id_col: str = "doc_id",
     join key, which AQE's skew-join splits), and one per-document window
     for the top-k.
     """
-    toks = _ws_tokens(df, id_col, text_col)
+    toks = _ws_tokens(df)
     # both the join's left side and the df aggregation read the tf table —
     # checkpoint it so the corpus is exploded ONCE, not once per consumer
     tf = (toks.groupBy("doc_id", "token")
@@ -458,10 +452,9 @@ def tfidf_top_terms(df: DataFrame, id_col: str = "doc_id",
 
 
 def deterministic_sample(df: DataFrame, fraction: float,
-                         key_col: str = "doc_id",
                          salt: str = "sample") -> DataFrame:
-    """Reproducible corpus sample: keep rows whose md5(key || salt) falls
-    under the fraction threshold.
+    """Reproducible corpus sample: keep rows whose md5(doc_id || salt)
+    falls under the fraction threshold.
 
     Unlike ``DataFrame.sample``/``sampleBy`` (partition-order-dependent
     RNG), the decision is a pure function of the row key — the SAME rows
@@ -474,36 +467,31 @@ def deterministic_sample(df: DataFrame, fraction: float,
     max bucket) rather than silently dropping the ~1-in-16.7M rows whose
     md5 prefix is ffffff.
     """
-    return df.filter(_sample_bucket(key_col, salt)
-                     < _sample_threshold(fraction))
+    return df.filter(_sample_bucket(salt) < _sample_threshold(fraction))
 
 
-def stratified_sample(df: DataFrame, fractions: dict[str, float],
-                      stratum_col: str = "lang",
-                      key_col: str = "doc_id",
-                      salt: str = "mix") -> DataFrame:
+def stratified_sample(df: DataFrame, fractions: dict[str, float]) -> DataFrame:
     """Per-stratum deterministic sampling — the training-mix operator
-    ("keep 100% of lang A, 10% of lang B").  Strata absent from
-    ``fractions`` are dropped; the per-row rule is the same keyed md5
-    bucket as :func:`deterministic_sample`, so mixes are reproducible and
-    engine-portable (fraction=1.0 strata are lossless — see
-    :func:`deterministic_sample`)."""
-    bucket = _sample_bucket(key_col, salt)
+    ("keep 100% of lang A, 10% of lang B"), strata from ``lang``.  Strata
+    absent from ``fractions`` are dropped; the per-row rule is the same
+    keyed md5 bucket as :func:`deterministic_sample` (salt ``mix``), so
+    mixes are reproducible and engine-portable (fraction=1.0 strata are
+    lossless — see :func:`deterministic_sample`)."""
+    bucket = _sample_bucket("mix")
     cond = F.lit(False)
     for stratum, frac in sorted(fractions.items()):
-        cond = cond | ((F.col(stratum_col) == stratum)
+        cond = cond | ((F.col("lang") == stratum)
                        & (bucket < _sample_threshold(frac)))
     return df.filter(cond)
 
 
-def temperature_mix(df: DataFrame, budget_tokens: int, tau: float = 0.5,
-                    stratum_col: str = "lang", key_col: str = "doc_id",
-                    text_col: str = "text", salt: str = "mix") -> DataFrame:
-    """Temperature-flattened training mix: sample each stratum so the kept
-    token mass approximates ``budget_tokens`` split ∝ ``n_s^tau`` — the
-    multilingual-upsampling recipe of CCNet/XLM-R/LLaMA (tau < 1 lifts
-    low-resource strata relative to their raw frequency; tau=1 is
-    proportional, tau=0 is uniform across strata).
+def temperature_mix(df: DataFrame, budget_tokens: int,
+                    tau: float = 0.5) -> DataFrame:
+    """Temperature-flattened training mix: sample each ``lang`` stratum so
+    the kept token mass approximates ``budget_tokens`` split ∝
+    ``n_s^tau`` — the multilingual-upsampling recipe of CCNet/XLM-R/LLaMA
+    (tau < 1 lifts low-resource strata relative to their raw frequency;
+    tau=1 is proportional, tau=0 is uniform across strata).
 
     Every quantity is INTEGER-exact so the rule is engine-portable and
     hash-checkable: weights are 1 / isqrt(n_s) / n_s for tau 0 / 0.5 / 1
@@ -517,12 +505,13 @@ def temperature_mix(df: DataFrame, budget_tokens: int, tau: float = 0.5,
     canonical settings.
 
     Per-row selection is the keyed-md5 rule of
-    :func:`deterministic_sample`: reproducible at any parallelism, on
-    re-runs, and across engines.  Rows with a NULL stratum are dropped
-    (no meaningful n_s).  Expected kept tokens land under ``budget_tokens``
-    when some stratum clips at keep-all (its excess is NOT redistributed —
-    redistribution would make every threshold depend on the clip set and
-    the rule no longer a pure function of (stratum, counts)).
+    :func:`deterministic_sample` (salt ``mix``): reproducible at any
+    parallelism, on re-runs, and across engines.  Rows with a NULL stratum
+    are dropped (no meaningful n_s).  Expected kept tokens land under
+    ``budget_tokens`` when some stratum clips at keep-all (its excess is
+    NOT redistributed — redistribution would make every threshold depend
+    on the clip set and the rule no longer a pure function of (stratum,
+    counts)).
 
     Scale shape: one map-side-combinable groupBy on the stratum (stratum
     cardinality ~10^1-10^3 — languages or sources), a driver-side
@@ -532,16 +521,18 @@ def temperature_mix(df: DataFrame, budget_tokens: int, tau: float = 0.5,
     """
     import math
 
+    from ocr_spark.localrel import local_df
+
     if budget_tokens <= 0:
         raise ValueError(f"budget_tokens must be positive: {budget_tokens}")
     if tau not in (0.0, 0.5, 1.0):
         raise ValueError(f"tau must be 0, 0.5 or 1.0, got {tau!r}")
-    counts = (df.filter(F.col(stratum_col).isNotNull())
-              .groupBy(stratum_col)
-              .agg(F.sum(F.coalesce(token_count(F.col(text_col)),
+    counts = (df.filter(F.col("lang").isNotNull())
+              .groupBy("lang")
+              .agg(F.sum(F.coalesce(token_count(F.col("text")),
                                     F.lit(0))).alias("_n"))
               .collect())  # one row per stratum — tiny by construction
-    n_by = {r[stratum_col]: int(r["_n"]) for r in counts}
+    n_by = {r["lang"]: int(r["_n"]) for r in counts}
     w_by = {s: (1 if tau == 0.0 else
                 (math.isqrt(n) if tau == 0.5 else n))
             for s, n in n_by.items()}
@@ -551,12 +542,11 @@ def temperature_mix(df: DataFrame, budget_tokens: int, tau: float = 0.5,
         thr = 0 if (n == 0 or w_total == 0) else min(
             1 << 24, ((1 << 24) * budget_tokens * w_by[s]) // (w_total * n))
         rows.append((s, thr))
-    spark = df.sparkSession
-    stype = df.schema[stratum_col].dataType.simpleString()
-    thr_df = spark.createDataFrame(
-        rows, f"{stratum_col} {stype}, _thr long")  # explicit: rows may be []
-    return (df.join(F.broadcast(thr_df), stratum_col)
-            .filter(_sample_bucket(key_col, salt) < F.col("_thr"))
+    stype = df.schema["lang"].dataType.simpleString()
+    thr_df = local_df(df.sparkSession, rows,
+                      f"lang {stype}, _thr long")  # explicit: rows may be []
+    return (df.join(F.broadcast(thr_df), "lang")
+            .filter(_sample_bucket("mix") < F.col("_thr"))
             .select(*df.columns))
 
 
@@ -612,9 +602,7 @@ def _word_ngrams(toks: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def decontaminate(df: DataFrame, bench: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", bench_text_col: str = "text",
-                  n: int = 13) -> DataFrame:
+def decontaminate(df: DataFrame, bench: DataFrame, n: int = 13) -> DataFrame:
     """Benchmark decontamination — flag training documents sharing any
     word ``n``-gram with an evaluation set (the standard 13-gram overlap
     rule used for pre-training eval-set hygiene).
@@ -639,22 +627,22 @@ def decontaminate(df: DataFrame, bench: DataFrame, id_col: str = "doc_id",
     # lambda re-runs per sequence element
     bench_grams = (bench
                    .withColumn("_toks",
-                               _ws_token_array(F.col(bench_text_col)))
+                               _ws_token_array(F.col("text")))
                    .select(F.explode(
                        _word_ngrams(F.col("_toks"), n)).alias("_gram"))
                    .select(F.md5(F.col("_gram")).alias("_gram_md5"))
                    .distinct())
     doc_grams = (df
-                 .withColumn("_toks", _ws_token_array(F.col(text_col)))
+                 .withColumn("_toks", _ws_token_array(F.col("text")))
                  .select(
-                     F.col(id_col).alias("_did"),
+                     F.col("doc_id").alias("_did"),
                      F.explode(F.array_distinct(
                          _word_ngrams(F.col("_toks"), n))).alias("_gram"))
                  .select("_did", F.md5(F.col("_gram")).alias("_gram_md5")))
     hits = (doc_grams.join(F.broadcast(bench_grams), "_gram_md5")
             .groupBy("_did")
             .agg(F.count("*").cast("bigint").alias("n_contaminated_ngrams")))
-    out = (df.join(hits, F.col(id_col) == F.col("_did"), "left")
+    out = (df.join(hits, F.col("doc_id") == F.col("_did"), "left")
            .drop("_did"))
     return (out
             .withColumn("n_contaminated_ngrams",
@@ -664,7 +652,7 @@ def decontaminate(df: DataFrame, bench: DataFrame, id_col: str = "doc_id",
                         F.col("n_contaminated_ngrams") > 0))
 
 
-def repetition_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_features(df: DataFrame) -> DataFrame:
     """Within-document repetition signals (Gopher-style repetition rules,
     Rae et al. 2021 §A1.1): fraction of duplicate word 2-grams and
     3-grams, and fraction of duplicate non-empty lines.  Highly
@@ -683,9 +671,9 @@ def repetition_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     # regex tokenization would run O(tokens) times per document
     # (measured ~9x slower).  A column reference is a row-value read.
     base = (df.withColumn("_rep_toks",
-                          _ws_token_array(F.col(text_col)))
+                          _ws_token_array(F.col("text")))
             .withColumn("_rep_lines", F.filter(
-                F.transform(F.split(F.col(text_col), r"\r?\n"),
+                F.transform(F.split(F.col("text"), r"\r?\n"),
                             lambda l: F.trim(l)),
                 lambda l: l != "")))
 
@@ -710,7 +698,6 @@ def repetition_features(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def token_shards(df: DataFrame, budget_tokens: int,
-                 id_col: str = "doc_id", text_col: str = "text",
                  partitions: int | None = None) -> DataFrame:
     """Token-budget sharding: assign documents, in deterministic id
     order, to training shards of ≈``budget_tokens`` whitespace tokens —
@@ -738,14 +725,13 @@ def token_shards(df: DataFrame, budget_tokens: int,
     """
     if budget_tokens <= 0:
         raise ValueError(f"budget_tokens must be positive: {budget_tokens}")
-    return (_token_prefix_scan(df, id_col, text_col, partitions)
-            .select(id_col, "n_tokens",
+    return (_token_prefix_scan(df, partitions)
+            .select("doc_id", "n_tokens",
                     F.expr(f"_tokens_before DIV {int(budget_tokens)}")
                     .alias("shard_id")))
 
 
 def pack_sequences(df: DataFrame, seq_tokens: int,
-                   id_col: str = "doc_id", text_col: str = "text",
                    partitions: int | None = None) -> DataFrame:
     """Fixed-length sequence PACKING assignment: where each document's
     token stream lands when the corpus is concatenated in id order and
@@ -761,16 +747,15 @@ def pack_sequences(df: DataFrame, seq_tokens: int,
     partitioning-invariance as :func:`token_shards`."""
     if seq_tokens <= 0:
         raise ValueError(f"seq_tokens must be positive: {seq_tokens}")
-    return (_token_prefix_scan(df, id_col, text_col, partitions)
-            .select(id_col, "n_tokens",
+    return (_token_prefix_scan(df, partitions)
+            .select("doc_id", "n_tokens",
                     F.expr(f"_tokens_before DIV {int(seq_tokens)}")
                     .alias("seq_id"),
                     F.expr(f"_tokens_before % {int(seq_tokens)}")
                     .alias("seq_offset")))
 
 
-def _token_prefix_scan(df: DataFrame, id_col: str, text_col: str,
-                       partitions: int | None) -> DataFrame:
+def _token_prefix_scan(df: DataFrame, partitions: int | None) -> DataFrame:
     """``(id, n_tokens, _tokens_before)`` — the exact exclusive global
     token-prefix sum in id order, via the two-phase scan described in
     :func:`token_shards` (whose docstring is the design note)."""
@@ -784,11 +769,11 @@ def _token_prefix_scan(df: DataFrame, id_col: str, text_col: str,
     # would silently turn into INT64_MIN, poisoning every shard offset
     # after it (while sum() skips NULLs, so the driver totals would
     # disagree with the rows — corrupt assignments, no error).
-    rp = (df.select(F.col(id_col),
-                    F.coalesce(token_count(F.col(text_col)),
+    rp = (df.select("doc_id",
+                    F.coalesce(token_count(F.col("text")),
                                F.lit(0)).alias("_tok"))
-          .repartitionByRange(n_part, F.col(id_col))
-          .sortWithinPartitions(id_col)
+          .repartitionByRange(n_part, F.col("doc_id"))
+          .sortWithinPartitions("doc_id")
           .withColumn("_pid", F.spark_partition_id())
           .localCheckpoint(eager=False))
     totals = {r["_pid"]: r["t"] for r in
@@ -797,7 +782,7 @@ def _token_prefix_scan(df: DataFrame, id_col: str, text_col: str,
     for pid in sorted(totals):
         offsets[pid] = acc
         acc += int(totals[pid])
-    id_type = rp.schema[id_col].dataType.simpleString()
+    id_type = rp.schema["doc_id"].dataType.simpleString()
 
     def gen(batches):
         import pandas as pd
@@ -814,16 +799,16 @@ def _token_prefix_scan(df: DataFrame, id_col: str, text_col: str,
             before = carry + np.concatenate(
                 ([0], np.cumsum(tok)[:-1])).astype("int64")
             carry += int(tok.sum())
-            yield pd.DataFrame({id_col: pdf[id_col],
+            yield pd.DataFrame({"doc_id": pdf["doc_id"],
                                 "n_tokens": tok,
                                 "_tokens_before": before})
 
     return rp.mapInPandas(
-        gen, f"{id_col} {id_type}, n_tokens long, _tokens_before long")
+        gen, f"doc_id {id_type}, n_tokens long, _tokens_before long")
 
 
-def _sample_bucket(key_col: str, salt: str) -> Column:
-    return F.conv(F.substring(F.md5(F.concat(F.col(key_col).cast("string"),
+def _sample_bucket(salt: str) -> Column:
+    return F.conv(F.substring(F.md5(F.concat(F.col("doc_id").cast("string"),
                                              F.lit(salt))), 1, 6),
                   16, 10).cast("bigint")
 
@@ -846,7 +831,7 @@ def _lm_canon(text: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
 
 
-def surprisal_model(seed: DataFrame, text_col: str = "text", n: int = 3,
+def surprisal_model(seed: DataFrame, n: int = 3,
                     top_vocab: int = 50_000) -> dict:
     """Train a quantized character-``n``-gram surprisal model on *seed*
     — the CCNet recipe (Wenzek et al. 2020 §3.3) of scoring crawl text
@@ -871,7 +856,7 @@ def surprisal_model(seed: DataFrame, text_col: str = "text", n: int = 3,
     """
     if n < 1:
         raise ValueError(f"n must be positive, got {n}")
-    canon = _lm_canon(F.col(text_col))
+    canon = _lm_canon(F.col("text"))
     c = seed.select(canon.alias("_c")).filter(F.length("_c") >= n)
     grams = c.select(F.explode(F.transform(
         F.sequence(F.lit(1), F.length("_c") - F.lit(n - 1)),
@@ -890,8 +875,7 @@ def surprisal_model(seed: DataFrame, text_col: str = "text", n: int = 3,
     return {"grams": model, "oov": total.bit_length(), "n": n}
 
 
-def surprisal_score(df: DataFrame, model: dict,
-                    text_col: str = "text") -> DataFrame:
+def surprisal_score(df: DataFrame, model: dict) -> DataFrame:
     """Append ``lm_grams`` (bigint) and ``surprisal_x1000`` (bigint,
     milli-bits per gram; null when the text is too short to gram) from a
     :func:`surprisal_model`.  Low scores = fluent-under-the-seed text;
@@ -921,7 +905,7 @@ def surprisal_score(df: DataFrame, model: dict,
                            for i in range(len(s) - n + 1)))
         return pd.Series(out, dtype="int64")
 
-    out = (df.withColumn("_lm_c", _lm_canon(F.col(text_col)))
+    out = (df.withColumn("_lm_c", _lm_canon(F.col("text")))
            .withColumn("lm_grams",
                        F.greatest(F.length("_lm_c") - F.lit(n - 1),
                                   F.lit(0)).cast("bigint"))
@@ -934,16 +918,15 @@ def surprisal_score(df: DataFrame, model: dict,
 
 # -------------------------------------------------- quality classifier
 
-def _tok_counts(df: DataFrame, text_col: str) -> DataFrame:
+def _tok_counts(df: DataFrame) -> DataFrame:
     """Corpus token counts under the shared whitespace contract —
     ``(_t, _c)`` rows; one explode + one map-side-combinable groupBy."""
     return (df.select(F.explode(
-                _ws_token_array(F.col(text_col))).alias("_t"))
+                _ws_token_array(F.col("text"))).alias("_t"))
             .groupBy("_t").agg(F.count("*").alias("_c")))
 
 
 def quality_classifier_model(seed: DataFrame, background: DataFrame,
-                             text_col: str = "text",
                              top_vocab: int = 50_000) -> dict:
     """Train the seed-vs-background QUALITY CLASSIFIER of the GPT-3 /
     CCNet / PaLM curation recipe (Brown et al. 2020 §A; Wenzek et al.
@@ -976,8 +959,8 @@ def quality_classifier_model(seed: DataFrame, background: DataFrame,
     the capped vocabulary collects to the driver for closure shipping.
     Returns ``{"tokens": {tok: bits}, "ts": Ts, "tb": Tb, "v": V}``.
     """
-    sc = _tok_counts(seed, text_col).localCheckpoint(eager=False)
-    bc = _tok_counts(background, text_col).localCheckpoint(eager=False)
+    sc = _tok_counts(seed).localCheckpoint(eager=False)
+    bc = _tok_counts(background).localCheckpoint(eager=False)
     merged = (sc.withColumnRenamed("_c", "_cs")
               .join(bc.withColumnRenamed("_c", "_cb"), "_t", "full_outer")
               .select("_t",
@@ -997,8 +980,7 @@ def quality_classifier_model(seed: DataFrame, background: DataFrame,
     return {"tokens": tokens, "ts": ts, "tb": tb, "v": v}
 
 
-def quality_classifier_score(df: DataFrame, model: dict,
-                             text_col: str = "text") -> DataFrame:
+def quality_classifier_score(df: DataFrame, model: dict) -> DataFrame:
     """Append ``clf_tokens`` (bigint) and ``logodds_x1000`` (bigint,
     milli-bits per token; null for token-less text) from a
     :func:`quality_classifier_model`.  HIGH scores = seed-like text;
@@ -1027,7 +1009,7 @@ def quality_classifier_score(df: DataFrame, model: dict,
             out.append(sum(get(t, 0) for t in s.split(" ")))
         return pd.Series(out, dtype="int64")
 
-    out = (df.withColumn("_clf_c", _lm_canon(F.col(text_col)))
+    out = (df.withColumn("_clf_c", _lm_canon(F.col("text")))
            .withColumn("clf_tokens",
                        F.when(F.length("_clf_c") == 0, F.lit(0))
                        .otherwise(F.size(F.split(F.col("_clf_c"), " ")))
@@ -1041,12 +1023,10 @@ def quality_classifier_score(df: DataFrame, model: dict,
 
 # ------------------------------------------------------- corpus audit stats
 
-def corpus_stats(df: DataFrame, stratum_col: str = "lang",
-                 text_col: str = "text",
-                 percentiles: tuple[int, ...] = (50, 90)) -> DataFrame:
-    """Per-stratum corpus audit rollup — the summary table a curation run
+def corpus_stats(df: DataFrame) -> DataFrame:
+    """Per-``lang`` corpus audit rollup — the summary table a curation run
     publishes per language/source: document count, token and char
-    volumes, and EXACT discrete length percentiles.
+    volumes, and EXACT discrete length percentiles (p50, p90).
 
     Percentiles are integers (percent) and the rule is integer-exact on
     both engines: ``pK_chars`` is the smallest length ``v`` with
@@ -1066,9 +1046,9 @@ def corpus_stats(df: DataFrame, stratum_col: str = "lang",
     per-stratum ``sort + pick`` (one unsplittable task per hot language
     at 10^12 docs).
     """
-    base = df.select(F.col(stratum_col).alias("stratum"),
-                     F.length(F.col(text_col)).cast("bigint").alias("_len"),
-                     token_count(F.col(text_col)).alias("_tok"))
+    base = df.select(F.col("lang").alias("stratum"),
+                     F.length(F.col("text")).cast("bigint").alias("_len"),
+                     token_count(F.col("text")).alias("_tok"))
     base = base.localCheckpoint(eager=False)   # totals + histogram consumers
     totals = (base.groupBy("stratum")
               .agg(F.count("*").alias("n_docs"),
@@ -1090,10 +1070,9 @@ def corpus_stats(df: DataFrame, stratum_col: str = "lang",
         F.min(F.when(
             F.col("_cum") >= F.expr(f"(n_docs * {int(p)} + 99) div 100"),
             F.col("_len"))).alias(f"p{p}_chars")
-        for p in percentiles])
+        for p in (50, 90)])
     return (totals.join(picks.withColumnRenamed("stratum", "_ps"),
                         F.col("stratum").eqNullSafe(F.col("_ps")))
             .drop("_ps")
-            .select(F.col("stratum").alias(stratum_col), "n_docs",
-                    "total_tokens", "total_chars",
-                    *[f"p{p}_chars" for p in percentiles]))
+            .select(F.col("stratum").alias("lang"), "n_docs",
+                    "total_tokens", "total_chars", "p50_chars", "p90_chars"))

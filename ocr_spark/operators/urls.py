@@ -109,12 +109,11 @@ def host_domain_suffixes(host: Column) -> Column:
                                            ".")))
 
 
-def blocklist_annotate(df: DataFrame, blocked: DataFrame,
-                       url_col: str = "url", id_col: str = "doc_id",
-                       domain_col: str = "domain") -> DataFrame:
-    """Annotate each row with the blocklist domain its url host falls
-    under — the UT1/RefinedWeb-style adult/spam domain filter (Penedo et
-    al. 2023 §3.1 run domain blocklists as the first URL gate).
+def blocklist_annotate(df: DataFrame, blocked: DataFrame) -> DataFrame:
+    """Annotate each ``doc_id`` row with the blocklist ``domain`` its
+    ``url`` host falls under — the UT1/RefinedWeb-style adult/spam domain
+    filter (Penedo et al. 2023 §3.1 run domain blocklists as the first URL
+    gate).
 
     A host matches a blocklist entry when it IS the entry or is a
     subdomain of it (``news.bad.example`` matches ``bad.example`` but
@@ -133,13 +132,13 @@ def blocklist_annotate(df: DataFrame, blocked: DataFrame,
     same reason.  Nothing corpus-sized ever shuffles.  Punycode/IDN
     hosts are matched literally (blocklists ship punycode forms).
     """
-    hosts = (df.select(F.col(id_col).alias("_bid"),
-                       bare_host(F.col(url_col)).alias("_bhost"))
+    hosts = (df.select(F.col("doc_id").alias("_bid"),
+                       bare_host(F.col("url")).alias("_bhost"))
              .withColumn("_bsuf",
                          F.explode(host_domain_suffixes(F.col("_bhost"))))
              .select("_bid", "_bsuf"))
     entries = (blocked
-               .select(F.lower(F.trim(F.col(domain_col))).alias("_bsuf"))
+               .select(F.lower(F.trim(F.col("domain"))).alias("_bsuf"))
                .filter(F.col("_bsuf") != "").distinct())
     # two same-length suffixes of one host are necessarily equal, so
     # max_by on length is total — no hidden tie-break
@@ -147,7 +146,7 @@ def blocklist_annotate(df: DataFrame, blocked: DataFrame,
             .groupBy("_bid")
             .agg(F.max_by(F.col("_bsuf"),
                           F.length(F.col("_bsuf"))).alias("blocked_domain")))
-    return (df.join(hits, F.col(id_col) == F.col("_bid"), "left")
+    return (df.join(hits, F.col("doc_id") == F.col("_bid"), "left")
             .drop("_bid")
             .withColumn("url_blocked", F.col("blocked_domain").isNotNull()))
 
@@ -163,8 +162,7 @@ _CANON_HREF_FIRST = (r"(?is)<link\b[^>]*\bhref\s*=\s*['\"]([^'\"]*)['\"]"
                      r"[^>]*\brel\s*=\s*['\"]canonical['\"]")
 
 
-def meta_directives(df: DataFrame, html_col: str = "html",
-                    url_col: str = "url") -> DataFrame:
+def meta_directives(df: DataFrame) -> DataFrame:
     """Crawl-directive extraction — the respect-the-publisher gates a
     training-corpus ingest applies before anything else:
 
@@ -179,14 +177,14 @@ def meta_directives(df: DataFrame, html_col: str = "html",
       one article collapse to the canonical member without content
       hashing.
 
-    Pure JVM ``regexp_extract`` over the html column (string or binary —
+    Pure JVM ``regexp_extract`` over the ``html`` column (string or binary —
     binary is UTF-8-cast; charset-exotic pages degrade to not-detected),
     so the gate costs a narrow scan projection and can run BEFORE the
     Python extraction stage.  Contract: QUOTED attribute values (single
     or double), first match wins; unquoted values — vanishingly rare for
     these two tags — are not detected.  The HTTP ``X-Robots-Tag`` header
     form lives outside the page bytes and is the crawler's job."""
-    h = F.col(html_col).cast("string")
+    h = F.col("html").cast("string")
     robots = F.lower(F.coalesce(
         F.nullif(F.regexp_extract(h, _ROBOTS_NAME_FIRST, 1), F.lit("")),
         F.nullif(F.regexp_extract(h, _ROBOTS_CONTENT_FIRST, 1), F.lit("")),
@@ -199,44 +197,41 @@ def meta_directives(df: DataFrame, html_col: str = "html",
                         robots.rlike(r"(^|[,\s])noindex([,\s]|$)"))
             .withColumn("canonical_url", canonical)
             .withColumn("dedup_url",
-                        F.coalesce(F.col("canonical_url"), F.col(url_col))))
+                        F.coalesce(F.col("canonical_url"), F.col("url"))))
 
 
-def host_profile(df: DataFrame, url_col: str = "url",
-                 ok_col: str = "quality_ok",
-                 text_col: str = "text") -> DataFrame:
+def host_profile(df: DataFrame) -> DataFrame:
     """Per-host reputation rollup — the domain-statistics table web-corpus
     pipelines maintain for URL-level scoring and audits (doc counts,
     admission rates, volume per registrable host).
 
-    Output: ``host``, ``n_docs``, ``n_ok`` (rows where *ok_col* is
-    true), ``total_chars``, ``ok_x1000`` (floor ratio).  *ok_col* is any
-    boolean verdict the caller computed (quality gate, keep flag, …) —
-    the operator is the rollup, not the judgement.
+    Output: ``host`` (of ``url``), ``n_docs``, ``n_ok`` (rows where
+    ``quality_ok`` is true), ``total_chars`` (of ``text``), ``ok_x1000``
+    (floor ratio).  ``quality_ok`` is whatever boolean verdict the caller
+    computed — the operator is the rollup, not the judgement.
 
     Scale: one map-side-combinable aggregate keyed on
     :func:`bare_host` — host cardinality (~10^8) is far below doc
     cardinality, so partial aggregation collapses each input partition
     before the exchange (plan-pinned).
     """
-    return (df.groupBy(bare_host(F.col(url_col)).alias("host"))
+    return (df.groupBy(bare_host(F.col("url")).alias("host"))
             .agg(F.count("*").cast("bigint").alias("n_docs"),
-                 F.sum(F.col(ok_col).cast("bigint")).alias("n_ok"),
-                 F.sum(F.length(F.col(text_col)).cast("bigint"))
+                 F.sum(F.col("quality_ok").cast("bigint")).alias("n_ok"),
+                 F.sum(F.length(F.col("text")).cast("bigint"))
                  .alias("total_chars"))
             .withColumn("ok_x1000",
                         F.floor(F.col("n_ok") * 1000 / F.col("n_docs"))))
 
 
-def host_cap(df: DataFrame, max_per_host: int, url_col: str = "url",
-             id_col: str = "doc_id",
+def host_cap(df: DataFrame, max_per_host: int,
              order_col: Optional[str] = None) -> DataFrame:
-    """Keep at most *max_per_host* rows per url host — the per-host
+    """Keep at most *max_per_host* rows per ``url`` host — the per-host
     output cap every crawl-curation pipeline applies so that mega-hosts
     (wikis, forges, link farms) cannot dominate the training mix.
 
     Selection is deterministic: rows are ranked within their host by
-    ``order_col`` ascending (when given) then ``id_col`` ascending, and
+    ``order_col`` ascending (when given) then ``doc_id`` ascending, and
     ranks ≤ *max_per_host* survive.  Columns pass through unchanged.
 
     Scale: a window + ``rank <= k`` FILTER is the shape Spark ≥ 3.5's
@@ -251,8 +246,8 @@ def host_cap(df: DataFrame, max_per_host: int, url_col: str = "url",
     if max_per_host <= 0:
         raise ValueError(f"max_per_host must be positive, got {max_per_host}")
     order = ([F.col(order_col).asc_nulls_last()] if order_col else []) \
-        + [F.col(id_col).asc()]
-    w = Window.partitionBy(bare_host(F.col(url_col))).orderBy(*order)
+        + [F.col("doc_id").asc()]
+    w = Window.partitionBy(bare_host(F.col("url"))).orderBy(*order)
     return (df.withColumn("_hc_rn", F.row_number().over(w))
             .filter(F.col("_hc_rn") <= max_per_host)
             .drop("_hc_rn"))

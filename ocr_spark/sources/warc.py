@@ -34,18 +34,22 @@ _CRLF2 = b"\r\n\r\n"
 PAGE_RECORD_TYPES = {"response", "resource"}
 
 
-def _maybe_gunzip(data: bytes, max_ratio: int = 64) -> bytes:
+# gzip-bomb cap: inflate at most this many times the compressed size
+MAX_GUNZIP_RATIO = 64
+
+
+def _maybe_gunzip(data: bytes) -> bytes:
     """Inflate a (member-per-record, CC-style) gzip WARC, BOUNDED.
 
     Legit web archives inflate ~3-5:1; a hostile gzip bomb inflates up to
     ~1000:1, so an unbounded ``GzipFile.read()`` would turn a 10 MB blob
     into gigabytes on one executor.  Members are inflated incrementally
-    via ``decompressobj`` up to ``max_ratio``× the compressed size —
-    records past the cap are dropped (truncated archives already stop
-    cleanly downstream), never job-fatal."""
+    via ``decompressobj`` up to :data:`MAX_GUNZIP_RATIO`× the compressed
+    size — records past the cap are dropped (truncated archives already
+    stop cleanly downstream), never job-fatal."""
     if data[:2] != b"\x1f\x8b":
         return data
-    cap = max_ratio * max(len(data), 1 << 20)
+    cap = MAX_GUNZIP_RATIO * max(len(data), 1 << 20)
     out = bytearray()
     rest: bytes = data
     while rest[:2] == b"\x1f\x8b" and len(out) < cap:

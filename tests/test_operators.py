@@ -118,14 +118,6 @@ def test_minhash_signature_deterministic(spark, docs):
     assert s1[0] == s1[1]  # identical text → identical signature
 
 
-def test_minhash_candidates_validates_k(spark, docs):
-    sigs = dedup.minhash_signatures(docs, k=32)
-    with pytest.raises(ValueError, match="signatures have length 32"):
-        dedup.minhash_candidates(sigs, bands=32, k=128, validate=True)
-    # matching k passes validation
-    dedup.minhash_candidates(sigs, bands=8, k=32, validate=True).count()
-
-
 # --- cluster resolution ------------------------------------------------------------
 
 def test_duplicate_clusters_transitive(spark):
@@ -1252,7 +1244,7 @@ def test_blank_docs_never_pair(spark):
     # all-zero sigs are excluded before bucketing
     sigs = dedup.minhash_signatures(docs)
     bucketed = {r["id"] for r in
-                dedup._sig_band_buckets(sigs, bands=32, k=128).collect()}
+                dedup._sig_band_buckets(sigs).collect()}
     assert bucketed == {0, 1}
 
     # end-to-end: only the real near-dup pair is found, all blanks kept

@@ -1,18 +1,21 @@
 """Option budget: every parameter of the public entry points and every CLI
-flag, pinned by name.
+flag, pinned by name; and below the entry points, no defaulted parameter
+in ``ocr_spark/`` that no caller ever sets.
 
 Like the job-count budgets, this fails on any new option until the budget
 below is edited with it, so an option nobody sets cannot arrive unseen.
-No Spark session starts: signatures are read with ``inspect`` and the flag
-sets from ``--help`` in a subprocess.
+No Spark session starts: signatures are read with ``inspect``, the flag
+sets from ``--help`` in a subprocess, and call sites with ``ast``.
 """
 
 from __future__ import annotations
 
+import ast
 import inspect
 import re
 import subprocess
 import sys
+from collections import defaultdict
 
 import pytest
 
@@ -63,3 +66,133 @@ def test_cli_flags(module):
     # option lines of the help: "  --flag VALUE   help" or "  -h, --help"
     flags = set(re.findall(r"^\s+(?:-\w, )?(--[\w-]+)", out, re.M))
     assert flags - {"--help"} == FLAGS[module]
+
+
+# Where a defaulted parameter may be set from: the programs, then the tests.
+CALLER_ROOTS = ("ocr_spark", "__spark_entry__.py", "bench.py", "tools",
+                "perfbench", "tests")
+
+
+def _py_files(root: str):
+    path = REPO / root
+    return [path] if path.is_file() else sorted(path.rglob("*.py"))
+
+
+def _functions(tree: ast.AST):
+    """(def node, its class or None) for every def, nested ones included."""
+    out = []
+
+    def visit(node, cls):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                out.append((child, cls))
+                visit(child, None)
+            else:
+                visit(child, child if isinstance(child, ast.ClassDef) else cls)
+    visit(tree, None)
+    return out
+
+
+class _Def:
+    """One ``def`` in ocr_spark/: how a call maps onto its parameters."""
+
+    def __init__(self, path, node, cls):
+        a = node.args
+        pos = a.posonlyargs + a.args
+        self.key = (f"{path.relative_to(REPO)}:"
+                    f"{cls.name + '.' if cls else ''}{node.name}")
+        static = any(isinstance(d, ast.Name) and d.id == "staticmethod"
+                     for d in node.decorator_list)
+        # a method called as obj.m(x) maps x onto the parameter after self
+        self.positional = [p.arg for p in pos][1 if cls and not static else 0:]
+        self.names = set(self.positional) | {p.arg for p in a.kwonlyargs}
+        self.defaulted = {p.arg for p in pos[len(pos) - len(a.defaults):]}
+        self.defaulted |= {p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                           if d is not None}
+
+
+def _calls(tree: ast.AST):
+    """(callee name, call, enclosing defs innermost last) for every call
+    written as ``f(...)`` or ``obj.f(...)``."""
+    out = []
+
+    def visit(node, chain):
+        for child in ast.iter_child_nodes(node):
+            inner = chain
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = chain + [child]
+            elif isinstance(child, ast.Call):
+                f = child.func
+                name = (f.id if isinstance(f, ast.Name)
+                        else f.attr if isinstance(f, ast.Attribute) else None)
+                if name:
+                    out.append((name, child, chain))
+            visit(child, inner)
+    visit(tree, [])
+    return out
+
+
+def unset_options() -> list[str]:
+    """Defaulted parameters of ocr_spark/ that no call ever sets.
+
+    A call sets a parameter when it passes it by keyword or by position,
+    from a program or a test.  A call is matched by name to EVERY def of
+    that name (mapped positionally per def), so a name defined in two
+    modules can only over-count "set".  Passing on the caller's own
+    defaulted parameter counts only once that parameter is itself set —
+    iterated to a fixpoint, so a chain of pass-throughs that starts at no
+    real caller sets nothing.
+    """
+    trees = {path: ast.parse(path.read_text())
+             for root in CALLER_ROOTS for path in _py_files(root)}
+    defs_by_name, def_of_node = defaultdict(list), {}
+    for path in _py_files("ocr_spark"):
+        for node, cls in _functions(trees[path]):
+            d = _Def(path, node, cls)
+            defs_by_name[node.name].append(d)
+            def_of_node[node] = d
+    calls = [c for tree in trees.values() for c in _calls(tree)]
+    set_ = set()
+
+    def passed_through(value, chain) -> bool:
+        if not isinstance(value, ast.Name):
+            return False
+        for fn in reversed(chain):
+            a = fn.args
+            if value.id in {p.arg for p in a.posonlyargs + a.args
+                            + a.kwonlyargs}:
+                d = def_of_node.get(fn)
+                return (d is not None and value.id in d.defaulted
+                        and (d.key, value.id) not in set_)
+        return False
+
+    changed = True
+    while changed:
+        changed = False
+        for name, call, chain in calls:
+            for d in defs_by_name.get(name, ()):
+                got = set()
+                for i, arg in enumerate(call.args):
+                    if isinstance(arg, ast.Starred):
+                        got |= set(d.positional[i:])
+                        break
+                    if (i < len(d.positional)
+                            and not passed_through(arg, chain)):
+                        got.add(d.positional[i])
+                for kw in call.keywords:
+                    if kw.arg is None:             # **kwargs: anything
+                        got |= d.names
+                    elif not passed_through(kw.value, chain):
+                        got.add(kw.arg)
+                new = {(d.key, p) for p in got & d.defaulted} - set_
+                if new:
+                    set_ |= new
+                    changed = True
+    return sorted(f"{d.key}({p})" for d in def_of_node.values()
+                  for p in d.defaulted if (d.key, p) not in set_)
+
+
+def test_every_option_has_a_caller():
+    """A defaulted parameter nothing sets is a settable value with one
+    value ever used: hard-wire it instead."""
+    assert unset_options() == []
