@@ -128,13 +128,12 @@ def main() -> None:
         pagegen.generate_df(spark, 1000, partitions=8) \
             .write.mode("overwrite").parquet(f"{tmp}/warm.parquet")
         job.run_pipeline(spark, f"{tmp}/warm.parquet", f"{tmp}/warm_out",
-                         RUN_DATE, partitions=8)
+                         RUN_DATE)
 
         digests: list[str] = []
 
         def _pipeline():
-            s = job.run_pipeline(spark, pages_path, f"{tmp}/out", RUN_DATE,
-                                 partitions=max(CPUS * 2, 64), mode="standard")
+            s = job.run_pipeline(spark, pages_path, f"{tmp}/out", RUN_DATE)
             digests.append(s["digest"])
             extras["tier2_count"] = s["tier2_count"]
 

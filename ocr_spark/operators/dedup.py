@@ -6,14 +6,15 @@ Five families, each a standard pretraining-pipeline building block:
   (one shuffle; the canonical keeper is min(id) per group)
 * :func:`minhash_signatures` + :func:`minhash_candidates` +
   :func:`near_duplicates_minhash` — MinHash (k permutations, numpy-
-  vectorized in a pandas UDF) banded into LSH buckets; candidate pairs come
-  from a band-key self-join (shuffle on band key, never a cross join), then
-  exact-Jaccard verification
+  vectorized in a pandas UDF) banded JVM-side into LSH buckets; candidate
+  pairs come from a band-key self-join (shuffle on band key, never a cross
+  join), then exact shingle-Jaccard verification
+  (:func:`_shingle_jaccard_udf`)
 * :func:`simhash64` + :func:`near_duplicates_simhash` — 64-bit SimHash;
   Hamming-≤k retrieval via the pigeonhole trick (split into k+1 chunks,
   exact-match join on any chunk), verification with native ``bit_count``
 * :func:`ngram_jaccard_pairs` — exact token-n-gram Jaccard via
-  explode→self-join→count (fully SQL-expressible; also the MinHash verifier)
+  explode→self-join→count (fully SQL-expressible)
 * :func:`near_duplicates_embedding` — cosine near-dup over an
   ``array<float>`` column; brute pair path for verification and a BANDED
   (OR-amplified) random-hyperplane LSH path for scale
@@ -98,10 +99,10 @@ _MERSENNE = (1 << 61) - 1
 _MAX_HASH = (1 << 32) - 1
 
 
-def _hash_params(k: int) -> tuple[np.ndarray, np.ndarray]:
+def _hash_params() -> tuple[np.ndarray, np.ndarray]:
     rng = np.random.RandomState(SEED)
-    a = rng.randint(1, _MERSENNE, size=k, dtype=np.int64)
-    b = rng.randint(0, _MERSENNE, size=k, dtype=np.int64)
+    a = rng.randint(1, _MERSENNE, size=K, dtype=np.int64)
+    b = rng.randint(0, _MERSENNE, size=K, dtype=np.int64)
     return a, b
 
 
@@ -167,21 +168,21 @@ def _shingles(text: str, width: int,
     return np.unique(grams)
 
 
-def _minhash_from_shingles(sh: np.ndarray, a: np.ndarray, b: np.ndarray,
-                           k: int) -> np.ndarray:
-    """(a·x + b) mod p, min over shingles — the ONE MinHash kernel, shared
-    by the signature and the fused band-key paths so their hash universes
-    cannot drift.  Zeros for the empty document."""
+def _minhash_from_shingles(sh: np.ndarray, a: np.ndarray,
+                           b: np.ndarray) -> np.ndarray:
+    """(a·x + b) mod p, min over shingles — the ONE MinHash kernel, behind
+    :func:`minhash_signatures`.  Zeros for the empty document, which
+    :func:`_sig_band_buckets` never bands."""
     if sh.size == 0:
-        return np.zeros(k, dtype=np.uint64)
+        return np.zeros(K, dtype=np.uint64)
     x = (sh % np.uint64(_MERSENNE)).astype(np.int64)
     vals = (a[:, None] * x[None, :] + b[:, None]) % _MERSENNE % _MAX_HASH
     return vals.min(axis=1).astype(np.uint64)
 
 
-def minhash_signatures(df: DataFrame, k: int = K) -> DataFrame:
-    """(id, sig array<bigint>[k]) — numpy-vectorized MinHash per Arrow batch."""
-    a, b = _hash_params(k)
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """(id, sig array<bigint>[K]) — numpy-vectorized MinHash per Arrow batch."""
+    a, b = _hash_params()
 
     @pandas_udf(T.ArrayType(T.LongType()))
     def _sig(text: pd.Series) -> pd.Series:
@@ -189,66 +190,20 @@ def minhash_signatures(df: DataFrame, k: int = K) -> DataFrame:
         cache: dict[str, int] = {}  # token-hash memo shared across the batch
         for t in text:
             sh = _shingles(t or "", SHINGLE_WIDTH, cache)
-            out.append(_minhash_from_shingles(sh, a, b, k).astype(
+            out.append(_minhash_from_shingles(sh, a, b).astype(
                 np.int64).tolist())
         return pd.Series(out)
 
     return df.select(F.col("doc_id").alias("id"), _sig(F.col("text")).alias("sig"))
 
 
-def minhash_band_keys(df: DataFrame, k: int = K,
-                      bands: int = BANDS) -> DataFrame:
-    """(id, keys array<bigint>[bands]) — fused signature+banding.
-
-    Computes the MinHash signature AND folds each band's slice to its LSH
-    key inside one numpy pass, so the Python stage ships ``bands`` longs
-    per row instead of ``k`` (4x smaller Arrow transfer at the defaults)
-    and the JVM does no per-band array slicing/hashing.  Key universe is
-    private to this function — callers only ever equi-join keys against
-    keys from the same run.
-    """
-    a, b = _hash_params(k)
-    bands = min(bands, k)  # more bands than hashes is unsatisfiable
-    rows_per_band = max(k // bands, 1)
-    # per-band fold coefficients (odd → order-sensitive mix of the slice)
-    fold = _gram_coef(rows_per_band)
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def _keys(text: pd.Series) -> pd.Series:
-        out = []
-        cache: dict[str, int] = {}
-        for t in text:
-            sh = _shingles(t or "", SHINGLE_WIDTH, cache)
-            if sh.size == 0:
-                # gramless (blank/whitespace-only) doc: the exact kernel
-                # defines J=0 against everything (empty union), so it can
-                # never verify at any threshold > 0 — emit no band keys.
-                # Banding it would also flood ONE bucket with every blank
-                # doc in the corpus (identical all-zero signatures), a
-                # quadratic candidate explosion at web scale.
-                out.append([])
-                continue
-            sig = _minhash_from_shingles(sh, a, b, k)
-            folded = (sig[:bands * rows_per_band]
-                      .reshape(bands, rows_per_band) * fold[None, :]) \
-                .sum(axis=1, dtype=np.uint64)
-            out.append([int(v) - (1 << 64) if v >= (1 << 63) else int(v)
-                        for v in folded])
-        return pd.Series(out)
-
-    return df.select(F.col("doc_id").alias("id"),
-                     _keys(F.col("text")).alias("keys"))
-
-
-def band_candidates(keyed: DataFrame) -> DataFrame:
-    """(band, key) equi-self-join of :func:`minhash_band_keys` output →
-    candidate pairs (id_a < id_b), deduplicated.  Same shuffle shape as
-    :func:`minhash_candidates` (never a cross join).  The bucket frame is
-    materialized once — without it both self-join sides re-run the
-    signature UDF over the whole corpus."""
-    buckets = (keyed
-               .select("id", F.posexplode("keys").alias("band", "key"))
-               .localCheckpoint(eager=False))
+def band_candidates(buckets: DataFrame) -> DataFrame:
+    """(band, key) equi-self-join of ``(id, band, key)`` LSH bucket rows →
+    candidate pairs (id_a < id_b), deduplicated — the one LSH self-join,
+    for MinHash (:func:`minhash_candidates`) and the embedding hyperplane
+    keys alike.  It shuffles on (band, key), never a cross join.  Both
+    join sides read *buckets*: materialize any Python stage upstream of
+    it once, or it runs twice."""
     left = buckets.alias("l")
     right = buckets.alias("r")
     return (left.join(right, ["band", "key"])
@@ -260,16 +215,18 @@ def band_candidates(keyed: DataFrame) -> DataFrame:
 def _sig_band_buckets(sigs: DataFrame) -> DataFrame:
     """(id, band, key) LSH bucket rows derived JVM-side from
     :data:`K`-long signatures in :data:`BANDS` bands: band key = xxhash64
-    of the signature slice, salted by the band index.  Shared by
-    :func:`minhash_candidates` and :func:`near_dedup_incremental` so batch
-    and history keys always live in the same universe.
+    of the signature slice, salted by the band index.  The one band-key
+    rule of every MinHash search — :func:`minhash_candidates` (and so
+    :func:`near_duplicates_minhash`) and :func:`near_dedup_incremental`'s
+    batch and history keys all come from here, so they always live in the
+    same universe.
 
     All-zero signatures (``_minhash_from_shingles``'s encoding of a
-    gramless document) are excluded: the exact kernel defines their
-    Jaccard as 0 against everything, so they can never verify — and in
-    :func:`near_dedup_incremental`'s signature-ESTIMATE tier two blank
-    docs would otherwise estimate J=1.0 (all positions equal) and
-    wrongly drop.  Excluding them here also keeps a corpus with many
+    gramless document) are excluded — the one blank-document rule: the
+    exact kernel defines their Jaccard as 0 against everything, so they
+    can never verify — and in :func:`near_dedup_incremental`'s
+    signature-ESTIMATE tier two blank docs would otherwise estimate J=1.0
+    (all positions equal) and wrongly drop.  Excluding them here also keeps a corpus with many
     blank docs from flooding one bucket per band with identical keys
     (the quadratic self-join hazard)."""
     sigs = sigs.filter(F.exists("sig", lambda x: x != F.lit(0)))
@@ -287,22 +244,10 @@ def _sig_band_buckets(sigs: DataFrame) -> DataFrame:
 
 
 def minhash_candidates(sigs: DataFrame) -> DataFrame:
-    """LSH banding → candidate pairs (id_a < id_b), deduplicated.
-
-    Band key = xxhash64 of the signature slice; the self-join shuffles on
-    (band, key) — never a cross join.  The signatures must be
-    :data:`K` long, as :func:`minhash_signatures` builds them by default;
-    every caller in the library passes such signatures, since they all
-    share the module's :data:`K` / :data:`BANDS`, so the signature length
-    and the banding cannot disagree between them.
-    """
-    buckets = _sig_band_buckets(sigs)
-    left = buckets.alias("l")
-    right = buckets.alias("r")
-    return (left.join(right, ["band", "key"])
-            .filter(F.col("l.id") < F.col("r.id"))
-            .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-            .distinct())
+    """LSH banding of :func:`minhash_signatures` output → candidate pairs
+    (id_a < id_b), deduplicated: :func:`_sig_band_buckets` keys,
+    self-joined by :func:`band_candidates`."""
+    return band_candidates(_sig_band_buckets(sigs))
 
 
 def ngram_jaccard_pairs(df: DataFrame, n: int = 3,
@@ -348,19 +293,19 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3,
             .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
 
 
-def near_duplicates_minhash(df: DataFrame, k: int = K, bands: int = BANDS,
+def near_duplicates_minhash(df: DataFrame,
                             threshold: float = 0.7) -> DataFrame:
-    """MinHash-LSH candidates verified by exact n-gram Jaccard.
+    """MinHash-LSH candidates verified by exact shingle Jaccard.
 
-    Returns (id_a, id_b, jaccard ≥ threshold).  The verify join re-reads
-    only candidate texts — at web scale the candidate set is orders of
-    magnitude smaller than the corpus.  Uses the fused band-key path
-    (:func:`minhash_band_keys`): one Python stage emitting ``bands`` longs
-    per row, no separate signature materialization.
+    Returns (id_a, id_b, jaccard ≥ threshold).  The signatures are the
+    one Python pass over the text; they are checkpointed, so both sides
+    of the band self-join read them without re-running it, and the band
+    keys are JVM expressions (:func:`minhash_candidates`).  The verify
+    join re-reads only candidate texts — at web scale the candidate set
+    is orders of magnitude smaller than the corpus.
     """
-    keyed = minhash_band_keys(df, k=k, bands=bands)
-    cands = band_candidates(keyed)
-    return _verify_candidate_pairs(df, cands, threshold)
+    sigs = minhash_signatures(df).localCheckpoint(eager=False)
+    return _verify_candidate_pairs(df, minhash_candidates(sigs), threshold)
 
 
 def _shingle_jaccard_udf():
@@ -529,10 +474,12 @@ def near_duplicates_embedding(df: DataFrame, threshold: float = 0.95,
         keys = signs.reshape(len(mat), EMBED_BANDS, PLANES_PER_BAND) @ weights
         return pd.Series(list(keys.astype(np.int64).tolist()))
 
-    # band_candidates materializes the exploded (band, key) frame once, so
-    # both self-join sides reuse a single hyperplane-UDF pass
-    keyed = ids.select("id", _band_keys("v").alias("keys"))
-    cands = band_candidates(keyed)
+    # the exploded (band, key) frame is materialized once, so both
+    # self-join sides reuse a single hyperplane-UDF pass
+    buckets = (ids.select("id", _band_keys("v").alias("keys"))
+               .select("id", F.posexplode("keys").alias("band", "key"))
+               .localCheckpoint(eager=False))
+    cands = band_candidates(buckets)
     va = ids.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"))
     vb = ids.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"))
 
@@ -735,8 +682,8 @@ def near_dedup_incremental(new_df: DataFrame, history_sigs: DataFrame,
        full exact-Jaccard path over the texts in hand
        (:func:`_verify_candidate_pairs`), keepers by cluster minima.
 
-    Fold the survivors' signatures into the next day's history with
-    ``history_sigs.unionByName(minhash_signatures(kept))``.
+    Fold the survivors into the next day's history (and age the recent
+    tier) with :func:`fold_history`.
 
     ``history_sigs`` is read TWICE (band buckets + the verify join) — pass
     a materialized table (the parquet the previous increment wrote), not a

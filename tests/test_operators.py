@@ -99,9 +99,23 @@ def test_ngram_jaccard_exact(spark, docs):
     assert not any({a, b} == {0, 4} for a, b in pairs)  # unrelated not paired
 
 
-def test_minhash_finds_near_dups(spark, docs):
+def _count_signature_passes(monkeypatch) -> list:
+    """Record every :func:`dedup.minhash_signatures` call (the one Python
+    pass that shingles and hashes text for MinHash)."""
+    calls = []
+    orig = dedup.minhash_signatures
+    monkeypatch.setattr(
+        dedup, "minhash_signatures",
+        lambda *a, **kw: (calls.append(1), orig(*a, **kw))[1])
+    return calls
+
+
+def test_minhash_finds_near_dups(spark, docs, monkeypatch):
+    calls = _count_signature_passes(monkeypatch)
     found = {(r["id_a"], r["id_b"]): r["jaccard"]
              for r in dedup.near_duplicates_minhash(docs, threshold=0.5).collect()}
+    # one signature pass; the band keys derive from it JVM-side
+    assert len(calls) == 1
     assert (0, 1) in found and found[(0, 1)] == 1.0
     assert (0, 2) in found               # high-jaccard near dup retrieved
     exact = {(r["id_a"], r["id_b"]) for r in
@@ -112,9 +126,10 @@ def test_minhash_finds_near_dups(spark, docs):
 
 
 def test_minhash_signature_deterministic(spark, docs):
-    s1 = {r["id"]: r["sig"] for r in dedup.minhash_signatures(docs, k=32).collect()}
-    s2 = {r["id"]: r["sig"] for r in dedup.minhash_signatures(docs, k=32).collect()}
+    s1 = {r["id"]: r["sig"] for r in dedup.minhash_signatures(docs).collect()}
+    s2 = {r["id"]: r["sig"] for r in dedup.minhash_signatures(docs).collect()}
     assert s1 == s2
+    assert len(s1[0]) == dedup.K
     assert s1[0] == s1[1]  # identical text → identical signature
 
 
@@ -132,13 +147,15 @@ def test_duplicate_clusters_transitive(spark):
                    30: 30, 31: 30, 32: 30, 33: 30}
 
 
-def test_dedup_near_minhash_keeps_one_per_cluster(spark, docs):
+def test_dedup_near_minhash_keeps_one_per_cluster(spark, docs, monkeypatch):
     """Docs 0-3 form one near-dup component at threshold 0.5 (0~1 exact,
     0~2 and 0~3 near) — the dedup pass keeps exactly the min id of the
-    component and every unclustered doc."""
+    component and every unclustered doc, from one signature pass."""
+    calls = _count_signature_passes(monkeypatch)
     kept = {r["doc_id"] for r in
             dedup.dedup_near_minhash(docs, threshold=0.5).collect()}
     assert kept == {0, 4, 5, 6, 7, 8}
+    assert len(calls) == 1
 
 
 # --- SimHash -----------------------------------------------------------------------
@@ -1065,31 +1082,27 @@ def test_near_dedup_incremental_recent_tier_exact(spark):
 def test_near_dedup_incremental_single_signature_pass(spark, monkeypatch):
     """The batch text is shingled+hashed through Python exactly once (the
     checkpointed signature pass): the within-batch stage must derive its
-    band keys from those signatures JVM-side, never re-tokenize the text
-    through minhash_band_keys — at a 10^9-doc daily increment that second
-    pass would double the operator's dominant cost."""
-    calls = []
-    orig = dedup.minhash_band_keys
-    monkeypatch.setattr(
-        dedup, "minhash_band_keys",
-        lambda *a, **kw: (calls.append(1), orig(*a, **kw))[1])
+    band keys from those signatures JVM-side, never run a second
+    signature pass over the text — at a 10^9-doc daily increment that
+    second pass would double the operator's dominant cost."""
     history = dedup.minhash_signatures(
         spark.createDataFrame([(0, BASE)], ["doc_id", "text"]))
     batch = spark.createDataFrame(
         [(10, BASE), (11, "some other text entirely")],
         ["doc_id", "text"])
+    calls = _count_signature_passes(monkeypatch)
     kept = dedup.near_dedup_incremental(batch, history, threshold=0.5)
     assert {r["doc_id"] for r in kept.collect()} == {11}
-    assert not calls, "within-batch pass re-shingled the text"
+    assert len(calls) == 1, "within-batch pass re-shingled the text"
 
     # same invariant with the r4 exact recent tier active: its verify is
     # the candidate-bounded jaccard kernel, never a second corpus-wide
-    # band-key (signature) pass
+    # signature pass
     hist_texts = spark.createDataFrame([(0, BASE)], ["doc_id", "text"])
     kept2 = dedup.near_dedup_incremental(batch, history, threshold=0.5,
                                          recent_texts=hist_texts)
     assert {r["doc_id"] for r in kept2.collect()} == {11}
-    assert not calls, "recent tier triggered a second signature pass"
+    assert len(calls) == 2, "recent tier triggered a second signature pass"
 
 
 def test_increment_operators_partitioning_invariance(spark, docs):
@@ -1148,14 +1161,6 @@ def test_wav_truncated_payload_returns_none_not_crash():
     for cut in (len(blob) - 1, len(blob) - 3, 50):
         out = codecs.decode_wav(blob[:cut])
         assert out is None or out[0].dtype == np.int16
-
-
-def test_minhash_band_keys_bands_exceed_k(spark, docs):
-    """bands > k must clamp, not crash (the pre-fused path tolerated it)."""
-    found = {(r["id_a"], r["id_b"]) for r in
-             dedup.near_duplicates_minhash(docs, k=16, bands=32,
-                                           threshold=0.5).collect()}
-    assert (0, 1) in found  # exact dup still retrieved
 
 
 def test_fold_history_increments(spark):
@@ -1233,12 +1238,6 @@ def test_blank_docs_never_pair(spark):
     rows = [(0, BASE), (1, BASE.replace("green", "purple")),
             (2, ""), (3, "   \t\n "), (4, "")]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-
-    # fused band-key path: blank docs emit NO keys
-    keyed = {r["id"]: r["keys"] for r in
-             dedup.minhash_band_keys(docs).collect()}
-    assert keyed[2] == [] and keyed[3] == [] and keyed[4] == []
-    assert len(keyed[0]) == 32
 
     # signature-derived banding (the incremental path's key universe):
     # all-zero sigs are excluded before bucketing

@@ -69,8 +69,9 @@ def test_cli_flags(module):
 
 
 # Where a defaulted parameter may be set from: the programs, then the tests.
-CALLER_ROOTS = ("ocr_spark", "__spark_entry__.py", "bench.py", "tools",
-                "perfbench", "tests")
+PROGRAM_ROOTS = ("ocr_spark", "__spark_entry__.py", "bench.py", "tools",
+                 "perfbench")
+CALLER_ROOTS = PROGRAM_ROOTS + ("tests",)
 
 
 def _py_files(root: str):
@@ -132,19 +133,19 @@ def _calls(tree: ast.AST):
     return out
 
 
-def unset_options() -> list[str]:
-    """Defaulted parameters of ocr_spark/ that no call ever sets.
+def unset_options(roots=CALLER_ROOTS) -> list[str]:
+    """Defaulted parameters of ocr_spark/ that no call under *roots* sets.
 
-    A call sets a parameter when it passes it by keyword or by position,
-    from a program or a test.  A call is matched by name to EVERY def of
-    that name (mapped positionally per def), so a name defined in two
-    modules can only over-count "set".  Passing on the caller's own
+    A call sets a parameter when it passes it by keyword or by position.
+    A call is matched by name to EVERY def of that name (mapped
+    positionally per def), so a name defined in two modules can only
+    over-count "set".  Passing on the caller's own
     defaulted parameter counts only once that parameter is itself set —
     iterated to a fixpoint, so a chain of pass-throughs that starts at no
     real caller sets nothing.
     """
     trees = {path: ast.parse(path.read_text())
-             for root in CALLER_ROOTS for path in _py_files(root)}
+             for root in roots for path in _py_files(root)}
     defs_by_name, def_of_node = defaultdict(list), {}
     for path in _py_files("ocr_spark"):
         for node, cls in _functions(trees[path]):
@@ -196,3 +197,43 @@ def test_every_option_has_a_caller():
     """A defaulted parameter nothing sets is a settable value with one
     value ever used: hard-wire it instead."""
     assert unset_options() == []
+
+
+# Defaulted parameters that only tests set, each with the test that sets
+# it.  A new one fails test_test_only_options_are_listed until it is added
+# here (or hard-wired, or given a program caller).
+TEST_ONLY_OPTIONS = [
+    # test_html_extract::test_aggressive_mode_drops_footer
+    "ocr_spark/html_extract.py:extract_tier1(mode)",
+    # test_pipeline::test_observed_summary_equals_global_summary
+    "ocr_spark/job.py:run_pipeline(run_id)",
+    # test_operators::test_duplicate_clusters_raises_on_nonconvergence
+    "ocr_spark/operators/dedup.py:duplicate_clusters(max_iter)",
+    # test_operators::test_duplicated_windows_positions
+    "ocr_spark/operators/dedup.py:duplicated_windows(k)",
+    # test_operators::test_embedding_near_dups_brute_vs_lsh
+    "ocr_spark/operators/dedup.py:near_duplicates_embedding(brute_force)",
+    # test_operators::test_ivf_recall
+    "ocr_spark/operators/similarity.py:ivf_build(sample)",
+    # test_operators::test_pack_sequences_partitioning_invariant
+    "ocr_spark/operators/textstats.py:pack_sequences(partitions)",
+    # test_operators::test_quality_classifier_vocab_cap_tiebreak
+    "ocr_spark/operators/textstats.py:quality_classifier_model(top_vocab)",
+    # test_operators::test_surprisal_empty_seed_and_bad_n
+    "ocr_spark/operators/textstats.py:surprisal_model(n)",
+    # test_operators::test_token_shards_partitioning_invariant
+    "ocr_spark/operators/textstats.py:token_shards(partitions)",
+    # test_operators::test_host_cap_deterministic
+    "ocr_spark/operators/urls.py:host_cap(order_col)",
+    # test_pdf::test_roundtrip_compressed_and_raw
+    "ocr_spark/sources/pdf.py:make_pdf(compress)",
+    # test_warc::test_roundtrip_pure_python
+    "ocr_spark/sources/warc.py:write_warc(compress)",
+    # test_parity_reference::test_date_parity
+    "ocr_spark/textops.py:iso_in_year_range(dash_ok)",
+]
+
+
+def test_test_only_options_are_listed():
+    """The options that only tests set are exactly the pinned list."""
+    assert unset_options(PROGRAM_ROOTS) == TEST_ONLY_OPTIONS
